@@ -12,7 +12,7 @@ Layout:
     functions/  tokenizers (code-aware), BM25 math, hashing
     index/      corpus generator, segment builder, manifest, merge
     search/     query AST, parser, execution engine, WAND
-    pipeline/   training-data ops: dedup, similarity search, text stats
+    pipeline/   doc mapper, transform, OTLP decoding, multimodal media ops
     streaming/  incremental/resumable build helpers
 """
 

@@ -504,20 +504,25 @@ class DocMapper:
                     f"{list(spec.input_formats)}")
             return ms
         if spec.ftype in ("u64", "i64"):
-            if isinstance(v, bool) or not isinstance(v, (int, float)):
-                if isinstance(v, str):
-                    try:
-                        return int(v)
-                    except ValueError as e:
-                        raise MappingError(
-                            f"field {spec.path!r}: expected an "
-                            f"integer, got {v!r}") from e
+            if isinstance(v, str):
+                try:
+                    v = int(v)
+                except ValueError as e:
+                    raise MappingError(
+                        f"field {spec.path!r}: expected an "
+                        f"integer, got {v!r}") from e
+            if isinstance(v, bool) or not isinstance(v, (int, float)) \
+                    or (isinstance(v, float) and not v.is_integer()):
                 raise MappingError(f"field {spec.path!r}: expected an "
                                    f"integer, got {v!r}")
-            if isinstance(v, float) and v != int(v):
-                raise MappingError(f"field {spec.path!r}: expected an "
-                                   f"integer, got {v!r}")
-            return int(v)
+            # out-of-range values must fail their doc here, not the
+            # batch's typed UInt64/Int64 column build
+            n = int(v)
+            lo, hi = (0, 2**64) if spec.ftype == "u64" else (-2**63, 2**63)
+            if not lo <= n < hi:
+                raise MappingError(f"field {spec.path!r}: {n} is out of "
+                                   f"range for {spec.ftype}")
+            return n
         if spec.ftype == "f64":
             if isinstance(v, bool) or not isinstance(v, (int, float)):
                 try:

@@ -1267,87 +1267,6 @@ def _union(parts: list[_Scored], minimum_should_match: int = 1) -> _Scored:
 # Root: segment pruning, leaf fan-out, merge, fetch
 # ---------------------------------------------------------------------------
 
-def prune_segments(segments: list[dict], node: A.Node,
-                   tag_fields: list[str]) -> list[dict]:
-    """Split pruning before any segment file is opened (reference:
-    tag_pruning.rs + time-range pruning in
-    file_backed_index/mod.rs:698-740): tag-set constraints and Range
-    constraints against per-segment numeric min/max stats."""
-    tag_constraints = A.collect_tag_filters(node, tag_fields)
-    range_constraints = A.collect_range_filters(node)
-    if not tag_constraints and not range_constraints:
-        return segments
-    out = []
-    for seg in segments:
-        ok = True
-        for field, allowed in tag_constraints:
-            vals = seg.get("tags", {}).get(field)
-            if vals is not None and not (set(vals) & allowed):
-                ok = False
-                break
-        for rng in range_constraints:
-            if not ok:
-                break
-            stats = seg.get("col_stats", {}).get(rng.field)
-            if stats is None:
-                continue
-            lo, hi = stats
-            if seg.get("field_types", {}).get(rng.field) == "ip":
-                # hex-string stats over the normalized transport: string
-                # order == numeric IP order, so pruning mirrors the
-                # numeric path after normalizing the query bound
-                try:
-                    if rng.gte is not None and hi < ip_norm_one(rng.gte):
-                        ok = False
-                    if rng.gt is not None and hi <= ip_norm_one(rng.gt):
-                        ok = False
-                    if rng.lte is not None and lo > ip_norm_one(rng.lte):
-                        ok = False
-                    if rng.lt is not None and lo >= ip_norm_one(rng.lt):
-                        ok = False
-                except ValueError:
-                    pass
-                continue
-            if seg.get("field_types", {}).get(rng.field) == "datetime":
-                # millis stats vs query literals in any accepted
-                # datetime form: coerce the bound like the leaf does
-                from ..pipeline.doc_mapper import parse_datetime_bound
-
-                def _dt(b):
-                    ms = parse_datetime_bound(b)
-                    if ms is None:
-                        raise ValueError(b)
-                    return ms
-                try:
-                    if rng.gte is not None and hi < _dt(rng.gte):
-                        ok = False
-                    if rng.gt is not None and hi <= _dt(rng.gt):
-                        ok = False
-                    if rng.lte is not None and lo > _dt(rng.lte):
-                        ok = False
-                    if rng.lt is not None and lo >= _dt(rng.lt):
-                        ok = False
-                except ValueError:
-                    pass
-                continue
-            try:
-                # exact int comparison when possible (u64 > i64::MAX
-                # bounds lose precision through float)
-                if rng.gte is not None and hi < _prune_bound(rng.gte):
-                    ok = False
-                if rng.gt is not None and hi <= _prune_bound(rng.gt):
-                    ok = False
-                if rng.lte is not None and lo > _prune_bound(rng.lte):
-                    ok = False
-                if rng.lt is not None and lo >= _prune_bound(rng.lt):
-                    ok = False
-            except (TypeError, ValueError):
-                continue  # non-numeric bound: no pruning
-        if ok:
-            out.append(seg)
-    return out
-
-
 def _prune_bound(v):
     """Numeric pruning bound: ints (and int strings) stay int-exact,
     everything else compares as float. int(2.5) would TRUNCATE a float
@@ -1375,8 +1294,8 @@ def _is_number(v) -> bool:
 
 class PruneIndex:
     """Vectorized segment pruning over manifest rows (built once per
-    manifest version; prune_segments re-walks python dicts per query,
-    which costs ~80ms at 100k segments).
+    manifest version; the per-query dict walk it replaces,
+    tests/oracle.py:prune_segments, costs ~80ms at 100k segments).
 
     Numeric bounds are widened by one ulp before the float compare, so
     precision loss near 2^63 can only UNDER-prune (safe); tag pruning

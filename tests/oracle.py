@@ -18,12 +18,15 @@ from quickwit_spark.functions.bm25 import (
     id_to_fieldnorm,
     idf_f32,
 )
+from quickwit_spark.functions.fieldtypes import ip_norm_one
 from quickwit_spark.functions.tokenizers import (
     ascii_fold,
     code_tokenize,
     tokenize_one,
 )
+from quickwit_spark.pipeline.doc_mapper import parse_datetime_bound
 from quickwit_spark.search import ast as A
+from quickwit_spark.search.engine import _prune_bound
 
 f32 = np.float32
 
@@ -222,3 +225,82 @@ class _neg_str(str):
         return str.__gt__(self, other)
     def __gt__(self, other):
         return str.__lt__(self, other)
+
+
+def prune_segments(segments: list[dict], node: A.Node,
+                   tag_fields: list[str]) -> list[dict]:
+    """Scalar oracle for engine.PruneIndex: split pruning before any
+    segment file is opened (reference: tag_pruning.rs + time-range
+    pruning in file_backed_index/mod.rs:698-740), tag-set constraints
+    and Range constraints against per-segment numeric min/max stats."""
+    tag_constraints = A.collect_tag_filters(node, tag_fields)
+    range_constraints = A.collect_range_filters(node)
+    if not tag_constraints and not range_constraints:
+        return segments
+    out = []
+    for seg in segments:
+        ok = True
+        for field, allowed in tag_constraints:
+            vals = seg.get("tags", {}).get(field)
+            if vals is not None and not (set(vals) & allowed):
+                ok = False
+                break
+        for rng in range_constraints:
+            if not ok:
+                break
+            stats = seg.get("col_stats", {}).get(rng.field)
+            if stats is None:
+                continue
+            lo, hi = stats
+            if seg.get("field_types", {}).get(rng.field) == "ip":
+                # hex-string stats over the normalized transport: string
+                # order == numeric IP order, so pruning mirrors the
+                # numeric path after normalizing the query bound
+                try:
+                    if rng.gte is not None and hi < ip_norm_one(rng.gte):
+                        ok = False
+                    if rng.gt is not None and hi <= ip_norm_one(rng.gt):
+                        ok = False
+                    if rng.lte is not None and lo > ip_norm_one(rng.lte):
+                        ok = False
+                    if rng.lt is not None and lo >= ip_norm_one(rng.lt):
+                        ok = False
+                except ValueError:
+                    pass
+                continue
+            if seg.get("field_types", {}).get(rng.field) == "datetime":
+                # millis stats vs query literals in any accepted
+                # datetime form: coerce the bound like the leaf does
+                def _dt(b):
+                    ms = parse_datetime_bound(b)
+                    if ms is None:
+                        raise ValueError(b)
+                    return ms
+                try:
+                    if rng.gte is not None and hi < _dt(rng.gte):
+                        ok = False
+                    if rng.gt is not None and hi <= _dt(rng.gt):
+                        ok = False
+                    if rng.lte is not None and lo > _dt(rng.lte):
+                        ok = False
+                    if rng.lt is not None and lo >= _dt(rng.lt):
+                        ok = False
+                except ValueError:
+                    pass
+                continue
+            try:
+                # exact int comparison when possible (u64 > i64::MAX
+                # bounds lose precision through float)
+                if rng.gte is not None and hi < _prune_bound(rng.gte):
+                    ok = False
+                if rng.gt is not None and hi <= _prune_bound(rng.gt):
+                    ok = False
+                if rng.lte is not None and lo > _prune_bound(rng.lte):
+                    ok = False
+                if rng.lt is not None and lo >= _prune_bound(rng.lt):
+                    ok = False
+            except (TypeError, ValueError):
+                continue  # non-numeric bound: no pruning
+        if ok:
+            out.append(seg)
+    return out

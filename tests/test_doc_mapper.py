@@ -43,7 +43,8 @@ def _mapper(extra_dm=None, **kw):
           "dynamic_mapping": {"tokenizer": "default", "fast": True},
           "field_mappings": [
               {"name": "ts", "type": "datetime", "fast": True},
-              {"name": "big", "type": "u64", "fast": True}]}
+              {"name": "big", "type": "u64", "fast": True},
+              {"name": "small", "type": "i64", "fast": True}]}
     dm.update(extra_dm or {})
     return DocMapper({"version": "0.7", "index_id": "t",
                       "doc_mapping": dm, **kw})
@@ -55,9 +56,15 @@ def test_invalid_docs_drop_not_fail():
     pdf = m.project([{"ts": 1, "big": 5},
                      {"big": 6},                # missing timestamp
                      {"ts": "not-a-date"},      # unparseable
-                     {"ts": 2}], "b", errors=errors)
+                     {"ts": 2},
+                     {"ts": 3, "big": -3},        # u64 below range
+                     {"ts": 4, "big": 2**64},     # u64 above range
+                     {"ts": 5, "small": 2**63},   # i64 above range
+                     {"ts": 6, "big": float("inf")}],
+                    "b", errors=errors)
     assert len(pdf) == 2
-    assert [e["ordinal"] for e in errors] == [1, 2]
+    assert [e["ordinal"] for e in errors] == [1, 2, 4, 5, 6, 7]
+    assert all("out of range" in e["reason"] for e in errors[2:5])
     # surviving ids keep their ORIGINAL ordinals (replay-stable)
     assert pdf["__doc_key"].tolist() == ["b-00000000", "b-00000003"]
 

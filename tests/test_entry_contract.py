@@ -13,7 +13,7 @@ import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+          "lineitem", "events", "documents"]
 
 
 @pytest.fixture(scope="module")

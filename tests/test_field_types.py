@@ -23,9 +23,9 @@ from quickwit_spark.functions.tokenizers import (
     multilang_tokenize, tokenize_batch)
 from quickwit_spark.index.builder import build_index_pandas
 from quickwit_spark.index.manifest import Manifest
-from quickwit_spark.search.engine import (
-    IndexSearcher, InvalidQueryValue, prune_segments)
+from quickwit_spark.search.engine import IndexSearcher, InvalidQueryValue
 from quickwit_spark.search import ast as A
+from tests.oracle import prune_segments
 
 
 # ---------------------------------------------------------------------------

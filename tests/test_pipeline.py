@@ -1,17 +1,360 @@
-"""Pipeline-op tests not covered by the DuckDB contract check: multimodal
-stub plumbing, LSH-vs-brute-force consistency, streaming incremental
-ingest exactly-once."""
+"""Pipeline tests not covered by the DuckDB contract check: streaming
+incremental ingest exactly-once, batch-id checkpoint replay (legacy
+formats, collisions, replay after merge), the doc transform's error
+accounting, global-layout fetch of zero hits, and the multimodal media
+operators (sniffing, null/corrupt blobs, real-codec decode paths)."""
 
 import os
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from quickwit_spark.config import IndexConfig
 from quickwit_spark.index.corpus import corpus_df
 from quickwit_spark.index.manifest import Manifest
 from quickwit_spark.search.engine import IndexSearcher
+
+
+def test_streaming_incremental_ingest(spark, tmp_path):
+    from quickwit_spark.streaming.incremental import start_ingest_stream
+    src = tmp_path / "stream_src"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    cfg = IndexConfig(index_uid="stream",
+                      index_dir=str(tmp_path / "stream_idx"))
+
+    full = corpus_df(spark, 200, seed=42, num_partitions=2).toPandas()
+    # two input files arriving over time
+    full.iloc[:100].to_parquet(src / "part1.parquet", index=False)
+    full.iloc[100:].to_parquet(src / "part2.parquet", index=False)
+
+    schema = ("repo string, path string, commit string, lang string, "
+              "content string, sha256 string")
+    q = start_ingest_stream(spark, str(src), cfg, schema, ckpt,
+                            partitions_per_batch=4)
+    q.awaitTermination(120)
+
+    m = Manifest.load(cfg.index_dir)
+    assert sum(s["num_docs"] for s in m.segments()) == 200
+    searcher = IndexSearcher(cfg.index_dir)
+    assert searcher.count("*") == 200
+
+    # restart the stream: no new data, no duplicate publishes
+    q2 = start_ingest_stream(spark, str(src), cfg, schema, ckpt,
+                             partitions_per_batch=4)
+    q2.awaitTermination(60)
+    m2 = Manifest.load(cfg.index_dir)
+    assert sum(s["num_docs"] for s in m2.segments()) == 200
+
+
+
+def test_batch_id_collision_not_swallowed(spark, tmp_path):
+    """A batch-id collision that is NOT an exact replay (stream restarted
+    with a fresh Spark checkpoint dir => batch ids restart over new data)
+    must raise, not silently drop the batch; an exact replay stays
+    idempotent."""
+    from quickwit_spark.config import IndexConfig
+    from quickwit_spark.index.manifest import CheckpointConflict
+    from quickwit_spark.streaming.incremental import ingest_batch
+
+    cfg = IndexConfig(index_uid="bc", index_dir=str(tmp_path / "bc"),
+                      sha_col=None)
+
+    def docs(tag, n):
+        return spark.createDataFrame(pd.DataFrame({
+            "repo": ["r"] * n, "path": [f"{tag}{i}" for i in range(n)],
+            "commit": ["c"] * n, "lang": ["py"] * n,
+            "content": [f"{tag} body {i}" for i in range(n)]}))
+
+    ingest_batch(docs("a", 6), cfg, batch_id=0, partitions_per_batch=2)
+    n0 = IndexSearcher(cfg.index_dir).count("*")
+    assert n0 == 6
+    # exact replay: no error, no new docs
+    ingest_batch(docs("a", 6), cfg, batch_id=0, partitions_per_batch=2)
+    assert IndexSearcher(cfg.index_dir).count("*") == 6
+    # DIFFERENT data under the same batch id: must surface, not vanish
+    with pytest.raises(CheckpointConflict):
+        ingest_batch(docs("b", 6), cfg, batch_id=0,
+                     partitions_per_batch=2)
+    assert IndexSearcher(cfg.index_dir).count("*") == 6
+
+
+
+def test_ingest_batch_legacy_integer_keys_replay(spark, tmp_path):
+    """Indexes written before stream checkpoint keys were namespaced
+    hold bare integer keys: a replay against them must stay idempotent
+    (skip, no duplicate docs), and a batch-id collision over different
+    data must still raise."""
+    from quickwit_spark.config import IndexConfig
+    from quickwit_spark.index.manifest import CheckpointConflict, Manifest
+    from quickwit_spark.streaming.incremental import ingest_batch
+
+    cfg = IndexConfig(index_uid="lk", index_dir=str(tmp_path / "lk"),
+                      sha_col=None)
+
+    def docs(tag, n):
+        return spark.createDataFrame(pd.DataFrame({
+            "repo": ["r"] * n, "path": [f"{tag}{i}" for i in range(n)],
+            "commit": ["c"] * n, "lang": ["py"] * n,
+            "content": [f"{tag} body {i}" for i in range(n)]}))
+
+    ingest_batch(docs("a", 6), cfg, batch_id=0, partitions_per_batch=2)
+    # rewrite the manifest to the LEGACY key format (bare integers)
+    m = Manifest.load(cfg.index_dir)
+    cps = m.data["checkpoints"]
+    m.data["checkpoints"] = {k.split("-", 1)[1]: v for k, v in cps.items()}
+    m.data["version"] += 1
+    m._write()
+    assert set(Manifest.load(cfg.index_dir).data["checkpoints"]) == \
+        {"0", "1"}
+
+    # exact replay against legacy keys: skipped, idempotent
+    ingest_batch(docs("a", 6), cfg, batch_id=0, partitions_per_batch=2)
+    assert IndexSearcher(cfg.index_dir).count("*") == 6
+    # collision over different data: loud
+    with pytest.raises(CheckpointConflict):
+        ingest_batch(docs("b", 6), cfg, batch_id=0,
+                     partitions_per_batch=2)
+    assert IndexSearcher(cfg.index_dir).count("*") == 6
+
+
+
+def test_transform_dropping_column_counts_as_error(spark):
+    """A transform that drops a passthrough column must be counted as a
+    transform error for the batch, not crash the job with KeyError."""
+    from quickwit_spark.pipeline.transform import (
+        DocProcessorCounters, process_docs)
+    df = spark.createDataFrame(
+        [("r", "p", "c", "py", "hello world", 1)],
+        "repo string, path string, commit string, lang string, "
+        "content string, extra int")
+    counters = DocProcessorCounters(spark.sparkContext)
+    out = process_docs(
+        df, required={"content": "str"},
+        transform=lambda pdf: pdf.drop(columns=["extra"]),
+        counters=counters)
+    assert out.count() == 0
+    assert counters.transform_errors.value == 1
+
+
+
+def test_global_fetch_zero_hits(spark, tmp_path):
+    import pandas as pd
+    import quickwit_spark as q
+    from quickwit_spark.config import IndexConfig
+    from quickwit_spark.index.global_index import (
+        GlobalIndexSearcher, build_term_partitioned)
+    pdf = pd.DataFrame({
+        "repo": ["r"] * 2, "path": ["a", "b"], "commit": ["c"] * 2,
+        "lang": ["py"] * 2, "content": ["alpha beta", "gamma"]})
+    cfg = IndexConfig(index_uid="gz", index_dir=str(tmp_path / "gz"),
+                      sha_col=None)
+    q.build_index_pandas(pdf, cfg, num_partitions=1)
+    build_term_partitioned(spark, cfg.index_dir, num_term_partitions=2)
+    g = GlobalIndexSearcher(cfg.index_dir)
+    n, res = g.search_terms(["zzznotaterm"], operator="or", k=5)
+    assert n == 0 and len(res) == 0
+    fetched = g.fetch(res)
+    assert len(fetched) == 0
+
+
+
+def test_replay_after_merge_is_benign(spark, tmp_path):
+    """Replay of a batch whose segments were since merged away must be a
+    no-op (the checkpoint position embeds the content-addressed segment
+    ids, so position equality proves the replay without requiring the
+    original segment rows to still exist)."""
+    from quickwit_spark.config import IndexConfig
+    from quickwit_spark.index.manifest import Manifest
+    from quickwit_spark.index.merge import merge_segments
+    from quickwit_spark.streaming.incremental import ingest_batch
+
+    cfg = IndexConfig(index_uid="rm", index_dir=str(tmp_path / "rm"),
+                      sha_col=None)
+
+    def docs(tag, n):
+        return spark.createDataFrame(pd.DataFrame({
+            "repo": ["r"] * n, "path": [f"{tag}{i}" for i in range(n)],
+            "commit": ["c"] * n, "lang": ["py"] * n,
+            "content": [f"{tag} body {i}" for i in range(n)]}))
+
+    ingest_batch(docs("a", 4), cfg, batch_id=0, partitions_per_batch=2)
+    ingest_batch(docs("b", 4), cfg, batch_id=1, partitions_per_batch=2)
+    m = Manifest.load(cfg.index_dir)
+    segs = sorted(m.segments(), key=lambda x: x["segment_id"])
+    meta = merge_segments(cfg.index_dir, segs)
+    m.publish([meta],
+              replaced_segment_ids=[x["segment_id"] for x in segs])
+    m.vacuum()  # original batch segments are GONE from the manifest
+    # exact replay of batch 0: benign no-op, count unchanged
+    ingest_batch(docs("a", 4), cfg, batch_id=0, partitions_per_batch=2)
+    assert IndexSearcher(cfg.index_dir).count("*") == 8
+
+
+
+def test_replay_after_merge_cleans_orphan_dirs(spark, tmp_path):
+    """The benign replay rewrites segment files before the publish is
+    rejected; when the originals were merged/vacuumed away those dirs
+    must be removed, not leaked."""
+    from quickwit_spark.config import IndexConfig
+    from quickwit_spark.index.manifest import Manifest
+    from quickwit_spark.index.merge import merge_segments
+    from quickwit_spark.streaming.incremental import ingest_batch
+
+    cfg = IndexConfig(index_uid="rl", index_dir=str(tmp_path / "rl"),
+                      sha_col=None)
+
+    def docs(tag, n):
+        return spark.createDataFrame(pd.DataFrame({
+            "repo": ["r"] * n, "path": [f"{tag}{i}" for i in range(n)],
+            "commit": ["c"] * n, "lang": ["py"] * n,
+            "content": [f"{tag} body {i}" for i in range(n)]}))
+
+    ingest_batch(docs("a", 4), cfg, batch_id=0, partitions_per_batch=2)
+    ingest_batch(docs("b", 4), cfg, batch_id=1, partitions_per_batch=2)
+    m = Manifest.load(cfg.index_dir)
+    segs = sorted(m.segments(), key=lambda x: x["segment_id"])
+    meta = merge_segments(cfg.index_dir, segs)
+    m.publish([meta],
+              replaced_segment_ids=[x["segment_id"] for x in segs])
+    m.vacuum()
+    seg_root = os.path.join(cfg.index_dir, "segments")
+    assert len(os.listdir(seg_root)) == 1  # only the merged child
+    ingest_batch(docs("a", 4), cfg, batch_id=0, partitions_per_batch=2)
+    # replay was benign AND its rewritten dirs were swept
+    assert len(os.listdir(seg_root)) == 1
+    assert IndexSearcher(cfg.index_dir).count("*") == 8
+
+
+
+def test_legacy_position_format_replay_accepted(spark, tmp_path):
+    """Positions written before the ids= suffix must still be accepted
+    as replays by their prefix (no crash-loop after an upgrade)."""
+    from quickwit_spark.config import IndexConfig
+    from quickwit_spark.index.manifest import Manifest
+    from quickwit_spark.streaming.incremental import ingest_batch
+
+    cfg = IndexConfig(index_uid="lg", index_dir=str(tmp_path / "lg"),
+                      sha_col=None)
+    df = spark.createDataFrame(pd.DataFrame({
+        "repo": ["r"] * 4, "path": [f"f{i}" for i in range(4)],
+        "commit": ["c"] * 4, "lang": ["py"] * 4,
+        "content": [f"body {i}" for i in range(4)]}))
+    ingest_batch(df, cfg, batch_id=0, partitions_per_batch=2)
+    # rewrite the stored positions to the LEGACY (ids-less) format
+    m = Manifest.load(cfg.index_dir)
+    cps = m.data["checkpoints"]
+    for k, v in list(cps.items()):
+        cps[k] = str(v).rsplit(";ids=", 1)[0]
+    m.data["version"] += 1
+    m._write()
+    # exact replay against legacy positions: benign
+    ingest_batch(df, cfg, batch_id=0, partitions_per_batch=2)
+    assert IndexSearcher(cfg.index_dir).count("*") == 4
+    # the accepted replay UPGRADES the stored position to the strong
+    # ids= format, so a later same-batch-id/same-doc-count collision
+    # over different data can no longer match the weak prefix
+    m2 = Manifest.load(cfg.index_dir)
+    assert all(";ids=" in str(v) for v in m2.data["checkpoints"].values())
+    df2 = spark.createDataFrame(pd.DataFrame({
+        "repo": ["r"] * 4, "path": [f"g{i}" for i in range(4)],
+        "commit": ["c"] * 4, "lang": ["py"] * 4,
+        "content": [f"other {i}" for i in range(4)]}))
+    with pytest.raises(Exception):
+        ingest_batch(df2, cfg, batch_id=0, partitions_per_batch=2)
+
+
+
+def test_transform_int64_rejects_lossy_values(spark):
+    """int64 coercion quarantines non-integral ('1.7' silently became
+    1), non-finite ('inf' crashed the task), and float-rounded
+    magnitudes — they count as coercion_errors, not corrupt or crash."""
+    import pandas as pd
+
+    from quickwit_spark.pipeline.transform import process_docs
+
+    df = spark.createDataFrame(pd.DataFrame({
+        "doc_id": ["a", "b", "c", "d", "e"],
+        "n": ["3", "1.7", "inf", "9007199254740993999", "12"]}))
+    out = process_docs(df, required={"doc_id": "str", "n": "int64"}
+                       ).toPandas().set_index("doc_id")
+    # 'd' IS representable in int64: kept with the EXACT value (no
+    # float64 round-trip), independent of which rows share its batch
+    assert sorted(out.index) == ["a", "d", "e"]
+    assert out.loc["a", "n"] == 3 and out.loc["e", "n"] == 12
+    assert int(out.loc["d", "n"]) == 9007199254740993999
+
+
+
+def test_stream_batch0_into_builder_bootstrapped_index(spark, tmp_path):
+    """An index bootstrapped by build_index holds bare integer partition
+    checkpoints 0..N-1 with 'docs=N' positions. Streaming batch 0 into it
+    (base 0, overlapping int range) must NOT misread those as legacy
+    STREAM checkpoints and raise CheckpointConflict forever — the
+    namespaced 'stream-*' keys exist precisely so the two key spaces
+    coexist."""
+    from quickwit_spark.config import IndexConfig
+    from quickwit_spark.index.builder import build_index
+    from quickwit_spark.streaming.incremental import ingest_batch
+
+    cfg = IndexConfig(index_uid="bb", index_dir=str(tmp_path / "bb"),
+                      sha_col=None)
+
+    def docs(tag, n):
+        return spark.createDataFrame(pd.DataFrame({
+            "repo": ["r"] * n, "path": [f"{tag}{i}" for i in range(n)],
+            "commit": ["c"] * n, "lang": ["py"] * n,
+            "content": [f"{tag} body {i}" for i in range(n)]}))
+
+    build_index(spark, docs("base", 8), cfg, num_partitions=4)
+    assert IndexSearcher(cfg.index_dir).count("*") == 8
+    # first micro-batch over the same index: must publish, not conflict
+    ingest_batch(docs("s", 5), cfg, batch_id=0, partitions_per_batch=2)
+    assert IndexSearcher(cfg.index_dir).count("*") == 13
+    # replay stays idempotent
+    ingest_batch(docs("s", 5), cfg, batch_id=0, partitions_per_batch=2)
+    assert IndexSearcher(cfg.index_dir).count("*") == 13
+
+
+
+def test_legacy_preids_replay_upgraded_in_place(spark, tmp_path):
+    """Legacy bare-int stream checkpoints in the PRE-ids format are
+    accepted by weak prefix on replay — but must be upgraded in place,
+    so a LATER batch-id collision with an equal doc count over different
+    data raises instead of matching the weak prefix forever."""
+    from quickwit_spark.config import IndexConfig
+    from quickwit_spark.index.manifest import CheckpointConflict, Manifest
+    from quickwit_spark.streaming.incremental import ingest_batch
+
+    cfg = IndexConfig(index_uid="lu", index_dir=str(tmp_path / "lu"),
+                      sha_col=None)
+
+    def docs(tag, n):
+        return spark.createDataFrame(pd.DataFrame({
+            "repo": ["r"] * n, "path": [f"{tag}{i}" for i in range(n)],
+            "commit": ["c"] * n, "lang": ["py"] * n,
+            "content": [f"{tag} body {i}" for i in range(n)]}))
+
+    ingest_batch(docs("a", 6), cfg, batch_id=0, partitions_per_batch=2)
+    # rewrite to LEGACY keys (bare ints) in the PRE-ids position format
+    m = Manifest.load(cfg.index_dir)
+    cps = m.data["checkpoints"]
+    m.data["checkpoints"] = {
+        k.split("-", 1)[1]: v.rsplit(";ids=", 1)[0]
+        for k, v in cps.items()}
+    m.data["version"] += 1
+    m._write()
+
+    # exact replay: accepted by prefix AND upgraded in place
+    ingest_batch(docs("a", 6), cfg, batch_id=0, partitions_per_batch=2)
+    assert IndexSearcher(cfg.index_dir).count("*") == 6
+    stored = Manifest.load(cfg.index_dir).data["checkpoints"]
+    assert all(";ids=" in stored[k] for k in ("0", "1")), stored
+    # same batch id + same doc count over DIFFERENT data: now loud
+    with pytest.raises(CheckpointConflict):
+        ingest_batch(docs("b", 6), cfg, batch_id=0,
+                     partitions_per_batch=2)
+    assert IndexSearcher(cfg.index_dir).count("*") == 6
 
 
 def test_multimodal_stub_plumbing(spark):
@@ -54,72 +397,6 @@ def test_multimodal_stub_plumbing(spark):
     assert sniff_media_type(b"RIFFxxxx") == "audio/wav"
 
 
-def test_lsh_subset_of_bruteforce(spark):
-    from quickwit_spark.pipeline.similarity import (
-        brute_force_topk, lsh_bucket_topk)
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    qdf = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q"))
-    exact = brute_force_topk(emb, qdf, k=50).toPandas()
-    approx = lsh_bucket_topk(emb, qdf, k=50, nbits=6, seed=42).toPandas()
-    # the query itself is always in its own bucket and ranks first
-    assert int(approx.iloc[0]["vec_id"]) == 0
-    assert int(exact.iloc[0]["vec_id"]) == 0
-    # every LSH result's cosine matches the exact computation
-    em = exact.set_index("vec_id")["cos"]
-    for r in approx.itertuples():
-        if r.vec_id in em.index:
-            assert abs(em.loc[r.vec_id] - r.cos) < 1e-9
-
-
-def test_streaming_incremental_ingest(spark, tmp_path):
-    from quickwit_spark.streaming.incremental import start_ingest_stream
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    cfg = IndexConfig(index_uid="stream",
-                      index_dir=str(tmp_path / "stream_idx"))
-
-    full = corpus_df(spark, 200, seed=42, num_partitions=2).toPandas()
-    # two input files arriving over time
-    full.iloc[:100].to_parquet(src / "part1.parquet", index=False)
-    full.iloc[100:].to_parquet(src / "part2.parquet", index=False)
-
-    schema = ("repo string, path string, commit string, lang string, "
-              "content string, sha256 string")
-    q = start_ingest_stream(spark, str(src), cfg, schema, ckpt,
-                            partitions_per_batch=4)
-    q.awaitTermination(120)
-
-    m = Manifest.load(cfg.index_dir)
-    assert sum(s["num_docs"] for s in m.segments()) == 200
-    searcher = IndexSearcher(cfg.index_dir)
-    assert searcher.count("*") == 200
-
-    # restart the stream: no new data, no duplicate publishes
-    q2 = start_ingest_stream(spark, str(src), cfg, schema, ckpt,
-                             partitions_per_batch=4)
-    q2.awaitTermination(60)
-    m2 = Manifest.load(cfg.index_dir)
-    assert sum(s["num_docs"] for s in m2.segments()) == 200
-
-
-def test_embedding_near_dup_finds_planted_twins(spark):
-    import numpy as np
-    import pandas as pd
-    from quickwit_spark.pipeline.dedup import embedding_near_dup
-    rng = np.random.default_rng(3)
-    vecs = rng.standard_normal((30, 16)).astype("float32")
-    rows = [(i, vecs[i].tolist()) for i in range(30)]
-    rows += [(100 + i, vecs[i].tolist()) for i in range(5)]  # 5 twins
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = embedding_near_dup(emb, threshold=0.999, nbits=6, seed=1
-                             ).toPandas()
-    got = {(int(r.a), int(r.b)) for r in out.itertuples()}
-    assert {(i, 100 + i) for i in range(5)} <= got
-    assert all(c >= 0.999 for c in out["cos"])
-
-
 def test_resize_images_stub(spark):
     import pandas as pd
     from quickwit_spark.pipeline.multimodal import resize_images
@@ -129,637 +406,6 @@ def test_resize_images_stub(spark):
     assert set(out["id"]) == {1, 2}
     assert all(len(b) == 2 * 3 * 3 for b in out["blob"])  # HxWx3 uint8
     assert (out["width"] == 2).all() and (out["height"] == 3).all()
-
-
-def test_ivf_trained_centroids_recall(spark):
-    """Trained IVF with enough probes recovers the brute-force top-k."""
-    import numpy as np
-    from quickwit_spark.pipeline.similarity import (
-        brute_force_topk, ivf_topk, train_ivf_centroids)
-    rng = np.random.default_rng(5)
-    X = rng.standard_normal((200, 8)).astype("float32")
-    emb = spark.createDataFrame(
-        [(i, X[i].tolist()) for i in range(200)],
-        "vec_id long, embedding array<float>")
-    qdf = spark.createDataFrame([(X[0].tolist(),)], "q array<float>")
-    cent = train_ivf_centroids(emb, n_centroids=4, sample=200, seed=9)
-    assert cent.shape == (4, 8)
-    exact = brute_force_topk(emb, qdf, k=5).toPandas()
-    # probing ALL lists must equal brute force exactly
-    full = ivf_topk(emb, qdf, cent, k=5, nprobe=4).toPandas()
-    assert full.equals(exact)
-    # probing 2/4 lists returns a subset of the corpus ranked exactly
-    part = ivf_topk(emb, qdf, cent, k=5, nprobe=2).toPandas()
-    assert len(part) == 5
-    assert part.iloc[0]["vec_id"] == exact.iloc[0]["vec_id"]  # q's own list
-    # training is deterministic
-    cent2 = train_ivf_centroids(emb, n_centroids=4, sample=200, seed=9)
-    assert (cent == cent2).all()
-
-
-def test_ivf_partitioned_layout_prunes_io(spark, tmp_path):
-    """The IVF scale path: ivf_partition writes the corpus partitioned by
-    centroid id once; ivf_topk_partitioned must (a) return exactly what
-    the ad-hoc ivf_topk returns and (b) read ONLY the probed partitions
-    — the _cid filter shows up as a partition filter, and the pruned
-    scan's input files all live under probed _cid= directories."""
-    import numpy as np
-    from quickwit_spark.pipeline.similarity import (
-        ivf_partition, ivf_topk, ivf_topk_partitioned,
-        load_ivf_centroids, train_ivf_centroids)
-    rng = np.random.default_rng(5)
-    X = rng.standard_normal((200, 8)).astype("float32")
-    emb = spark.createDataFrame(
-        [(i, X[i].tolist()) for i in range(200)],
-        "vec_id long, embedding array<float>")
-    qdf = spark.createDataFrame([(X[0].tolist(),)], "q array<float>")
-    cent = train_ivf_centroids(emb, n_centroids=4, sample=200, seed=9)
-    out = str(tmp_path / "ivf")
-    ivf_partition(emb, out, cent)
-    assert (load_ivf_centroids(out) == cent).all()
-    adhoc = ivf_topk(emb, qdf, cent, k=5, nprobe=2).toPandas()
-    part = ivf_topk_partitioned(spark, out, qdf, k=5, nprobe=2).toPandas()
-    assert part.equals(adhoc)
-    # I/O pruning: reproduce the probed scan and inspect its input files
-    qv = np.asarray(X[0], dtype=np.float64)
-    d2 = ((cent - qv[None, :]) ** 2).sum(axis=1)
-    probes = {int(i) for i in np.argsort(d2, kind="stable")[:2]}
-    from pyspark.sql import functions as F
-    scan = (spark.read.parquet(out)
-            .filter(F.col("_cid").isin([int(p) for p in probes])))
-    # the _cid predicate must be a PARTITION filter (directory pruning at
-    # file listing — inputFiles() can't show this; it lists pre-pruning)
-    import contextlib
-    import io
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        scan.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters", 1)[1].splitlines()[0]
-    assert "_cid" in pf and "IN" in pf, pf
-    # and pruning actually executed: the probed scan covers exactly the
-    # rows whose assignment lands in the probed lists
-    probed_rows = scan.count()
-    all_rows = spark.read.parquet(out).count()
-    assert 0 < probed_rows < all_rows
-
-
-def test_embedding_bucket_cap_and_multiband(spark):
-    """Scale-hardening of embedding near-dup (100 TB skew case): a
-    correlated cluster piles into one LSH bucket; the bucket-size cap
-    re-splits it with fresh hyperplanes (bounded per-bucket pair counts),
-    and multiband recovers the recall the deeper signature costs."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from quickwit_spark.pipeline.dedup import (bucketize_embeddings,
-                                               embedding_near_dup)
-    rng = np.random.default_rng(0)
-    base = rng.standard_normal(16)
-    clustered = base[None, :] + 0.6 * rng.standard_normal((500, 16))
-    noise = rng.standard_normal((100, 16))
-    X = np.vstack([clustered, noise])
-    emb = spark.createDataFrame(
-        [(int(i), [float(x) for x in X[i]]) for i in range(len(X))],
-        "vec_id long, embedding array<double>")
-
-    def max_bucket(b):
-        return (b.groupBy("_sig").count()
-                .agg(F.max("count")).collect()[0][0])
-
-    uncapped = max_bucket(bucketize_embeddings(emb, nbits=3, seed=42))
-    capped = max_bucket(bucketize_embeddings(
-        emb, nbits=3, seed=42, max_bucket_size=64, refine_rounds=2))
-    assert uncapped > 150  # the skew exists
-    assert capped <= 100 and capped < uncapped / 2  # and is bounded
-
-    # auto-sizing: nbits from corpus size / target bucket size
-    auto = bucketize_embeddings(emb, nbits=None, target_bucket_size=64,
-                                seed=42)
-    assert max_bucket(auto) < 600
-
-    full = embedding_near_dup(emb, threshold=0.9, nbits=3, seed=42)
-    cap1 = embedding_near_dup(emb, threshold=0.9, nbits=3, seed=42,
-                              max_bucket_size=64)
-    cap2 = embedding_near_dup(emb, threshold=0.9, nbits=3, seed=42,
-                              max_bucket_size=64, bands=2)
-    n_full, n_cap1, n_cap2 = full.count(), cap1.count(), cap2.count()
-    assert n_cap1 <= n_full      # capping only drops candidates
-    assert n_cap1 < n_full       # it actually bounded the hot bucket
-    assert n_cap2 > n_cap1       # multiband recovers recall
-    # capped pairs are a subset of the uncapped result
-    assert cap1.join(full, ["a", "b"], "left_anti").count() == 0
-
-
-def test_ivf_assign_expr_many_centroids(spark):
-    """The flat distance-array argmin must match numpy exactly at a
-    centroid count (80) where the old nested CASE-WHEN chain blew up
-    codegen depth."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from quickwit_spark.pipeline.similarity import ivf_assign_expr
-    rng = np.random.default_rng(11)
-    cents = rng.standard_normal((80, 8))
-    X = rng.standard_normal((60, 8))
-    emb = spark.createDataFrame(
-        [(i, X[i].tolist()) for i in range(60)],
-        "vec_id long, embedding array<double>")
-    got = (emb.withColumn("cid", ivf_assign_expr("embedding", cents))
-           .orderBy("vec_id").select("cid").toPandas()["cid"].to_numpy())
-    want = ((X[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2) \
-        .argmin(axis=1)
-    assert (got == want).all()
-
-
-def test_dup_clusters_transitive(spark):
-    """A~B and B~C must cluster {A,B,C} even though A,C never pair
-    (transitive closure), including a 4-hop chain that needs multiple
-    propagation rounds; disjoint clusters stay disjoint."""
-    from quickwit_spark.pipeline.dedup import dup_clusters
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3),                 # chain -> cluster 1
-         (10, 11),                       # pair  -> cluster 10
-         (20, 21), (21, 22), (22, 23), (23, 24)],  # 5-node chain
-        "a long, b long")
-    out = {r.doc_id: r.cluster_id
-           for r in dup_clusters(pairs).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
-                   20: 20, 21: 20, 22: 20, 23: 20, 24: 20}
-
-
-def test_dup_clusters_nonconvergence_raises(spark):
-    """Label propagation past max_iter must REFUSE (silently-wrong
-    split clusters otherwise) — and the generous default converges on
-    the same chain."""
-    from quickwit_spark.pipeline.dedup import dup_clusters
-    chain = spark.createDataFrame([(i, i + 1) for i in range(8)],
-                                  "a long, b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dup_clusters(chain, max_iter=3)
-    out = {r.doc_id: r.cluster_id for r in dup_clusters(chain).collect()}
-    assert set(out.values()) == {0}
-
-
-def test_canonical_filter_keeps_one_per_cluster(spark):
-    from quickwit_spark.pipeline.dedup import canonical_filter
-    df = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(8)], "doc_id long, text string")
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
-                                  "a long, b long")
-    kept = sorted(r.doc_id for r in canonical_filter(df, pairs).collect())
-    # cluster {1,2,3} -> keep 1; {5,6} -> keep 5; 0,4,7 unpaired
-    assert kept == [0, 1, 4, 5, 7]
-
-
-# ---------------------------------------------------------------------------
-# exact-substring (token-window) dedup
-# ---------------------------------------------------------------------------
-
-def _substr_corpus(spark):
-    """4 docs: a+b share a 22-token span (cross-doc); c repeats its own
-    21-token span twice (within-doc); d is short (< window, no windows);
-    all docs carry unique prefixes/suffixes that must survive strip."""
-    span = " ".join(f"s{i}" for i in range(22))
-    inner = " ".join(f"r{i}" for i in range(21))
-    rows = [
-        (0, f"alpha unique {span} tail0"),
-        (1, f"beta other {span} tail1"),
-        (2, f"gamma {inner} mid {inner} end2"),
-        (3, "tiny doc under window"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_duplicate_windows_cross_and_within_doc(spark):
-    from quickwit_spark.pipeline.dedup import duplicate_windows
-    df = _substr_corpus(spark)
-    out = duplicate_windows(df, window=20).toPandas()
-    assert len(out) > 0
-    # cross-doc windows appear in 2 docs; within-doc repeats in 1
-    assert set(out["n_docs"].unique()) == {1, 2}
-    assert (out["n_occurrences"] >= 2).all()
-
-
-def test_dup_span_stats_coverage(spark):
-    from quickwit_spark.pipeline.dedup import dup_span_stats
-    df = _substr_corpus(spark)
-    out = (dup_span_stats(df, window=20).toPandas()
-           .set_index("doc_id").sort_index())
-    # doc 0: tokens = 2 + 22 + 1 = 25 -> 6 windows; the 22 span tokens
-    # are covered only where a full 20-window of shared tokens exists:
-    # windows starting at the 3 span positions (s0..s2) hash-match doc 1
-    # => covered tokens = s0..s21 = 22
-    assert out.loc[0, "n_tokens"] == 25
-    assert out.loc[0, "n_windows"] == 6
-    assert out.loc[0, "n_dup_windows"] == 3
-    assert out.loc[0, "n_dup_tokens"] == 22
-    assert out.loc[1, "n_dup_tokens"] == 22
-    # doc 2 repeats a 21-token run twice -> both copies covered
-    assert out.loc[2, "n_dup_windows"] == 4
-    assert out.loc[2, "n_dup_tokens"] == 42
-    # short doc: no windows, nothing covered
-    assert out.loc[3, "n_windows"] == 0
-    assert out.loc[3, "n_dup_tokens"] == 0
-
-
-def test_strip_duplicate_spans_order_and_removal(spark):
-    from quickwit_spark.pipeline.dedup import strip_duplicate_spans
-    df = _substr_corpus(spark)
-    out = (strip_duplicate_spans(df, window=20).toPandas()
-           .set_index("doc_id").sort_index())
-    # every copy of the duplicated span is dropped; survivors keep order
-    assert out.loc[0, "text"] == "alpha unique tail0"
-    assert out.loc[0, "n_removed_tokens"] == 22
-    assert out.loc[1, "text"] == "beta other tail1"
-    assert out.loc[2, "text"] == "gamma mid end2"
-    assert out.loc[2, "n_removed_tokens"] == 42
-    assert out.loc[3, "text"] == "tiny doc under window"
-    assert out.loc[3, "n_removed_tokens"] == 0
-
-
-def test_strip_duplicate_spans_idempotent(spark):
-    from quickwit_spark.pipeline.dedup import strip_duplicate_spans
-    df = _substr_corpus(spark)
-    once = strip_duplicate_spans(df, window=20)
-    twice = (strip_duplicate_spans(
-        once.select("doc_id", "text"), window=20).toPandas()
-        .set_index("doc_id").sort_index())
-    assert (twice["n_removed_tokens"] == 0).all()
-    op = once.toPandas().set_index("doc_id").sort_index()
-    assert (twice["text"] == op["text"]).all()
-
-
-def test_batch_id_collision_not_swallowed(spark, tmp_path):
-    """A batch-id collision that is NOT an exact replay (stream restarted
-    with a fresh Spark checkpoint dir => batch ids restart over new data)
-    must raise, not silently drop the batch; an exact replay stays
-    idempotent."""
-    from quickwit_spark.config import IndexConfig
-    from quickwit_spark.index.manifest import CheckpointConflict
-    from quickwit_spark.streaming.incremental import ingest_batch
-
-    cfg = IndexConfig(index_uid="bc", index_dir=str(tmp_path / "bc"),
-                      sha_col=None)
-
-    def docs(tag, n):
-        return spark.createDataFrame(pd.DataFrame({
-            "repo": ["r"] * n, "path": [f"{tag}{i}" for i in range(n)],
-            "commit": ["c"] * n, "lang": ["py"] * n,
-            "content": [f"{tag} body {i}" for i in range(n)]}))
-
-    ingest_batch(docs("a", 6), cfg, batch_id=0, partitions_per_batch=2)
-    n0 = IndexSearcher(cfg.index_dir).count("*")
-    assert n0 == 6
-    # exact replay: no error, no new docs
-    ingest_batch(docs("a", 6), cfg, batch_id=0, partitions_per_batch=2)
-    assert IndexSearcher(cfg.index_dir).count("*") == 6
-    # DIFFERENT data under the same batch id: must surface, not vanish
-    with pytest.raises(CheckpointConflict):
-        ingest_batch(docs("b", 6), cfg, batch_id=0,
-                     partitions_per_batch=2)
-    assert IndexSearcher(cfg.index_dir).count("*") == 6
-
-
-def test_ingest_batch_legacy_integer_keys_replay(spark, tmp_path):
-    """Indexes written before stream checkpoint keys were namespaced
-    hold bare integer keys: a replay against them must stay idempotent
-    (skip, no duplicate docs), and a batch-id collision over different
-    data must still raise."""
-    from quickwit_spark.config import IndexConfig
-    from quickwit_spark.index.manifest import CheckpointConflict, Manifest
-    from quickwit_spark.streaming.incremental import ingest_batch
-
-    cfg = IndexConfig(index_uid="lk", index_dir=str(tmp_path / "lk"),
-                      sha_col=None)
-
-    def docs(tag, n):
-        return spark.createDataFrame(pd.DataFrame({
-            "repo": ["r"] * n, "path": [f"{tag}{i}" for i in range(n)],
-            "commit": ["c"] * n, "lang": ["py"] * n,
-            "content": [f"{tag} body {i}" for i in range(n)]}))
-
-    ingest_batch(docs("a", 6), cfg, batch_id=0, partitions_per_batch=2)
-    # rewrite the manifest to the LEGACY key format (bare integers)
-    m = Manifest.load(cfg.index_dir)
-    cps = m.data["checkpoints"]
-    m.data["checkpoints"] = {k.split("-", 1)[1]: v for k, v in cps.items()}
-    m.data["version"] += 1
-    m._write()
-    assert set(Manifest.load(cfg.index_dir).data["checkpoints"]) == \
-        {"0", "1"}
-
-    # exact replay against legacy keys: skipped, idempotent
-    ingest_batch(docs("a", 6), cfg, batch_id=0, partitions_per_batch=2)
-    assert IndexSearcher(cfg.index_dir).count("*") == 6
-    # collision over different data: loud
-    with pytest.raises(CheckpointConflict):
-        ingest_batch(docs("b", 6), cfg, batch_id=0,
-                     partitions_per_batch=2)
-    assert IndexSearcher(cfg.index_dir).count("*") == 6
-
-
-def test_dup_clusters_string_ids(spark):
-    """Connected components must work on STRING doc ids (repo/path keys)
-    — the old cast('long') crashed under ANSI or nulled every label."""
-    from quickwit_spark.pipeline.dedup import canonical_filter, dup_clusters
-    pairs = spark.createDataFrame(
-        [("org/a", "org/b"), ("org/b", "org/c"), ("x/y", "x/z")],
-        "a string, b string")
-    out = (dup_clusters(pairs).toPandas()
-           .set_index("doc_id")["cluster_id"].to_dict())
-    assert out == {"org/a": "org/a", "org/b": "org/a",
-                   "org/c": "org/a", "x/y": "x/y", "x/z": "x/y"}
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in [("org/a", "t"), ("org/b", "t"),
-                             ("org/c", "t"), ("x/y", "u"),
-                             ("x/z", "u"), ("solo", "v")]],
-        "doc_id string, text string")
-    kept = sorted(r.doc_id for r in
-                  canonical_filter(docs, pairs).collect())
-    assert kept == ["org/a", "solo", "x/y"]
-
-
-def test_embedding_near_dup_empty_corpus(spark):
-    from quickwit_spark.pipeline.dedup import embedding_near_dup
-    emb = spark.createDataFrame(
-        [], "vec_id long, embedding array<float>")
-    out = embedding_near_dup(emb, threshold=0.9, nbits=4)
-    assert out.count() == 0
-
-
-def test_transform_dropping_column_counts_as_error(spark):
-    """A transform that drops a passthrough column must be counted as a
-    transform error for the batch, not crash the job with KeyError."""
-    from quickwit_spark.pipeline.transform import (
-        DocProcessorCounters, process_docs)
-    df = spark.createDataFrame(
-        [("r", "p", "c", "py", "hello world", 1)],
-        "repo string, path string, commit string, lang string, "
-        "content string, extra int")
-    counters = DocProcessorCounters(spark.sparkContext)
-    out = process_docs(
-        df, required={"content": "str"},
-        transform=lambda pdf: pdf.drop(columns=["extra"]),
-        counters=counters)
-    assert out.count() == 0
-    assert counters.transform_errors.value == 1
-
-
-def test_global_fetch_zero_hits(spark, tmp_path):
-    import pandas as pd
-    import quickwit_spark as q
-    from quickwit_spark.config import IndexConfig
-    from quickwit_spark.index.global_index import (
-        GlobalIndexSearcher, build_term_partitioned)
-    pdf = pd.DataFrame({
-        "repo": ["r"] * 2, "path": ["a", "b"], "commit": ["c"] * 2,
-        "lang": ["py"] * 2, "content": ["alpha beta", "gamma"]})
-    cfg = IndexConfig(index_uid="gz", index_dir=str(tmp_path / "gz"),
-                      sha_col=None)
-    q.build_index_pandas(pdf, cfg, num_partitions=1)
-    build_term_partitioned(spark, cfg.index_dir, num_term_partitions=2)
-    g = GlobalIndexSearcher(cfg.index_dir)
-    n, res = g.search_terms(["zzznotaterm"], operator="or", k=5)
-    assert n == 0 and len(res) == 0
-    fetched = g.fetch(res)
-    assert len(fetched) == 0
-
-
-def test_replay_after_merge_is_benign(spark, tmp_path):
-    """Replay of a batch whose segments were since merged away must be a
-    no-op (the checkpoint position embeds the content-addressed segment
-    ids, so position equality proves the replay without requiring the
-    original segment rows to still exist)."""
-    from quickwit_spark.config import IndexConfig
-    from quickwit_spark.index.manifest import Manifest
-    from quickwit_spark.index.merge import merge_segments
-    from quickwit_spark.streaming.incremental import ingest_batch
-
-    cfg = IndexConfig(index_uid="rm", index_dir=str(tmp_path / "rm"),
-                      sha_col=None)
-
-    def docs(tag, n):
-        return spark.createDataFrame(pd.DataFrame({
-            "repo": ["r"] * n, "path": [f"{tag}{i}" for i in range(n)],
-            "commit": ["c"] * n, "lang": ["py"] * n,
-            "content": [f"{tag} body {i}" for i in range(n)]}))
-
-    ingest_batch(docs("a", 4), cfg, batch_id=0, partitions_per_batch=2)
-    ingest_batch(docs("b", 4), cfg, batch_id=1, partitions_per_batch=2)
-    m = Manifest.load(cfg.index_dir)
-    segs = sorted(m.segments(), key=lambda x: x["segment_id"])
-    meta = merge_segments(cfg.index_dir, segs)
-    m.publish([meta],
-              replaced_segment_ids=[x["segment_id"] for x in segs])
-    m.vacuum()  # original batch segments are GONE from the manifest
-    # exact replay of batch 0: benign no-op, count unchanged
-    ingest_batch(docs("a", 4), cfg, batch_id=0, partitions_per_batch=2)
-    assert IndexSearcher(cfg.index_dir).count("*") == 8
-
-
-def test_bucketize_null_embeddings_never_collapse(spark):
-    """Null embeddings must get UNIQUE signatures — hashing them all to
-    _sig=0 would pile every null row into one unsplittable bucket and
-    re-inflate the self-join; they also must not pair with anything."""
-    from quickwit_spark.pipeline.dedup import (bucketize_embeddings,
-                                               embedding_near_dup)
-    rows = [(i, None) for i in range(6)] + \
-        [(10, [1.0, 0.0]), (11, [1.0, 0.0001])]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    b = bucketize_embeddings(emb, nbits=4).toPandas()
-    null_sigs = b[b.embedding.isna()]["_sig"]
-    assert null_sigs.nunique() == 6  # all distinct
-    assert (null_sigs < 0).all()     # never collide with real sigs
-    pairs = embedding_near_dup(emb, threshold=0.9, nbits=4).toPandas()
-    assert set(map(tuple, pairs[["a", "b"]].values)) == {(10, 11)}
-    # null sigs are DETERMINISTIC (id-derived): the refine loop's
-    # self-join on _sig must not drop null rows even without a persist
-    b2 = bucketize_embeddings(emb, nbits=4, max_bucket_size=2,
-                              refine_rounds=2).toPandas()
-    assert len(b2) == 8
-    assert b2[b2.embedding.isna()]["_sig"].nunique() == 6
-
-
-def test_replay_after_merge_cleans_orphan_dirs(spark, tmp_path):
-    """The benign replay rewrites segment files before the publish is
-    rejected; when the originals were merged/vacuumed away those dirs
-    must be removed, not leaked."""
-    from quickwit_spark.config import IndexConfig
-    from quickwit_spark.index.manifest import Manifest
-    from quickwit_spark.index.merge import merge_segments
-    from quickwit_spark.streaming.incremental import ingest_batch
-
-    cfg = IndexConfig(index_uid="rl", index_dir=str(tmp_path / "rl"),
-                      sha_col=None)
-
-    def docs(tag, n):
-        return spark.createDataFrame(pd.DataFrame({
-            "repo": ["r"] * n, "path": [f"{tag}{i}" for i in range(n)],
-            "commit": ["c"] * n, "lang": ["py"] * n,
-            "content": [f"{tag} body {i}" for i in range(n)]}))
-
-    ingest_batch(docs("a", 4), cfg, batch_id=0, partitions_per_batch=2)
-    ingest_batch(docs("b", 4), cfg, batch_id=1, partitions_per_batch=2)
-    m = Manifest.load(cfg.index_dir)
-    segs = sorted(m.segments(), key=lambda x: x["segment_id"])
-    meta = merge_segments(cfg.index_dir, segs)
-    m.publish([meta],
-              replaced_segment_ids=[x["segment_id"] for x in segs])
-    m.vacuum()
-    seg_root = os.path.join(cfg.index_dir, "segments")
-    assert len(os.listdir(seg_root)) == 1  # only the merged child
-    ingest_batch(docs("a", 4), cfg, batch_id=0, partitions_per_batch=2)
-    # replay was benign AND its rewritten dirs were swept
-    assert len(os.listdir(seg_root)) == 1
-    assert IndexSearcher(cfg.index_dir).count("*") == 8
-
-
-def test_legacy_position_format_replay_accepted(spark, tmp_path):
-    """Positions written before the ids= suffix must still be accepted
-    as replays by their prefix (no crash-loop after an upgrade)."""
-    from quickwit_spark.config import IndexConfig
-    from quickwit_spark.index.manifest import Manifest
-    from quickwit_spark.streaming.incremental import ingest_batch
-
-    cfg = IndexConfig(index_uid="lg", index_dir=str(tmp_path / "lg"),
-                      sha_col=None)
-    df = spark.createDataFrame(pd.DataFrame({
-        "repo": ["r"] * 4, "path": [f"f{i}" for i in range(4)],
-        "commit": ["c"] * 4, "lang": ["py"] * 4,
-        "content": [f"body {i}" for i in range(4)]}))
-    ingest_batch(df, cfg, batch_id=0, partitions_per_batch=2)
-    # rewrite the stored positions to the LEGACY (ids-less) format
-    m = Manifest.load(cfg.index_dir)
-    cps = m.data["checkpoints"]
-    for k, v in list(cps.items()):
-        cps[k] = str(v).rsplit(";ids=", 1)[0]
-    m.data["version"] += 1
-    m._write()
-    # exact replay against legacy positions: benign
-    ingest_batch(df, cfg, batch_id=0, partitions_per_batch=2)
-    assert IndexSearcher(cfg.index_dir).count("*") == 4
-    # the accepted replay UPGRADES the stored position to the strong
-    # ids= format, so a later same-batch-id/same-doc-count collision
-    # over different data can no longer match the weak prefix
-    m2 = Manifest.load(cfg.index_dir)
-    assert all(";ids=" in str(v) for v in m2.data["checkpoints"].values())
-    df2 = spark.createDataFrame(pd.DataFrame({
-        "repo": ["r"] * 4, "path": [f"g{i}" for i in range(4)],
-        "commit": ["c"] * 4, "lang": ["py"] * 4,
-        "content": [f"other {i}" for i in range(4)]}))
-    with pytest.raises(Exception):
-        ingest_batch(df2, cfg, batch_id=0, partitions_per_batch=2)
-
-
-def test_simhash60_hamming_neighbor_recall(spark):
-    """Pigeonhole guarantee: every pair within max_hamming of each other
-    MUST surface in simhash_candidate_pairs (banding can only add
-    candidates, never lose a true neighbor), and the signature space is
-    60-bit (positive i64, far past the old 16-bit bucket ceiling)."""
-    from quickwit_spark.pipeline.dedup import (
-        SIMHASH_BITS, simhash60, simhash_candidate_pairs)
-
-    base = ("the quick brown fox jumps over the lazy dog near the river "
-            "bank while seven wizards brew strong coffee at midnight")
-    rows = []
-    # 6 heavy-overlap variants of the same doc + 6 unrelated docs
-    words = base.split()
-    for i in range(6):
-        w = list(words)
-        w[i] = f"variant{i}"
-        rows.append((i, " ".join(w)))
-    for i in range(6, 12):
-        rows.append((i, " ".join(f"tok{i}x{j}" for j in range(40))))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    assert SIMHASH_BITS == 60
-    sigs = {r["doc_id"]: r["simhash"]
-            for r in simhash60(df).collect()}
-    assert all(0 <= s < (1 << 60) for s in sigs.values())
-
-    # near-identical variants must be hamming-close; unrelated docs sit
-    # near the random-pair expectation of SIMHASH_BITS/2 = 30
-    ham = lambda a, b: bin(sigs[a] ^ sigs[b]).count("1")
-    variant_max = max(ham(a, b) for a in range(6) for b in range(a + 1, 6))
-    unrelated_min = min(ham(a, b) for a in range(6, 12)
-                        for b in range(a + 1, 12))
-    assert variant_max < unrelated_min
-
-    max_h = variant_max
-    truth = {(a, b) for a in sigs for b in sigs if a < b
-             and ham(a, b) <= max_h}
-    assert {(a, b) for a in range(6) for b in range(a + 1, 6)} <= truth
-    got = {(r["a"], r["b"]) for r in
-           simhash_candidate_pairs(df, max_hamming=max_h).collect()}
-    assert truth <= got  # 100% recall within the hamming radius
-    # and verification bounds what banding lets through
-    assert all(ham(a, b) <= max_h for a, b in got)
-
-
-def test_bucketize_without_id_column(spark):
-    """The null-sig branch is ANALYZED even when no row is null, so it
-    must not reference a missing id column: a (doc_id, embedding)
-    DataFrame without 'vec_id' bucketizes fine, and null embeddings
-    still get unique-ish deterministic negative sigs derived from the
-    other columns."""
-    import numpy as np
-    from quickwit_spark.pipeline.dedup import bucketize_embeddings
-
-    rng = np.random.default_rng(1)
-    rows = [(f"d{i}", rng.standard_normal(8).tolist()) for i in range(20)]
-    rows += [("dnull-a", None), ("dnull-b", None)]
-    emb = spark.createDataFrame(rows,
-                                "doc_id string, embedding array<double>")
-    b = bucketize_embeddings(emb, nbits=3, seed=7).toPandas()
-    assert len(b) == 22
-    sigs = b.set_index("doc_id")["_sig"]
-    assert sigs["dnull-a"] < 0 and sigs["dnull-b"] < 0
-    assert sigs["dnull-a"] != sigs["dnull-b"]
-    # deterministic across re-evaluation (join-safety contract)
-    b2 = bucketize_embeddings(emb, nbits=3, seed=7).toPandas()
-    assert sigs.to_dict() == b2.set_index("doc_id")["_sig"].to_dict()
-
-
-def test_embedding_near_dup_zero_vectors(spark):
-    """All-zero embeddings (embedding-service failure) have undefined
-    cosine — defined as 0.0 (never near-dup) instead of an ANSI
-    DIVIDE_BY_ZERO job abort."""
-    import numpy as np
-    from quickwit_spark.pipeline.dedup import embedding_near_dup
-
-    rng = np.random.default_rng(4)
-    v = rng.standard_normal(8).tolist()
-    rows = [(1, v), (2, v), (3, [0.0] * 8), (4, [0.0] * 8)]
-    emb = spark.createDataFrame(rows,
-                                "vec_id long, embedding array<double>")
-    pairs = embedding_near_dup(emb, threshold=0.95, nbits=2).toPandas()
-    assert {(int(a), int(b)) for a, b in zip(pairs["a"], pairs["b"])} \
-        == {(1, 2)}  # the zero vectors pair with nothing
-
-
-def test_training_mix_empty_stratum(spark):
-    """A stratum whose docs are all empty gets sample_rate 0.0, not a
-    DIVIDE_BY_ZERO abort."""
-    import pandas as pd
-    from quickwit_spark.pipeline.filtering import training_mix
-
-    df = spark.createDataFrame(pd.DataFrame({
-        "lang": ["en", "en", "fr"],
-        "text": ["a b c", "d e", ""]}))
-    out = training_mix(df, {"en": 0.7, "fr": 0.3}, budget_tokens=100,
-                       strata_col="lang").toPandas().set_index("stratum")
-    assert out.loc["fr", "n_tokens"] == 0
-    assert out.loc["fr", "sample_rate"] == 0.0
-    assert out.loc["en", "sample_rate"] > 0
-
-
-def test_lsh_bands_must_divide_num_hashes(spark):
-    import pytest as _pytest
-    from quickwit_spark.pipeline.dedup import lsh_candidate_pairs
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="must divide"):
-        lsh_candidate_pairs(df, num_hashes=16, bands=3)
 
 
 def test_multimodal_null_blobs_and_string_ids(spark):
@@ -852,291 +498,6 @@ def test_multimodal_real_codecs_spark_path(spark):
     fr = y4m_frame_stats(vdf, every_n=2).toPandas()
     assert list(fr["frame_idx"]) == [0, 2, 4]
     assert list(fr["y_sum"]) == [0, 320, 640]
-
-
-def test_transform_int64_rejects_lossy_values(spark):
-    """int64 coercion quarantines non-integral ('1.7' silently became
-    1), non-finite ('inf' crashed the task), and float-rounded
-    magnitudes — they count as coercion_errors, not corrupt or crash."""
-    import pandas as pd
-
-    from quickwit_spark.pipeline.transform import process_docs
-
-    df = spark.createDataFrame(pd.DataFrame({
-        "doc_id": ["a", "b", "c", "d", "e"],
-        "n": ["3", "1.7", "inf", "9007199254740993999", "12"]}))
-    out = process_docs(df, required={"doc_id": "str", "n": "int64"}
-                       ).toPandas().set_index("doc_id")
-    # 'd' IS representable in int64: kept with the EXACT value (no
-    # float64 round-trip), independent of which rows share its batch
-    assert sorted(out.index) == ["a", "d", "e"]
-    assert out.loc["a", "n"] == 3 and out.loc["e", "n"] == 12
-    assert int(out.loc["d", "n"]) == 9007199254740993999
-
-
-def test_ann_training_tolerates_failure_rows(spark):
-    """train_ivf_centroids / train_pq_codebooks / lsh_bucket_topk must
-    not crash when the sample or first row is a null/ragged/NaN-element
-    embedding — the exact corpora the encode paths are hardened for."""
-    import numpy as np
-
-    from quickwit_spark.pipeline.similarity import (
-        lsh_bucket_topk, train_ivf_centroids, train_pq_codebooks)
-
-    rng = np.random.default_rng(2)
-    rows = [(0, None), (1, rng.standard_normal(5).tolist())]  # null FIRST
-    rows += [(i, rng.standard_normal(8).tolist()) for i in range(2, 30)]
-    rows[5] = (5, [1.0, float("nan"), 0.0, 0.0, 0.0, 0.0, 0.0, 0.0])
-    emb = spark.createDataFrame(rows,
-                                "vec_id long, embedding array<double>")
-    # dim probed from the first NON-NULL row (len 5 -> ragged others
-    # filtered; use the majority-dim corpus for real training)
-    good = emb.where("vec_id >= 2")
-    cents = train_ivf_centroids(good, n_centroids=4, sample=100, seed=1)
-    assert cents.shape == (4, 8)
-    cb = train_pq_codebooks(good, m=4, ksub=4, sample=100, seed=1)
-    assert cb.shape == (4, 4, 2)
-    qdf = spark.createDataFrame(
-        [(rng.standard_normal(8).tolist(),)], "q array<double>")
-    out = lsh_bucket_topk(good, qdf, k=3, nbits=2)
-    assert out.count() <= 3
-
-
-def test_arrow_twins_null_element_rows(spark):
-    """A correct-length list with one null ELEMENT must not silently
-    argmin to centroid 0 on the Arrow path: null cid / sig 0 / null
-    code, matching the expression twins' null-dot behavior."""
-    import numpy as np
-
-    from quickwit_spark.pipeline.similarity import (
-        fixed_pq_codebooks, hyperplanes, ivf_assign_arrow,
-        pq_encode_arrow, signature_arrow)
-
-    dim = 8
-    rng = np.random.default_rng(9)
-    rows = [(0, rng.standard_normal(dim).tolist()),
-            (1, [0.5, None, 0.5, 0.5, 0.5, 0.5, 0.5, 0.5])]
-    emb = spark.createDataFrame(rows,
-                                "vec_id long, embedding array<double>")
-    cents = rng.standard_normal((4, dim)).round(4)
-    got = {r["vec_id"]: r["_cid"]
-           for r in ivf_assign_arrow(emb, cents).collect()}
-    assert got[1] is None and got[0] is not None
-    planes = hyperplanes(dim, 4, seed=3)
-    sigs = {r["vec_id"]: r["_sig"]
-            for r in signature_arrow(emb, planes).collect()}
-    assert sigs[1] == 0
-    cb = fixed_pq_codebooks(dim, m=4, ksub=4, seed=2)
-    codes = {r["vec_id"]: r["pq_code"]
-             for r in pq_encode_arrow(emb, cb).collect()}
-    assert codes[1] is None and len(codes[0]) == 4
-
-
-def test_banded_relations_compose_to_pairs(spark):
-    """lsh_band_buckets / simhash_bands are the probe-facing halves of
-    the candidate joins: pairs derived from the exposed relations must
-    equal the one-call public functions, and the band counts must match
-    the scheme (bands for LSH, max_hamming+1 pigeonhole slices)."""
-    import pandas as pd
-
-    from quickwit_spark.pipeline.dedup import (
-        lsh_band_buckets, lsh_candidate_pairs, minhash_signatures,
-        pairs_from_buckets, simhash60, simhash_bands,
-        simhash_candidate_pairs)
-
-    rows = pd.DataFrame({
-        "doc_id": range(6),
-        "text": ["the quick brown fox jumps over the lazy dog"] * 2
-                + ["the quick brown fox jumps over the lazy cat",
-                   "entirely different words in this one here now",
-                   "another unrelated document text body sample row",
-                   "the quick brown fox jumps over the lazy dog yes"],
-    })
-    df = spark.createDataFrame(rows)
-
-    sig = minhash_signatures(df, num_hashes=16, shingle_n=3)
-    banded = lsh_band_buckets(sig, 16, 4)
-    assert banded.select("band").distinct().count() == 4
-    got = {(r["a"], r["b"]) for r in pairs_from_buckets(banded).collect()}
-    want = {(r["a"], r["b"])
-            for r in lsh_candidate_pairs(df, num_hashes=16,
-                                         bands=4).collect()}
-    assert got == want and (0, 1) in got
-
-    ssig = simhash60(df)
-    sbanded = simhash_bands(ssig, max_hamming=2)
-    assert sbanded.select("band").distinct().count() == 3
-    from quickwit_spark.pipeline.dedup import simhash_pairs_from_bands
-    got_s = {(r["a"], r["b"])
-             for r in simhash_pairs_from_bands(sbanded, 2).collect()}
-    want_s = {(r["a"], r["b"])
-              for r in simhash_candidate_pairs(df, max_hamming=2)
-              .collect()}
-    assert got_s == want_s and (0, 1) in got_s
-
-
-def test_lsh_bands_must_divide(spark):
-    import pandas as pd
-    import pytest as _pytest
-
-    from quickwit_spark.pipeline.dedup import lsh_candidate_pairs
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [0], "text": ["a b c d"]}))
-    with _pytest.raises(ValueError, match="must divide"):
-        lsh_candidate_pairs(df, num_hashes=16, bands=5).collect()
-
-
-def test_adc_topk_arrow_matches_expression(spark, tmp_path):
-    """adc_topk_arrow is the scale twin of pq_adc_topk (driver-side
-    numpy LUTs instead of m*ksub*dsub py4j literals — the expression
-    path costs ~80 s of pure plan-build at nprobe 16 x m 8 x ksub 16,
-    measured). Plain AND residual results must match the expression
-    path, including a null-code row being excluded."""
-    import numpy as np
-    import pandas as pd
-
-    from quickwit_spark.pipeline.similarity import (
-        adc_topk_arrow, fixed_pq_codebooks, ivfpq_partition, ivfpq_topk,
-        pq_adc_topk, pq_encode_arrow)
-
-    rng = np.random.default_rng(7)
-    vecs = rng.standard_normal((48, 8))
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    rows = [(int(i), v.tolist()) for i, v in enumerate(vecs)]
-    rows.append((48, None))  # null embedding -> null code row
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cb = fixed_pq_codebooks(8, m=4, ksub=8, seed=3)
-    qv = vecs[0]
-    qdf = spark.createDataFrame(pd.DataFrame({"q": [qv.tolist()]}))
-
-    codes = pq_encode_arrow(emb, cb).persist()
-    want = [(r["vec_id"], r["approx_cos"])
-            for r in pq_adc_topk(codes, qdf, cb, k=5).collect()]
-    got = [(r["vec_id"], r["approx_cos"])
-           for r in adc_topk_arrow(codes, qv, cb, k=5).collect()]
-    assert got == want and 48 not in {i for i, _ in got}
-
-    cents = np.round(rng.standard_normal((4, 8)) * 0.1, 6)
-    layout = str(tmp_path / "ivfpq_arrow")
-    ivfpq_partition(emb, layout, cents, cb, residual=True)
-    want_r = [(r["vec_id"], r["approx_cos"])
-              for r in ivfpq_topk(spark, layout, qdf, k=5, nprobe=3,
-                                  arrow=False).collect()]
-    got_r = [(r["vec_id"], r["approx_cos"])
-             for r in ivfpq_topk(spark, layout, qdf, k=5, nprobe=3,
-                                 arrow=True).collect()]
-    assert got_r == want_r
-    codes.unpersist()
-
-
-def test_pairs_from_buckets_hot_bucket_star(spark):
-    """Buckets over max_bucket emit O(c) star edges (hub = min doc_id)
-    instead of c*(c-1)/2 pairs — same connected components, no quadratic
-    blowup when a Zipf-hot shingle grows a bucket linearly with the
-    corpus."""
-    import pandas as pd
-
-    from quickwit_spark.pipeline.dedup import pairs_from_buckets
-
-    rows = ([(d, 0, "hot") for d in range(5)]
-            + [(8, 0, "cold"), (9, 0, "cold")])
-    banded = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "band", "bucket"]))
-    got = {(r["a"], r["b"])
-           for r in pairs_from_buckets(banded, max_bucket=3).collect()}
-    assert got == {(0, 1), (0, 2), (0, 3), (0, 4), (8, 9)}
-    allp = {(r["a"], r["b"]) for r in pairs_from_buckets(banded).collect()}
-    assert len(allp) == 10 + 1 and got < allp
-
-
-def test_simhash_star_edges_keep_hamming_verify(spark):
-    """Hot-slice star edges still pass the exact XOR-popcount verify:
-    a hub->member edge with hamming > max_hamming must be dropped."""
-    import pandas as pd
-
-    from quickwit_spark.pipeline.dedup import simhash_pairs_from_bands
-
-    # one hot (band, bv) slice of 4 docs: doc 0 (hub) and doc 1 agree
-    # (hamming 1), docs 2-3 differ from the hub by >2 bits
-    rows = [(0, 0, 7, 0b0000000), (1, 0, 7, 0b0000001),
-            (2, 0, 7, 0b0111000), (3, 0, 7, 0b1110000)]
-    banded = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "band", "bv", "simhash"]))
-    got = {(r["a"], r["b"], r["hamming"])
-           for r in simhash_pairs_from_bands(
-               banded, max_hamming=2, max_bucket=2).collect()}
-    assert got == {(0, 1, 1)}
-
-
-def test_stream_batch0_into_builder_bootstrapped_index(spark, tmp_path):
-    """An index bootstrapped by build_index holds bare integer partition
-    checkpoints 0..N-1 with 'docs=N' positions. Streaming batch 0 into it
-    (base 0, overlapping int range) must NOT misread those as legacy
-    STREAM checkpoints and raise CheckpointConflict forever — the
-    namespaced 'stream-*' keys exist precisely so the two key spaces
-    coexist."""
-    from quickwit_spark.config import IndexConfig
-    from quickwit_spark.index.builder import build_index
-    from quickwit_spark.streaming.incremental import ingest_batch
-
-    cfg = IndexConfig(index_uid="bb", index_dir=str(tmp_path / "bb"),
-                      sha_col=None)
-
-    def docs(tag, n):
-        return spark.createDataFrame(pd.DataFrame({
-            "repo": ["r"] * n, "path": [f"{tag}{i}" for i in range(n)],
-            "commit": ["c"] * n, "lang": ["py"] * n,
-            "content": [f"{tag} body {i}" for i in range(n)]}))
-
-    build_index(spark, docs("base", 8), cfg, num_partitions=4)
-    assert IndexSearcher(cfg.index_dir).count("*") == 8
-    # first micro-batch over the same index: must publish, not conflict
-    ingest_batch(docs("s", 5), cfg, batch_id=0, partitions_per_batch=2)
-    assert IndexSearcher(cfg.index_dir).count("*") == 13
-    # replay stays idempotent
-    ingest_batch(docs("s", 5), cfg, batch_id=0, partitions_per_batch=2)
-    assert IndexSearcher(cfg.index_dir).count("*") == 13
-
-
-def test_legacy_preids_replay_upgraded_in_place(spark, tmp_path):
-    """Legacy bare-int stream checkpoints in the PRE-ids format are
-    accepted by weak prefix on replay — but must be upgraded in place,
-    so a LATER batch-id collision with an equal doc count over different
-    data raises instead of matching the weak prefix forever."""
-    from quickwit_spark.config import IndexConfig
-    from quickwit_spark.index.manifest import CheckpointConflict, Manifest
-    from quickwit_spark.streaming.incremental import ingest_batch
-
-    cfg = IndexConfig(index_uid="lu", index_dir=str(tmp_path / "lu"),
-                      sha_col=None)
-
-    def docs(tag, n):
-        return spark.createDataFrame(pd.DataFrame({
-            "repo": ["r"] * n, "path": [f"{tag}{i}" for i in range(n)],
-            "commit": ["c"] * n, "lang": ["py"] * n,
-            "content": [f"{tag} body {i}" for i in range(n)]}))
-
-    ingest_batch(docs("a", 6), cfg, batch_id=0, partitions_per_batch=2)
-    # rewrite to LEGACY keys (bare ints) in the PRE-ids position format
-    m = Manifest.load(cfg.index_dir)
-    cps = m.data["checkpoints"]
-    m.data["checkpoints"] = {
-        k.split("-", 1)[1]: v.rsplit(";ids=", 1)[0]
-        for k, v in cps.items()}
-    m.data["version"] += 1
-    m._write()
-
-    # exact replay: accepted by prefix AND upgraded in place
-    ingest_batch(docs("a", 6), cfg, batch_id=0, partitions_per_batch=2)
-    assert IndexSearcher(cfg.index_dir).count("*") == 6
-    stored = Manifest.load(cfg.index_dir).data["checkpoints"]
-    assert all(";ids=" in stored[k] for k in ("0", "1")), stored
-    # same batch id + same doc count over DIFFERENT data: now loud
-    with pytest.raises(CheckpointConflict):
-        ingest_batch(docs("b", 6), cfg, batch_id=0,
-                     partitions_per_batch=2)
-    assert IndexSearcher(cfg.index_dir).count("*") == 6
 
 
 def test_multimodal_corrupt_blobs_null_propagate(spark):

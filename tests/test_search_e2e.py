@@ -17,7 +17,8 @@ from quickwit_spark.index.builder import build_index_pandas
 from quickwit_spark.index.corpus import corpus_pandas
 from quickwit_spark.search import ast as A
 from quickwit_spark.search.engine import IndexSearcher
-from tests.oracle import OracleEngine, OracleSegment, scalar_analyze
+from tests.oracle import (OracleEngine, OracleSegment, prune_segments,
+                          scalar_analyze)
 
 N_DOCS = 240
 
@@ -207,7 +208,7 @@ def test_prune_index_equivalent_to_loop(built):
     """The vectorized PruneIndex must keep exactly the segments the
     reference row-walk keeps, across tag/range/mixed constraints."""
     import random
-    from quickwit_spark.search.engine import PruneIndex, prune_segments
+    from quickwit_spark.search.engine import PruneIndex
     rng = random.Random(0)
     segs = []
     for i in range(3000):

@@ -123,7 +123,8 @@ def test_range_stats_segment_pruning(tmp_path):
     time_range pruning generalized to numeric fast fields)."""
     import pandas as pd
     from quickwit_spark.index.builder import build_index_pandas
-    from quickwit_spark.search.engine import IndexSearcher, prune_segments
+    from quickwit_spark.search.engine import IndexSearcher
+    from tests.oracle import prune_segments
 
     rows = []
     for i in range(40):
@@ -184,7 +185,8 @@ def test_partition_cols_cluster_segments_for_pruning(tmp_path):
     pruning actually drop segments."""
     import pandas as pd
     from quickwit_spark.index.builder import build_index_pandas
-    from quickwit_spark.search.engine import IndexSearcher, prune_segments
+    from quickwit_spark.search.engine import IndexSearcher
+    from tests.oracle import prune_segments
     langs = ["go", "rust", "java", "py"]
     pdf = pd.DataFrame({
         "repo": [f"r{i}" for i in range(80)],

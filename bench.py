@@ -545,7 +545,7 @@ def main() -> None:
     # under inprocess_doc_budget, so serial queries run in-process
     queries["q8_serial_dist"] = round(time.perf_counter() - t0, 4)
     forced = IndexSearcher(cfg.index_dir, spark=spark,
-                           force_distributed=True)
+                           inprocess_doc_budget=0)
     t0 = time.perf_counter()
     for qq in batch_qs:
         forced.search(qq, k=10, fetch_fields=False)

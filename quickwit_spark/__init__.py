@@ -36,8 +36,7 @@ def __getattr__(name):
         "GlobalIndexSearcher": ("quickwit_spark.index.global_index",
                                 "GlobalIndexSearcher"),
         "IndexSearcher": ("quickwit_spark.search.engine", "IndexSearcher"),
-        "MultiIndexSearcher": ("quickwit_spark.search.multi",
-                               "MultiIndexSearcher"),
+        "UnionSearcher": ("quickwit_spark.search.multi", "UnionSearcher"),
         "native_search": ("quickwit_spark.search.rest",
                           "native_search"),
         "parse_query": ("quickwit_spark.search.parser", "parse_query"),

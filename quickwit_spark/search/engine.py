@@ -1695,8 +1695,12 @@ def _after_eq_mask(arr: np.ndarray, cursor, asc: bool
     distinguish i64::MAX from i64::MAX-1 (the reference's u64/i64
     cursor corner cases, rest-api-tests search_after/0001).  Missing
     values sort LAST in both directions, i.e. always strictly after
-    any real cursor value."""
+    any real cursor value. A missing cursor value equals every missing
+    value and nothing sorts after it, so paging past the last missing
+    row ends instead of starting over."""
     n = len(arr)
+    if cursor is None or (isinstance(cursor, float) and cursor != cursor):
+        return np.zeros(n, dtype=bool), np.asarray(pd.isna(arr), dtype=bool)
     if arr.dtype == object:
         after = np.zeros(n, dtype=bool)
         eq = np.zeros(n, dtype=bool)
@@ -1873,17 +1877,16 @@ class IndexSearcher:
     root.rs:1643-1648): a query whose pruned segments hold fewer than
     `inprocess_doc_budget` docs runs in-process even when a
     SparkSession is attached — at that size Spark job scheduling costs
-    ~100x the scan itself. Larger queries fan out. The gate covers
-    every fan-out surface — search, sort_search, list_terms, and
-    search_many (which sums docs over its per-query pruned pairs).
-    force_distributed pins the fan-out path regardless (used by the
-    correctness gate so the production distributed path stays
-    oracle-verified).
+    ~100x the scan itself. Larger queries fan out. One predicate
+    (_fan_out_wanted) gates every fan-out surface — search,
+    sort_search, list_terms, and search_many (which sums docs over its
+    per-query pruned pairs); inprocess_doc_budget=0 pins the fan-out
+    path. search, search_many and sort_search share one leaf fan-out
+    (_fan_out).
     """
 
     def __init__(self, index_dir: str, spark=None,
-                 inprocess_doc_budget: int = 100_000,
-                 force_distributed: bool = False):
+                 inprocess_doc_budget: int = 100_000):
         self.index_dir = index_dir
         self.manifest = Manifest.load(index_dir)
         cfg = self.manifest.data["config"]
@@ -1893,7 +1896,6 @@ class IndexSearcher:
         self.key_cols = list(cfg.get("key_cols", []))
         self.spark = spark
         self.inprocess_doc_budget = inprocess_doc_budget
-        self.force_distributed = force_distributed
 
     def reload(self) -> "IndexSearcher":
         """Re-read the manifest from disk. Version-keyed caches
@@ -1921,10 +1923,15 @@ class IndexSearcher:
             self._doc_types_cache = cached
         return cached[1]
 
-    def _over_budget(self, segs: list[dict]) -> bool:
-        """The cost gate's predicate: pruned segments hold enough docs
-        that a Spark job beats its own scheduling overhead."""
-        return (sum(int(s.get("num_docs", 0)) for s in segs)
+    def _fan_out_wanted(self, seg_lists: list[list[dict]]) -> bool:
+        """The cost gate of every fan-out surface: fan out to Spark only
+        when a session is attached, some query spans more than one
+        segment, and the pruned segments of all queries hold enough
+        docs that a Spark job beats its own scheduling overhead."""
+        return (self.spark is not None
+                and max(map(len, seg_lists), default=0) > 1
+                and sum(int(s.get("num_docs", 0))
+                        for segs in seg_lists for s in segs)
                 >= self.inprocess_doc_budget)
 
     def _prune(self, node: A.Node) -> list[dict]:
@@ -1955,10 +1962,9 @@ class IndexSearcher:
         need = offset + k
         use_wand = not count_all and search_after is None
         parts: list[tuple[str, int, pd.DataFrame]] = []
-        if self.spark is not None and len(segs) > 1 and (
-                self.force_distributed or self._over_budget(segs)):
-            parts = self._leaf_spark(segs, node, need, use_wand,
-                                     search_after)
+        if self._fan_out_wanted([segs]):
+            parts = self._score_fan_out([node], [segs], [need], use_wand,
+                                        search_after)[0]
         elif use_wand and len(segs) > 1:
             parts = self._leaf_bound_walk(segs, node, need)
         else:
@@ -2002,15 +2008,16 @@ class IndexSearcher:
                     count_all: bool = True) -> list[SearchResult]:
         """Batched multi-query search: N queries, ONE leaf fan-out.
 
-        The distributed path ships (query, segment) PAIRS through a
-        single mapInPandas, so a dashboard's 30 panels or an _msearch
-        batch cost one Spark job and one round of task scheduling
-        instead of N — at cluster scale, scheduling latency dominates
-        warm top-k queries, so batching is the idiomatic execution of
-        concurrent query workloads. Per-query segment PRUNING still
-        applies (a pair is only emitted for segments the query's
-        filters cannot exclude). In-process it is a plain loop over
-        search(). Results are identical to per-query search() calls.
+        The distributed path ships (query, segment) PAIRS through the
+        same fan-out search() uses (_fan_out), so a dashboard's 30
+        panels or an _msearch batch cost one Spark job and one round of
+        task scheduling instead of N — at cluster scale, scheduling
+        latency dominates warm top-k queries, so batching is the
+        idiomatic execution of concurrent query workloads. Per-query
+        segment PRUNING still applies (a pair is only emitted for
+        segments the query's filters cannot exclude). In-process, or
+        under the cost gate, it is a plain loop over search(). Results
+        are identical to per-query search() calls.
 
         k / offset may be ints (shared) or per-query lists — _msearch
         bodies carry their own size/from."""
@@ -2021,75 +2028,19 @@ class IndexSearcher:
             else [int(x) for x in offset]
         if len(ks) != len(nodes) or len(offsets) != len(nodes):
             raise ValueError("k/offset lists must match queries length")
-        if self.spark is None or len(nodes) <= 1:
-            return [self.search(n, k=ks[i], offset=offsets[i],
-                                fetch_fields=fetch_fields,
-                                count_all=count_all)
-                    for i, n in enumerate(nodes)]
-        use_wand = not count_all
-        pairs = []
-        per_query_segs = 0
-        pair_docs = 0
-        for qi, node in enumerate(nodes):
-            segs = self._prune(node)
-            per_query_segs = max(per_query_segs, len(segs))
-            pair_docs += sum(int(s.get("num_docs", 0)) for s in segs)
-            for seg in segs:
-                pairs.append((qi, seg["segment_id"],
-                              ks[qi] + offsets[qi]))
-        if not pairs:
-            return [SearchResult(0, []) for _ in nodes]
-        if per_query_segs <= 1 or not (
-                self.force_distributed
-                or pair_docs >= self.inprocess_doc_budget):
-            # every query touches at most one segment, or the whole
-            # batch's leaf work is under the cost gate: the in-process
-            # loop beats a Spark job (mirrors search()'s own fallback)
-            return [self.search(n, k=ks[i], offset=offsets[i],
-                                fetch_fields=fetch_fields,
-                                count_all=count_all)
-                    for i, n in enumerate(nodes)]
-        index_dir = self.index_dir
-        tokenizer = self.tokenizer
-        text_field = self.text_field
-        sdf = self.spark.createDataFrame(
-            pairs, "query_id int, segment_id string, need int"
-        ).repartition(min(len(pairs),
-                          2 * _default_parallelism(self.spark)))
-
-        def leaf(iterator):
-            for pdf in iterator:
-                for qi, sid, need in zip(pdf["query_id"].tolist(),
-                                         pdf["segment_id"].tolist(),
-                                         pdf["need"].tolist()):
-                    seg_dir = os.path.join(index_dir, "segments", sid)
-                    cnt, top = segment_top_k(seg_dir, nodes[qi], need,
-                                             tokenizer, text_field,
-                                             use_wand, None)
-                    top = top.copy()
-                    top["query_id"] = qi
-                    top["segment_id"] = sid
-                    top["match_count"] = cnt
-                    if len(top) == 0:
-                        top = pd.DataFrame({
-                            "query_id": [qi], "doc_id": [-1],
-                            "score": [0.0], "segment_id": [sid],
-                            "match_count": [cnt]})
-                    yield top[["query_id", "segment_id", "doc_id",
-                               "score", "match_count"]]
-
-        rows = sdf.mapInPandas(
-            leaf, "query_id int, segment_id string, doc_id long, "
-                  "score double, match_count long").toPandas()
-        out = []
-        for qi in range(len(nodes)):
-            sub = rows[rows["query_id"] == qi]
-            parts = [(sid, int(grp["match_count"].iloc[0]),
-                      grp[grp["doc_id"] >= 0][["doc_id", "score"]])
-                     for sid, grp in sub.groupby("segment_id", sort=False)]
-            out.append(self._merge_and_fetch(parts, ks[qi], offsets[qi],
-                                             fetch_fields))
-        return out
+        if self.spark is not None and len(nodes) > 1:
+            seg_lists = [self._prune(n) for n in nodes]
+            if self._fan_out_wanted(seg_lists):
+                needs = [kk + off for kk, off in zip(ks, offsets)]
+                per_query = self._score_fan_out(nodes, seg_lists, needs,
+                                                not count_all, None)
+                return [self._merge_and_fetch(parts, ks[qi], offsets[qi],
+                                              fetch_fields)
+                        for qi, parts in enumerate(per_query)]
+        return [self.search(n, k=ks[i], offset=offsets[i],
+                            fetch_fields=fetch_fields,
+                            count_all=count_all)
+                for i, n in enumerate(nodes)]
 
     def _leaf_bound_walk(self, segs: list[dict], node: A.Node,
                          need: int) -> list[tuple[str, int, pd.DataFrame]]:
@@ -2140,67 +2091,105 @@ class IndexSearcher:
                     seed = kth - abs(kth) * 1e-5
         return parts
 
-    def _leaf_spark(self, segs: list[dict], node: A.Node, need: int,
-                    use_wand: bool = False,
-                    search_after: tuple | None = None):
+    def _score_fan_out(self, nodes: list[A.Node],
+                       seg_lists: list[list[dict]], needs: list[int],
+                       use_wand: bool, search_after: tuple | None
+                       ) -> list[list[tuple[str, int, pd.DataFrame]]]:
+        """Score-ordered leaves of N queries through one _fan_out; the
+        parts of query i come back at index i.
+
+        A query that prunes with WAND over >= 4 segments (no cursor)
+        gets a two-phase seed (the root.rs split-batch spirit applied to
+        one fan-out round): its LARGEST segment runs first, in-process,
+        and its k-th best score ships into every remaining leaf's WAND
+        threshold. Costs one segment of serial latency; cuts total
+        decoded blocks across the fan-out — the right trade at cluster
+        scale, where aggregate work across thousands of concurrent
+        queries, not one query's latency, is the bottleneck."""
         index_dir = self.index_dir
         tokenizer = self.tokenizer
         text_field = self.text_field
-        seed = float("-inf")
-        seed_parts: list[tuple[str, int, pd.DataFrame]] = []
-        if use_wand and search_after is None and len(segs) >= 4:
-            # two-phase seed (the root.rs split-batch spirit applied to
-            # one fan-out round): run the LARGEST segment first,
-            # in-process, and ship its k-th best score into every
-            # remaining leaf's WAND threshold. Costs one segment of
-            # serial latency; cuts total decoded blocks across the
-            # fan-out — the right trade at cluster scale, where
-            # aggregate work across thousands of concurrent queries,
-            # not one query's latency, is the bottleneck.
-            big = max(segs, key=lambda s: s.get("num_docs", 0))
-            big_dir = os.path.join(index_dir, "segments",
-                                   big["segment_id"])
-            cnt0, top0 = segment_top_k(big_dir, node, need, tokenizer,
-                                       text_field, True, None)
-            seed_parts.append((big["segment_id"], cnt0, top0))
-            if need > 0 and len(top0) >= need:
-                kth = float(top0["score"].iloc[need - 1])
-                seed = kth - abs(kth) * 1e-5
-            segs = [s for s in segs
-                    if s["segment_id"] != big["segment_id"]]
-            if not segs:
-                return seed_parts
+        out: list[list[tuple[str, int, pd.DataFrame]]] = []
+        seeds: list[float] = []
+        pairs: list[tuple[int, str]] = []
+        for qi, (node, segs, need) in enumerate(zip(nodes, seg_lists,
+                                                    needs)):
+            parts: list[tuple[str, int, pd.DataFrame]] = []
+            seed = float("-inf")
+            if use_wand and search_after is None and len(segs) >= 4:
+                big = max(segs, key=lambda s: s.get("num_docs", 0))
+                cnt0, top0 = segment_top_k(
+                    os.path.join(index_dir, "segments", big["segment_id"]),
+                    node, need, tokenizer, text_field, True, None)
+                parts.append((big["segment_id"], cnt0, top0))
+                if need > 0 and len(top0) >= need:
+                    kth = float(top0["score"].iloc[need - 1])
+                    seed = kth - abs(kth) * 1e-5
+                segs = [s for s in segs
+                        if s["segment_id"] != big["segment_id"]]
+            out.append(parts)
+            seeds.append(seed)
+            pairs.extend((qi, s["segment_id"]) for s in segs)
 
-        seg_ids = [s["segment_id"] for s in segs]
+        def leaf(qi: int, sid: str) -> tuple[int, pd.DataFrame]:
+            return segment_top_k(os.path.join(index_dir, "segments", sid),
+                                 nodes[qi], needs[qi], tokenizer,
+                                 text_field, use_wand, search_after,
+                                 seeds[qi])
+
+        import pyspark.sql.types as T
+        fanned = self._fan_out(pairs, leaf,
+                               [T.StructField("score", T.DoubleType())])
+        for qi, parts in enumerate(out):
+            parts.extend(fanned.get(qi, []))
+        return out
+
+    def _fan_out(self, pairs: list[tuple[int, str]], leaf, fields: list
+                 ) -> dict[int, list[tuple[str, int, pd.DataFrame]]]:
+        """The one Spark leaf fan-out (the reference's
+        search_partial_hits_phase, root.rs:725-795): ship
+        (query_id, segment_id) pairs through one repartitioned
+        mapInPandas, run `leaf(query_id, segment_id) -> (match_count,
+        top)` on the executors, collect, and return
+        {query_id: [(segment_id, match_count, top), ...]}. `top` holds
+        doc_id plus the value columns typed by `fields` (StructFields).
+        An empty leaf ships one sentinel row (doc_id -1) so its
+        match_count still reaches the root. `leaf` must not capture the
+        searcher (the SparkSession does not pickle)."""
+        if not pairs:
+            return {}
+        import pyspark.sql.types as T
+        value_cols = [f.name for f in fields]
+        out_cols = ["query_id", "segment_id", "doc_id", "match_count",
+                    *value_cols]
+        schema = T.StructType([
+            T.StructField("query_id", T.IntegerType()),
+            T.StructField("segment_id", T.StringType()),
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("match_count", T.LongType()), *fields])
         sdf = self.spark.createDataFrame(
-            [(s,) for s in seg_ids], "segment_id string"
-        ).repartition(min(len(seg_ids), 2 * _default_parallelism(self.spark)))
+            pairs, "query_id int, segment_id string"
+        ).repartition(min(len(pairs), 2 * _default_parallelism(self.spark)))
 
-        def leaf(iterator):
+        def run(iterator):
             for pdf in iterator:
-                for sid in pdf["segment_id"].tolist():
-                    seg_dir = os.path.join(index_dir, "segments", sid)
-                    cnt, top = segment_top_k(seg_dir, node, need, tokenizer,
-                                             text_field, use_wand,
-                                             search_after, seed)
-                    top = top.copy()
-                    top["segment_id"] = sid
-                    top["match_count"] = cnt
-                    if len(top) == 0:
-                        top = pd.DataFrame({
-                            "doc_id": [-1], "score": [0.0],
-                            "segment_id": [sid], "match_count": [cnt]})
-                    yield top[["segment_id", "doc_id", "score",
-                               "match_count"]]
+                for qi, sid in zip(pdf["query_id"].tolist(),
+                                   pdf["segment_id"].tolist()):
+                    cnt, top = leaf(qi, sid)
+                    if not len(top):
+                        top = pd.DataFrame({"doc_id": [-1],
+                                            **{c: [None]
+                                               for c in value_cols}})
+                    yield top.assign(query_id=qi, segment_id=sid,
+                                     match_count=cnt)[out_cols]
 
-        rows = sdf.mapInPandas(
-            leaf, "segment_id string, doc_id long, score double, "
-                  "match_count long").toPandas()
-        parts = list(seed_parts)
-        for sid, grp in rows.groupby("segment_id", sort=False):
-            cnt = int(grp["match_count"].iloc[0])
-            top = grp[grp["doc_id"] >= 0][["doc_id", "score"]]
-            parts.append((sid, cnt, top))
+        rows = sdf.mapInPandas(run, schema=schema).toPandas()
+        parts: dict[int, list[tuple[str, int, pd.DataFrame]]] = {}
+        for (qi, sid), grp in rows.groupby(["query_id", "segment_id"],
+                                           sort=False):
+            parts.setdefault(int(qi), []).append((
+                sid, int(grp["match_count"].iloc[0]),
+                grp[grp["doc_id"] >= 0][["doc_id", *value_cols]]))
         return parts
 
     def _fetch(self, winners: pd.DataFrame) -> list[SearchHit]:
@@ -2454,8 +2443,7 @@ class IndexSearcher:
         # num_docs proxies termdict size for the same cost gate the
         # search paths use (a Spark job over a few small termdicts
         # costs ~100x the driver-side k-way merge)
-        if self.spark is not None and len(paths) > 1 and (
-                self.force_distributed or self._over_budget(segs)):
+        if self._fan_out_wanted([segs]):
             from pyspark.sql import functions as F
             df = self.spark.read.parquet(*paths).select("term")
             df = df.filter(F.col("term") >= "\x03")  # skip dynamic ns
@@ -2512,8 +2500,7 @@ class IndexSearcher:
         list_relevant_splits ordering / leaf.rs early-exit)."""
         node = self.parse(query)
         segs = self._prune(node)
-        use_spark = self.spark is not None and len(segs) > 1 and (
-            self.force_distributed or self._over_budget(segs))
+        use_spark = self._fan_out_wanted([segs])
         if use_spark:
             # u64 sort keys don't survive Arrow transport exactly
             # (no unsigned long in Spark; doubles lose >2^53) — the
@@ -2525,8 +2512,8 @@ class IndexSearcher:
         early_exit = (not count_all and not use_spark
                       and field0 not in ("_score", "_doc"))
         if use_spark:
-            parts = self._leaf_spark_sort(segs, node, k, sort_by,
-                                          search_after)
+            parts = self._sort_fan_out(segs, node, k, sort_by,
+                                       search_after)
         else:
             if early_exit:
                 def _bound(seg):
@@ -2612,38 +2599,28 @@ class IndexSearcher:
                 str(last["segment_id"]), int(last["doc_id"]))
         return SearchResult(num_hits, hits, last_sort_key=last_key)
 
-    def _leaf_spark_sort(self, segs: list[dict], node: A.Node, k: int,
-                         sort_by: tuple,
-                         search_after: tuple | None = None):
-        """sort_search leaves as a mapInPandas fan-out (same shape as
-        _leaf_spark; reference: leaf sort collectors,
-        collector.rs:994-1145). The leaf result schema depends on the
-        sort spec's column dtypes, so one segment is probed driver-side
-        to type the _sort columns."""
+    def _sort_fan_out(self, segs: list[dict], node: A.Node, k: int,
+                      sort_by: tuple, search_after: tuple | None = None
+                      ) -> list[tuple[int, pd.DataFrame]]:
+        """sort_search leaves through _fan_out (reference: leaf sort
+        collectors, collector.rs:994-1145). The leaf result schema
+        depends on the sort spec's column dtypes, read from the doc-map
+        parquet footer (metadata-only; a driver-side probe would
+        evaluate a whole leaf). Integer sort keys travel as LONGS via
+        the pandas nullable Int64 extension dtype (a nullable int
+        column materializes as float64-with-NaN in pandas, which plain
+        astype('int64') cannot carry; doubles would lose exactness past
+        2^53 — epoch-nanos territory). The u64 case never reaches this
+        path (driver fallback)."""
         import pyspark.sql.types as T
         index_dir = self.index_dir
         tokenizer = self.tokenizer
         text_field = self.text_field
-
-        def one(sid: str) -> tuple[int, pd.DataFrame]:
-            seg_dir = os.path.join(index_dir, "segments", sid)
-            return segment_sort_top_k(seg_dir, node, k, tokenizer,
-                                      text_field, sort_by, search_after)
-
-        # leaf schema from the doc-map parquet footer (metadata-only; a
-        # driver-side probe would evaluate a whole leaf). Integer sort
-        # keys travel as LONGS via the pandas nullable Int64 extension
-        # dtype (a nullable int column materializes as float64-with-NaN
-        # in pandas, which plain astype('int64') cannot carry; doubles
-        # would lose exactness past 2^53 — epoch-nanos territory). The
-        # u64 case never reaches this path (driver fallback).
         doc_types, _u64 = self._doc_types(segs)
-        fields = [T.StructField("segment_id", T.StringType()),
-                  T.StructField("doc_id", T.LongType()),
-                  T.StructField("match_count", T.LongType())]
-        sort_cols = [f"_sort{i}" for i in range(len(sort_by))]
+        fields = []
         np_casts: dict[str, str] = {}
-        for c, (f, _d) in zip(sort_cols, sort_by):
+        for i, (f, _d) in enumerate(sort_by):
+            c = f"_sort{i}"
             if f == "_score":
                 st = T.DoubleType()
             elif f in ("_doc", "_shard_doc"):
@@ -2656,41 +2633,18 @@ class IndexSearcher:
             elif isinstance(st, (T.FloatType, T.DoubleType)):
                 st = T.DoubleType()
                 np_casts[c] = "float64"
-            else:
-                np_casts[c] = "object"
             fields.append(T.StructField(c, st))
-        schema = T.StructType(fields)
-        out_cols = ["segment_id", "doc_id", "match_count", *sort_cols]
 
-        sdf = self.spark.createDataFrame(
-            [(s["segment_id"],) for s in segs], "segment_id string"
-        ).repartition(min(len(segs), 2 * _default_parallelism(self.spark)))
+        def leaf(_qi: int, sid: str) -> tuple[int, pd.DataFrame]:
+            cnt, top = segment_sort_top_k(
+                os.path.join(index_dir, "segments", sid), node, k,
+                tokenizer, text_field, sort_by, search_after)
+            return cnt, top.astype(np_casts)
 
-        def leaf(it):
-            for pdf in it:
-                for sid in pdf["segment_id"].tolist():
-                    cnt, top = one(sid)
-                    if len(top):
-                        top = top.copy()
-                        for c, dt in np_casts.items():
-                            if dt != "object":
-                                top[c] = top[c].astype(dt)
-                    else:  # sentinel row carries the match count
-                        top = pd.DataFrame({"doc_id": [-1],
-                                            **{c: [None]
-                                               for c in sort_cols}})
-                    top["segment_id"] = sid
-                    top["match_count"] = cnt
-                    yield top[out_cols]
-
-        rows = sdf.mapInPandas(leaf, schema=schema).toPandas()
-        parts = []
-        for sid, grp in rows.groupby("segment_id", sort=False):
-            cnt = int(grp["match_count"].iloc[0])
-            top = grp[grp["doc_id"] >= 0][["doc_id", *sort_cols]].copy()
-            top["segment_id"] = sid
-            parts.append((cnt, top))
-        return parts
+        fanned = self._fan_out([(0, s["segment_id"]) for s in segs], leaf,
+                               fields)
+        return [(cnt, top.assign(segment_id=sid))
+                for sid, cnt, top in fanned.get(0, [])]
 
     # -- scroll API (TTL'd contexts over search_after) --------------------
 

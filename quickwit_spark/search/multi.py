@@ -75,42 +75,6 @@ def _json_depth_at(raw: bytes, pos: int) -> int:
     return -1 if in_str else depth
 
 
-class MultiIndexSearcher:
-    """Fan a query out over several indexes and merge top-k globally.
-    Each index keeps its own schema/tokenizer (the query string is
-    parsed per index against its default field, exactly as the
-    reference validates per doc-mapping)."""
-
-    def __init__(self, index_dirs: list[str], spark=None):
-        if not index_dirs:
-            raise ValueError("no indexes matched")
-        self.searchers = [IndexSearcher(d, spark=spark)
-                          for d in index_dirs]
-
-    def search(self, query, k: int = 10, offset: int = 0,
-               fetch_fields: bool = True,
-               count_all: bool = True) -> tuple[int, list[tuple[str,
-                                                                SearchHit]]]:
-        """Returns (num_hits_total, [(index_uid, hit), ...]) in global
-        rank order."""
-        rows = []
-        total = 0
-        for s in self.searchers:
-            res = s.search(query, k=offset + k,
-                           fetch_fields=fetch_fields,
-                           count_all=count_all)
-            uid = s.manifest.data["index_uid"]
-            total += res.num_hits
-            rows.extend((h.score, uid, h) for h in res.hits)
-        rows.sort(key=lambda r: (-r[0], _desc(r[1]),
-                                 _desc(r[2].segment_id), -r[2].doc_id))
-        return total, [(uid, h) for _sc, uid, h in
-                       rows[offset:offset + k]]
-
-    def count(self, query) -> int:
-        return sum(s.count(query) for s in self.searchers)
-
-
 class _desc(str):
     """Reverse-ordering wrapper for descending string sort keys."""
     def __lt__(self, other):
@@ -320,14 +284,14 @@ class UnionSearcher:
         # the index dimension)
         rows.sort(key=lambda r: (-r[0], r[1], r[2], -r[3]))
         if search_after is not None:
-            sc, skey, sdoc = (float(search_after[0]),
-                              str(search_after[1]),
-                              int(search_after[2]))
+            # compare the address as a (uid, segment) TUPLE, the merge
+            # order above: the joined "uid/segment" string misorders
+            # uids where one is a prefix of another ('/' > '-')
             def after(r):
                 if r[0] != sc:
                     return r[0] < sc
-                if f"{r[4]}/{r[5].segment_id}" != skey:
-                    return f"{r[4]}/{r[5].segment_id}" < skey
+                if (r[4], r[5].segment_id) != (cuid, cseg):
+                    return (r[4], r[5].segment_id) < (cuid, cseg)
                 return r[5].doc_id < sdoc
             rows = [r for r in rows if after(r)]
         hits = [SearchHit(h.score, f"{uid}/{h.segment_id}", h.doc_id,

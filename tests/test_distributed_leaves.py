@@ -37,7 +37,7 @@ def _hits_key(res):
 ])
 def test_sort_search_distributed_identical(idx, spark, sort_by):
     local = IndexSearcher(idx.index_dir)
-    dist = IndexSearcher(idx.index_dir, spark=spark, force_distributed=True)
+    dist = IndexSearcher(idx.index_dir, spark=spark, inprocess_doc_budget=0)
     node = A.Term("content", "merge")
     a = local.sort_search(node, k=15, sort_by=sort_by, fetch_fields=False)
     b = dist.sort_search(node, k=15, sort_by=sort_by, fetch_fields=False)
@@ -47,7 +47,7 @@ def test_sort_search_distributed_identical(idx, spark, sort_by):
 
 def test_sort_search_distributed_string_field(idx, spark):
     local = IndexSearcher(idx.index_dir)
-    dist = IndexSearcher(idx.index_dir, spark=spark, force_distributed=True)
+    dist = IndexSearcher(idx.index_dir, spark=spark, inprocess_doc_budget=0)
     node = A.MatchAll()
     a = local.sort_search(node, k=10, sort_by=(("lang", "asc"),),
                           fetch_fields=False)
@@ -58,7 +58,7 @@ def test_sort_search_distributed_string_field(idx, spark):
 
 def test_list_terms_distributed_and_limit_pushdown(idx, spark):
     local = IndexSearcher(idx.index_dir)
-    dist = IndexSearcher(idx.index_dir, spark=spark, force_distributed=True)
+    dist = IndexSearcher(idx.index_dir, spark=spark, inprocess_doc_budget=0)
     for kw in ({}, {"start": "m", "end": "n"}, {"start": "get"},
                {"limit": 7}):
         a = local.list_terms(**kw)
@@ -75,7 +75,7 @@ def test_sort_search_after_pages_entire_set(idx, spark):
     last_sort_key cursor reproduces the one-shot ordering exactly, on
     both the in-process and distributed leaf paths."""
     for searcher in (IndexSearcher(idx.index_dir),
-                     IndexSearcher(idx.index_dir, spark=spark, force_distributed=True)):
+                     IndexSearcher(idx.index_dir, spark=spark, inprocess_doc_budget=0)):
         sort_by = (("nchars", "desc"), ("_doc", "asc"))
         node = A.Term("content", "merge")
         full = searcher.sort_search(node, k=10_000, sort_by=sort_by,
@@ -121,7 +121,7 @@ def test_distributed_two_phase_seed_rank_identical(idx, spark, node):
     segment first, its k-th score shipped into every leaf): top-k must be
     rank-identical to the exhaustive distributed and in-process paths."""
     local = IndexSearcher(idx.index_dir)
-    dist = IndexSearcher(idx.index_dir, spark=spark, force_distributed=True)
+    dist = IndexSearcher(idx.index_dir, spark=spark, inprocess_doc_budget=0)
     exact = dist.search(node, k=10, fetch_fields=False, count_all=True)
     pruned = dist.search(node, k=10, fetch_fields=False, count_all=False)
     inproc = local.search(node, k=10, fetch_fields=False, count_all=False)
@@ -132,7 +132,7 @@ def test_distributed_two_phase_seed_rank_identical(idx, spark, node):
 def test_search_many_batched_identical(idx, spark):
     """search_many: N queries in ONE fan-out must equal per-query
     search() on both counts and hit order, including a zero-hit query."""
-    dist = IndexSearcher(idx.index_dir, spark=spark, force_distributed=True)
+    dist = IndexSearcher(idx.index_dir, spark=spark, inprocess_doc_budget=0)
     queries = [
         A.Term("content", "merge"),
         A.Bool(should=(A.Term("content", "split"),
@@ -151,7 +151,7 @@ def test_search_many_batched_identical(idx, spark):
 
 
 def test_search_many_pruned_mode(idx, spark):
-    dist = IndexSearcher(idx.index_dir, spark=spark, force_distributed=True)
+    dist = IndexSearcher(idx.index_dir, spark=spark, inprocess_doc_budget=0)
     queries = [A.Term("content", "merge"), A.Term("content", "split")]
     batched = dist.search_many(queries, k=5, fetch_fields=False,
                                count_all=False)
@@ -163,24 +163,24 @@ def test_search_many_pruned_mode(idx, spark):
 def test_cost_based_leaf_placement(idx, spark, monkeypatch):
     """A query whose pruned segments hold fewer docs than
     inprocess_doc_budget must run in-process even with a SparkSession
-    attached (root.rs:1643-1648 cost function analog); force_distributed
+    attached (root.rs:1643-1648 cost function analog); a zero budget
     pins the fan-out path for the gate."""
     node = A.Term("content", "merge")
 
     small = IndexSearcher(idx.index_dir, spark=spark)  # 1200 docs < budget
     calls = []
-    orig = IndexSearcher._leaf_spark
+    orig = IndexSearcher._fan_out
 
     def spy(self, *a, **kw):
         calls.append(1)
         return orig(self, *a, **kw)
 
-    monkeypatch.setattr(IndexSearcher, "_leaf_spark", spy)
+    monkeypatch.setattr(IndexSearcher, "_fan_out", spy)
     res_in = small.search(node, k=15, fetch_fields=False)
     assert not calls  # stayed in-process
 
     forced = IndexSearcher(idx.index_dir, spark=spark,
-                           force_distributed=True)
+                           inprocess_doc_budget=0)
     res_dist = forced.search(node, k=15, fetch_fields=False)
     assert calls  # took the mapInPandas fan-out
     assert res_in.num_hits == res_dist.num_hits
@@ -197,21 +197,20 @@ def test_cost_based_leaf_placement(idx, spark, monkeypatch):
 def test_cost_gate_covers_all_fanout_surfaces(idx, spark, monkeypatch):
     """sort_search, list_terms, and search_many honor the same cost
     gate as search(): on a sub-budget corpus none of them launches a
-    Spark job; force_distributed / a tiny budget restores the fan-out
+    Spark job; a tiny budget restores the fan-out
     (previously only search() was gated, so an interactive sort or
     terms scan still paid ~100x job-scheduling overhead)."""
     node = A.Term("content", "merge")
     small = IndexSearcher(idx.index_dir, spark=spark)
 
     calls = []
-    for meth in ("_leaf_spark", "_leaf_spark_sort"):
-        orig = getattr(IndexSearcher, meth)
+    orig = IndexSearcher._fan_out
 
-        def spy(self, *a, __orig=orig, **kw):
-            calls.append(1)
-            return __orig(self, *a, **kw)
+    def spy(self, *a, **kw):
+        calls.append(1)
+        return orig(self, *a, **kw)
 
-        monkeypatch.setattr(IndexSearcher, meth, spy)
+    monkeypatch.setattr(IndexSearcher, "_fan_out", spy)
 
     class _NoJobs:
         def __getattr__(self, name):  # any Spark API use = a job risk

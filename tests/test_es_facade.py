@@ -184,7 +184,7 @@ def test_es_msearch_batched_equals_serial(idx, spark):
     ]
     serial = strip_took(es_msearch(IndexSearcher(idx.index_dir), lines))
     batched = strip_took(es_msearch(
-        IndexSearcher(idx.index_dir, spark=spark, force_distributed=True), lines))
+        IndexSearcher(idx.index_dir, spark=spark, inprocess_doc_budget=0), lines))
     assert batched == serial
 
 

@@ -9,7 +9,7 @@ from quickwit_spark.config import IndexConfig
 from quickwit_spark.index.builder import build_index_pandas
 from quickwit_spark.index.corpus import corpus_pandas
 from quickwit_spark.search.engine import IndexSearcher
-from quickwit_spark.search.multi import (MultiIndexSearcher,
+from quickwit_spark.search.multi import (UnionSearcher,
                                          resolve_index_patterns)
 
 
@@ -32,15 +32,18 @@ def test_pattern_resolution(root):
 
 def test_multi_index_global_rank_merge(root):
     dirs = resolve_index_patterns(str(root), ["logs-*"])
-    m = MultiIndexSearcher(dirs)
-    total, hits = m.search("content:merge", k=15, fetch_fields=False)
+    m = UnionSearcher(dirs)
+    res = m.search("content:merge", k=15, fetch_fields=False)
+    total = res.num_hits
+    # union hits carry a namespaced "uid/segment" id
+    hits = [(*h.segment_id.split("/", 1), h) for h in res.hits]
     # totals are the per-index sums
     singles = [IndexSearcher(d).search("content:merge", k=1000,
                                        fetch_fields=False) for d in dirs]
     assert total == sum(s.num_hits for s in singles)
     # globally sorted by (score desc, index desc, segment desc, doc desc)
-    keys = [(-float(np.float32(h.score)), uid, h.segment_id, h.doc_id)
-            for uid, h in hits]
+    keys = [(-float(np.float32(h.score)), uid, seg, h.doc_id)
+            for uid, seg, h in hits]
     assert keys == sorted(
         keys, key=lambda r: (r[0],) + tuple(
             _inv(x) for x in r[1:3]) + (-r[3],))
@@ -51,8 +54,8 @@ def test_multi_index_global_rank_merge(root):
         union.extend((float(np.float32(h.score)), uid, h.segment_id,
                       h.doc_id) for h in s.hits)
     union.sort(key=lambda r: (-r[0], _inv(r[1]), _inv(r[2]), -r[3]))
-    got = [(float(np.float32(h.score)), uid, h.segment_id, h.doc_id)
-           for uid, h in hits]
+    got = [(float(np.float32(h.score)), uid, seg, h.doc_id)
+           for uid, seg, h in hits]
     assert got == union[:15]
     # count() sums across indexes
     assert m.count("*") == 240

@@ -100,3 +100,45 @@ def test_union_sorted_values_only_cursor(dirs):
     with pytest.raises(ValueError, match="address cursors"):
         u.sort_search("*", k=2, sort_by=(("n", "asc"),),
                       search_after=[1, "seg", 0])
+
+
+def test_union_search_after_uid_prefix(tmp_path):
+    """Score-cursor paging where one index uid is a prefix of another
+    (`logs`, `logs-2`): the root cursor filter must follow the merge's
+    (uid, segment) tuple order, not the joined "uid/segment" string
+    ('/' sorts after '-'), or tied hits are dropped."""
+    dirs = [_mk(tmp_path, "logs", [{"w": "a"}, {"w": "b"}]),
+            _mk(tmp_path, "logs-2", [{"w": "c"}, {"w": "d"}])]
+    u = UnionSearcher(dirs)
+    seen, cursor = [], None
+    for _ in range(10):
+        res = u.search("*", k=1, fetch_fields=False, search_after=cursor)
+        if not res.hits:
+            break
+        h = res.hits[0]
+        seen.append((h.segment_id, h.doc_id))
+        cursor = (h.score, h.segment_id, h.doc_id)
+    assert len(seen) == 4 and len(set(seen)) == 4
+    assert {s.split("/", 1)[0] for s, _d in seen} == {"logs", "logs-2"}
+
+
+def test_union_sorted_null_cursor_paging_ends(dirs):
+    """Feeding back a hit's sort values pages to exhaustion even when a
+    hit is missing the sort field (u2's doc without `m` emits a null
+    cursor, which used to restart paging from the first hit)."""
+    from quickwit_spark.search.es_dsl import es_search
+    u = UnionSearcher(dirs)
+    body = {"query": {"match_all": {}}, "sort": [{"m": {"order": "asc"}}],
+            "size": 1}
+    seen, cursor = [], None
+    for _ in range(5):
+        resp = es_search(u, {**body, "search_after": cursor}
+                         if cursor is not None else body)
+        hits = resp["hits"]["hits"]
+        if not hits:
+            break
+        seen.append(hits[0]["_id"])
+        cursor = hits[0]["sort"]
+    else:
+        raise AssertionError(f"paging did not end in 5 pages: {seen}")
+    assert len(seen) == len(set(seen)) == 4

@@ -160,11 +160,9 @@ def main() -> None:
     queries["otlp_pb_decode_mb_s"] = round(
         pb_bytes / 1e6 / (time.perf_counter() - t0), 2)
 
-    # real media decode (PNG zlib+unfilter, baseline JPEG Huffman+IDCT):
-    # driver-local single-core MB/s over the encoded blob bytes — the
-    # per-blob Python cost the multimodal mapInPandas stages pay
+    # real media decode (PNG zlib+unfilter): driver-local single-core
+    # MB/s over the encoded blob bytes
     from quickwit_spark.pipeline import media_codecs as _mc
-    from quickwit_spark.pipeline.jpeg_codec import decode_jpeg, encode_jpeg
     _mrng = _np.random.default_rng(5)
     yy, xx = _np.meshgrid(_np.arange(128), _np.arange(128), indexing="ij")
     imgs = [_np.stack([(yy * a + xx * b) % 256 for a, b in
@@ -172,15 +170,13 @@ def main() -> None:
             + _mrng.integers(0, 8, (128, 128, 3), dtype=_np.uint8)
             for _ in range(40)]
     pngs = [_mc.encode_png(im) for im in imgs]
-    jpgs = [encode_jpeg(im, quality=85, subsampling="420") for im in imgs]
-    for dec, blobs, key in ((_mc.decode_png, pngs, "png_decode_mb_s"),
-                            (decode_jpeg, jpgs, "jpeg_decode_mb_s")):
-        dec(blobs[0])  # warm
-        nbytes = sum(len(b) for b in blobs)
-        t0 = time.perf_counter()
-        for b in blobs:
-            dec(b)
-        queries[key] = round(nbytes / 1e6 / (time.perf_counter() - t0), 2)
+    _mc.decode_png(pngs[0])  # warm
+    nbytes = sum(len(b) for b in pngs)
+    t0 = time.perf_counter()
+    for b in pngs:
+        _mc.decode_png(b)
+    queries["png_decode_mb_s"] = round(
+        nbytes / 1e6 / (time.perf_counter() - t0), 2)
 
     # Iceberg scan planning (sources/avro_ocf + iceberg): driver-local
     # metadata-only rate — manifest-list + manifest Avro decode through
@@ -579,7 +575,7 @@ def main() -> None:
                           "refresh_global_index",
                           # MB/s / rate metrics, not seconds
                           "tok_", "otlp_pb_", "png_decode",
-                          "jpeg_decode", "iceberg_plan",
+                          "iceberg_plan",
                           # rate metric + post-r1 rows (r5 session 7)
                           "kafka_wire_", "cdc_",
                           # serving-layer rows (r5 session 8): ms /

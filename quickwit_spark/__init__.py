@@ -12,7 +12,7 @@ Layout:
     functions/  tokenizers (code-aware), BM25 math, hashing
     index/      corpus generator, segment builder, manifest, merge
     search/     query AST, parser, execution engine, WAND
-    pipeline/   doc mapper, transform, OTLP decoding, multimodal media ops
+    pipeline/   doc mapper, transform, OTLP decoding, media codecs
     streaming/  incremental/resumable build helpers
 """
 

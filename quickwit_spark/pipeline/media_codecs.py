@@ -1,4 +1,4 @@
-"""Dependency-free media codecs for the multimodal pipeline stages.
+"""Dependency-free media codecs.
 
 The runtime ships no image/audio libraries, so these decoders are
 implemented from the public format specifications using only stdlib
@@ -11,23 +11,14 @@ implemented from the public format specifications using only stdlib
   bottom-up.
 - PNM  (P5 grayscale / P6 RGB, binary, maxval <= 255).
 - WAV  (RIFF/PCM): 8-bit unsigned / 16-bit signed, any channel count.
-- Y4M  (YUV4MPEG2): C420*/C444 planar frames; used by the video
-  frame-sampling stage.
+- Y4M  (YUV4MPEG2): C420*/C444 planar frames.
 
 Matching encoders exist for every decoder so tests can round-trip
-without an external golden source, and the PNG/WAV gate rows pin the
-decode output against a closed-form DuckDB oracle (the pixel/sample
-values are generated from an integer formula the SQL recomputes
-directly — see __spark_entry__.multimodal_* rows).
+without an external golden source.
 
-Decoders are per-blob scalar code by design: they run inside
-mapInPandas Arrow batches (one Python call per media object, not per
-pixel — all pixel math is numpy), which is the same batching contract
-the reference's ingest formats use (doc_processor.rs:153-190).
-GIF87a/89a (LZW implemented from the spec, interlace supported) lives
-below; baseline JPEG lives in the sibling ``jpeg_codec`` module
-(Huffman + DCT implemented from ITU-T T.81, numpy block math). Only
-entropy-coded VIDEO (H.26x) remains loudly unsupported.
+Decoders are per-blob scalar code by design: one Python call per media
+object, not per pixel — all pixel math is numpy. GIF87a/89a (LZW
+implemented from the spec, interlace supported) lives below.
 """
 
 from __future__ import annotations
@@ -51,7 +42,7 @@ __all__ = [
 
 class MediaDecodeError(ValueError):
     """A blob is not decodable: truncated, corrupt, or an unsupported
-    (entropy-coded) format. Pipeline stages catch this per row."""
+    (entropy-coded) format."""
 
 
 # Allocation guard for hostile headers: a 16-byte blob may claim
@@ -452,15 +443,14 @@ def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
 
 
 # --------------------------------------------------------------------------
-# Y4M (YUV4MPEG2) — planar video for the frame-sampling stage
+# Y4M (YUV4MPEG2) — planar video
 # --------------------------------------------------------------------------
 
 def decode_y4m(data: bytes, every_n: int = 1,
                max_frames: int | None = None):
     """Parse a YUV4MPEG2 stream; yields (frame_idx, y_plane uint8 HxW)
     for every ``every_n``-th frame. Supports C420* (chroma subsampled
-    2x2) and C444; chroma planes are skipped (the sampling stage only
-    consumes luma)."""
+    2x2) and C444; chroma planes are skipped (only luma is returned)."""
     data = bytes(data)
     nl = data.find(b"\n")
     if nl < 0 or not data.startswith(b"YUV4MPEG2"):

@@ -14,11 +14,11 @@ input-format-agnostic.
 
 Spark plumbing: binary payloads cannot be decoded JVM-side without a
 protobuf dependency, so decode runs in Arrow-batched mapInPandas — the
-sanctioned slow path for opaque binary decode (same tier as the
-multimodal decode UDFs). Per payload the work is a single linear pass
-over the bytes. Malformed payloads are DROPPED, mirroring the JSON
-path's from_json-null contract (count them upstream against the input
-if a doc_processor-style num_parse_errors counter is needed).
+sanctioned slow path for opaque binary decode. Per payload the work is
+a single linear pass over the bytes. Malformed payloads are DROPPED,
+mirroring the JSON path's from_json-null contract (count them upstream
+against the input if a doc_processor-style num_parse_errors counter is
+needed).
 
 An encoder for the same JSON-shaped payload dicts lives here too — it
 exists for tests and fixtures (cross-decoder parity: protobuf-decode of

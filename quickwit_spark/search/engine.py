@@ -223,20 +223,11 @@ class SegmentReader:
                 except json.JSONDecodeError:
                     docs.append(None)
             self._src_docs = docs
-        segs = path.split(".")
         vals: list = []
         numeric = True
         any_list = False
         for d in self._src_docs:
-            cur = d
-            for sp in segs:
-                if isinstance(cur, dict) and sp in cur:
-                    cur = cur[sp]
-                else:
-                    cur = None
-                    break
-            if cur is None and isinstance(d, dict) and path in d:
-                cur = d[path]  # literal dotted key (expand_dots)
+            cur = source_path_value(d, path)
             if isinstance(cur, dict):
                 cur = None
             if isinstance(cur, list):
@@ -2842,6 +2833,18 @@ def doc_source(doc: dict) -> dict:
             pass
     return {k: v for k, v in doc.items()
             if not k.startswith("_") and k not in INTERNAL_DOC_FIELDS}
+
+
+def source_path_value(src, path: str):
+    """Value of a dotted path in a source document: the nested object
+    walk first, then a literal dotted key (``{"a.b": 1}``, as stored
+    without expand_dots). None when neither is present."""
+    cur = src
+    for seg in path.split("."):
+        cur = cur.get(seg) if isinstance(cur, dict) else None
+    if cur is None and isinstance(src, dict):
+        cur = src.get(path)
+    return cur
 
 
 def _py_scalar(v):

@@ -427,7 +427,8 @@ def filter_source_doc(src: dict, includes: list | None,
     """ES _source include/exclude projection with DOTTED-PATH
     semantics (rest-api-tests 0022): an include keeps a whole subtree,
     a dotted include keeps a partial subtree ({"actor": {"id": ..}}),
-    excludes drop subtrees and WIN over includes."""
+    excludes drop subtrees and WIN over includes. Arrays of objects are
+    projected per element under the array's own path."""
     exc = [str(e) for e in (excludes or [])]
     inc = [str(i) for i in includes] if includes is not None else None
 
@@ -443,6 +444,19 @@ def filter_source_doc(src: dict, includes: list | None,
             return 1
         return 0
 
+    drop = object()
+
+    def keep(v, p: str, full: bool):
+        # partial mode keeps only objects with a surviving include
+        if isinstance(v, dict):
+            sub = walk(v, p, full)
+            return sub if sub or full else drop
+        if isinstance(v, list):
+            items = [e for e in (keep(e, p, full) for e in v)
+                     if e is not drop]
+            return items if items or full else drop
+        return v if full else drop
+
     def walk(node: dict, p: str, inherited_full: bool) -> dict:
         out: dict = {}
         for k, v in node.items():
@@ -452,12 +466,9 @@ def filter_source_doc(src: dict, includes: list | None,
             m = 2 if inherited_full else inc_mode(cp)
             if m == 0:
                 continue
-            if isinstance(v, dict):
-                sub = walk(v, cp, m == 2)
-                if sub or m == 2:
-                    out[k] = sub
-            elif m == 2:
-                out[k] = v
+            sub = keep(v, cp, m == 2)
+            if sub is not drop:
+                out[k] = sub
         return out
 
     return walk(src, "", inc is None)
@@ -712,7 +723,7 @@ def es_search(searcher, body: dict, default_field: str | None = None,
     if hl_spec:
         from .snippets import extract_query_terms
         hl_terms = extract_query_terms(node)
-    from .engine import INTERNAL_DOC_FIELDS
+    from .engine import INTERNAL_DOC_FIELDS, doc_source, source_path_value
     inc = body.get("_source_includes") or source_includes
     exc = body.get("_source_excludes") or source_excludes
     # the standard ES `_source` body field: false (no source), a str or
@@ -738,7 +749,6 @@ def es_search(searcher, body: dict, default_field: str | None = None,
         # projection applies only to the emitted _source
         src = {k: v for k, v in h.doc.items()
                if not k.startswith("_") and k not in INTERNAL_DOC_FIELDS}
-        from .engine import doc_source
         emitted = doc_source(h.doc)
         if inc is not None or exc:
             # dotted-path semantics, excludes win (0022)
@@ -774,11 +784,7 @@ def es_search(searcher, body: dict, default_field: str | None = None,
                     # dynamic sort path: value from the stored source
                     # (UNfiltered — cursors must not depend on
                     # _source include/exclude shaping)
-                    cur: object = doc_source(h.doc)
-                    for seg_ in f.split("."):
-                        cur = cur.get(seg_) if isinstance(cur, dict) \
-                            else None
-                    vals.append(cur)
+                    vals.append(source_path_value(doc_source(h.doc), f))
             # values only, like the reference's ES hits; fed back as
             # `search_after` it pages with ES strictly-after semantics
             # (equal-valued boundary docs are skipped — add a second

@@ -125,10 +125,8 @@ def _hit_sort_value(hit, field: str):
     v = hit.doc.get(field)
     if v is not None:
         return v
-    from .engine import doc_source
-    cur = doc_source(hit.doc)
-    for seg in str(field).split("."):
-        cur = cur.get(seg) if isinstance(cur, dict) else None
+    from .engine import doc_source, source_path_value
+    cur = source_path_value(doc_source(hit.doc), str(field))
     if isinstance(cur, (dict, list)):
         return None
     return cur

@@ -36,13 +36,17 @@ original):
   evaluated against the previous step's response.
 
 ``$expect``/``$previous`` expressions come from the scenario corpus
-(public untrusted content), so they are evaluated with no builtins
-except an explicit allowlist — enough for every expression the corpus
-actually uses (len / comparisons / arithmetic / indexing).
+(public untrusted content), so they are parsed and checked node by node
+before evaluation: literals, names, indexing, comparisons, boolean and
+arithmetic operators, and calls to an allowlist of builtins — enough
+for every expression the corpus actually uses (len / comparisons /
+arithmetic / indexing). Attribute access to ``_``-prefixed names (the
+``().__class__.__bases__`` escape) is refused.
 """
 
 from __future__ import annotations
 
+import ast
 import copy
 import glob
 import gzip
@@ -119,8 +123,34 @@ _EVAL_GLOBALS = {"__builtins__": {
 }}
 
 
+_EVAL_NODES = (
+    ast.Expression, ast.Compare, ast.BoolOp, ast.BinOp, ast.UnaryOp,
+    ast.Subscript, ast.Slice, ast.Name, ast.Constant, ast.List,
+    ast.Tuple, ast.Dict, ast.Call, ast.keyword, ast.Attribute,
+    ast.expr_context, ast.boolop, ast.operator, ast.unaryop, ast.cmpop,
+)
+
+
 def _safe_eval(expr: str, val):
-    return eval(expr, dict(_EVAL_GLOBALS), {"val": val})
+    """Evaluate a corpus expression with the node bound to ``val``;
+    ValueError when it uses any construct outside the allowlist."""
+    tree = ast.parse(expr, mode="eval")
+    builtins = _EVAL_GLOBALS["__builtins__"]
+    for node in ast.walk(tree):
+        if not isinstance(node, _EVAL_NODES):
+            raise ValueError(
+                f"{type(node).__name__} not allowed in {expr!r}")
+        if isinstance(node, ast.Name) and node.id not in builtins \
+                and node.id != "val":
+            raise ValueError(f"unknown name {node.id!r} in {expr!r}")
+        if isinstance(node, ast.Attribute) and node.attr.startswith("_"):
+            raise ValueError(
+                f"private attribute {node.attr!r} in {expr!r}")
+        if isinstance(node, ast.Call) and not (
+                isinstance(node.func, ast.Name) and node.func.id in builtins):
+            raise ValueError(f"only allowlisted calls in {expr!r}")
+    return eval(compile(tree, "<expect>", "eval"),
+                dict(_EVAL_GLOBALS), {"val": val})
 
 
 class ExpectationError(AssertionError):

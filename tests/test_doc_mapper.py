@@ -103,3 +103,9 @@ def test_source_filter_dotted():
         "id": 9}
     assert filter_source_doc(src, ["actor"], ["actor.login"]) == {
         "actor": {"id": 5}}
+    # arrays of objects are projected per element
+    arr = {"items": [{"id": 2, "name": "n"}]}
+    assert filter_source_doc(arr, ["items.id"], []) == {
+        "items": [{"id": 2}]}
+    assert filter_source_doc(arr, None, ["items.name"]) == {
+        "items": [{"id": 2}]}

@@ -412,9 +412,8 @@ class TestBmpBitfields:
 
 
 def test_y4m_truncated_stream_yields_nothing_downstream():
-    """A Y4M blob cut mid-frame raises on reaching the cut; the
-    multimodal stage must therefore emit ZERO rows for it (pinned in
-    test_pipeline), and the generator itself must not mask the error."""
+    """A Y4M blob cut mid-frame raises on reaching the cut, and the
+    generator itself must not mask the error."""
     frames = [np.full((4, 4), 10 * k, dtype=np.uint8) for k in range(4)]
     blob = encode_y4m(frames, 4, 4)
     cut = blob[:len(blob) - 20]  # inside the last frame

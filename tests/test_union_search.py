@@ -142,3 +142,29 @@ def test_union_sorted_null_cursor_paging_ends(dirs):
     else:
         raise AssertionError(f"paging did not end in 5 pages: {seen}")
     assert len(seen) == len(set(seen)) == 4
+
+
+def test_union_sort_literal_dotted_key(tmp_path):
+    """Docs that store a literal dotted key (`{"a.b": 3}`, kept as-is
+    with expand_dots off) merge across indexes and emit cursors by
+    their real value, like the nested `{"a": {"b": 2}}` shape."""
+    from quickwit_spark.search.es_dsl import es_search
+
+    def mk(name, docs):
+        doc = {"version": "0.7", "index_id": name,
+               "doc_mapping": {"mode": "dynamic",
+                               "dynamic_mapping": {"expand_dots": False,
+                                                   "fast": True}}}
+        M.create_index(str(tmp_path), doc)
+        M.ingest_ndjson(M.load_index_config(f"{tmp_path}/{name}"), docs)
+        return f"{tmp_path}/{name}"
+
+    u = UnionSearcher([mk("d1", [{"a.b": 3}, {"a.b": 1}]),
+                       mk("d2", [{"a": {"b": 2}}, {"a": {"b": 4}}])])
+    resp = es_search(u, {"query": {"match_all": {}},
+                         "sort": [{"a.b": {"order": "asc"}}], "size": 4})
+    assert [h["sort"] for h in resp["hits"]["hits"]] == [[1], [2], [3], [4]]
+    resp = es_search(u, {"query": {"match_all": {}}, "size": 4,
+                         "sort": [{"a.b": {"order": "asc"}}],
+                         "search_after": [2]})
+    assert [h["sort"] for h in resp["hits"]["hits"]] == [[3], [4]]

@@ -42,6 +42,11 @@ from .manifest import BUILDER_POS_PREFIX, Manifest
 
 MANIFEST_ROW_SCHEMA = "manifest_json string"
 
+# uncompressed bytes per docs.parquet row group, the reference doc store's
+# 1 MB block: a hit fetch decodes the row groups holding its hits, not the
+# whole file
+DOCS_ROW_GROUP_BYTES = 1_000_000
+
 
 # shared codecs (single source of truth for bit-identical encoding across
 # build / merge / delete paths)
@@ -220,9 +225,14 @@ def write_segment(seg_dir: str, terms_sorted: np.ndarray,
                    compression="zstd")
 
     # --- docs.parquet (doc map: keys, tags, sha, fieldnorm fast fields) ---
+    # `_seg_doc` is the row index, so a doc's row group is found by
+    # bisecting the cumulative row counts (SegmentReader.read_docs)
     docs_table = pa.table(doc_cols)
     pq.write_table(docs_table, os.path.join(seg_dir, "docs.parquet"),
-                   compression="zstd")
+                   compression="zstd",
+                   row_group_size=max(1, DOCS_ROW_GROUP_BYTES
+                                      * docs_table.num_rows
+                                      // max(1, docs_table.nbytes)))
 
     # --- metadata ---
     meta = {

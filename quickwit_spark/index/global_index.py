@@ -924,16 +924,19 @@ class GlobalIndexSearcher:
 
     def fetch(self, result: pd.DataFrame) -> pd.DataFrame:
         """Resolve global docids to doc keys via the owning segments."""
+        from ..search.engine import get_reader
         docids = result["global_doc"].to_numpy()
         seg_idx = np.searchsorted(self.offsets, docids, side="right") - 1
         frames = []
         for si in np.unique(seg_idx):
-            local = (docids[seg_idx == si] - self.offsets[int(si)]).tolist()
-            seg_dir = os.path.join(self.index_dir, "segments",
-                                   self.segment_ids[int(si)])
-            t = pq.read_table(os.path.join(seg_dir, "docs.parquet"),
-                              filters=[("_seg_doc", "in",
-                                        [int(x) for x in local])]).to_pandas()
+            local = np.unique(docids[seg_idx == si] - self.offsets[int(si)])
+            r = get_reader(os.path.join(self.index_dir, "segments",
+                                        self.segment_ids[int(si)]))
+            schema = r.docs_schema()
+            seg_doc = schema.field("_seg_doc")
+            t = r.read_docs(local).add_column(
+                schema.get_field_index("_seg_doc"), seg_doc,
+                pa.array(local, type=seg_doc.type)).to_pandas()
             t["global_doc"] = t["_seg_doc"] + int(self.offsets[int(si)])
             frames.append(t)
         if not frames:
@@ -943,10 +946,9 @@ class GlobalIndexSearcher:
             # post-processing doesn't KeyError only on the empty edge
             out = result.copy()
             if self.segment_ids:
-                seg_dir = os.path.join(self.index_dir, "segments",
-                                       self.segment_ids[0])
-                schema = pq.read_schema(
-                    os.path.join(seg_dir, "docs.parquet"))
+                schema = get_reader(os.path.join(
+                    self.index_dir, "segments",
+                    self.segment_ids[0])).docs_schema()
                 # real pandas dtypes, not object: schema-strict
                 # consumers must see identical dtypes on the empty edge
                 empty = schema.empty_table().to_pandas()

@@ -4,8 +4,8 @@ global top-k merge -> fetch.
 Mirrors the reference's query lifecycle (SURVEY.md §3.1): the driver plays
 root (plan + merge: root.rs:1187-1230), executors play leaves
 (leaf.rs:436-565) via mapInPandas over the segment list, and the fetch
-phase re-joins winners to the source table (root.rs:808-889) as a broadcast
-join, verifying the per-row sha256 invariant.
+phase reads only the winners' rows from each segment's doc store
+(root.rs:808-889).
 
 Scoring semantics (rank-identity contract, SURVEY.md §2.5):
   - BM25 with per-segment statistics (the reference scores each split with
@@ -20,7 +20,6 @@ Scoring semantics (rank-identity contract, SURVEY.md §2.5):
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 from dataclasses import dataclass
@@ -28,6 +27,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from ..functions.bm25 import K1, Bm25Weight, idf_f32
@@ -131,6 +131,9 @@ class SegmentReader:
         self._termdict: pd.DataFrame | None = None
         self._term_index: dict[str, int] | None = None
         self._postings_tbl = None
+        self._docs_md: pq.FileMetaData | None = None
+        self._docs_schema: pa.Schema | None = None
+        self._docs_rg_starts: np.ndarray | None = None
         # bytes this reader ACTUALLY pins right now. Grows as lazy loads
         # land (decompressed termdict/postings, touched doc columns,
         # fieldnorms, WAND cursor metadata) — the earlier on-disk
@@ -157,19 +160,62 @@ class SegmentReader:
 
     # -- raw data access ---------------------------------------------------
 
+    def docs_schema(self) -> pa.Schema:
+        """Arrow schema of docs.parquet. Its footer (FileMetaData, schema,
+        row-group start offsets) is parsed once per reader and pinned."""
+        if self._docs_md is None:
+            md = pq.read_metadata(os.path.join(self.seg_dir, "docs.parquet"))
+            self._docs_schema = md.schema.to_arrow_schema()
+            self._docs_rg_starts = np.cumsum(
+                [0] + [md.row_group(i).num_rows
+                       for i in range(md.num_row_groups)], dtype=np.int64)
+            self._docs_md = md
+            self._pin(md.serialized_size + self._docs_rg_starts.nbytes)
+        return self._docs_schema
+
+    def _docs_file(self) -> pq.ParquetFile:
+        """docs.parquet reopened against the cached footer; the reader
+        holds no file handle between reads."""
+        self.docs_schema()
+        return pq.ParquetFile(os.path.join(self.seg_dir, "docs.parquet"),
+                              metadata=self._docs_md)
+
+    def read_docs(self, doc_ids) -> pa.Table:
+        """Doc-store rows of the given local doc ids, in that order, with
+        every column but `_seg_doc`. Reads only the row groups holding
+        them (`_seg_doc` is the row index, so bisecting the cumulative
+        row counts locates each id), then one `take`."""
+        cols = [c for c in self.docs_schema().names if c != "_seg_doc"]
+        starts = self._docs_rg_starts
+        ids = np.asarray(doc_ids, dtype=np.int64)
+        rg = np.searchsorted(starts, ids, side="right") - 1
+        groups = np.unique(rg)
+        sizes = starts[groups + 1] - starts[groups]
+        # each read group's first row within the concatenated read
+        base = np.cumsum(sizes) - sizes
+        with self._docs_file() as f:
+            t = f.read_row_groups(groups.tolist(), columns=cols)
+        return t.take(pa.array(ids - starts[rg]
+                               + base[np.searchsorted(groups, rg)]))
+
+    def _docs_column(self, col: str) -> pa.ChunkedArray:
+        if col not in self.doc_fields():
+            # ParquetFile.read skips unknown names; keep read_table's error
+            raise pa.ArrowInvalid(
+                f"No match for FieldRef.Name({col}) in docs.parquet")
+        with self._docs_file() as f:
+            return f.read(columns=[col]).column(0)
+
     def fieldnorm_ids(self) -> np.ndarray:
         if self._fn_ids is None:
-            t = pq.read_table(os.path.join(self.seg_dir, "docs.parquet"),
-                              columns=["fieldnorm_id"])
-            self._fn_ids = t.column(0).to_numpy().astype(np.int64)
+            self._fn_ids = self._docs_column("fieldnorm_id").to_numpy(
+                ).astype(np.int64)
             self._pin(self._fn_ids.nbytes)
         return self._fn_ids
 
     def doc_column(self, col: str) -> np.ndarray:
         if col not in self._doc_cols:
-            t = pq.read_table(os.path.join(self.seg_dir, "docs.parquet"),
-                              columns=[col])
-            a = np.asarray(t.column(0).to_pandas())
+            a = np.asarray(self._docs_column(col).to_pandas())
             self._doc_cols[col] = a
             # object columns (strings/ip/bytes): nbytes counts only the
             # 8B pointers; deep-measure once at load (values immutable)
@@ -185,10 +231,7 @@ class SegmentReader:
         key = ("__exact__", col)
         cached = self._doc_cols.get(key)
         if cached is None:
-            t = pq.read_table(os.path.join(self.seg_dir,
-                                           "docs.parquet"),
-                              columns=[col])
-            cached = t.column(0).to_pylist()
+            cached = self._docs_column(col).to_pylist()
             self._doc_cols[key] = cached
             self._pin(64 * len(cached))
         return cached
@@ -412,11 +455,9 @@ class SegmentReader:
             self.meta.get("dyn_text_fields") or None)
 
     def doc_fields(self) -> set[str]:
-        """Stored doc-map column names (schema read is footer-only)."""
+        """Stored doc-map column names, from the cached footer."""
         if not hasattr(self, "_doc_field_names"):
-            schema = pq.read_schema(os.path.join(self.seg_dir,
-                                                 "docs.parquet"))
-            self._doc_field_names = set(schema.names)
+            self._doc_field_names = set(self.docs_schema().names)
         return self._doc_field_names
 
     def _attr_value(self, field: str, value, dtype):
@@ -1499,7 +1540,8 @@ def _enforce_reader_budget() -> None:
         total -= old.cache_footprint
 
 
-def get_reader(seg_dir: str, tokenizer: str) -> "SegmentReader":
+def get_reader(seg_dir: str,
+               tokenizer: str = "source_code_default") -> "SegmentReader":
     """Process-level LRU segment reader cache (termdict/fieldnorm reuse
     across queries — the analog of the reference's split/footer caches),
     evicting oldest readers past an aggregate byte budget of LIVE pinned
@@ -2184,77 +2226,38 @@ class IndexSearcher:
         return parts
 
     def _fetch(self, winners: pd.DataFrame) -> list[SearchHit]:
-        """Fetch doc keys/tags for winners from their segments' doc maps
-        (two-phase hit join, root.rs:808-889) and verify stored sha256
-        presence; content re-join happens against the source table via
-        fetch_content()."""
-        hits: list[SearchHit] = []
-        for sid, grp in winners.groupby("segment_id", sort=False):
-            seg_dir = os.path.join(self.index_dir, "segments", sid)
-            ids = [int(i) for i in grp["doc_id"].tolist()]
-            # nullable-aware read: int64 columns with nulls must stay
-            # integral (pandas' default converts them to float64+NaN,
-            # which renders 1 as 1.0 and NaN as invalid JSON)
-            t = pq.read_table(
-                os.path.join(seg_dir, "docs.parquet"),
-                filters=[("_seg_doc", "in", ids)]).to_pandas(
-                types_mapper={pa.int64(): pd.Int64Dtype(),
-                              pa.uint64(): pd.UInt64Dtype(),
-                              pa.bool_(): pd.BooleanDtype()}.get)
-            t = t.set_index("_seg_doc")
+        """Fetch the winners' stored docs (two-phase hit join,
+        root.rs:808-889): per segment, read only the row groups holding
+        its winners, then convert every row with one `to_pylist`."""
+        sids = winners["segment_id"].tolist()
+        dids = [int(d) for d in winners["doc_id"].tolist()]
+        by_seg: dict[str, list[int]] = {}
+        for sid, d in zip(sids, dids):
+            by_seg.setdefault(sid, []).append(d)
+        docs: dict[tuple[str, int], dict] = {}
+        for sid, ids in by_seg.items():
+            r = get_reader(os.path.join(self.index_dir, "segments", sid),
+                           self.tokenizer)
+            t = r.read_docs(ids)
+            # NaN renders as JSON null, like a stored null
+            for i, f in enumerate(t.schema):
+                if pa.types.is_floating(f.type):
+                    c = t.column(i)
+                    t = t.set_column(i, f, pc.if_else(pc.is_nan(c), None, c))
+            rows = t.to_pylist()
             # typed fast fields render back to their text form on fetch
             # (the reference serializes IpAddr canonically on the hit
             # json path); the sortable hex stays internal
-            ftypes = get_reader(seg_dir, self.tokenizer).meta.get(
-                "field_types", {})
-            for col, ft in ftypes.items():
-                if ft == "ip" and col in t.columns:
-                    t[col] = t[col].map(
-                        lambda v: None if v is None else
-                        hex_to_ip_display(v))
-            for r in grp.itertuples():
-                doc = t.loc[int(r.doc_id)].to_dict()
-                # NA scalars (nullable ints/bools, NaN, NaT) render as
-                # JSON null, never NaN; numpy scalars unbox to python
-                for k, v in doc.items():
-                    if isinstance(v, (list, np.ndarray, dict)):
-                        continue
-                    if v is not None and pd.isna(v):
-                        doc[k] = None
-                    elif isinstance(v, np.generic):
-                        doc[k] = v.item()
-                    elif hasattr(v, "item") and str(type(v)).startswith(
-                            "<class 'pandas"):
-                        doc[k] = v.item()  # pd.Int64 scalar -> int
-                hits.append(SearchHit(float(r.score), sid, int(r.doc_id),
-                                      doc))
-        # restore global rank order
-        key = {(h.segment_id, h.doc_id): h for h in hits}
-        return [key[(r.segment_id, int(r.doc_id))]
-                for r in winners.itertuples()]
-
-    def fetch_content(self, result: SearchResult, source_df,
-                      verify_sha: bool = True) -> pd.DataFrame:
-        """Join hits back to the source table (broadcast join on doc keys)
-        and verify sha256(content) per returned row."""
-        from pyspark.sql import functions as F
-        if not result.hits:
-            return pd.DataFrame()
-        rows = [{**h.doc, "score": h.score, "segment_id": h.segment_id,
-                 "doc_id": h.doc_id} for h in result.hits]
-        keys = pd.DataFrame(rows)[self.key_cols + ["score", "segment_id",
-                                                   "doc_id"]]
-        spark = self.spark
-        kdf = spark.createDataFrame(keys)
-        joined = source_df.join(F.broadcast(kdf), on=self.key_cols,
-                                how="inner").toPandas()
-        if verify_sha and "sha256" in joined.columns:
-            for r in joined.itertuples():
-                actual = hashlib.sha256(r.content.encode()).hexdigest()
-                if actual != r.sha256:
-                    raise ValueError(
-                        f"sha256 mismatch for {tuple(getattr(r, c) for c in self.key_cols)}")
-        return joined.sort_values("score", ascending=False)
+            ips = [c for c, ft in r.meta.get("field_types", {}).items()
+                   if ft == "ip" and c in t.column_names]
+            for row in rows:
+                for c in ips:
+                    if row[c] is not None:
+                        row[c] = hex_to_ip_display(row[c])
+            docs.update(zip(((sid, d) for d in ids), rows))
+        return [SearchHit(float(score), sid, d, docs[(sid, d)])
+                for score, sid, d in zip(winners["score"].tolist(), sids,
+                                         dids)]
 
     @property
     def index_uid(self) -> str:

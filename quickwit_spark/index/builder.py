@@ -54,6 +54,16 @@ from .codecs import encode_position_blob
 from .codecs import varint_encode_with_sizes as _varint_encode_with_sizes
 
 
+def _write_parquet(table: pa.Table, path: str, stats_columns: list[str],
+                   **kwargs) -> None:
+    """zstd Parquet without dictionary pages (segment columns are mostly
+    unique values, and each doc-store row group would repeat its
+    dictionary), with min/max statistics only on `stats_columns`, the
+    columns a reader prunes with."""
+    pq.write_table(table, path, compression="zstd", use_dictionary=False,
+                   write_statistics=stats_columns or False, **kwargs)
+
+
 def _large_binary_array(data: bytes, offsets: np.ndarray) -> pa.Array:
     """Zero-copy pyarrow large_binary array from a buffer + offsets."""
     off = pa.py_buffer(offsets.astype(np.int64).tobytes())
@@ -211,8 +221,9 @@ def write_segment(seg_dir: str, terms_sorted: np.ndarray,
         pos_blob, pos_offsets = positions
         postings_tbl = postings_tbl.append_column(
             "pos_blob", _large_binary_array(pos_blob, pos_offsets))
-    pq.write_table(postings_tbl, os.path.join(seg_dir, "postings.parquet"),
-                   compression="zstd")
+    # term_id statistics prune the cold `term_id in [...]` read
+    _write_parquet(postings_tbl, os.path.join(seg_dir, "postings.parquet"),
+                   ["term_id"])
 
     # --- termdict.parquet (sorted by term => parquet min/max stats prune) ---
     termdict_tbl = pa.table({
@@ -221,15 +232,14 @@ def write_segment(seg_dir: str, terms_sorted: np.ndarray,
         "doc_freq": pa.array(doc_freq, type=pa.int64()),
         "total_tf": pa.array(total_tf, type=pa.int64()),
     })
-    pq.write_table(termdict_tbl, os.path.join(seg_dir, "termdict.parquet"),
-                   compression="zstd")
+    _write_parquet(termdict_tbl, os.path.join(seg_dir, "termdict.parquet"),
+                   ["term"])
 
     # --- docs.parquet (doc map: keys, tags, sha, fieldnorm fast fields) ---
     # `_seg_doc` is the row index, so a doc's row group is found by
     # bisecting the cumulative row counts (SegmentReader.read_docs)
     docs_table = pa.table(doc_cols)
-    pq.write_table(docs_table, os.path.join(seg_dir, "docs.parquet"),
-                   compression="zstd",
+    _write_parquet(docs_table, os.path.join(seg_dir, "docs.parquet"), [],
                    row_group_size=max(1, DOCS_ROW_GROUP_BYTES
                                       * docs_table.num_rows
                                       // max(1, docs_table.nbytes)))

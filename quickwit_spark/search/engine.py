@@ -20,6 +20,8 @@ Scoring semantics (rank-identity contract, SURVEY.md §2.5):
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
 import json
 import os
 from dataclasses import dataclass
@@ -102,6 +104,68 @@ class _Scored:
             return self
         return _Scored(self.docids,
                        np.ones(len(self.docids), dtype=np.float32))
+
+
+# A leaf partial: one segment's top-k candidates, ordered by (score desc,
+# doc_id desc) — the reference's PartialHit records (collector.rs).
+PARTIAL_DTYPE = np.dtype([("doc_id", "<i8"), ("score", "<f8")])
+
+
+def _partial(docids, scores) -> np.ndarray:
+    out = np.empty(len(docids), dtype=PARTIAL_DTYPE)
+    out["doc_id"] = docids
+    out["score"] = scores
+    return out
+
+
+# Per-request memo of query analysis and leaf-cache keys: every segment
+# of a request analyzes the same query text and keys the same AST, so
+# both are computed once per request instead of once per segment. It is
+# scoped to one request, never the process: register_custom_analyzer can
+# redefine an analyzer name between requests. Outside a request (Spark
+# executors, direct leaf calls) nothing is memoized.
+_REQUEST_MEMO: contextvars.ContextVar[dict | None] = contextvars.ContextVar(
+    "_REQUEST_MEMO", default=None)
+
+
+@contextlib.contextmanager
+def _request_scope():
+    """Open a request memo unless one is already open (search_many ->
+    search is one request). Used as a decorator on the entry points."""
+    if _REQUEST_MEMO.get() is not None:
+        yield
+        return
+    token = _REQUEST_MEMO.set({})
+    try:
+        yield
+    finally:
+        _REQUEST_MEMO.reset(token)
+
+
+def _analyze(text: str, analyzer: str) -> list[str]:
+    """tokenize_one, memoized per (text, analyzer) within a request."""
+    memo = _REQUEST_MEMO.get()
+    if memo is None:
+        return tokenize_one(text, analyzer=analyzer)
+    key = ("analyze", text, analyzer)
+    toks = memo.get(key)
+    if toks is None:
+        toks = memo[key] = tokenize_one(text, analyzer=analyzer)
+    return list(toks)
+
+
+def _node_key(node: A.Node) -> str:
+    """Canonical JSON of an AST (the leaf-cache key), memoized per node
+    object within a request. The memo holds the node, so its id cannot
+    be reused by another object while the request lasts."""
+    memo = _REQUEST_MEMO.get()
+    if memo is None:
+        return json.dumps(A.ast_to_json(node), sort_keys=True)
+    ent = memo.get(("node", id(node)))
+    if ent is None:
+        ent = memo[("node", id(node))] = (
+            node, json.dumps(A.ast_to_json(node), sort_keys=True))
+    return ent[1]
 
 
 class SegmentReader:
@@ -373,6 +437,9 @@ class SegmentReader:
             self._termdict = pq.read_table(path).to_pandas()
             self._term_index = {t: i for i, t in
                                 enumerate(self._termdict["term"])}
+            # views of the frame's own buffers: no extra bytes to pin
+            self._term_ids = self._termdict["term_id"].to_numpy()
+            self._term_dfs = self._termdict["doc_freq"].to_numpy()
             # dict slots reference the SAME str objects as the frame
             # (already deep-counted); ~100 B/slot covers the hash table
             self._pin(int(self._termdict.memory_usage(
@@ -637,8 +704,7 @@ class SegmentReader:
             i = self._term_index.get(term)
             if i is None:
                 return None
-            return (int(td["term_id"].iloc[i]),
-                    int(td["doc_freq"].iloc[i]))
+            return int(self._term_ids[i]), int(self._term_dfs[i])
         rows = self.lookup_terms([term])
         if len(rows) == 0:
             return None
@@ -706,14 +772,14 @@ class SegmentReader:
             return inner
         if isinstance(node, A.FullText):
             if node.field == text_field:
-                toks = tokenize_one(node.text, analyzer=self.tokenizer)
+                toks = _analyze(node.text, self.tokenizer)
             elif node.field not in self.doc_fields() and self.dynamic:
                 # full-text on a dynamic-namespace path analyzes the
                 # query with the FIELD's analyzer (query_ast/utils.rs
                 # find_field_or_hit_dynamic + the json field's
                 # indexing options); raw = one exact term
                 an = self.dyn_analyzer(node.field)
-                toks = tokenize_one(node.text, analyzer=an) \
+                toks = _analyze(node.text, an) \
                     if an != "raw" else [node.text]
             else:
                 toks = [node.text]
@@ -975,8 +1041,7 @@ class SegmentReader:
                and node.field not in self.doc_fields() and self.dynamic)
         override = getattr(node, "analyzer", None)
         if node.field == text_field:
-            toks = tokenize_one(node.text,
-                                analyzer=override or self.tokenizer)
+            toks = _analyze(node.text, override or self.tokenizer)
             keys = list(toks)
         elif dyn:
             # dynamic-namespace phrase: analyze with the FIELD's
@@ -984,7 +1049,7 @@ class SegmentReader:
             # `\x01field\x00token` postings — their positions were
             # recorded per path with array-element gaps
             an = override or self.dyn_analyzer(node.field)
-            toks = tokenize_one(node.text, analyzer=an) \
+            toks = _analyze(node.text, an) \
                 if an != "raw" else [node.text]
             keys = [f"\x01{node.field}\x00{t}" for t in toks]
         else:
@@ -1098,11 +1163,10 @@ class SegmentReader:
                and node.field not in self.doc_fields() and self.dynamic)
         override = getattr(node, "analyzer", None)
         if node.field == text_field:
-            toks = tokenize_one(node.text,
-                                analyzer=override or self.tokenizer)
+            toks = _analyze(node.text, override or self.tokenizer)
         elif dyn:
             an = override or self.dyn_analyzer(node.field)
-            toks = tokenize_one(node.text, analyzer=an) \
+            toks = _analyze(node.text, an) \
                 if an != "raw" else [node.text]
         else:
             toks = [node.text]
@@ -1492,7 +1556,7 @@ def _wand_shape(node: A.Node, text_field: str, tokenizer: str):
     """Detect pure term-AND / term-OR over the text field (the block-max
     prunable shapes). Returns (op, terms) or None."""
     if isinstance(node, A.FullText) and node.field == text_field:
-        toks = tokenize_one(node.text, analyzer=tokenizer)
+        toks = _analyze(node.text, tokenizer)
         if len(toks) >= 1:
             return (node.operator, toks)
         return None
@@ -1508,7 +1572,7 @@ def _wand_shape(node: A.Node, text_field: str, tokenizer: str):
             if isinstance(c, A.Term) and c.field == text_field:
                 terms.append(c.value)
             elif isinstance(c, A.FullText) and c.field == text_field:
-                toks = tokenize_one(c.text, analyzer=tokenizer)
+                toks = _analyze(c.text, tokenizer)
                 if len(toks) != 1:
                     return None
                 terms.append(toks[0])
@@ -1566,7 +1630,7 @@ def get_reader(seg_dir: str,
 # so both the in-process path and the long-lived executor python workers
 # of the mapInPandas fan-out benefit.
 # ---------------------------------------------------------------------------
-_LEAF_CACHE: "OrderedDict[tuple, tuple[int, pd.DataFrame]]" = OrderedDict()
+_LEAF_CACHE: "OrderedDict[tuple, tuple[int, np.ndarray]]" = OrderedDict()
 LEAF_CACHE_MAX_ENTRIES = int(os.environ.get("QW_LEAF_CACHE_ENTRIES", "512"))
 LEAF_CACHE_MAX_ROWS = int(os.environ.get("QW_LEAF_CACHE_MAX_ROWS", "100000"))
 _LEAF_CACHE_STATS = {"hits": 0, "misses": 0}
@@ -1585,7 +1649,7 @@ def segment_top_k(seg_dir: str, node: A.Node, k: int, tokenizer: str,
                   text_field: str, use_wand: bool = False,
                   search_after: tuple | None = None,
                   initial_theta: float = float("-inf")
-                  ) -> tuple[int, pd.DataFrame]:
+                  ) -> tuple[int, np.ndarray]:
     """Cached leaf search: repeat (segment, request) pairs — dashboards,
     paginating clients re-issuing page 1, multi-user hot queries — are
     served from the partial-result cache without touching postings.
@@ -1595,9 +1659,8 @@ def segment_top_k(seg_dir: str, node: A.Node, k: int, tokenizer: str,
         return _segment_top_k_uncached(seg_dir, node, k, tokenizer,
                                        text_field, use_wand, search_after,
                                        initial_theta)
-    key = (seg_dir, json.dumps(A.ast_to_json(node), sort_keys=True),
-           int(k), bool(use_wand), repr(search_after), tokenizer,
-           text_field, float(initial_theta))
+    key = (seg_dir, _node_key(node), int(k), bool(use_wand),
+           repr(search_after), tokenizer, text_field, float(initial_theta))
     ent = _LEAF_CACHE.get(key)
     if ent is not None:
         _LEAF_CACHE.move_to_end(key)
@@ -1619,11 +1682,12 @@ def _segment_top_k_uncached(seg_dir: str, node: A.Node, k: int,
                             use_wand: bool = False,
                             search_after: tuple | None = None,
                             initial_theta: float = float("-inf")
-                            ) -> tuple[int, pd.DataFrame]:
+                            ) -> tuple[int, np.ndarray]:
     """Leaf search on one segment: returns (match_count, top-k candidates
-    sorted by (score desc, doc_id desc)). With use_wand, prunable query
-    shapes use block-max skipping (identical top-k; for OR the match count
-    is a lower bound — the reference's CountHits::Underestimate mode).
+    sorted by (score desc, doc_id desc) as a PARTIAL_DTYPE array). With
+    use_wand, prunable query shapes use block-max skipping (identical
+    top-k; for OR the match count is a lower bound — the reference's
+    CountHits::Underestimate mode).
     search_after=(score, segment_id, doc_id) keeps only hits strictly
     after the cursor in global sort order (collector.rs search_after)."""
     reader = get_reader(seg_dir, tokenizer)
@@ -1655,7 +1719,7 @@ def _segment_top_k_uncached(seg_dir: str, node: A.Node, k: int,
             # from the bound-ordered pruned scorer (rank-identical)
             tr = reader._term_row(shape[1][0])
             if tr is None:
-                return 0, pd.DataFrame({"doc_id": [], "score": []})
+                return 0, _partial([], [])
             from .wand import single_term_topk
             docids, scores, _cnt = single_term_topk(reader, shape[1][0],
                                                     max(k, 1))
@@ -1671,7 +1735,7 @@ def _segment_top_k_uncached(seg_dir: str, node: A.Node, k: int,
     if count is None:
         count = len(scored.docids)
     if count == 0:
-        return 0, pd.DataFrame({"doc_id": [], "score": []})
+        return 0, _partial([], [])
     docids, scores = scored.docids, scored.scores
     if search_after is not None:
         sa_score, sa_seg, sa_doc = search_after
@@ -1686,14 +1750,11 @@ def _segment_top_k_uncached(seg_dir: str, node: A.Node, k: int,
                                        & (docids < sa_doc))
         docids, scores = docids[mask], scores[mask]
         if len(docids) == 0:
-            return count, pd.DataFrame({"doc_id": [], "score": []})
+            return count, _partial([], [])
     # order: score desc, then doc address desc (default desc tie-break)
     order = np.lexsort((-docids, -scores.astype(np.float64)))
     top = order[:k]
-    return count, pd.DataFrame({
-        "doc_id": docids[top],
-        "score": scores[top].astype(np.float64),
-    })
+    return count, _partial(docids[top], scores[top])
 
 
 def segment_wand_bound(seg_dir: str, node: A.Node, tokenizer: str,
@@ -1978,6 +2039,7 @@ class IndexSearcher:
             self._prune_cache = cached
         return cached[1].prune(node, self.tag_fields)
 
+    @_request_scope()
     def search(self, query, k: int = 10, offset: int = 0,
                fetch_fields: bool = True,
                count_all: bool = True,
@@ -1994,7 +2056,7 @@ class IndexSearcher:
         segs = self._prune(node)
         need = offset + k
         use_wand = not count_all and search_after is None
-        parts: list[tuple[str, int, pd.DataFrame]] = []
+        parts: list[tuple[str, int, np.ndarray]] = []
         if self._fan_out_wanted([segs]):
             parts = self._score_fan_out([node], [segs], [need], use_wand,
                                         search_after)[0]
@@ -2010,32 +2072,35 @@ class IndexSearcher:
                 parts.append((seg["segment_id"], cnt, top))
         return self._merge_and_fetch(parts, k, offset, fetch_fields)
 
-    def _merge_and_fetch(self, parts: list[tuple[str, int, pd.DataFrame]],
+    def _merge_and_fetch(self, parts: list[tuple[str, int, np.ndarray]],
                          k: int, offset: int,
                          fetch_fields: bool) -> SearchResult:
-        """Root merge of leaf parts: global (score desc, segment_id desc,
-        doc_id desc) order, offset/k slice, optional doc-store fetch."""
+        """Root merge of leaf parts (merge_fruits, root.rs:753-771):
+        global (score desc, segment_id desc, doc_id desc) order by one
+        lexsort over the concatenated partials, offset/k slice, optional
+        doc-store fetch."""
         num_hits = sum(c for _, c, _ in parts)
-        frames = []
-        for sid, _cnt, top in parts:
-            if len(top):
-                t = top.copy()
-                t["segment_id"] = sid
-                frames.append(t)
-        if not frames:
+        tops = [(sid, top) for sid, _cnt, top in parts if len(top)]
+        if not tops:
             return SearchResult(num_hits, [])
-        allc = pd.concat(frames, ignore_index=True)
-        # global merge: score desc, then (segment_id, doc_id) desc
-        allc = allc.sort_values(["score", "segment_id", "doc_id"],
-                                ascending=[False, False, False],
-                                kind="mergesort")
-        winners = allc.iloc[offset:offset + k]
-        hits = self._fetch(winners) if fetch_fields else [
-            SearchHit(float(r.score), str(r.segment_id), int(r.doc_id), {})
-            for r in winners.itertuples()]
+        # a segment's ordinal is its id's rank, so ordinals order like ids
+        sids = sorted({sid for sid, _ in tops})
+        rank = {sid: i for i, sid in enumerate(sids)}
+        allc = np.concatenate([top for _, top in tops])
+        seg_ord = np.repeat([rank[sid] for sid, _ in tops],
+                            [len(top) for _, top in tops])
+        order = np.lexsort((-allc["doc_id"], -seg_ord, -allc["score"]))
+        win = order[offset:offset + k]
+        win_sids = [sids[o] for o in seg_ord[win].tolist()]
+        dids = allc["doc_id"][win].tolist()
+        scores = allc["score"][win].tolist()
+        hits = self._fetch(win_sids, dids, scores) if fetch_fields else [
+            SearchHit(sc, sid, d, {})
+            for sid, d, sc in zip(win_sids, dids, scores)]
         return SearchResult(num_hits, hits,
-                            max_score=float(allc["score"].iloc[0]))
+                            max_score=float(allc["score"][order[0]]))
 
+    @_request_scope()
     def search_many(self, queries: list, k: int = 10, offset: int = 0,
                     fetch_fields: bool = True,
                     count_all: bool = True) -> list[SearchResult]:
@@ -2076,7 +2141,7 @@ class IndexSearcher:
                 for i, n in enumerate(nodes)]
 
     def _leaf_bound_walk(self, segs: list[dict], node: A.Node,
-                         need: int) -> list[tuple[str, int, pd.DataFrame]]:
+                         need: int) -> list[tuple[str, int, np.ndarray]]:
         """Cross-segment early-skip for pruned top-k (the reference's
         split-order walk, leaf.rs:1255-1274: order splits, convert
         trailing ones to no-ops when they cannot beat the current worst
@@ -2103,20 +2168,19 @@ class IndexSearcher:
         # unbounded (non-WAND-shape) segments first — they must run
         bounds.sort(key=lambda t: -(float("inf") if t[0] is None
                                     else t[0]))
-        parts: list[tuple[str, int, pd.DataFrame]] = []
+        parts: list[tuple[str, int, np.ndarray]] = []
         top_scores: list[float] = []
         seed = float("-inf")
         for b, seg, seg_dir in bounds:
             if b is not None and b < seed:
                 _WSTATS["segments_skipped"] += 1
-                parts.append((seg["segment_id"], 0,
-                              pd.DataFrame({"doc_id": [], "score": []})))
+                parts.append((seg["segment_id"], 0, _partial([], [])))
                 continue
             cnt, top = segment_top_k(seg_dir, node, need, self.tokenizer,
                                      self.text_field, True, None, seed)
             parts.append((seg["segment_id"], cnt, top))
             if len(top):
-                top_scores.extend(float(s) for s in top["score"])
+                top_scores.extend(top["score"].tolist())
                 top_scores.sort(reverse=True)
                 del top_scores[need:]
                 if need > 0 and len(top_scores) >= need:
@@ -2127,7 +2191,7 @@ class IndexSearcher:
     def _score_fan_out(self, nodes: list[A.Node],
                        seg_lists: list[list[dict]], needs: list[int],
                        use_wand: bool, search_after: tuple | None
-                       ) -> list[list[tuple[str, int, pd.DataFrame]]]:
+                       ) -> list[list[tuple[str, int, np.ndarray]]]:
         """Score-ordered leaves of N queries through one _fan_out; the
         parts of query i come back at index i.
 
@@ -2142,12 +2206,12 @@ class IndexSearcher:
         index_dir = self.index_dir
         tokenizer = self.tokenizer
         text_field = self.text_field
-        out: list[list[tuple[str, int, pd.DataFrame]]] = []
+        out: list[list[tuple[str, int, np.ndarray]]] = []
         seeds: list[float] = []
         pairs: list[tuple[int, str]] = []
         for qi, (node, segs, need) in enumerate(zip(nodes, seg_lists,
                                                     needs)):
-            parts: list[tuple[str, int, pd.DataFrame]] = []
+            parts: list[tuple[str, int, np.ndarray]] = []
             seed = float("-inf")
             if use_wand and search_after is None and len(segs) >= 4:
                 big = max(segs, key=lambda s: s.get("num_docs", 0))
@@ -2156,7 +2220,7 @@ class IndexSearcher:
                     node, need, tokenizer, text_field, True, None)
                 parts.append((big["segment_id"], cnt0, top0))
                 if need > 0 and len(top0) >= need:
-                    kth = float(top0["score"].iloc[need - 1])
+                    kth = float(top0["score"][need - 1])
                     seed = kth - abs(kth) * 1e-5
                 segs = [s for s in segs
                         if s["segment_id"] != big["segment_id"]]
@@ -2165,16 +2229,20 @@ class IndexSearcher:
             pairs.extend((qi, s["segment_id"]) for s in segs)
 
         def leaf(qi: int, sid: str) -> tuple[int, pd.DataFrame]:
-            return segment_top_k(os.path.join(index_dir, "segments", sid),
-                                 nodes[qi], needs[qi], tokenizer,
-                                 text_field, use_wand, search_after,
-                                 seeds[qi])
+            # Spark ships pandas batches; the root gets arrays back below
+            cnt, top = segment_top_k(
+                os.path.join(index_dir, "segments", sid), nodes[qi],
+                needs[qi], tokenizer, text_field, use_wand, search_after,
+                seeds[qi])
+            return cnt, pd.DataFrame(top)
 
         import pyspark.sql.types as T
         fanned = self._fan_out(pairs, leaf,
                                [T.StructField("score", T.DoubleType())])
         for qi, parts in enumerate(out):
-            parts.extend(fanned.get(qi, []))
+            parts.extend((sid, cnt, _partial(grp["doc_id"].to_numpy(),
+                                             grp["score"].to_numpy()))
+                         for sid, cnt, grp in fanned.get(qi, []))
         return out
 
     def _fan_out(self, pairs: list[tuple[int, str]], leaf, fields: list
@@ -2225,12 +2293,11 @@ class IndexSearcher:
                 grp[grp["doc_id"] >= 0][["doc_id", *value_cols]]))
         return parts
 
-    def _fetch(self, winners: pd.DataFrame) -> list[SearchHit]:
+    def _fetch(self, sids: list[str], dids: list[int],
+               scores: list[float]) -> list[SearchHit]:
         """Fetch the winners' stored docs (two-phase hit join,
         root.rs:808-889): per segment, read only the row groups holding
         its winners, then convert every row with one `to_pylist`."""
-        sids = winners["segment_id"].tolist()
-        dids = [int(d) for d in winners["doc_id"].tolist()]
         by_seg: dict[str, list[int]] = {}
         for sid, d in zip(sids, dids):
             by_seg.setdefault(sid, []).append(d)
@@ -2256,8 +2323,7 @@ class IndexSearcher:
                         row[c] = hex_to_ip_display(row[c])
             docs.update(zip(((sid, d) for d in ids), rows))
         return [SearchHit(float(score), sid, d, docs[(sid, d)])
-                for score, sid, d in zip(winners["score"].tolist(), sids,
-                                         dids)]
+                for score, sid, d in zip(scores, sids, dids)]
 
     @property
     def index_uid(self) -> str:
@@ -2469,6 +2535,7 @@ class IndexSearcher:
                     break
         return out
 
+    @_request_scope()
     def sort_search(self, query, k: int = 10,
                     sort_by: tuple = (("_score", "desc"),),
                     fetch_fields: bool = True,
@@ -2583,7 +2650,9 @@ class IndexSearcher:
         winners = allc[["doc_id", "segment_id"]].copy()
         winners["score"] = (allc[score_col].astype(float) if score_col
                             else 0.0)
-        hits = self._fetch(winners) if fetch_fields else [
+        hits = self._fetch(winners["segment_id"].tolist(),
+                           [int(d) for d in winners["doc_id"].tolist()],
+                           winners["score"].tolist()) if fetch_fields else [
             SearchHit(float(r.score), str(r.segment_id), int(r.doc_id), {})
             for r in winners.itertuples()]
         last_key = None

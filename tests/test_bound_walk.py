@@ -91,7 +91,7 @@ def test_bound_is_conservative(skewed_idx):
         cnt, top = _segment_top_k_uncached(
             seg_dir, node, 1, s.tokenizer, s.text_field, False, None)
         if len(top):
-            assert b is not None and b >= float(top["score"].iloc[0]) - 1e-6
+            assert b is not None and b >= float(top["score"][0]) - 1e-6
 
 
 def test_and_missing_term_bounds_zero(skewed_idx):

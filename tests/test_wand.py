@@ -210,7 +210,7 @@ def test_single_term_exact_count_shortcut(tmp_path):
     order = np.lexsort((-scored.docids,
                         -scored.scores.astype(np.float64)))[:10]
     assert top["doc_id"].tolist() == scored.docids[order].tolist()
-    assert np.allclose(top["score"].to_numpy(),
+    assert np.allclose(np.asarray(top["score"]),
                        scored.scores[order].astype(np.float64))
     # absent term: clean empty
     cnt0, top0 = segment_top_k(seg_dir, A.Term("content", "zzznoterm"),

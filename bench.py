@@ -198,28 +198,6 @@ def main() -> None:
     queries["iceberg_plan_kfiles_per_s"] = round(
         len(_iplan.files) * 3 / (time.perf_counter() - t0) / 1e3, 1)
 
-    # Kafka wire transport: produce -> fetch -> decode over a real TCP
-    # loopback (RecordBatch v2 encode, CRC32C numpy fold, varint record
-    # parse) — thousand records/sec through one consumer connection
-    from quickwit_spark.streaming.kafka_wire import (KafkaWireClient,
-                                                     LoopbackKafkaBroker)
-    _kmsg = (b'{"repo":"r","path":"x.py","commit":"c","lang":"py",'
-             b'"content":"bench kafka wire payload body text"}')
-    with LoopbackKafkaBroker({"bench": 1}) as _kb:
-        with KafkaWireClient(_kb.host, _kb.port) as _kc:
-            _kc.api_versions()
-            for _ in range(10):
-                _kc.produce("bench", 0, [(None, _kmsg)] * 2000)
-            _kc.fetch("bench", 0, 0)  # warm
-            t0 = time.perf_counter()
-            _off, _n = 0, 0
-            while _n < 20_000:
-                _recs, _ = _kc.fetch("bench", 0, _off)
-                _n += len(_recs)
-                _off = _recs[-1][0] + 1
-            queries["kafka_wire_fetch_krecs_s"] = round(
-                _n / (time.perf_counter() - t0) / 1e3, 1)
-
     # Iceberg CDC sync: maintain an index against a table that upserts
     # 2.5% and deletes 0.5% of 20k docs — delta wall time vs the full
     # rebuild the sync replaces (the 10^12-scale argument: the sync is
@@ -577,7 +555,7 @@ def main() -> None:
                           "tok_", "otlp_pb_", "png_decode",
                           "iceberg_plan",
                           # rate metric + post-r1 rows (r5 session 7)
-                          "kafka_wire_", "cdc_",
+                          "cdc_",
                           # serving-layer rows (r5 session 8): ms /
                           # rate metrics, not headline seconds
                           "http_search_", "otlp_http_",

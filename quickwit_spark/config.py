@@ -119,8 +119,8 @@ class IndexConfig:
         """The config dict persisted in the manifest (what the searcher
         reads back, engine `manifest.data['config']`). The SINGLE source
         for every Manifest.load_or_create call site — a key added here
-        reaches all ingest paths (batch, streaming, kafka, queue, bulk)
-        at once instead of drifting across six hand-typed dicts."""
+        reaches all ingest paths (batch, streaming, Iceberg, bulk) at
+        once instead of drifting across hand-typed dicts."""
         return {"key_cols": list(self.key_cols),
                 "text_col": self.text_col,
                 "tokenizer": self.tokenizer,

@@ -1281,14 +1281,24 @@ class CustomAnalyzer:
 
 
 _CUSTOM_ANALYZERS: dict[str, CustomAnalyzer] = {}
+# bumped by every registration: a name can be redefined at runtime, so a
+# cache of analyzed results keys on this, not on the analyzer's name alone
+_ANALYZER_GENERATION = 0
 
 
 def register_custom_analyzer(name: str, kind: str, **kwargs) -> None:
     """Register a user tokenizer usable anywhere an analyzer name is
     accepted (IndexConfig.tokenizer, query-time tokenization)."""
+    global _ANALYZER_GENERATION
     if name in ANALYZERS:
         raise ValueError(f"{name!r} is a built-in analyzer")
     _CUSTOM_ANALYZERS[name] = CustomAnalyzer(kind, **kwargs)
+    _ANALYZER_GENERATION += 1
+
+
+def analyzer_generation() -> int:
+    """Changes whenever a custom analyzer is (re)defined."""
+    return _ANALYZER_GENERATION
 
 
 def get_custom_analyzer(name: str) -> CustomAnalyzer | None:

@@ -149,7 +149,7 @@ class Manifest:
         under the OTHER scheme (or another partition count) would
         silently duplicate documents (re-routed into a not-yet-published
         partition) and drop documents (re-routed into an already
-        published one) — refuse instead. Queue/Kafka/stream-batch
+        published one) — refuse instead. Stream-batch and bulk
         sources use string checkpoint keys and are unaffected. Builders
         call this only when there is real work to resume — a COMPLETE
         index (legacy pre-router manifests included) reruns as a
@@ -319,7 +319,7 @@ class Manifest:
         """ResetSourceCheckpoint analog (source_resource.rs): drop the
         checkpoint positions recorded by one source so its data can be
         re-ingested. Keys are namespaced by source prefix
-        (`stream-*`, `kafka-*`, `queue-msg:*`, `bulk-*`); bare integer
+        (`stream-*`, `iceberg:*`, `bulk-*`); bare integer
         keys belong to the batch builder (pseudo id `_builder`), and
         resetting those also releases the router claim — partition
         checkpoints are only meaningful under the routing scheme that

@@ -35,7 +35,7 @@ import pyarrow.parquet as pq
 from ..functions.bm25 import K1, Bm25Weight, idf_f32
 from ..functions.fieldtypes import (bytes_from_b64, hex_to_ip_display,
                                     ip_norm_one)
-from ..functions.tokenizers import tokenize_one
+from ..functions.tokenizers import analyzer_generation, tokenize_one
 from ..index.codecs import decode_positions, decode_postings, varint_decode
 from ..index.manifest import Manifest
 from . import ast as A
@@ -1654,13 +1654,16 @@ def segment_top_k(seg_dir: str, node: A.Node, k: int, tokenizer: str,
     paginating clients re-issuing page 1, multi-user hot queries — are
     served from the partial-result cache without touching postings.
     initial_theta (cross-segment bound walk) is part of the cache key:
-    a theta-pruned partial result is only reusable at the same bar."""
+    a theta-pruned partial result is only reusable at the same bar, and
+    the analyzer generation is too: a custom analyzer redefined under the
+    same name must not serve results computed with its old definition."""
     if LEAF_CACHE_MAX_ENTRIES <= 0:
         return _segment_top_k_uncached(seg_dir, node, k, tokenizer,
                                        text_field, use_wand, search_after,
                                        initial_theta)
     key = (seg_dir, _node_key(node), int(k), bool(use_wand),
-           repr(search_after), tokenizer, text_field, float(initial_theta))
+           repr(search_after), tokenizer, analyzer_generation(), text_field,
+           float(initial_theta))
     ent = _LEAF_CACHE.get(key)
     if ent is not None:
         _LEAF_CACHE.move_to_end(key)

@@ -783,7 +783,7 @@ def reset_source_checkpoint(index_dir: str, source_id: str) -> list[str]:
     """PUT /indexes/{id}/sources/{source_id}/reset-checkpoint
     (source_resource.rs reset_source_checkpoint). Checkpoint keys are
     namespaced by source prefix here: `stream-*` (file stream),
-    `kafka-*`, `queue-msg:*`, `bulk-*`; bare integer keys belong to the
+    `iceberg:*`, `bulk-*`; bare integer keys belong to the
     batch builder (pseudo source id `_builder` — resetting it also
     releases the router claim so a fresh build can re-route).
     `_all` resets everything (what clear_index does). Returns the

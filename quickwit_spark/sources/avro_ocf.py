@@ -66,9 +66,7 @@ def encode_long(n: int) -> bytes:
 def decode_long(buf: bytes, pos: int) -> tuple[int, int]:
     """Bounds-checked decode: raises ValueError on truncation or a
     varint overrunning 64 bits (hostile input must not spin the shift
-    unbounded). This is the repo's ONE zigzag-LEB128 codec — Kafka
-    record varints (streaming/kafka_wire.py) delegate here because the
-    encodings are byte-identical."""
+    unbounded)."""
     z = 0
     shift = 0
     while True:

@@ -1,765 +1,10 @@
-"""Queue-shaped source (SQS/Pulsar family): visibility-timeout
-redelivery + per-message checkpoint dedup = exactly-once publish.
-
-Pins the reference's queue_sources contract
-(quickwit-indexing/src/source/queue_sources/): stable message identity
-dedup, receipt-scoped acks, redelivery after visibility lapse, and
-convergence of every crash ordering onto one manifest publish."""
-
-import json
-
-import pandas as pd
-import pytest
-
-from quickwit_spark.config import IndexConfig
-from quickwit_spark.index.manifest import Manifest
-from quickwit_spark.streaming.queue import (
-    LocalDirQueue, QueueMessage, ingest_queue_batch,
-    processed_message_ids)
-
-
-def _payload(lo: int, hi: int) -> str:
-    return json.dumps({"docs": [
-        {"repo": "r", "path": f"p{i}", "commit": "c",
-         "lang": "py", "content": f"doc number{i} common text"}
-        for i in range(lo, hi)]})
-
-
-def _cfg(tmp_path) -> IndexConfig:
-    return IndexConfig(index_uid="q", index_dir=str(tmp_path / "idx"),
-                       key_cols=("repo", "path", "commit"),
-                       tokenizer="default", tag_cols=(), sha_col=None)
-
-
-class _Clock:
-    def __init__(self):
-        self.t = 1000.0
-
-    def __call__(self):
-        return self.t
-
-
-def test_send_receive_ack_cycle(tmp_path):
-    clk = _Clock()
-    q = LocalDirQueue(str(tmp_path / "q"), visibility_sec=30, now_fn=clk)
-    q.send(_payload(0, 5), message_id="m1")
-    q.send(_payload(5, 9), message_id="m2")
-    msgs = q.receive()
-    assert {m.message_id for m in msgs} == {"m1", "m2"}
-    # in-flight: invisible to a second consumer
-    assert q.receive() == []
-    for m in msgs:
-        assert q.ack(m)
-    assert q.pending() == 0
-
-
-def test_visibility_timeout_redelivers(tmp_path):
-    clk = _Clock()
-    q = LocalDirQueue(str(tmp_path / "q"), visibility_sec=30, now_fn=clk)
-    q.send(_payload(0, 3), message_id="m1")
-    (first,) = q.receive()
-    assert q.receive() == []          # invisible while in flight
-    clk.t += 31                       # consumer died; visibility lapsed
-    (second,) = q.receive()
-    assert second.message_id == "m1"
-    assert second.ack_id != first.ack_id
-    # the FIRST delivery's receipt is stale now (SQS semantics)
-    assert not q.ack(first)
-    assert q.ack(second)
-    assert q.pending() == 0
-
-
-def test_exactly_once_publish(tmp_path):
-    clk = _Clock()
-    q = LocalDirQueue(str(tmp_path / "q"), visibility_sec=30, now_fn=clk)
-    cfg = _cfg(tmp_path)
-    q.send(_payload(0, 6), message_id="m1")
-    msgs = q.receive()
-    assert ingest_queue_batch(msgs, cfg, queue=q) == 1
-    segs1 = Manifest.load(cfg.index_dir).segments()
-    assert len(segs1) == 1
-    assert processed_message_ids(cfg) == {"m1"}
-    # crash-after-publish-before-ack: simulate by re-sending the SAME
-    # message identity and processing its redelivery
-    q.send(_payload(0, 6), message_id="m1")
-    redelivered = q.receive()
-    assert ingest_queue_batch(redelivered, cfg, queue=q) == 0  # dedup
-    segs2 = Manifest.load(cfg.index_dir).segments()
-    assert [s["segment_id"] for s in segs2] == \
-        [s["segment_id"] for s in segs1]
-    assert q.pending() == 0  # redelivery still acked
-
-
-def test_mixed_fresh_and_replayed_batch(tmp_path):
-    clk = _Clock()
-    q = LocalDirQueue(str(tmp_path / "q"), visibility_sec=30, now_fn=clk)
-    cfg = _cfg(tmp_path)
-    q.send(_payload(0, 4), message_id="m1")
-    ingest_queue_batch(q.receive(), cfg, queue=q)
-    q.send(_payload(0, 4), message_id="m1")   # replay
-    q.send(_payload(4, 9), message_id="m2")   # fresh
-    n = ingest_queue_batch(q.receive(), cfg, queue=q)
-    assert n == 1                             # only m2 published
-    m = Manifest.load(cfg.index_dir)
-    assert sum(s["num_docs"] for s in m.segments()) == 9  # no dupes
-    assert processed_message_ids(cfg) == {"m1", "m2"}
-
-
-def test_replay_segments_byte_identical(tmp_path):
-    """Processing the same message in two fresh indexes yields the same
-    content-addressed segment id — the property that makes the
-    crash-between-publish-and-ack window harmless."""
-    ids = []
-    for sub in ("a", "b"):
-        cfg = IndexConfig(index_uid="q",
-                          index_dir=str(tmp_path / sub),
-                          key_cols=("repo", "path", "commit"),
-                          tokenizer="default", tag_cols=(), sha_col=None)
-        msg = QueueMessage("mX", "ack", _payload(0, 5))
-        ingest_queue_batch([msg], cfg)
-        ids.append([s["segment_id"]
-                    for s in Manifest.load(cfg.index_dir).segments()])
-    assert ids[0] == ids[1]
-
-
-def test_queryable_after_queue_ingest(tmp_path):
-    from quickwit_spark.search import ast as A
-    from quickwit_spark.search.engine import IndexSearcher
-    clk = _Clock()
-    q = LocalDirQueue(str(tmp_path / "q"), visibility_sec=30, now_fn=clk)
-    cfg = _cfg(tmp_path)
-    q.send(_payload(0, 8), message_id="m1")
-    ingest_queue_batch(q.receive(), cfg, queue=q)
-    s = IndexSearcher(cfg.index_dir)
-    res = s.search(A.Term("content", "number3"), k=5, fetch_fields=True)
-    assert len(res.hits) == 1
-    assert res.hits[0].doc["path"] == "p3"
-
-
-def test_concurrent_publishers_compose(tmp_path):
-    """Two manifest handles publishing interleaved must BOTH survive
-    (conditional publish against a fresh on-disk read — last-writer-wins
-    would drop the first publisher's segments and checkpoints)."""
-    idx = str(tmp_path / "idx")
-    m1 = Manifest.load_or_create(idx, "c", {})
-    m2 = Manifest.load(idx)  # stale handle
-    segA = {"segment_id": "seg-a", "num_docs": 1}
-    segB = {"segment_id": "seg-b", "num_docs": 2}
-    m1.publish([segA], checkpoint_delta={"k1": (None, "done")})
-    m2.publish([segB], checkpoint_delta={"k2": (None, "done")})
-    fresh = Manifest.load(idx)
-    assert {s["segment_id"] for s in fresh.segments()} == {"seg-a", "seg-b"}
-    assert fresh.checkpoint("k1") == "done"
-    assert fresh.checkpoint("k2") == "done"
-
-
-def test_stale_handle_conflict_detected(tmp_path):
-    """A stale handle replaying an already-committed delta hits
-    CheckpointConflict against the FRESH state, not its own stale view."""
-    from quickwit_spark.index.manifest import CheckpointConflict
-    idx = str(tmp_path / "idx")
-    m1 = Manifest.load_or_create(idx, "c", {})
-    m2 = Manifest.load(idx)
-    m1.publish([], checkpoint_delta={"k": (None, "v1")})
-    with pytest.raises(CheckpointConflict):
-        m2.publish([], checkpoint_delta={"k": (None, "v1")})
-
-
-def test_conflict_does_not_ack_unpublished(tmp_path, monkeypatch):
-    """If publish raises CheckpointConflict, messages without committed
-    checkpoints stay IN the queue (acking them would lose their docs)."""
-    from quickwit_spark.index.manifest import CheckpointConflict
-    import quickwit_spark.streaming.queue as qm
-    clk = _Clock()
-    q = LocalDirQueue(str(tmp_path / "q"), visibility_sec=30, now_fn=clk)
-    cfg = _cfg(tmp_path)
-    # seed the manifest so load_or_create finds it
-    Manifest.load_or_create(cfg.index_dir, cfg.index_uid, {})
-    q.send(_payload(0, 3), message_id="mA")
-    msgs = q.receive()
-
-    real_publish = Manifest.publish
-
-    def failing_publish(self, *a, **k):
-        raise CheckpointConflict("simulated race")
-
-    monkeypatch.setattr(Manifest, "publish", failing_publish)
-    assert ingest_queue_batch(msgs, cfg, queue=q) == 0
-    monkeypatch.setattr(Manifest, "publish", real_publish)
-    assert q.pending() == 1          # NOT acked
-    clk.t += 31                      # redelivery after visibility lapse
-    assert ingest_queue_batch(q.receive(), cfg, queue=q) == 1
-    assert q.pending() == 0
-
-
-def test_empty_docs_message_spark_path_schema(tmp_path):
-    """Empty-docs messages checkpoint + ack without building segments
-    (the Spark fan-out path must skip zero-row frames)."""
-    clk = _Clock()
-    q = LocalDirQueue(str(tmp_path / "q"), visibility_sec=30, now_fn=clk)
-    cfg = _cfg(tmp_path)
-    q.send(json.dumps({"docs": []}), message_id="hb1")
-    q.send(_payload(0, 3), message_id="m1")
-    assert ingest_queue_batch(q.receive(), cfg, queue=q) == 2
-    assert q.pending() == 0
-    m = Manifest.load(cfg.index_dir)
-    assert sum(s["num_docs"] for s in m.segments()) == 3
-    assert processed_message_ids(cfg) == {"hb1", "m1"}
-
-
-def test_concurrent_ack_race_returns_false(tmp_path, monkeypatch):
-    """Two consumers holding the same receipt (visibility lapse edge):
-    the loser of the os.remove race must get False, not
-    FileNotFoundError."""
-    import os as _os
-    q = LocalDirQueue(str(tmp_path / "q"), visibility_sec=60)
-    q.send("m1", "payload")
-    (msg,) = q.receive()
-    real_remove = _os.remove
-
-    def racing_remove(path):
-        real_remove(path)          # the other consumer wins first
-        real_remove(path)          # our own attempt -> FileNotFoundError
-    monkeypatch.setattr("quickwit_spark.streaming.queue.os.remove",
-                        racing_remove)
-    assert q.ack(msg) is False
-    monkeypatch.undo()
-    assert q.pending() == 0
-
-
-def test_sqs_protocol_adapter_end_to_end(tmp_path):
-    """Full smoke through the SQS PROTOCOL adapter (sqs_queue.rs analog):
-    produce -> two receive/ingest batches -> crash-shaped replay ->
-    exactly-once manifest. Every operation travels as an AWS SQS
-    JSON-protocol document through the transport seam — swapping the
-    file-backed transport for an HTTP one is the only production delta."""
-    from quickwit_spark.search.engine import IndexSearcher
-    from quickwit_spark.streaming.queue import SqsProtocolQueue
-
-    clk = _Clock()
-    q = SqsProtocolQueue(local_root=str(tmp_path / "q"),
-                         visibility_sec=30, now_fn=clk)
-    cfg = _cfg(tmp_path)
-    q.send(_payload(0, 5), message_id="m1")
-    q.send(_payload(5, 9), message_id="m2")
-    assert q.pending() == 2
-
-    # batch 1: one message at a time (MaxNumberOfMessages=1)
-    b1 = q.receive(max_messages=1)
-    assert len(b1) == 1
-    assert ingest_queue_batch(b1, cfg, queue=q) == 1
-    # batch 2: the rest
-    b2 = q.receive(max_messages=10)
-    assert len(b2) == 1
-    # crash AFTER publish BEFORE ack: publish but drop the ack
-    assert ingest_queue_batch(b2, cfg, queue=None) == 1
-    # visibility lapses -> redelivery of the unacked message
-    clk.t += 31
-    b3 = q.receive(max_messages=10)
-    assert {m.message_id for m in b3} == {b2[0].message_id}
-    # replay: dedup hit (0 new publishes), message finally acked
-    assert ingest_queue_batch(b3, cfg, queue=q) == 0
-    assert q.pending() == 0
-    assert processed_message_ids(cfg) == {"m1", "m2"}
-    assert IndexSearcher(cfg.index_dir).count("*") == 9
-
-    # receipt-scoped protocol ops: a lapsed receipt can't delete
-    q.send(_payload(9, 10), message_id="m3")
-    (m3,) = q.receive(max_messages=1)
-    assert q.change_visibility(m3, 5)
-    clk.t += 6
-    (m3b,) = q.receive(max_messages=1)  # redelivered, new receipt
-    assert not q.ack(m3)                # stale ReceiptHandle rejected
-    assert q.ack(m3b)
-    assert q.pending() == 0
-
-
-def test_receipt_handle_survives_pipe_in_message_id(tmp_path):
-    """SQS-protocol ReceiptHandle packs message_id|ack_id; ids are
-    caller-supplied stable identities (the reference uses file URIs),
-    so a '|' or '/' inside must survive the round-trip — the handle is
-    parsed at the LAST '|' (ack_id is always uuid hex) and ids are
-    percent-encoded into filenames."""
-    from quickwit_spark.streaming.queue import SqsProtocolQueue
-
-    q = SqsProtocolQueue(local_root=str(tmp_path / "q"))
-    mid = "s3://bucket/tenant|file-3.json"
-    assert q.send("payload-a", message_id=mid) == mid
-    (m,) = q.receive(max_messages=1)
-    assert m.message_id == mid
-    assert q.change_visibility(m, 60)   # same handle parse path
-    assert q.ack(m)                     # wrong-file lookup would fail
-    assert q.pending() == 0
-
-
-def test_change_visibility_cannot_resurrect_acked_message(tmp_path):
-    """A visibility heartbeat with a receipt for an already-acked
-    message must fail and must NOT re-create the deleted file."""
-    clk = _Clock()
-    q = LocalDirQueue(str(tmp_path / "q"), visibility_sec=30,
-                      now_fn=clk)
-    q.send(_payload(0, 2), message_id="mx")
-    (m,) = q.receive(max_messages=1)
-    assert q.ack(m)
-    assert not q.change_visibility(m, 60)  # stale receipt, file gone
-    assert q.pending() == 0
-    clk.t += 120
-    assert q.receive(max_messages=10) == []  # nothing resurrected
-
-
-def test_ack_and_heartbeat_serialized_by_queue_lock(tmp_path):
-    """ack and change_visibility mutations are serialized by the queue
-    flock, so the heartbeat's tmp+os.replace can never interleave with
-    (and resurrect) a concurrent ack's os.remove. The heartbeat is
-    stalled mid-critical-section; a concurrent ack must block until it
-    finishes, then succeed against the refreshed file."""
-    import threading
-
-    clk = _Clock()
-    q = LocalDirQueue(str(tmp_path / "q"), visibility_sec=30, now_fn=clk)
-    q.send(_payload(0, 2), message_id="mx")
-    (m,) = q.receive(max_messages=1)
-
-    orig_rewrite = q._atomic_rewrite
-    entered = threading.Event()
-    release = threading.Event()
-
-    def slow_rewrite(path, doc):
-        entered.set()
-        assert release.wait(10)
-        orig_rewrite(path, doc)
-
-    q._atomic_rewrite = slow_rewrite
-    result = {}
-
-    def heartbeat():
-        result["hb"] = q.change_visibility(m, 60)
-
-    def acker():
-        assert entered.wait(10)
-        # restore before ack so ack's own path is untouched
-        q._atomic_rewrite = orig_rewrite
-        result["ack"] = q.ack(m)  # blocks on the flock until hb is done
-
-    t_hb = threading.Thread(target=heartbeat)
-    t_ack = threading.Thread(target=acker)
-    t_hb.start()
-    t_ack.start()
-    assert entered.wait(10)
-    release.set()
-    t_hb.join(20)
-    t_ack.join(20)
-    assert result["hb"] is True
-    assert result["ack"] is True  # receipt still current after heartbeat
-    assert q.pending() == 0
-    clk.t += 300
-    assert q.receive(max_messages=10) == []  # nothing resurrected
-
-
-def test_consumer_crash_mid_receive_leaves_message_deliverable(tmp_path):
-    """A consumer dying mid-rewrite (the exact crash the visibility
-    timeout exists to recover from) must not leave torn JSON on disk:
-    the original file survives intact and the message redelivers."""
-    clk = _Clock()
-    q = LocalDirQueue(str(tmp_path / "q"), visibility_sec=30, now_fn=clk)
-    q.send(_payload(0, 2), message_id="m1")
-
-    orig_rewrite = q._atomic_rewrite
-
-    def crashing(path, doc):
-        raise RuntimeError("consumer crash mid-rewrite")
-
-    q._atomic_rewrite = crashing
-    with pytest.raises(RuntimeError):
-        q.receive()
-    q._atomic_rewrite = orig_rewrite
-    # the deadline stamp never landed: immediately deliverable, intact
-    (m,) = q.receive()
-    assert m.message_id == "m1"
-    assert len(json.loads(m.payload)["docs"]) == 2
-    assert q.ack(m)
-
-
-def test_http_transport_loopback_exactly_once(tmp_path):
-    """End-to-end over REAL HTTP: an in-process http.server speaks the
-    AWS SQS JSON protocol (X-Amz-Target routing, x-amz-json-1.0 bodies,
-    __type error docs on 400) backed by the file-backed queue; the
-    consumer side uses SqsProtocolQueue + http_sqs_transport. Produce ->
-    two batches -> replay -> exactly-once manifest, plus a stale-receipt
-    error surfaced through the HTTP error path."""
-    import threading
-    from http.server import BaseHTTPRequestHandler, HTTPServer
-
-    from quickwit_spark.streaming.queue import (SqsProtocolQueue,
-                                                http_sqs_transport)
-
-    clk = _Clock()
-    backend = SqsProtocolQueue(local_root=str(tmp_path / "srv"),
-                               visibility_sec=30, now_fn=clk)
-
-    class Handler(BaseHTTPRequestHandler):
-        def do_POST(self):
-            n = int(self.headers.get("Content-Length", "0"))
-            doc = json.loads(self.rfile.read(n) or b"{}")
-            action = self.headers["X-Amz-Target"].split(".", 1)[1]
-            try:
-                resp = backend._local_transport(action, doc)
-            except ValueError:
-                resp = {"__type": "InvalidAction"}
-            body = json.dumps(resp).encode()
-            self.send_response(400 if "__type" in resp else 200)
-            self.send_header("Content-Type", "application/x-amz-json-1.0")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def log_message(self, *a):  # keep pytest output clean
-            pass
-
-    srv = HTTPServer(("127.0.0.1", 0), Handler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    try:
-        url = f"http://127.0.0.1:{srv.server_port}/"
-        q = SqsProtocolQueue(queue_url=url,
-                             transport=http_sqs_transport(url))
-
-        cfg = _cfg(tmp_path)
-        q.send(_payload(0, 4), message_id="h1")
-        q.send(_payload(4, 7), message_id="h2")
-        assert q.pending() == 2
-
-        batch1 = q.receive(max_messages=1)
-        assert ingest_queue_batch(batch1, cfg, queue=q) == 1
-        batch2 = q.receive(max_messages=10)
-        assert len(batch2) == 1
-        assert ingest_queue_batch(batch2, cfg, queue=q) == 1
-        assert q.pending() == 0
-
-        # replay: a redelivered message (visibility lapse before the ack
-        # landed is simulated by re-sending the same id) publishes 0
-        q.send(_payload(0, 4), message_id="h1")
-        (replay,) = q.receive()
-        assert ingest_queue_batch([replay], cfg, queue=q) == 0
-        assert q.pending() == 0
-        assert processed_message_ids(cfg) == {"h1", "h2"}
-
-        from quickwit_spark.search.engine import IndexSearcher
-        assert IndexSearcher(cfg.index_dir).count("*") == 7
-
-        # stale receipt -> __type error doc over HTTP -> ack() False
-        q.send(_payload(7, 8), message_id="h3")
-        (m3,) = q.receive()
-        clk.t += 31  # visibility lapses; receipt goes stale
-        (m3b,) = q.receive()
-        assert not q.ack(m3)
-        assert q.ack(m3b)
-    finally:
-        srv.shutdown()
-        srv.server_close()
-
-
-def test_legacy_unquoted_message_files_migrated_on_open(tmp_path):
-    """Message files written before _path() percent-encoded ids (URI
-    ids with ':' landed at the raw join path) are renamed to the
-    canonical quoted name on queue open, so ack/change_visibility and
-    dedup re-sends address ONE file instead of missing it forever."""
-    import os
-
-    root = str(tmp_path / "q")
-    os.makedirs(root)
-    mid = "sqs:msg:42"
-    with open(os.path.join(root, f"{mid}.json"), "w") as f:
-        json.dump({"message_id": mid, "payload": _payload(0, 2),
-                   "invisible_until": 0.0}, f)
-    clk = _Clock()
-    q = LocalDirQueue(root, visibility_sec=30, now_fn=clk)
-    from urllib.parse import quote
-    names = set(os.listdir(root))
-    assert f"{quote(mid, safe='')}.json" in names
-    assert f"{mid}.json" not in names
-    (m,) = q.receive()
-    assert m.message_id == mid
-    assert q.change_visibility(m, 5)  # addresses the migrated file
-    assert q.ack(m)
-    assert q.pending() == 0
-
-
-def test_legacy_migration_handles_percent_lookalike_ids(tmp_path):
-    """The migration's cheap name-only precheck must still READ files
-    whose raw legacy name contains '%' — a raw id like 'a%3Ax' is
-    byte-identical to quote('a:x'), so skipping it on name shape alone
-    would leave the legacy file unmigratable (its canonical name is
-    'a%253Ax.json', the %-escaped form). Canonical uuid-hex names are
-    provably at their own quoting and may be skipped unread."""
-    import os
-    from urllib.parse import quote
-
-    root = str(tmp_path / "q")
-    os.makedirs(root)
-    mid = "a%3Ax"  # raw id that LOOKS pre-quoted
-    with open(os.path.join(root, f"{mid}.json"), "w") as f:
-        json.dump({"message_id": mid, "payload": _payload(0, 1),
-                   "invisible_until": 0.0}, f)
-    q = LocalDirQueue(root, visibility_sec=30, now_fn=_Clock())
-    names = set(os.listdir(root))
-    assert f"{quote(mid, safe='')}.json" in names  # a%253Ax.json
-    (m,) = q.receive()
-    assert m.message_id == mid
-    assert q.ack(m)
-
-
-def test_http_transport_surfaces_status_on_non_json_error(tmp_path):
-    """A proxy/LB answering with a non-JSON error page (502 HTML) must
-    surface as an HTTPError carrying the status code and URL — not a
-    bare JSONDecodeError ('Expecting value: line 1 column 1') that
-    hides whether this was auth, routing, or the queue protocol."""
-    import threading
-    import urllib.error
-    from http.server import BaseHTTPRequestHandler, HTTPServer
-
-    from quickwit_spark.streaming.queue import http_sqs_transport
-
-    class Handler(BaseHTTPRequestHandler):
-        def do_POST(self):
-            body = b"<html>Bad Gateway</html>"
-            self.send_response(502)
-            self.send_header("Content-Type", "text/html")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def log_message(self, *a):
-            pass
-
-    srv = HTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        url = f"http://127.0.0.1:{srv.server_port}/"
-        transport = http_sqs_transport(url)
-        with pytest.raises(urllib.error.HTTPError) as ei:
-            transport("ReceiveMessage", {"QueueUrl": url})
-        assert ei.value.code == 502
-        assert "Bad Gateway" in str(ei.value.reason)
-    finally:
-        srv.shutdown()
-        srv.server_close()
-
-
-def test_sigv4_aws_published_vectors():
-    """Pin the SigV4 implementation to the AWS-published example: the
-    IAM ListUsers GET request from the public signing walkthrough must
-    produce the documented signing key and final signature exactly."""
-    from quickwit_spark.streaming.sigv4 import (derive_signing_key,
-                                                sign_request)
-
-    key = derive_signing_key("wJalrXUtnFEMI/K7MDENG+bPxRfiCYEXAMPLEKEY",
-                             "20150830", "us-east-1", "iam")
-    assert key.hex() == ("c4afb1cc5771d871763a393e44b703571b55cc28424d"
-                         "1a5e86da6ed3c154a4b9")
-
-    h = sign_request(
-        "GET",
-        "https://iam.amazonaws.com/?Action=ListUsers&Version=2010-05-08",
-        {"Content-Type":
-         "application/x-www-form-urlencoded; charset=utf-8"},
-        b"", access_key="AKIDEXAMPLE",
-        secret_key="wJalrXUtnFEMI/K7MDENG+bPxRfiCYEXAMPLEKEY",
-        region="us-east-1", service="iam",
-        amz_date="20150830T123600Z")
-    assert h["Authorization"] == (
-        "AWS4-HMAC-SHA256 Credential=AKIDEXAMPLE/20150830/us-east-1/"
-        "iam/aws4_request, SignedHeaders=content-type;host;x-amz-date, "
-        "Signature=5d672d79c15b13162d9279b0855cfba6789a8edb4c82c400e06b"
-        "5924a6f2b5d7")
-
-    # a session token is carried AND covered by the signature
-    h2 = sign_request(
-        "POST", "https://sqs.us-east-1.amazonaws.com/", {}, b"{}",
-        access_key="AKIDEXAMPLE", secret_key="k", region="us-east-1",
-        service="sqs", amz_date="20150830T123600Z",
-        session_token="tok123")
-    assert h2["X-Amz-Security-Token"] == "tok123"
-    assert "x-amz-security-token" in h2["Authorization"]
-
-
-def test_http_transport_sigv4_loopback(tmp_path):
-    """SigV4 over real HTTP: the loopback server INDEPENDENTLY
-    re-derives the signature of every received request from the shared
-    secret (canonical request rebuilt from the wire: method, path,
-    signed headers, body hash) and rejects mismatches with 403 — so a
-    passing send/receive/ack flow proves the client signs exactly what
-    it transmits."""
-    import hashlib as _hl
-    import threading
-    from http.server import BaseHTTPRequestHandler, HTTPServer
-
-    from quickwit_spark.streaming.queue import (SqsProtocolQueue,
-                                                http_sqs_transport)
-    from quickwit_spark.streaming.sigv4 import derive_signing_key
-
-    AK, SK, TOK = "AKIDEXAMPLE", "sekret/with+chars", "session-tok"
-    clk = _Clock()
-    backend = SqsProtocolQueue(local_root=str(tmp_path / "srv"),
-                               visibility_sec=30, now_fn=clk)
-
-    class Handler(BaseHTTPRequestHandler):
-        def do_POST(self):
-            n = int(self.headers.get("Content-Length", "0"))
-            body = self.rfile.read(n)
-            err = self._verify(body)
-            if err:
-                resp, code = {"__type": err}, 403
-            else:
-                action = self.headers["X-Amz-Target"].split(".", 1)[1]
-                resp = backend._local_transport(action, json.loads(body))
-                code = 400 if "__type" in resp else 200
-            out = json.dumps(resp).encode()
-            self.send_response(code)
-            self.send_header("Content-Length", str(len(out)))
-            self.end_headers()
-            self.wfile.write(out)
-
-        def _verify(self, body: bytes):
-            import hmac as _hmac
-            auth = self.headers.get("Authorization", "")
-            if not auth.startswith("AWS4-HMAC-SHA256 "):
-                return "MissingAuthenticationToken"
-            fields = dict(p.split("=", 1) for p in
-                          auth[len("AWS4-HMAC-SHA256 "):].split(", "))
-            ak, date, region, service, _ = \
-                fields["Credential"].split("/")
-            if ak != AK:
-                return "InvalidClientTokenId"
-            if self.headers.get("X-Amz-Security-Token") != TOK:
-                return "MissingSecurityToken"
-            signed = fields["SignedHeaders"].split(";")
-            canon = "".join(
-                f"{h}:{' '.join(self.headers[h].split())}\n"
-                for h in signed)
-            creq = "\n".join([
-                "POST", self.path, "", canon,
-                fields["SignedHeaders"],
-                _hl.sha256(body).hexdigest()])
-            sts = "\n".join([
-                "AWS4-HMAC-SHA256", self.headers["X-Amz-Date"],
-                f"{date}/{region}/{service}/aws4_request",
-                _hl.sha256(creq.encode()).hexdigest()])
-            key = derive_signing_key(SK, date, region, service)
-            want = _hmac.new(key, sts.encode(), _hl.sha256).hexdigest()
-            if want != fields["Signature"]:
-                return "SignatureDoesNotMatch"
-            return None
-
-        def log_message(self, *a):
-            pass
-
-    srv = HTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        url = f"http://127.0.0.1:{srv.server_port}/"
-        q = SqsProtocolQueue(
-            queue_url=url,
-            transport=http_sqs_transport(
-                url, credentials=(AK, SK, TOK), region="us-east-1",
-                now_fn=clk))
-        q.send(_payload(0, 3), message_id="s1")
-        assert q.pending() == 1
-        (m,) = q.receive()
-        cfg = _cfg(tmp_path)
-        assert ingest_queue_batch([m], cfg, queue=q) == 1
-        assert q.pending() == 0
-        assert processed_message_ids(cfg) == {"s1"}
-
-        # a tampered signer (wrong secret) is rejected by the server
-        resp = http_sqs_transport(
-            url, credentials=(AK, "wrong-secret", TOK), now_fn=clk)(
-            "GetQueueAttributes",
-            {"QueueUrl": url, "AttributeNames": ["All"]})
-        assert resp.get("__type") == "SignatureDoesNotMatch"
-    finally:
-        srv.shutdown()
-        srv.server_close()
-
-
-# ------------------------------------------------- review-pass regressions
-
-def test_send_duplicate_id_is_noop_on_inflight(tmp_path):
-    """SQS dedup semantics: a duplicate send must not clobber the live
-    message — the old behavior wiped the in-flight ack_id (its ack
-    then failed) and reset visibility to 0 (instant double delivery)."""
-    from quickwit_spark.streaming.queue import LocalDirQueue
-    clock = [100.0]
-    q = LocalDirQueue(str(tmp_path / "q"), visibility_sec=30,
-                      now_fn=lambda: clock[0])
-    q.send("payload-1", message_id="dedup-1")
-    (m,) = q.receive()
-    # duplicate send while in flight: no-op
-    q.send("payload-2", message_id="dedup-1")
-    assert q.receive() == []          # still invisible
-    assert q.ack(m) is True           # original receipt still valid
-    clock[0] += 100
-    assert q.receive() == []          # really gone — not resurrected
-
-
-def test_legacy_twin_file_is_removed_on_migration(tmp_path):
-    """A legacy-named file whose canonical twin exists (same id) is
-    unreachable by ack() forever — migration must delete it, not
-    leave an infinite-redelivery ghost."""
-    import json as _json
-    import os as _os
-    from quickwit_spark.streaming.queue import LocalDirQueue
-    root = str(tmp_path / "q")
-    _os.makedirs(root)
-    # pre-create BOTH names for one id (legacy raw + canonical quoted)
-    legacy = _os.path.join(root, "a:x.json")
-    with open(legacy, "w") as f:
-        _json.dump({"message_id": "a:x", "payload": "old",
-                    "invisible_until": 0.0}, f)
-    canon = _os.path.join(root, "a%3Ax.json")
-    with open(canon, "w") as f:
-        _json.dump({"message_id": "a:x", "payload": "new",
-                    "invisible_until": 0.0}, f)
-    q = LocalDirQueue(root, visibility_sec=30, now_fn=lambda: 0.0)
-    msgs = q.receive()
-    assert [m.message_id for m in msgs] == ["a:x"]   # ONE message
-    assert not _os.path.exists(legacy)
-    assert q.ack(msgs[0]) is True
-
-
-def test_reset_checkpoints_stream_owns_legacy_int_keys(tmp_path):
-    """reset_checkpoints('stream') must clear legacy bare-int keys
-    with stream positions (the module's own ownership contract) —
-    previously only the nuclear '_all' could."""
-    from quickwit_spark.index.manifest import Manifest
-    d = str(tmp_path / "ix")
-    m = Manifest.create(d, "ix", {"text_col": "content"})
-    m.publish([], checkpoint_delta={
-        "0": (None, "batch=0;docs=6"),          # legacy stream
-        "1": (None, "docs=10"),                 # builder-owned
-        "stream-2": (None, "batch=1;docs=3"),   # namespaced stream
-        "bulk-x": (None, "done")})
-    removed = m.reset_checkpoints("stream")
-    assert sorted(removed) == ["0", "stream-2"]
-    left = Manifest.load(d).data["checkpoints"]
-    assert set(left) == {"1", "bulk-x"}
-
-
-def test_publish_refuses_resurrecting_dead_segment(tmp_path):
-    """A stale retry re-publishing a since-retired segment id would
-    serve every replaced doc twice; publish must refuse."""
-    import pytest as _pytest
-    from quickwit_spark.index.manifest import (CheckpointConflict,
-                                               Manifest)
-    d = str(tmp_path / "ix")
-    m = Manifest.create(d, "ix", {"text_col": "content"})
-    m.publish([{"segment_id": "seg-a", "num_docs": 3}])
-    m.publish([{"segment_id": "seg-m1", "num_docs": 3}],
-              replaced_segment_ids=["seg-a"])
-    with _pytest.raises(CheckpointConflict, match="resurrect"):
-        m.publish([{"segment_id": "seg-a", "num_docs": 3}])
-    # replaying a PUBLISHED id stays allowed (idempotent overwrite)
-    m.publish([{"segment_id": "seg-m1", "num_docs": 3}])
+"""The Structured Streaming micro-batch source that `streaming/` keeps,
+`streaming.incremental`: a remote source URI needs an explicit format,
+and a replayed legacy batch with partitions the stored keys do not name
+is refused instead of silently dropped.
+
+The queue-shaped sources this file was named after are gone; its two
+remaining tests keep their ids."""
 
 
 def test_stream_remote_uri_requires_explicit_fmt(spark, tmp_path):

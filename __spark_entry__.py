@@ -3,12 +3,13 @@
 queries() exposes the engine's operator surface (SURVEY.md §2) over the
 driver's test tables; oracle_sql() holds the equivalent ANSI SQL for DuckDB.
 
-Full-text queries run through the real engine (tokenize -> termdict ->
-posting decode -> BM25 -> top-k). For DuckDB comparability they use the
-f64 scoring path (quickwit_spark/search/sqlmode.py) over the same quantized
-fieldnorms; the SQL reproduces the exact formula, so value hashes match.
-The production f32 path (rank-identical to the reference's golden scores)
-is exercised by tests/ and bench.py.
+BM25 rows take their hits, and the hits' order, from the production f32
+engine (tokenize -> termdict -> posting decode -> BM25 -> top-k -> root
+merge): IndexSearcher.search on the one-segment index, and the global
+term-partitioned layout on the three-segment one. DuckDB has no f32 log,
+so each row reports its hits with the f64 value of the same formula over
+the same quantized fieldnorms (quickwit_spark/testing/bm25_f64.py); the
+SQL reproduces that formula exactly, so value hashes match.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ from quickwit_spark.index.builder import build_index_pandas
 from quickwit_spark.index.manifest import Manifest
 from quickwit_spark.search import ast as A
 from quickwit_spark.search.engine import IndexSearcher, SegmentReader
-from quickwit_spark.search.sqlmode import bool_scores_f64, topk_df
+from quickwit_spark.testing.bm25_f64 import hit_scores_f64
 
 # ---------------------------------------------------------------------------
 # documents-table index (built once per sf_dir, cached on disk)
@@ -84,8 +85,7 @@ _GLOBAL_IDX: dict[str, object] = {}
 
 def _doc_multiseg_dir(sf_dir: str) -> str:
     """3-segment documents index (built once per sf_dir, cached on disk)
-    — shared by the global term-partitioned layout and the distributed
-    mapInPandas-leaf gate rows."""
+    under the global term-partitioned layout."""
     tag = _cache_tag(sf_dir)
     index_dir = os.path.join(tempfile.gettempdir(), "qw_entry_gidx", tag)
     cfg = IndexConfig(
@@ -282,21 +282,59 @@ SELECT doc_id, round(score, 6) AS score FROM (
 """
 
 
+def _hits_df(spark, sf_dir, hit_doc_ids, terms, boosts=None) -> DataFrame:
+    """The engine's hits, in the engine's order, each with the f64 score
+    the oracle SQL computes (rounded as the SQL rounds)."""
+    reader, doc_map, _ = _doc_index(sf_dir)
+    scores = hit_scores_f64(reader, doc_map, terms, hit_doc_ids, boosts)
+    pdf = pd.DataFrame({"doc_id": np.asarray(hit_doc_ids, np.int64),
+                        "score": [round(float(x), 6) for x in scores]})
+    return _spark_df(spark, pdf, "doc_id long, score double")
+
+
+def _bool_node(terms, op, lang=None, must_not=None, nchars_range=None,
+               boosts=None) -> A.Bool:
+    leaves = tuple(A.Term("text", t) for t in terms)
+    if boosts is not None:
+        leaves = tuple(A.Boost(n, b) if b != 1.0 else n
+                       for n, b in zip(leaves, boosts))
+    filters = ()
+    if lang is not None:
+        filters += (A.Term("lang", lang),)
+    if nchars_range is not None:
+        filters += (A.Range("n_chars", gte=nchars_range[0],
+                            lt=nchars_range[1]),)
+    return A.Bool(must=leaves if op == "and" else (),
+                  should=leaves if op == "or" else (),
+                  must_not=tuple(A.Term("text", t) for t in must_not or ()),
+                  filter=filters)
+
+
 def _engine_bool_topk(spark, sf_dir, terms, op, k, lang=None, must_not=None,
                       nchars_range=None, boosts=None):
-    reader, doc_map, _ = _doc_index(sf_dir)
-    filt = None
-    if lang is not None:
-        filt = np.nonzero(reader.doc_column("lang") == lang)[0]
-    if nchars_range is not None:
-        col = reader.doc_column("n_chars")
-        ids = np.nonzero((col >= nchars_range[0]) & (col < nchars_range[1])
-                         )[0]
-        filt = ids if filt is None else np.intersect1d(filt, ids)
-    scores = bool_scores_f64(reader, terms, operator=op, filter_docids=filt,
-                             must_not_terms=must_not, boosts=boosts)
-    pdf = topk_df(scores, doc_map, k)
-    return _spark_df(spark, pdf, "doc_id long, score double")
+    """Top-k of a bool query by IndexSearcher.search on the one-segment
+    index."""
+    _, doc_map, searcher = _doc_index(sf_dir)
+    res = searcher.search(_bool_node(terms, op, lang, must_not,
+                                     nchars_range, boosts),
+                          k=k, fetch_fields=False)
+    return _hits_df(spark, sf_dir, doc_map[[h.doc_id for h in res.hits]],
+                    terms, boosts)
+
+
+def _global_topk(spark, sf_dir, terms, k):
+    """AND top-k from the global term-partitioned layout over the
+    3-segment index (GlobalIndexSearcher.search_terms, f32, then fetch).
+
+    The layout scores with whole-corpus statistics (N, df, average
+    fieldnorm), as the oracle SQL does. IndexSearcher over the same
+    segments scores each segment with its own statistics, as the
+    reference scores each split, so its top-k legitimately differs from
+    the oracle's."""
+    g = _doc_global_index(spark, sf_dir)
+    _cnt, res = g.search_terms(terms, operator="and", k=k)
+    return _hits_df(spark, sf_dir,
+                    g.fetch(res)["doc_id"].to_numpy(np.int64), terms)
 
 
 # ---------------------------------------------------------------------------
@@ -317,21 +355,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
     # --- full-text / BM25 (SURVEY §2.4-2.5) ---
-    def _distributed_topk(s, d, terms, op, k):
-        """These two rows run on the PRODUCTION distributed path: a
-        3-segment index searched via IndexSearcher(dir, spark) with
-        mapInPandas leaves (stats pass -> global weights -> leaf top-k
-        -> root merge). Global stats == corpus stats, so the same
-        DuckDB oracle applies."""
-        from quickwit_spark.search.sqlmode import distributed_bool_topk_f64
-        searcher = IndexSearcher(_doc_multiseg_dir(d), spark=s)
-        pdf = distributed_bool_topk_f64(searcher, terms, operator=op, k=k)
-        return _spark_df(s, pdf.reset_index(drop=True),
-                         "doc_id long, score double")
-    q["bm25_term_topk"] = lambda s, d: _distributed_topk(
-        s, d, ["merge"], "and", 20)
-    q["bm25_and_topk"] = lambda s, d: _distributed_topk(
-        s, d, ["merge", "query"], "and", 20)
+    q["bm25_term_topk"] = lambda s, d: _global_topk(s, d, ["merge"], 20)
+    q["bm25_and_topk"] = lambda s, d: _global_topk(
+        s, d, ["merge", "query"], 20)
     q["bm25_or_topk"] = lambda s, d: _engine_bool_topk(
         s, d, ["scan", "slow"], "or", 20)
     q["bm25_filter_lang"] = lambda s, d: _engine_bool_topk(
@@ -340,24 +366,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         s, d, ["fast"], "and", 20, must_not=["slow"])
     q["bm25_range_filter"] = lambda s, d: _engine_bool_topk(
         s, d, ["query"], "and", 20, nchars_range=(150, 350))
-
-    def bm25_global_layout(s, d):
-        """Same AND query answered from the GLOBAL term-partitioned layout
-        built over a 3-segment index (hierarchical merge + salting path):
-        global stats == whole-corpus stats, so the same SQL oracle applies.
-        Sorted by (score, user doc_id) to stay layout-independent."""
-        g = _doc_global_index(s, d)
-        _cnt, res = g.search_terms(["merge", "query"], operator="and",
-                                   k=10_000_000, precision="f64")
-        fetched = g.fetch(res)[["doc_id", "score"]]
-        fetched = fetched.sort_values(["score", "doc_id"],
-                                      ascending=[False, False]).head(20)
-        pdf = pd.DataFrame({
-            "doc_id": fetched["doc_id"].astype("int64").to_numpy(),
-            "score": fetched["score"].round(6).to_numpy()})
-        return _spark_df(s, pdf.reset_index(drop=True),
-                         "doc_id long, score double")
-    q["bm25_global_term_partitioned"] = bm25_global_layout
+    q["bm25_global_term_partitioned"] = lambda s, d: _global_topk(
+        s, d, ["merge", "query"], 20)
 
     def term_set(s, d):
         _, _, searcher = _doc_index(d)
@@ -506,20 +516,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["phrase_prefix_match"] = phrase_prefix_match
 
     def search_after_page(s, d):
-        """Second page (hits 11-20) via a search_after cursor on the f64
-        scoring path: keep rows strictly after the page-1 cursor in the
-        total (score desc, doc_id desc) order, then take the next 10."""
-        reader, doc_map, _ = _doc_index(d)
-        scores = bool_scores_f64(reader, ["merge", "query"], operator="and")
-        rows = sorted(((float(sc), int(doc_map[did]))
-                       for did, sc in scores.items()),
-                      key=lambda r: (-r[0], -r[1]))
-        cursor = rows[9] if len(rows) > 9 else None
-        after = [r for r in rows if cursor is None or r < cursor][:10] \
-            if cursor else []
-        pdf = pd.DataFrame({"doc_id": [r[1] for r in after],
-                            "score": [round(r[0], 6) for r in after]})
-        return _spark_df(s, pdf, "doc_id long, score double")
+        """Second page (hits 11-20): page 1 is the engine's top 10, and
+        page 2 is the engine's next 10 after page 1's search_after
+        cursor."""
+        _, doc_map, searcher = _doc_index(d)
+        terms = ["merge", "query"]
+        node = _bool_node(terms, "and")
+        p1 = searcher.search(node, k=10, fetch_fields=False)
+        p2 = searcher.search(node, k=10, fetch_fields=False,
+                             search_after=p1.next_cursor)
+        return _hits_df(s, d, doc_map[[h.doc_id for h in p2.hits]], terms)
     q["search_after_page2"] = search_after_page
 
     def sort2_search_after(s, d):

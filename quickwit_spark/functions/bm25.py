@@ -23,15 +23,27 @@ repo; ours is documented here and shared by engine and test oracle).
 
 from __future__ import annotations
 
+import ctypes
+import ctypes.util
+import functools
+
 import numpy as np
 
 K1 = np.float32(1.2)
 B = np.float32(0.75)
-# exact-double variants for the SQL-oracle-comparable f64 scoring paths
-# (float(np.float32(1.2)) != 1.2 — the f32 round-trip must not leak into
-# the f64 formula the DuckDB oracle reproduces with literal 1.2)
-K1_F64 = 1.2
-B_F64 = 0.75
+
+
+@functools.cache
+def _libm_logf():
+    """libm's logf, which the reference's f32::ln calls. numpy's np.log
+    on an f32 dispatches to its own AVX2/AVX512 kernel where the CPU has
+    one, and that kernel is 1-2 ulp off logf for about a quarter of
+    (df, N) pairs. Bound on first use, not at import: find_library runs
+    ldconfig."""
+    logf = ctypes.CDLL(ctypes.util.find_library("m")).logf
+    logf.restype = ctypes.c_float
+    logf.argtypes = (ctypes.c_float,)
+    return logf
 
 
 def _build_fieldnorm_table() -> np.ndarray:
@@ -59,12 +71,13 @@ def id_to_fieldnorm(ids: np.ndarray) -> np.ndarray:
 
 
 def idf_f32(doc_freq: int, doc_count: int) -> np.float32:
-    """IDF in f32 arithmetic (order matters for bit-exactness)."""
+    """IDF in f32 arithmetic (order matters for bit-exactness), with the
+    log taken by libm logf on every host."""
     x = np.float32(1.0) + (
         (np.float32(doc_count) - np.float32(doc_freq) + np.float32(0.5))
         / (np.float32(doc_freq) + np.float32(0.5))
     )
-    return np.float32(np.log(x))
+    return np.float32(_libm_logf()(x))
 
 
 class Bm25Weight:

@@ -780,26 +780,22 @@ class GlobalIndexSearcher:
         return np.concatenate(doc_parts), np.concatenate(tf_parts)
 
     def search_terms(self, terms: list[str], operator: str = "and",
-                     k: int = 10, precision: str = "f32",
-                     count_all: bool = True) -> tuple[int, pd.DataFrame]:
-        """AND/OR of terms, global BM25, top-k with (docid desc)
-        tie-break. Returns (num_hits, DataFrame[global_doc, score]).
-        precision="f32" is the production scorer (rank-identical to one
-        fully-merged segment); "f64" computes the same formula in doubles
-        (the SQL-oracle-comparable path, search/sqlmode.py).
+                     k: int = 10, count_all: bool = True
+                     ) -> tuple[int, pd.DataFrame]:
+        """AND/OR of terms, global f32 BM25 (rank-identical to one
+        fully-merged segment), top-k with (docid desc) tie-break.
+        Returns (num_hits, DataFrame[global_doc, score]).
 
-        count_all=False + operator="or" + f32 runs block-max WAND over
-        the term-partitioned rows (identical top-k; num_hits becomes a
-        lower bound — the north rule's pruned query path at the global
+        count_all=False + operator="or" runs block-max WAND over the
+        term-partitioned rows (identical top-k; num_hits becomes a lower
+        bound — the north rule's pruned query path at the global
         layout). Salted Zipf-head terms contribute one MaxScore cursor
         per salt row; the rows cover disjoint docid ranges, so bounds
         stay conservative."""
-        if precision == "f32" and len(terms) == 1:
-            # single-term count is exact from metadata on the pruned
+        if len(terms) == 1 or not count_all:
+            # a single term's count is exact from metadata on the pruned
             # path, so exact-count mode can take it too (top-k is
             # rank-identical; only the decode is bound-ordered)
-            return self._search_pruned(terms, k, operator)
-        if not count_all and precision == "f32":
             return self._search_pruned(terms, k, operator)
         rows = self._term_rows(terms)
         per_term = []
@@ -814,19 +810,6 @@ class GlobalIndexSearcher:
                 per_term.append((docids, np.zeros(0, np.float32)))
                 continue
             fn = self._fieldnorms_for(docids)
-            if precision == "f64":
-                import math
-                from ..functions.bm25 import B_F64, K1_F64, id_to_fieldnorm
-                k1, b = K1_F64, B_F64
-                n = self.num_docs
-                idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-                avg = float(self.gm["total_fieldnorm"]) / float(n)
-                qlen = id_to_fieldnorm(fn).astype(np.float64)
-                norm = k1 * (1.0 - b + b * qlen / avg)
-                tf64 = tfs.astype(np.float64)
-                s = idf * (k1 + 1.0) * tf64 / (tf64 + norm)
-                per_term.append((docids, s))
-                continue
             w = Bm25Weight(df, self.num_docs, float(self.avg_fieldnorm))
             per_term.append((docids, w.score(tfs, fn)))
         if operator == "and":
@@ -837,9 +820,7 @@ class GlobalIndexSearcher:
             docs = np.unique(np.concatenate([d for d, _ in per_term])) \
                 if per_term else np.zeros(0, np.int64)
         from ..search.wand import _combine_in_query_order
-        scores = _combine_in_query_order(
-            per_term, docs,
-            dtype=np.float64 if precision == "f64" else np.float32)
+        scores = _combine_in_query_order(per_term, docs)
         order = np.lexsort((-docs, -scores.astype(np.float64)))[:k]
         return len(docs), pd.DataFrame({
             "global_doc": docs[order], "score": scores[order]})

@@ -193,13 +193,12 @@ def _make_cursors(reader, terms: list[str]) -> list[_TermCursor]:
     return cursors if any_found else []
 
 
-def _combine_in_query_order(parts, final_docids, dtype=np.float32):
-    """Sum per-term scores at final_docids in ORIGINAL query order —
-    bit-identical to the exhaustive path's clause-order summation.
-    `dtype` is the accumulator precision (f64 for the SQL-oracle twin);
-    the SINGLE implementation shared by the pruned paths and the global
+def _combine_in_query_order(parts, final_docids):
+    """Sum per-term f32 scores at final_docids in ORIGINAL query order —
+    bit-identical to the exhaustive path's clause-order summation. The
+    SINGLE implementation shared by the pruned paths and the global
     searcher, so the rank-identity contract has one copy to keep."""
-    scores = np.zeros(len(final_docids), dtype=dtype)
+    scores = np.zeros(len(final_docids), dtype=np.float32)
     for docids, tscores in parts:
         idx = np.searchsorted(docids, final_docids)
         idx = np.clip(idx, 0, max(len(docids) - 1, 0))
@@ -207,7 +206,7 @@ def _combine_in_query_order(parts, final_docids, dtype=np.float32):
         if len(docids):
             present = docids[idx] == final_docids
         scores[present] = (scores[present] +
-                           tscores[idx[present]]).astype(dtype)
+                           tscores[idx[present]]).astype(np.float32)
     return scores
 
 

@@ -1,6 +1,12 @@
 """F3 golden BM25 micro-corpus: exact f32 scores from the reference's
 test_sort_bm25 (quickwit-search/src/tests.rs:617-709)."""
 
+import ctypes
+import ctypes.util
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -73,3 +79,38 @@ def test_bm25_nofieldnorms_is_idf(tmp_path):
     idf = float(idf_f32(3, 3))
     assert [h[0] for h in hits] == pytest.approx([idf] * 3)
     assert [h[1] for h in hits] == [2, 1, 0]  # pure address tie-break, desc
+
+
+def test_idf_f32_is_libm_logf():
+    """idf's log is libm logf, as the reference's f32::ln is. numpy's f32
+    np.log dispatches to its own AVX2/AVX512 kernels, which are 1-2 ulp
+    off logf for about a quarter of these pairs on hosts that have
+    them."""
+    from quickwit_spark.functions.bm25 import idf_f32
+    logf = ctypes.CDLL(ctypes.util.find_library("m")).logf
+    logf.restype = ctypes.c_float
+    logf.argtypes = (ctypes.c_float,)
+    f32 = np.float32
+    off = [(df, n) for n in range(1, 201) for df in range(1, n + 1)
+           if idf_f32(df, n) != f32(logf(
+               f32(1.0) + (f32(n) - f32(df) + f32(0.5))
+               / (f32(df) + f32(0.5))))]
+    assert off == []
+
+
+# numpy's SIMD dispatch switched off down to its SSE baseline: on an
+# AVX2/AVX512 host this selects the other log kernel
+NPY_BASELINE_ONLY = ("AVX512F AVX512CD AVX512_SKX AVX512_CLX AVX512_CNL "
+                     "AVX512_ICL AVX2 FMA3")
+
+
+def test_goldens_under_baseline_numpy_dispatch():
+    """The goldens above hold whichever kernels numpy picks: re-run them
+    in a subprocess with the SIMD dispatch disabled."""
+    env = dict(os.environ, NPY_DISABLE_CPU_FEATURES=NPY_BASELINE_ONLY)
+    r = subprocess.run(
+        [sys.executable, "-m", "pytest", "-q", "-p", "no:cacheprovider",
+         "-k", "not baseline_numpy_dispatch", __file__],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env, capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stdout[-3000:] + r.stderr[-3000:]

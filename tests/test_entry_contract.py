@@ -1,6 +1,8 @@
 """Replicates the driver's correctness gate: run every queries() entry on
 Spark and its oracle_sql() on DuckDB at sf0.01; compare row count, column
-names, and order-insensitive values."""
+names, and order-insensitive values. The BM25 rows, whose hits come from
+the f32 engine while the oracle ranks in f64, are also checked at sf0.001
+and sf0.1."""
 
 import math
 import os
@@ -14,16 +16,24 @@ import __spark_entry__ as entrymod
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents"]
+BM25_ROWS = ["bm25_term_topk", "bm25_and_topk", "bm25_or_topk",
+             "bm25_filter_lang", "bm25_must_not", "bm25_range_filter",
+             "bm25_global_term_partitioned", "bm25_boost_or_topk",
+             "search_after_page2"]
+
+
+def _duckdb(sf_dir: str):
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
 
 
 @pytest.fixture(scope="module")
 def ddb():
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    return con
+    return _duckdb(SF_DIR)
 
 
 def _normalize(df: pd.DataFrame) -> list[tuple]:
@@ -71,4 +81,28 @@ def test_all_queries_against_oracle(spark, ddb):
         if g != w:
             diff = [(a, b) for a, b in zip(g, w) if a != b][:3]
             failures.append((name, "values", diff, None))
+    assert not failures, failures
+
+
+def test_bm25_rows_against_oracle_other_scales(spark):
+    """The BM25 rows and entry() at sf0.001 and sf0.1: the engine's f32
+    top-k must be the oracle's f64 top-k there too. entry() is the
+    sf0.001 AND query cut at 10."""
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    failures = []
+    for sf in ("sf0.001", "sf0.1"):
+        sf_dir = os.path.join(os.path.dirname(SF_DIR), sf)
+        con = _duckdb(sf_dir)
+        checks = [(name, qs[name], oracles[name]) for name in BM25_ROWS]
+        if sf == "sf0.001":
+            checks.append(("entry", lambda s, _d: entrymod.entry(s),
+                           oracles["bm25_and_topk"].replace("LIMIT 20",
+                                                            "LIMIT 10")))
+        for name, fn, sql in checks:
+            got = _normalize(fn(spark, sf_dir).toPandas())
+            want = _normalize(con.sql(sql).df())
+            if got != want:
+                failures.append((sf, name, len(got), len(want),
+                                 sorted(set(got) ^ set(want))[:3]))
     assert not failures, failures

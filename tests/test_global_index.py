@@ -175,11 +175,10 @@ def test_global_wand_pruned_or(spark, tmp_path):
         .sort_values()
     mid = dfsum[(dfsum >= 30) & (dfsum <= 120)].index[0]
     terms = [mid, *dfsum.index[-2:]]
-    n_ex, ex = g.search_terms(terms, operator="or", k=10,
-                              precision="f32")
+    n_ex, ex = g.search_terms(terms, operator="or", k=10)
     wand.STATS["blocks_decoded"] = wand.STATS["blocks_total"] = 0
     n_pr, pr = g.search_terms(terms, operator="or", k=10,
-                              precision="f32", count_all=False)
+                              count_all=False)
     assert ex["global_doc"].tolist() == pr["global_doc"].tolist()
     assert np.array_equal(ex["score"].to_numpy().astype(np.float32),
                           pr["score"].to_numpy().astype(np.float32))
@@ -213,11 +212,10 @@ def test_global_wand_pruned_and(spark, tmp_path):
         .sort_values()
     rare = dfsum[(dfsum >= 5) & (dfsum <= 30)].index[0]
     terms = [rare, dfsum.index[-1]]  # rare + universal (salted) term
-    n_ex, ex = g.search_terms(terms, operator="and", k=10,
-                              precision="f32")
+    n_ex, ex = g.search_terms(terms, operator="and", k=10)
     wand.STATS["blocks_decoded"] = wand.STATS["blocks_total"] = 0
     n_pr, pr = g.search_terms(terms, operator="and", k=10,
-                              precision="f32", count_all=False)
+                              count_all=False)
     assert n_pr == n_ex  # AND count stays exact
     assert ex["global_doc"].tolist() == pr["global_doc"].tolist()
     assert np.array_equal(ex["score"].to_numpy().astype(np.float32),
@@ -316,16 +314,36 @@ def test_global_build_idempotent_and_staleness(spark, tmp_path):
 
 def test_global_single_term_fast_path(spark, dirs):
     """Single-term queries: exact metadata count + bound-ordered top-k,
-    rank/score-identical to the f64 exhaustive twin."""
-    d = dirs[0]
+    rank/score-identical to an exhaustive reference: the f64 twin
+    scoring every posting of the fully-merged segment (same corpus
+    statistics), ranked by (score desc, global doc desc)."""
     from quickwit_spark.index.global_index import GlobalIndexSearcher
-    g = GlobalIndexSearcher(d)
+    from quickwit_spark.index.manifest import Manifest
+    from quickwit_spark.search.engine import get_reader
+    from quickwit_spark.testing.bm25_f64 import hit_scores_f64
+    base_dir, merged_dir, _ = dirs
+    g = GlobalIndexSearcher(base_dir)
     cnt_fast, fast = g.search_terms(["merge"], operator="or", k=10)
-    cnt_ex, exact = g.search_terms(["merge"], operator="or", k=10,
-                                   precision="f64")
-    assert cnt_fast == cnt_ex
-    assert list(fast["global_doc"]) == list(exact["global_doc"])
-    for a, b in zip(fast["score"], exact["score"]):
+
+    def keys(r):
+        return zip(r.doc_column("repo"), r.doc_column("path"),
+                   r.doc_column("commit"))
+    global_doc = {}
+    for sid, off in zip(g.segment_ids, g.offsets):
+        r = get_reader(os.path.join(base_dir, "segments", sid))
+        global_doc.update((key, int(off) + i)
+                          for i, key in enumerate(keys(r)))
+    [seg] = Manifest.load(merged_dir).segments()
+    merged = get_reader(os.path.join(merged_dir, "segments",
+                                     seg["segment_id"]))
+    merged_global = np.array([global_doc[key] for key in keys(merged)])
+    docids, _tfs, df = merged.term_postings("merge")
+    hits = merged_global[docids]
+    scores = hit_scores_f64(merged, merged_global, ["merge"], hits)
+    top = np.lexsort((-hits, -scores))[:10]
+    assert cnt_fast == df
+    assert list(fast["global_doc"]) == list(hits[top])
+    for a, b in zip(fast["score"], scores[top]):
         assert abs(float(a) - float(b)) < 1e-3
 
 

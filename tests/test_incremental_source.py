@@ -1,10 +1,7 @@
-"""The Structured Streaming micro-batch source that `streaming/` keeps,
-`streaming.incremental`: a remote source URI needs an explicit format,
-and a replayed legacy batch with partitions the stored keys do not name
-is refused instead of silently dropped.
-
-The queue-shaped sources this file was named after are gone; its two
-remaining tests keep their ids."""
+"""The Structured Streaming micro-batch source, `streaming.incremental`:
+a remote source URI needs an explicit format, and a replayed legacy
+batch with partitions the stored keys do not name is refused instead of
+silently dropped."""
 
 
 def test_stream_remote_uri_requires_explicit_fmt(spark, tmp_path):

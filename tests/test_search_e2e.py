@@ -380,23 +380,25 @@ def test_reference_negative_search_scenario(tmp_path):
 
 
 def test_bool_scores_f64_rejects_mismatched_boosts(built):
-    """A boosts list shorter than terms would silently zip-truncate
-    per_term — changing which docs MATCH, not just their weights. The
-    f64 oracle twin must fail loudly instead."""
+    """A boosts list shorter than terms would silently zip-truncate the
+    terms — dropping a term's score from every hit, not just changing
+    its weight. The f64 oracle twin must fail loudly instead."""
+    import numpy as np
+
     from quickwit_spark.search.engine import get_reader
-    from quickwit_spark.search.sqlmode import bool_scores_f64
+    from quickwit_spark.testing.bm25_f64 import hit_scores_f64
 
     pdf, cfg, manifest = built
     seg = manifest.segments()[0]
     reader = get_reader(
         os.path.join(cfg.index_dir, "segments", seg["segment_id"]),
         cfg.tokenizer)
+    keys = np.arange(reader.num_docs)
     with pytest.raises(ValueError, match="boosts length"):
-        bool_scores_f64(reader, ["scan", "slow"], operator="and",
-                        boosts=[2.0])
-    ok = bool_scores_f64(reader, ["scan", "slow"], operator="or",
-                         boosts=[2.0, 1.0])
-    assert isinstance(ok, dict)
+        hit_scores_f64(reader, keys, ["scan", "slow"], keys, boosts=[2.0])
+    ok = hit_scores_f64(reader, keys, ["scan", "slow"], keys,
+                        boosts=[2.0, 1.0])
+    assert ok.shape == (reader.num_docs,)
 
 
 def test_filter_plus_should_scores_zero_base(built):

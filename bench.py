@@ -92,7 +92,7 @@ def main() -> None:
 
     cfg = IndexConfig(index_uid="bench", index_dir=os.path.join(work, "idx"))
     routed = (route_partitions(df, cfg, cpus)
-              .repartition(cpus, "_pid").cache())
+              .repartitionById(cpus, "_pid").cache())
     routed.count()
     t0 = time.perf_counter()
     build_index(spark, routed, cfg, num_partitions=cpus, wave_size=cpus,

@@ -413,39 +413,31 @@ def _spans_to_sentinel_string(big: str, codes: np.ndarray, cls: np.ndarray,
 def _token_spans(nondelim: np.ndarray, breaks: np.ndarray
                  ) -> tuple[np.ndarray, np.ndarray]:
     """Token [start, end) spans from the nondelim mask + internal break
-    positions. run_starts and breaks are each sorted and disjoint (a
-    break has a nondelim left neighbor, so it is never a run start):
-    scatter-merge them in O(n) instead of sorting every position, and
-    derive each element's run index during the merge instead of a
-    second full-length searchsorted."""
-    run_start_mask = nondelim.copy()
-    run_start_mask[1:] &= ~nondelim[:-1]
-    run_starts = np.nonzero(run_start_mask)[0]
-    run_end_mask = nondelim.copy()
-    run_end_mask[:-1] &= ~nondelim[1:]
-    run_ends = np.nonzero(run_end_mask)[0] + 1  # exclusive
-    if breaks.size:
-        nb, nr = breaks.size, run_starts.size
-        ins = np.searchsorted(run_starts, breaks, side="right")
-        starts = np.empty(nr + nb, dtype=np.int64)
-        run_idx = np.empty(nr + nb, dtype=np.int64)
-        bpos = ins + np.arange(nb)
-        mask = np.ones(nr + nb, dtype=bool)
-        mask[bpos] = False
-        starts[mask] = run_starts
-        starts[bpos] = breaks
-        run_idx[mask] = np.arange(nr)
-        run_idx[bpos] = ins - 1
-    else:
-        starts = run_starts
-        run_idx = np.arange(run_starts.size, dtype=np.int64)
-    rends = run_ends[run_idx]
-    ends = np.empty_like(starts)
-    if len(starts) > 1:
-        ends[:-1] = np.minimum(starts[1:], rends[:-1])
-    if len(starts):
-        ends[-1] = rends[-1]
-    return starts, ends
+    positions, as two boolean marks and one flatnonzero each: a token
+    starts at a run start or a break and ends (exclusive) at a run end or
+    a break. A break has nondelim chars on both sides, so it is never a
+    run start or end: each set is the disjoint union of its two parts,
+    and the sorted starts and ends pair up in order."""
+    d = np.zeros(nondelim.size + 2, dtype=bool)
+    d[1:-1] = nondelim
+    starts = d[1:-1] > d[:-2]  # nondelim[i] and not nondelim[i-1]
+    ends = d[:-1] > d[1:]      # nondelim[e-1] and not nondelim[e]
+    starts[breaks] = True
+    ends[breaks] = True
+    return np.flatnonzero(starts), np.flatnonzero(ends)
+
+
+def _token_docs(texts: list[str], starts: np.ndarray) -> np.ndarray:
+    """Doc index of each token, from its sorted start offsets in the
+    SEP-joined batch: the docs' first tokens by one searchsorted of the
+    (few) doc starts into the token starts, then one repeat."""
+    doc_starts = np.zeros(len(texts), dtype=np.int64)
+    doc_starts[1:] = np.cumsum(
+        np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))[:-1]
+        + 1)
+    first = np.searchsorted(starts, doc_starts)
+    return np.repeat(np.arange(len(texts), dtype=np.int64),
+                     np.diff(first, append=len(starts)))
 
 
 def _code_class_breaks(cls: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -649,13 +641,7 @@ def _multilang_batch(texts: list[str], max_len: int
     starts = starts[order]
     toks = toks_all[order].tolist()
 
-    doc_lens = np.fromiter(map(len, texts), dtype=np.int64,
-                           count=len(texts))
-    doc_starts = np.zeros(len(texts), dtype=np.int64)
-    if len(texts) > 1:
-        doc_starts[1:] = np.cumsum(doc_lens[:-1] + 1)
-    docs = np.searchsorted(doc_starts, starts, side="right") - 1
-    return docs.astype(np.int64), toks
+    return _token_docs(texts, starts), toks
 
 
 def tokenize_batch(texts: Iterable[str], analyzer: str = "source_code_default",
@@ -758,17 +744,10 @@ def tokenize_batch(texts: Iterable[str], analyzer: str = "source_code_default",
         lowered = ascii_fold(lowered)
     toks = [t for t in lowered.split(_SEP) if t]
 
-    # token -> doc mapping: doc boundaries are SEP positions in `big` at the
-    # join points; compute per-token doc from token start offsets.
-    doc_lens = np.array([len(t) for t in texts], dtype=np.int64)
-    doc_starts = np.zeros(len(texts), dtype=np.int64)
-    if len(texts) > 1:
-        doc_starts[1:] = np.cumsum(doc_lens[:-1] + 1)
-
     # token [start, end) spans in `big` coords: doc mapping + RemoveLong
     # from span arithmetic (no second split / per-token len pass)
     starts, ends = _token_spans(nondelim, breaks)
-    docs = np.searchsorted(doc_starts, starts, side="right") - 1
+    docs = _token_docs(texts, starts)
     raw_lens = ends - starts  # original (pre-lowercase/fold) lengths
     if (raw_lens > max_len).any():
         from itertools import compress
@@ -777,7 +756,7 @@ def tokenize_batch(texts: Iterable[str], analyzer: str = "source_code_default",
         docs = docs[keep]
     if analyzer == "en_stem":
         toks = [porter_stem(t) for t in toks]
-    return docs.astype(np.int64), toks
+    return docs, toks
 
 
 def tokenize_one(text: str, analyzer: str = "source_code_default",
@@ -792,6 +771,13 @@ def tokenize_one(text: str, analyzer: str = "source_code_default",
 # ---------------------------------------------------------------------------
 
 _ID_BUCKETS = (8, 16, 32)  # padded key widths; > 32 falls back to strings
+
+# _KEY_MASKS[j][n]: the bytes of key word j (bytes 8j..8j+7, little-endian)
+# that lie inside a token of length n
+_KEY_MASKS = np.array(
+    [[(1 << 8 * min(max(n - 8 * j, 0), 8)) - 1
+      for n in range(_ID_BUCKETS[-1] + 1)]
+     for j in range(_ID_BUCKETS[-1] // 8)], dtype="<u8")
 
 
 def _ids_via_strings(texts, analyzer, max_len):
@@ -955,13 +941,7 @@ def _cjk_batch_ids(clean: list[str], analyzer: str, max_len: int
     ordered_codes[ia] = token_codes[:len(wtoks)]
     ordered_codes[ib] = token_codes[len(wtoks):]
 
-    doc_lens = np.fromiter(map(len, clean), dtype=np.int64,
-                           count=len(clean))
-    doc_starts = np.zeros(len(clean), dtype=np.int64)
-    if len(clean) > 1:
-        doc_starts[1:] = np.cumsum(doc_lens[:-1] + 1)
-    doc_idx = np.searchsorted(doc_starts, starts, side="right") - 1
-    return doc_idx.astype(np.int64), ordered_codes, terms_sorted
+    return _token_docs(clean, starts), ordered_codes, terms_sorted
 
 
 def tokenize_batch_ids(texts: Iterable[str],
@@ -973,10 +953,11 @@ def tokenize_batch_ids(texts: Iterable[str],
 
     Returns (doc_idx int64, term_codes int64, terms_sorted). term_codes[i]
     is the rank of token i's term in terms_sorted. Tokens are keyed by
-    gathering their lowered bytes into fixed-width padded matrices (widths
-    8/16/32; tokens never contain NUL, so zero-padding is injective within
-    a length bucket and buckets hold disjoint length ranges) and running
-    np.unique on uint64/void views — C-speed dedup with exact keys.
+    their lowered bytes, gathered as 1, 2 or 4 little-endian u64 words
+    (widths 8/16/32) and zeroed past the token's end (tokens never contain
+    NUL, so zero-padding is injective within a length bucket and buckets
+    hold disjoint length ranges), then deduplicated by a hash factorize
+    of the uint64/void keys — C-speed dedup with exact keys.
 
     Fast path requires ASCII input and analyzer in {source_code_default,
     source_code_with_hex, default}; anything else falls back to
@@ -1017,20 +998,18 @@ def tokenize_batch_ids(texts: Iterable[str],
     lengths = ends - starts
 
     # doc mapping + RemoveLong(255)
-    doc_lens = np.fromiter(map(len, clean), dtype=np.int64, count=len(clean))
-    doc_starts = np.zeros(len(clean), dtype=np.int64)
-    if len(clean) > 1:
-        doc_starts[1:] = np.cumsum(doc_lens[:-1] + 1)
-    doc_idx = np.searchsorted(doc_starts, starts, side="right") - 1
+    doc_idx = _token_docs(clean, starts)
     if (lengths > max_len).any():
         keep = lengths <= max_len
         starts, lengths, doc_idx = starts[keep], lengths[keep], doc_idx[keep]
 
-    # lowercase (ASCII: UPPER class is exactly A-Z) + pad for gathers
-    low = codes.copy()
-    up = cls == UPPER
-    low[up] += 32
-    lowbuf = np.concatenate([low, np.zeros(_ID_BUCKETS[-1], dtype=np.uint8)])
+    # lowercase (ASCII: UPPER class is exactly A-Z) + pad for gathers;
+    # `words` views it as one little-endian u64 starting at EVERY byte
+    lowbuf = np.zeros(len(codes) + _ID_BUCKETS[-1], dtype=np.uint8)
+    np.add(codes, (cls == UPPER).view(np.uint8) << 5,
+           out=lowbuf[:len(codes)])
+    words = np.ndarray(len(lowbuf) - 7, dtype="<u8", buffer=lowbuf,
+                       strides=(1,))
 
     ntok = len(starts)
     token_codes = np.empty(ntok, dtype=np.int64)
@@ -1046,28 +1025,24 @@ def tokenize_batch_ids(texts: Iterable[str],
         handled |= sel
         s_b = starts[sel]
         l_b = lengths[sel]
-        # W column gathers, not one (ntok x W) fancy index: the 2-D
-        # int64 index matrix alone was ~100 MB at 1.5M tokens
-        mat = np.empty((len(s_b), W), dtype=np.uint8)
-        idx = s_b.copy()
-        for j in range(W):
-            col = lowbuf[idx]
-            if j:
-                col[l_b <= j] = 0
-            mat[:, j] = col
-            idx += 1
+        # one unaligned u64 gather per 8 key bytes, masked to the token's
+        # length: the bytes past its end read as the zero padding
+        nw = W // 8
+        mat = np.empty((len(s_b), nw), dtype="<u8")
+        for j in range(nw):
+            np.bitwise_and(words[s_b + 8 * j], _KEY_MASKS[j][l_b],
+                           out=mat[:, j])
         if W == 8:
-            keys = np.ascontiguousarray(mat).view(np.uint64).ravel()
+            keys = mat.ravel()
         else:
-            keys = np.ascontiguousarray(mat).view(
-                np.dtype((np.void, W))).ravel()
+            keys = mat.view(np.dtype((np.void, W))).ravel()
         # hash-based factorize, NOT sort-based np.unique: O(n) with a
         # hashtable vs an argsort of every token occurrence (~5x on the
         # dominant 8-byte bucket); uniques come back first-seen-ordered,
         # which is fine — the final vocabulary argsort remaps all codes
         inv, uniq = pd.factorize(keys)
         token_codes[sel] = inv + offset
-        ub = np.asarray(uniq).tobytes()
+        ub = np.asarray(uniq, dtype=keys.dtype).tobytes()  # key byte order
         all_terms.append(np.array(
             [ub[i * W:(i + 1) * W].rstrip(b"\x00").decode("ascii")
              for i in range(len(uniq))], dtype=object))
@@ -1088,7 +1063,7 @@ def tokenize_batch_ids(texts: Iterable[str],
     terms_sorted = terms[order]
     remap = np.empty(len(order), dtype=np.int64)
     remap[order] = np.arange(len(order))
-    return doc_idx.astype(np.int64), remap[token_codes], terms_sorted
+    return doc_idx, remap[token_codes], terms_sorted
 
 
 ANALYZERS = (

@@ -5,7 +5,8 @@ Mirrors the reference build pipeline (SURVEY.md §2.3: Indexer -> Serializer
 
     corpus DF
       -> deterministic partition routing (hash of key columns)
-      -> groupBy(partition).applyInPandas(build_partition)   [executors]
+      -> repartitionById: one task per partition            [exchange]
+      -> build_partition                                    [executors]
       -> manifest.publish(segment rows, checkpoint delta)    [driver]
 
 Everything inside build_partition is numpy/Arrow vectorized:
@@ -24,6 +25,7 @@ publish idempotence and merge determinism (FIXTURES.md F6).
 
 from __future__ import annotations
 
+import ctypes
 import hashlib
 import json
 import os
@@ -634,7 +636,27 @@ def build_partition(pdf: pd.DataFrame, config: IndexConfig,
         chunk = pdf.iloc[lo:lo + step].reset_index(drop=True)
         rows.append(build_segment(chunk, config, partition_id,
                                   segments_root, chunk_idx=ci))
+    _release_free_heap()
     return rows
+
+
+try:
+    _MALLOC_TRIM = ctypes.CDLL(None).malloc_trim
+except (AttributeError, OSError, TypeError):  # no malloc_trim here
+    _MALLOC_TRIM = None
+
+
+def _release_free_heap() -> None:
+    """Return the heap a build freed to the OS (glibc `malloc_trim`).
+
+    A build's transient arrays are tens of MB. glibc keeps freed chunks
+    that sit below a live one resident, so a long-lived process (the HTTP
+    server, a reused Spark Python worker) would otherwise carry an amount
+    set by chance heap layout into every later request: the same ingests
+    left the server 150 or 190 MB resident depending on the length of the
+    index path."""
+    if _MALLOC_TRIM is not None:
+        _MALLOC_TRIM(0)
 
 
 def route_partitions(df, config: IndexConfig, num_partitions: int):
@@ -649,6 +671,50 @@ def route_partitions(df, config: IndexConfig, num_partitions: int):
     return df.withColumn(
         "_pid", F.pmod(F.xxhash64(*cols),
                        F.lit(num_partitions)).cast("int"))
+
+
+def build_groups(df, config: IndexConfig, segments_root: str,
+                 pids=None, partition_transform=None) -> list[dict]:
+    """Build every routing group of `df` (keyed by its `_pid` column) in
+    one Spark job and return the decoded manifest rows.
+
+    pids=None: `df` is already placed, each Spark partition holding
+    complete groups, and the build is a narrow map with no exchange.
+    Otherwise the group of `pids[i]` goes to task i through one
+    `repartitionById` exchange: exactly one group per task whatever the
+    pid values (a resumed wave with gaps, a batch's `base + pid` ids),
+    where hashing `_pid` onto the same task count doubles some tasks
+    up and leaves others idle.
+
+    partition_transform(group_pdf) runs inside the task before the build
+    (e.g. build_index_json's doc-mapper projection of raw JSON lines)."""
+    from pyspark.sql import functions as F
+
+    if pids is not None:
+        slot = F.array_position(F.array(*[F.lit(int(p)) for p in pids]),
+                                F.col("_pid")) - 1
+        df = df.repartitionById(len(pids), slot.cast("int"))
+
+    def _build_narrow(batches):
+        # concatenate this task's batches, then build every routing group
+        # it holds (complete by contract)
+        batches = list(batches)
+        pdf = (pd.concat(batches, ignore_index=True) if batches
+               else pd.DataFrame())
+        rows: list[dict] = []
+        if len(pdf):
+            for _pid, grp in pdf.groupby("_pid", sort=True):
+                grp = grp.reset_index(drop=True)
+                if partition_transform is not None:
+                    grp = partition_transform(grp)
+                    if len(grp) == 0:
+                        continue
+                rows.extend(build_partition(grp, config, segments_root))
+        yield pd.DataFrame(
+            {"manifest_json": [json.dumps(r) for r in rows]})
+
+    out = df.mapInPandas(_build_narrow, schema=MANIFEST_ROW_SCHEMA).collect()
+    return [json.loads(r.manifest_json) for r in out]
 
 
 def _builder_done_partitions(manifest: Manifest, num_partitions: int
@@ -680,16 +746,18 @@ def build_index(spark, df, config: IndexConfig, num_partitions: int = 16,
     Partitions already recorded in the manifest checkpoint map are skipped
     (exactly-once publish; re-running is a no-op). Waves bound how much work
     can be lost on failure: each wave is one Spark job, published atomically
-    when it completes.
+    when it completes. Within a wave every routing group is built by its
+    own task (build_groups: one id-placed exchange, then a narrow map).
 
     input_routed=True declares that `df` is already laid out so that each
     Spark partition holds complete routing groups (e.g. the source Iceberg
     table is bucketed by the doc key, or the caller ran
-    `route_partitions(df, cfg, P).repartition(P, "_pid")`). The build then
-    runs as a narrow mapInPandas with NO exchange — on a bucketed 100 TB
-    table this removes the largest shuffle of the whole pipeline. Routing
-    groups are still identified by the deterministic `_pid` column, so
-    segment ids (content-addressed) are identical to the shuffle path.
+    `route_partitions(df, cfg, P).repartitionById(P, "_pid")`). The build
+    then runs as a narrow mapInPandas with NO exchange — on a bucketed
+    100 TB table this removes the largest shuffle of the whole pipeline.
+    Routing groups are still identified by the deterministic `_pid`
+    column, so segment ids (content-addressed) are identical to the
+    shuffle path.
     """
     from pyspark.sql import functions as F
 
@@ -719,62 +787,22 @@ def build_index(spark, df, config: IndexConfig, num_partitions: int = 16,
             raise ValueError(
                 "input_routed=True requires the input to carry the _pid "
                 "routing column with complete groups per Spark partition "
-                "— run route_partitions(df, cfg, P).repartition(P, '_pid') "
-                "first (or read a table bucketed by the doc key). "
+                "— run route_partitions(df, cfg, P).repartitionById(P, "
+                "'_pid') first (or read a table bucketed by the doc key). "
                 "Silently re-routing here would fragment routing groups "
                 "across partitions.")
         routed = df
     else:
         routed = route_partitions(df, config, num_partitions)
 
-    cfg = config  # capture for closure
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"manifest_json": []})
-        if partition_transform is not None:
-            # e.g. the doc-mapper projection of raw JSON lines into
-            # build columns (build_index_json) — runs INSIDE the
-            # executor task, so schemaless ingest scales with the
-            # cluster exactly like the structured path
-            pdf = partition_transform(pdf)
-            if len(pdf) == 0:
-                return pd.DataFrame({"manifest_json": []})
-        rows = build_partition(pdf, cfg, segments_root)
-        return pd.DataFrame({"manifest_json": [json.dumps(r) for r in rows]})
-
-    def _build_narrow(batches):
-        # narrow path: concatenate this Spark partition's batches, then
-        # build every routing group it holds (complete by contract)
-        batches = list(batches)
-        pdf = (pd.concat(batches, ignore_index=True) if batches
-               else pd.DataFrame())
-        rows: list[dict] = []
-        if len(pdf):
-            for _pid, grp in pdf.groupby("_pid", sort=True):
-                grp = grp.reset_index(drop=True)
-                if partition_transform is not None:
-                    grp = partition_transform(grp)
-                    if len(grp) == 0:
-                        continue
-                rows.extend(build_partition(grp, cfg, segments_root))
-        yield pd.DataFrame(
-            {"manifest_json": [json.dumps(r) for r in rows]})
-
     for wi, lo in enumerate(range(0, len(todo), wave_size)):
         if max_waves is not None and wi >= max_waves:
             break
         wave = todo[lo:lo + wave_size]
         wave_df = routed.filter(F.col("_pid").isin([int(p) for p in wave]))
-        if input_routed:
-            out = (wave_df.mapInPandas(_build_narrow,
-                                       schema=MANIFEST_ROW_SCHEMA)
-                   .collect())
-        else:
-            out = (wave_df.groupBy("_pid")
-                   .applyInPandas(_build, schema=MANIFEST_ROW_SCHEMA)
-                   .collect())
-        rows = [json.loads(r.manifest_json) for r in out]
+        rows = build_groups(wave_df, config, segments_root,
+                            pids=None if input_routed else wave,
+                            partition_transform=partition_transform)
         built_pids = {r["partition_id"] for r in rows}
         stray = built_pids - {int(p) for p in wave}
         if stray:
@@ -878,7 +906,7 @@ def build_index_json(spark, json_df, config_doc: dict, root_dir: str,
         raw lines DF
           -> _pid = xxhash64(line) % P          (content routing: a
              retry re-hashes identical bytes to identical partitions)
-          -> repartition(P) -> mapInPandas      [executors: parse +
+          -> repartitionById(P) -> mapInPandas  [executors: parse +
              doc-mapper projection + segment build, no second shuffle]
           -> manifest.publish per wave          [driver]
 
@@ -911,7 +939,7 @@ def build_index_json(spark, json_df, config_doc: dict, root_dir: str,
               .withColumn("_pid", F.pmod(F.xxhash64("_raw"),
                                          F.lit(num_partitions))
                           .cast("int"))
-              .repartition(num_partitions, "_pid"))
+              .repartitionById(num_partitions, "_pid"))
 
     def _project(grp: pd.DataFrame) -> pd.DataFrame:
         raw = sorted(grp["_raw"].tolist())

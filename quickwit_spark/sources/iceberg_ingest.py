@@ -41,8 +41,7 @@ import os
 import pandas as pd
 
 from ..config import IndexConfig
-from ..index.builder import (MANIFEST_ROW_SCHEMA, build_partition,
-                             route_partitions)
+from ..index.builder import build_groups, route_partitions
 from ..index.manifest import CheckpointConflict, Manifest
 from ..streaming.incremental import _cleanup_replayed_segments
 from .iceberg import IcebergTable, load_table
@@ -239,19 +238,8 @@ def _build_and_publish(df, config: IndexConfig, manifest: Manifest,
         routed = route_partitions(df, config, partitions_per_ingest)
         from pyspark.sql import functions as F
         routed = routed.withColumn("_pid", F.col("_pid") + F.lit(base))
-        cfg = config
-
-        def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pd.DataFrame({"manifest_json": []})
-            built = build_partition(pdf, cfg, segments_root)
-            return pd.DataFrame(
-                {"manifest_json": [json.dumps(r) for r in built]})
-
-        out = (routed.groupBy("_pid")
-               .applyInPandas(_build, schema=MANIFEST_ROW_SCHEMA)
-               .collect())
-        rows = [json.loads(r.manifest_json) for r in out]
+        rows = build_groups(routed, config, segments_root,
+                            pids=range(base, base + partitions_per_ingest))
 
     n_docs = sum(r["num_docs"] for r in rows)
     sig = hashlib.sha256(

@@ -14,13 +14,10 @@ publish on top of Spark's at-least-once batch replay.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 
-import pandas as pd
-
 from ..config import IndexConfig
-from ..index.builder import MANIFEST_ROW_SCHEMA, build_partition, route_partitions
+from ..index.builder import build_groups, route_partitions
 from ..index.manifest import (STREAM_POS_PREFIX,
                               CheckpointConflict, Manifest)
 
@@ -40,18 +37,8 @@ def ingest_batch(df, config: IndexConfig, batch_id: int,
     routed = route_partitions(df, config, partitions_per_batch)
     from pyspark.sql import functions as F
     routed = routed.withColumn("_pid", F.col("_pid") + F.lit(base))
-
-    cfg = config
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"manifest_json": []})
-        rows = build_partition(pdf, cfg, segments_root)
-        return pd.DataFrame({"manifest_json": [json.dumps(r) for r in rows]})
-
-    out = (routed.groupBy("_pid")
-           .applyInPandas(_build, schema=MANIFEST_ROW_SCHEMA).collect())
-    rows = [json.loads(r.manifest_json) for r in out]
+    rows = build_groups(routed, config, segments_root,
+                        pids=range(base, base + partitions_per_batch))
     delta = {}
     for p in range(base, base + partitions_per_batch):
         prows = sorted(r["segment_id"] for r in rows

@@ -134,7 +134,7 @@ def main() -> None:
     if args.routed_input:
         from quickwit_spark.index.builder import route_partitions
         cfg0 = IndexConfig(index_uid="submit", index_dir=args.index_dir)
-        df = route_partitions(df, cfg0, args.partitions).repartition(
+        df = route_partitions(df, cfg0, args.partitions).repartitionById(
             args.partitions, "_pid")
     df = df.cache()
     n_docs = df.count()  # materialize: timing excludes generation/read

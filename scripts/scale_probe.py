@@ -82,7 +82,7 @@ def main() -> None:
                        avg_tokens=args.avg_tokens)
         # routed layout (the 100 TB path): pre-bucketed input, the build
         # itself is a narrow shuffle-free map
-        df = route_partitions(df, cfg, args.partitions).repartition(
+        df = route_partitions(df, cfg, args.partitions).repartitionById(
             args.partitions, "_pid")
         # DISK_ONLY: at 10M+ docs a MEMORY persist pins the whole corpus
         # in driver-JVM heap (local mode) and invites the OOM killer;

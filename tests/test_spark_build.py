@@ -223,3 +223,112 @@ def test_build_index_refuses_legacy_stream_keys_instead_of_noop(
     before = Manifest.load(cfg2.index_dir).data["segments"]
     build_index(spark, df, cfg2, num_partitions=4)  # must not raise
     assert Manifest.load(cfg2.index_dir).data["segments"] == before
+
+
+def _logging_transform(log_dir):
+    """An identity partition_transform that records, per routing group a
+    build task sees, the task's Spark partition id and the group's _pid."""
+    def transform(grp):
+        from pyspark import TaskContext
+        tc = TaskContext.get()
+        name = (f"{tc.partitionId()}-{int(grp['_pid'].iloc[0])}"
+                f"-{tc.stageId()}-{tc.attemptNumber()}")
+        open(os.path.join(log_dir, name), "w").close()
+        return grp
+    return transform
+
+
+def _task_groups(log_dir) -> dict[int, list[int]]:
+    """Spark partition id -> the _pids its build task built."""
+    out: dict[int, list[int]] = {}
+    for name in os.listdir(log_dir):
+        part, pid = map(int, name.split("-")[:2])
+        out.setdefault(part, []).append(pid)
+    return out
+
+
+def _assert_one_group_per_task(log_dir, pids):
+    groups = _task_groups(log_dir)
+    assert all(len(v) == 1 for v in groups.values()), groups
+    assert sorted(v[0] for v in groups.values()) == sorted(pids), groups
+
+
+def test_build_places_one_group_per_task(spark, spark_index, tmp_path):
+    """A full wave: every routing group is built by its own task (6 groups
+    on 6 tasks, where hashing _pid onto the test SparkSession's 4 shuffle
+    partitions would double some up), and the segments equal the
+    fixture's."""
+    log = tmp_path / "log"
+    log.mkdir()
+    cfg = IndexConfig(index_uid="sp", index_dir=str(tmp_path / "sp"))
+    df = corpus_df(spark, N_DOCS, seed=42, num_partitions=8)
+    m = build_index(spark, df, cfg, num_partitions=6,
+                    partition_transform=_logging_transform(str(log)))
+    _assert_one_group_per_task(str(log), range(6))
+    assert sorted(s["segment_id"] for s in m.segments()) == \
+        sorted(s["segment_id"] for s in spark_index[1].segments())
+
+
+def test_resumed_wave_with_gaps_places_one_group_per_task(
+        spark, spark_index, tmp_path):
+    """A resumed wave whose todo pids have gaps ({1, 2, 4, 5} of 6) still
+    gets one task per group, and builds exactly the fixture's segments of
+    those partitions."""
+    log = tmp_path / "log"
+    log.mkdir()
+    cfg = IndexConfig(index_uid="sp", index_dir=str(tmp_path / "sp"))
+    m = Manifest.load_or_create(cfg.index_dir, cfg.index_uid,
+                                cfg.manifest_config())
+    m.claim_router("spark-xxhash64/p6")
+    m.publish([], checkpoint_delta={0: (None, "docs=0"),
+                                    3: (None, "docs=0")})
+    df = corpus_df(spark, N_DOCS, seed=42, num_partitions=8)
+    m = build_index(spark, df, cfg, num_partitions=6,
+                    partition_transform=_logging_transform(str(log)))
+    todo = [1, 2, 4, 5]
+    _assert_one_group_per_task(str(log), todo)
+    assert sorted(_task_groups(str(log))) == [0, 1, 2, 3]
+    assert sorted(s["segment_id"] for s in m.segments()) == sorted(
+        s["segment_id"] for s in spark_index[1].segments()
+        if s["partition_id"] in todo)
+
+
+def test_build_groups_places_offset_pids(spark, tmp_path):
+    """The incremental paths' `base + pid` ids (here above 2**31) are
+    placed by their ordinal: one group per task."""
+    from pyspark.sql import functions as F
+
+    from quickwit_spark.index.builder import build_groups, route_partitions
+
+    log = tmp_path / "log"
+    log.mkdir()
+    cfg = IndexConfig(index_uid="off", index_dir=str(tmp_path / "off"),
+                      sha_col=None)
+    base = 5_000 * 1_000_000
+    df = corpus_df(spark, 120, seed=5, num_partitions=3)
+    routed = route_partitions(df, cfg, 4).withColumn(
+        "_pid", F.col("_pid") + F.lit(base))
+    seg_root = str(tmp_path / "segs")
+    os.makedirs(seg_root)
+    rows = build_groups(routed, cfg, seg_root, pids=range(base, base + 4),
+                        partition_transform=_logging_transform(str(log)))
+    _assert_one_group_per_task(str(log), range(base, base + 4))
+    assert sum(r["num_docs"] for r in rows) == 120
+
+
+def test_input_routed_matches_shuffle_path(spark, spark_index, tmp_path):
+    """input_routed=True over a frame placed by repartitionById builds
+    with no exchange, one group per task, and publishes the same
+    content-addressed segment ids as the shuffle path."""
+    from quickwit_spark.index.builder import route_partitions
+
+    log = tmp_path / "log"
+    log.mkdir()
+    cfg = IndexConfig(index_uid="sp", index_dir=str(tmp_path / "sp"))
+    df = corpus_df(spark, N_DOCS, seed=42, num_partitions=8)
+    placed = route_partitions(df, cfg, 6).repartitionById(6, "_pid")
+    m = build_index(spark, placed, cfg, num_partitions=6, input_routed=True,
+                    partition_transform=_logging_transform(str(log)))
+    _assert_one_group_per_task(str(log), range(6))
+    assert sorted(s["segment_id"] for s in m.segments()) == \
+        sorted(s["segment_id"] for s in spark_index[1].segments())

@@ -387,3 +387,102 @@ def test_multilang_remove_long_applies_to_cjk_grams():
         for t in texts:
             _, toks = tokenize_batch([t], analyzer="multilang", max_len=ml)
             assert toks == multilang_tokenize(t, ml), (ml, t, toks)
+
+
+def _ascii_batch(rng, tail_len):
+    """Seeded random ASCII docs whose tokens straddle every key bucket
+    edge (7/8/9, 16/17, 32/33) and the RemoveLong limit (255/256), with
+    camelCase and ALLCAPS runs, empty and None docs, and a last doc that
+    ends on a token of `tail_len` bytes (the batch's last byte)."""
+    lower, upper = "abcdefghijklmnopqrstuvwxyz", "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+
+    def word(n, chars=lower + "0123456789"):
+        return "".join(rng.choice(chars) for _ in range(n))
+
+    def token():
+        kind = rng.randrange(5)
+        if kind == 0:  # a bucket or RemoveLong edge
+            return word(rng.choice((7, 8, 9, 16, 17, 32, 33, 255, 256)))
+        if kind == 1:  # camelCase
+            return word(rng.randrange(1, 6)) + "".join(
+                rng.choice(upper) + word(rng.randrange(1, 9), lower)
+                for _ in range(rng.randrange(1, 4)))
+        if kind == 2:  # ALLCAPS run, alone or before a capitalized word
+            return word(rng.randrange(2, 12), upper) + (
+                rng.choice(upper) + word(rng.randrange(1, 7), lower)
+                if rng.random() < 0.5 else "")
+        return word(rng.randrange(1, 12), lower + upper + "0123456789")
+
+    texts = []
+    for _ in range(300):
+        r = rng.random()
+        if r < 0.05:
+            texts.append(None)
+        elif r < 0.1:
+            texts.append("")
+        else:
+            parts = []
+            for _ in range(rng.randrange(1, 12)):
+                parts.append(token())
+                parts.append(rng.choice([" ", ".", "_", "-", "/", "(",
+                                         ") ", "\n", ", "]))
+            texts.append("".join(parts))
+    texts.append(" ".join([token(), token(), word(tail_len, lower)]))
+    return texts
+
+
+@pytest.mark.parametrize("analyzer", ["source_code_default", "default"])
+@pytest.mark.parametrize("tail_len", [1, 7, 8, 9, 16, 17, 32, 33])
+def test_batch_ids_ascii_matches_string_path(analyzer, tail_len):
+    """The no-string ids path (u64 word keys, flatnonzero spans) must give
+    the same (doc, term) sequence as tokenize_batch, and the same sorted
+    vocabulary."""
+    import random
+
+    from quickwit_spark.functions.tokenizers import tokenize_batch_ids
+
+    texts = _ascii_batch(random.Random(1000 + tail_len), tail_len)
+    docs_s, toks_s = tokenize_batch(texts, analyzer=analyzer)
+    di, codes, terms = tokenize_batch_ids(texts, analyzer=analyzer)
+    got = [(int(d), terms[c]) for d, c in zip(di.tolist(), codes.tolist())]
+    assert got == list(zip(docs_s.tolist(), toks_s))
+    assert terms.tolist() == sorted(set(toks_s))
+    assert toks_s[-1] == texts[-1][-tail_len:].lower()
+
+
+def _scalar_spans(nondelim, breaks):
+    """Reference span walk: a token starts at a nondelim char after a
+    delimiter (or at 0) or at a break, and ends before the next delimiter,
+    break or the end."""
+    brk = set(breaks.tolist())
+    spans, start = [], None
+    for i in range(len(nondelim) + 1):
+        inside = i < len(nondelim) and bool(nondelim[i])
+        if start is not None and (not inside or i in brk):
+            spans.append((start, i))
+            start = None
+        if inside and start is None:
+            start = i
+    return spans
+
+
+def test_token_spans_matches_scalar_walk():
+    """_token_spans against the scalar walk. Breaks cover every position
+    class a run offers: right after its start, right before its last
+    char, in its middle, at adjacent positions, on the batch's last char,
+    and at every interior position at once."""
+    from quickwit_spark.functions.tokenizers import _token_spans
+
+    rng = np.random.default_rng(5)
+    cases = [np.zeros(0, dtype=bool), np.zeros(5, dtype=bool),
+             np.ones(1, dtype=bool), np.ones(6, dtype=bool)]
+    cases += [rng.random(int(rng.integers(1, 60))) < p
+              for p in (0.3, 0.7, 0.95) for _ in range(150)]
+    for nondelim in cases:
+        # a break needs nondelim chars on both sides
+        valid = np.flatnonzero(nondelim[1:] & nondelim[:-1]) + 1
+        for p in (0.0, 0.3, 0.7, 1.0):
+            breaks = valid[rng.random(valid.size) < p].astype(np.int64)
+            starts, ends = _token_spans(nondelim, breaks)
+            assert list(zip(starts.tolist(), ends.tolist())) == \
+                _scalar_spans(nondelim, breaks), (nondelim, breaks)

@@ -24,6 +24,7 @@ import contextlib
 import contextvars
 import json
 import os
+import threading
 from dataclasses import dataclass
 
 import numpy as np
@@ -198,6 +199,9 @@ class SegmentReader:
         self._docs_md: pq.FileMetaData | None = None
         self._docs_schema: pa.Schema | None = None
         self._docs_rg_starts: np.ndarray | None = None
+        # decoded doc-store row groups by index: zero-copy slices of
+        # the reads that fetched them
+        self._doc_blocks: dict[int, pa.Table] = {}
         # bytes this reader ACTUALLY pins right now. Grows as lazy loads
         # land (decompressed termdict/postings, touched doc columns,
         # fieldnorms, WAND cursor metadata) — the earlier on-disk
@@ -213,8 +217,9 @@ class SegmentReader:
     def _pin(self, nbytes: int) -> None:
         """Record newly pinned bytes and re-enforce the process budget —
         growth happens lazily long after get_reader's insert check."""
-        self._pinned_bytes += int(nbytes)
-        _enforce_reader_budget()
+        with _READER_LOCK:
+            self._pinned_bytes += int(nbytes)
+            _enforce_reader_budget()
 
     # cache whole termdict/postings files when small enough — the analog
     # of the reference's hotcache + leaf cache (split opened in one read,
@@ -229,12 +234,15 @@ class SegmentReader:
         row-group start offsets) is parsed once per reader and pinned."""
         if self._docs_md is None:
             md = pq.read_metadata(os.path.join(self.seg_dir, "docs.parquet"))
-            self._docs_schema = md.schema.to_arrow_schema()
-            self._docs_rg_starts = np.cumsum(
-                [0] + [md.row_group(i).num_rows
-                       for i in range(md.num_row_groups)], dtype=np.int64)
-            self._docs_md = md
-            self._pin(md.serialized_size + self._docs_rg_starts.nbytes)
+            starts = np.cumsum([0] + [md.row_group(i).num_rows
+                                      for i in range(md.num_row_groups)],
+                               dtype=np.int64)
+            with _READER_LOCK:  # concurrent first fetches pin it once
+                if self._docs_md is None:
+                    self._docs_schema = md.schema.to_arrow_schema()
+                    self._docs_rg_starts = starts
+                    self._docs_md = md
+                    self._pin(md.serialized_size + starts.nbytes)
         return self._docs_schema
 
     def _docs_file(self) -> pq.ParquetFile:
@@ -246,21 +254,39 @@ class SegmentReader:
 
     def read_docs(self, doc_ids) -> pa.Table:
         """Doc-store rows of the given local doc ids, in that order, with
-        every column but `_seg_doc`. Reads only the row groups holding
-        them (`_seg_doc` is the row index, so bisecting the cumulative
-        row counts locates each id), then one `take`."""
+        every column but `_seg_doc`. Locates the row groups holding them
+        (`_seg_doc` is the row index, so bisecting the cumulative row
+        counts finds each id), decodes the ones this reader does not
+        hold yet in one read, then one `take` over the needed groups.
+        Decoded groups stay in the reader, like the reference's doc-store
+        block cache (the segment is immutable, so they never go stale)."""
         cols = [c for c in self.docs_schema().names if c != "_seg_doc"]
         starts = self._docs_rg_starts
         ids = np.asarray(doc_ids, dtype=np.int64)
         rg = np.searchsorted(starts, ids, side="right") - 1
         groups = np.unique(rg)
+        if not len(groups):
+            return self._docs_schema.empty_table().select(cols)
+        blocks = {g: self._doc_blocks.get(g) for g in groups.tolist()}
+        missing = [g for g, b in blocks.items() if b is None]
+        if missing:
+            with self._docs_file() as f:
+                t = f.read_row_groups(missing, columns=cols)
+            off = 0
+            for g in missing:
+                n = int(starts[g + 1] - starts[g])
+                blk = t.slice(off, n)
+                off += n
+                # a concurrent fetch may have inserted it first: keep
+                # one copy, and count it once
+                blocks[g] = self._doc_blocks.setdefault(g, blk)
+                if blocks[g] is blk:
+                    self._pin(blk.nbytes)
         sizes = starts[groups + 1] - starts[groups]
-        # each read group's first row within the concatenated read
+        # each group's first row within the concatenated blocks
         base = np.cumsum(sizes) - sizes
-        with self._docs_file() as f:
-            t = f.read_row_groups(groups.tolist(), columns=cols)
-        return t.take(pa.array(ids - starts[rg]
-                               + base[np.searchsorted(groups, rg)]))
+        return pa.concat_tables(list(blocks.values())).take(pa.array(
+            ids - starts[rg] + base[np.searchsorted(groups, rg)]))
 
     def _docs_column(self, col: str) -> pa.ChunkedArray:
         if col not in self.doc_fields():
@@ -1585,9 +1611,12 @@ def _wand_shape(node: A.Node, text_field: str, tokenizer: str):
 from collections import OrderedDict
 
 _READER_CACHE: "OrderedDict[str, SegmentReader]" = OrderedDict()
-# aggregate byte budget for per-reader termdict/postings caches (the
-# analog of the reference's bounded split/fast-field caches,
-# node_config/mod.rs:264-286); env-tunable for executor sizing
+# guards _READER_CACHE and pinned-byte counts across the HTTP server's
+# threads; reentrant because a budget check runs inside _pin
+_READER_LOCK = threading.RLock()
+# aggregate byte budget for per-reader termdict, postings and doc-store
+# block caches (the analog of the reference's bounded split/fast-field
+# caches, node_config/mod.rs:264-286); env-tunable for executor sizing
 READER_CACHE_BUDGET_BYTES = int(os.environ.get(
     "QW_READER_CACHE_BYTES", 4 << 30))
 
@@ -1598,10 +1627,13 @@ def _enforce_reader_budget() -> None:
     — readers grow lazily long after insertion (touched doc columns,
     decompressed postings, cursor metadata), so an insert-time-only
     check would not actually bound executor memory."""
-    total = sum(x.cache_footprint for x in _READER_CACHE.values())
-    while total > READER_CACHE_BUDGET_BYTES and len(_READER_CACHE) > 1:
-        _sid, old = _READER_CACHE.popitem(last=False)
-        total -= old.cache_footprint
+    with _READER_LOCK:
+        # sum over a snapshot: a footprint is read while the cache may
+        # change under it
+        total = sum(x.cache_footprint for x in list(_READER_CACHE.values()))
+        while total > READER_CACHE_BUDGET_BYTES and len(_READER_CACHE) > 1:
+            _sid, old = _READER_CACHE.popitem(last=False)
+            total -= old.cache_footprint
 
 
 def get_reader(seg_dir: str,
@@ -1610,13 +1642,16 @@ def get_reader(seg_dir: str,
     across queries — the analog of the reference's split/footer caches),
     evicting oldest readers past an aggregate byte budget of LIVE pinned
     bytes (decompressed, per touched structure — not on-disk sizes)."""
-    r = _READER_CACHE.get(seg_dir)
-    if r is not None:
-        _READER_CACHE.move_to_end(seg_dir)
-        return r
+    with _READER_LOCK:
+        r = _READER_CACHE.get(seg_dir)
+        if r is not None:
+            _READER_CACHE.move_to_end(seg_dir)
+            return r
     r = SegmentReader(seg_dir, tokenizer)
-    _READER_CACHE[seg_dir] = r
-    _enforce_reader_budget()
+    with _READER_LOCK:
+        # another thread may have opened it meanwhile: share its reader
+        r = _READER_CACHE.setdefault(seg_dir, r)
+        _enforce_reader_budget()
     return r
 
 
@@ -2299,8 +2334,10 @@ class IndexSearcher:
     def _fetch(self, sids: list[str], dids: list[int],
                scores: list[float]) -> list[SearchHit]:
         """Fetch the winners' stored docs (two-phase hit join,
-        root.rs:808-889): per segment, read only the row groups holding
-        its winners, then convert every row with one `to_pylist`."""
+        root.rs:808-889): per segment, take its winners from the row
+        groups that hold them (decoded once per reader, see
+        SegmentReader.read_docs), then convert every row with one
+        `to_pylist`."""
         by_seg: dict[str, list[int]] = {}
         for sid, d in zip(sids, dids):
             by_seg.setdefault(sid, []).append(d)

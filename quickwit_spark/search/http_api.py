@@ -274,14 +274,18 @@ class SearchHttpServer:
 
     def _searcher(self, index: str) -> IndexSearcher:
         self._check_index(index)
+        d = os.path.join(self.root_dir, index)
         with self._lock:
+            # checked on every request, not only on open: a cached
+            # searcher of a vanished index can answer from readers
+            # and doc-store blocks still in memory
+            if not os.path.isdir(d):
+                self._searchers.pop(index, None)
+                raise _ApiError(
+                    404, f"no such index [{index}]",
+                    es_type="index_not_found_exception")
             s = self._searchers.get(index)
             if s is None:
-                d = os.path.join(self.root_dir, index)
-                if not os.path.isdir(d):
-                    raise _ApiError(
-                        404, f"no such index [{index}]",
-                        es_type="index_not_found_exception")
                 s = self._searchers[index] = IndexSearcher(d)
             return s
 

@@ -6,12 +6,15 @@ in their text form and u64 values as exact Python ints. The parity test
 compares every fetched doc with a full-file read of docs.parquet, for
 built, delete-rewritten and merged segments and for a segment whose doc
 store is one row group. The O(hits) test pins that a hit fetch reads
-only the row group holding the hit.
+only the row group holding the hit. The cache tests pin that the reader
+keeps each decoded row group, reads only the ones it lacks, and counts
+each against the reader budget once, also under concurrent fetches.
 """
 
 import json
 import math
 import os
+import threading
 
 import numpy as np
 import pandas as pd
@@ -194,3 +197,163 @@ def test_hit_fetch_reads_only_the_hit_row_group(tmp_path, monkeypatch):
     assert [(h.doc_id, h.doc["doc_id"]) for h in res.hits] == [(local, key)]
     stored = [f.name for f in md.schema.to_arrow_schema()]
     assert calls == [([rg], [c for c in stored if c != "_seg_doc"])]
+
+
+def _one_segment(tmp_path):
+    """A 1-segment index of the corpus; its doc store has >= 3 row groups.
+    Returns the root, the segment directory and the row-group starts."""
+    root = str(tmp_path / "idx")
+    build_index_pandas(_corpus(), _config(root), num_partitions=1)
+    (seg,) = Manifest.load(root).segments()
+    seg_dir = os.path.join(root, "segments", seg["segment_id"])
+    md = pq.read_metadata(os.path.join(seg_dir, "docs.parquet"))
+    assert md.num_row_groups >= 3
+    starts = np.cumsum([0] + [md.row_group(g).num_rows
+                              for g in range(md.num_row_groups)])
+    return root, seg_dir, starts
+
+
+def _spy_row_group_reads(monkeypatch) -> list:
+    calls = []
+    real = pq.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, columns=None, *a, **kw):
+        calls.append(list(row_groups))
+        return real(self, row_groups, columns, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    return calls
+
+
+def _hits_query(golden: list[dict], locals_: list[int]) -> A.Node:
+    return A.Bool(should=tuple(A.Term("text", f"tok{golden[d]['doc_id']}")
+                               for d in locals_))
+
+
+def test_second_fetch_of_a_hit_reads_no_row_group(tmp_path, monkeypatch):
+    root, seg_dir, starts = _one_segment(tmp_path)
+    golden = _golden(seg_dir)
+    local = int(starts[1]) + 2
+    calls = _spy_row_group_reads(monkeypatch)
+    s = IndexSearcher(root)
+    q = _hits_query(golden, [local])
+    first = s.search(q, k=1).hits
+    assert calls == [[1]]
+    second = IndexSearcher(root).search(q, k=1).hits
+    assert calls == [[1]]
+    assert [h.doc for h in first] == [h.doc for h in second] == [golden[local]]
+
+
+def test_fetch_reads_only_the_uncached_row_groups(tmp_path, monkeypatch):
+    root, seg_dir, starts = _one_segment(tmp_path)
+    golden = _golden(seg_dir)
+    s = IndexSearcher(root)
+    calls = _spy_row_group_reads(monkeypatch)
+    s.search(_hits_query(golden, [int(starts[1])]), k=1)
+    assert calls == [[1]]
+    # groups 0 and 2 are cold, group 1 is cached: one read of the two
+    span = [int(starts[2]) + 1, int(starts[1]) + 5, 3, int(starts[1])]
+    res = s.search(_hits_query(golden, span), k=len(span))
+    assert calls == [[1], [0, 2]]
+    assert sorted((h.doc_id, h.doc["doc_id"]) for h in res.hits) == sorted(
+        (d, golden[d]["doc_id"]) for d in span)
+    for h in res.hits:
+        assert h.doc == golden[h.doc_id]
+
+
+def test_decoded_blocks_are_pinned_once(tmp_path):
+    from quickwit_spark.search.engine import get_reader
+    _root, seg_dir, starts = _one_segment(tmp_path)
+    r = get_reader(seg_dir)
+    cols = [c for c in r.docs_schema().names if c != "_seg_doc"]
+    base = r.cache_footprint
+    f = pq.ParquetFile(os.path.join(seg_dir, "docs.parquet"))
+    block = f.read_row_group(1, columns=cols)
+    ids = [int(starts[1]), int(starts[2]) - 1]
+    assert r.read_docs(ids).equals(block.take([0, block.num_rows - 1]))
+    assert r.cache_footprint == base + block.nbytes
+    r.read_docs(ids[::-1])
+    r.read_docs(ids[:1])
+    assert r.cache_footprint == base + block.nbytes
+
+
+def test_fetch_matches_with_a_one_byte_reader_budget(tmp_path, monkeypatch):
+    """Every pin evicts all but the newest reader, often the one still
+    fetching: what it already decoded must still serve the fetch."""
+    import quickwit_spark.search.engine as eng
+    monkeypatch.setattr(eng, "_READER_CACHE", type(eng._READER_CACHE)())
+    monkeypatch.setattr(eng, "READER_CACHE_BUDGET_BYTES", 1)
+    root = str(tmp_path / "idx")
+    pdf = _corpus()
+    build_index_pandas(pdf, _config(root), num_partitions=2)
+    _assert_fetch_matches(root, pdf)
+    (seg0, _) = Manifest.load(root).segments()
+    seg0 = os.path.join(root, "segments", seg0["segment_id"])
+    victim = _golden(seg0)[_probe_ids(seg0)[2]]["doc_id"]
+    out = apply_delete_query(root, A.Term("text", f"tok{victim}"))
+    assert out["segments_rewritten"] == 1
+    _assert_fetch_matches(root, pdf)
+    m = Manifest.load(root)
+    parents = m.segments()
+    m.publish([merge_segments(root, parents)],
+              replaced_segment_ids=[p["segment_id"] for p in parents])
+    _assert_fetch_matches(root, pdf)
+    assert len(eng._READER_CACHE) == 1
+
+
+def test_read_docs_of_no_ids_is_an_empty_table(tmp_path):
+    from quickwit_spark.search.engine import get_reader
+    _root, seg_dir, _starts = _one_segment(tmp_path)
+    r = get_reader(seg_dir)
+    empty = r.read_docs([])
+    assert empty.num_rows == 0
+    stored = pq.read_schema(os.path.join(seg_dir, "docs.parquet"))
+    assert empty.column_names == [c for c in stored.names if c != "_seg_doc"]
+    assert empty.schema.equals(r.read_docs([0]).schema)
+    assert r.read_docs(np.array([], dtype=np.int64)).num_rows == 0
+
+
+def test_concurrent_cold_fetches_pin_each_block_once(tmp_path, monkeypatch):
+    import quickwit_spark.search.engine as eng
+    root, seg_dir, starts = _one_segment(tmp_path)
+    golden = _golden(seg_dir)
+    span = [1, int(starts[1]) + 1, int(starts[2]) + 1]
+    q = _hits_query(golden, span)
+
+    def fresh_cache_footprint(fetch) -> tuple[int, list]:
+        """Empty reader and leaf caches, warm the search path, then
+        fetch cold: the reader's footprint growth over the fetch, and
+        its docs."""
+        monkeypatch.setattr(eng, "_READER_CACHE", type(eng._READER_CACHE)())
+        eng.clear_leaf_cache()
+        s = IndexSearcher(root)
+        s.search(q, k=len(span), fetch_fields=False)
+        r = eng.get_reader(seg_dir)
+        before = r.cache_footprint
+        docs = fetch(s)
+        assert eng.get_reader(seg_dir) is r
+        return r.cache_footprint - before, docs
+
+    def one(s):
+        return [[h.doc for h in s.search(q, k=len(span)).hits]]
+
+    def four(s):
+        barrier, out = threading.Barrier(4), [None] * 4
+
+        def run(i):
+            barrier.wait()
+            out[i] = [h.doc for h in s.search(q, k=len(span)).hits]
+
+        ts = [threading.Thread(target=run, args=(i,)) for i in range(4)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join()
+        return out
+
+    single, (docs,) = fresh_cache_footprint(one)
+    assert sorted(d["doc_id"] for d in docs) == sorted(
+        golden[d]["doc_id"] for d in span)
+    threaded, outs = fresh_cache_footprint(four)
+    assert outs == [docs] * 4
+    assert threaded == single > 0

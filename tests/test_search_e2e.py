@@ -508,6 +508,38 @@ def test_reader_budget_counts_live_pinned_bytes(built, monkeypatch):
     assert len(eng._READER_CACHE) == 1
 
 
+def test_reader_budget_check_survives_a_concurrent_reader_open(
+        tmp_path, monkeypatch):
+    """The budget check reads each reader's footprint while another
+    server thread may open a reader. A footprint that opens one itself
+    stands in for that thread, deterministically: the check must not
+    iterate the live cache (OrderedDict mutated during iteration)."""
+    import quickwit_spark.search.engine as eng
+
+    dirs = []
+    for name in ("a", "b", "c"):
+        d = tmp_path / name
+        d.mkdir()
+        (d / "meta.json").write_text(json.dumps({"num_docs": 0}))
+        dirs.append(str(d))
+
+    class OpensAReader(eng.SegmentReader):
+        opened = False
+
+        @property
+        def cache_footprint(self):
+            if not OpensAReader.opened:
+                OpensAReader.opened = True
+                eng.get_reader(dirs[2])
+            return 0
+
+    monkeypatch.setattr(eng, "_READER_CACHE", type(eng._READER_CACHE)())
+    eng._READER_CACHE[dirs[0]] = OpensAReader(dirs[0])
+    eng.get_reader(dirs[1])
+    assert OpensAReader.opened
+    assert list(eng._READER_CACHE) == dirs
+
+
 def test_claim_router_refuses_mixed_resume(built, tmp_path):
     """Partition checkpoints are only resumable under the SAME routing
     hash + partition count; a mixed resume would silently duplicate and

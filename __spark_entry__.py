@@ -324,7 +324,8 @@ def _engine_bool_topk(spark, sf_dir, terms, op, k, lang=None, must_not=None,
 
 def _global_topk(spark, sf_dir, terms, k):
     """AND top-k from the global term-partitioned layout over the
-    3-segment index (GlobalIndexSearcher.search_terms, f32, then fetch).
+    3-segment index (GlobalIndexSearcher.search: f32 BM25, root merge,
+    then the doc fetch).
 
     The layout scores with whole-corpus statistics (N, df, average
     fieldnorm), as the oracle SQL does. IndexSearcher over the same
@@ -332,9 +333,12 @@ def _global_topk(spark, sf_dir, terms, k):
     reference scores each split, so its top-k legitimately differs from
     the oracle's."""
     g = _doc_global_index(spark, sf_dir)
-    _cnt, res = g.search_terms(terms, operator="and", k=k)
+    res = g.search(A.Bool(must=tuple(A.Term(g.text_field, t)
+                                     for t in terms)),
+                   k=k, fetch_fields=True)
     return _hits_df(spark, sf_dir,
-                    g.fetch(res)["doc_id"].to_numpy(np.int64), terms)
+                    np.array([h.doc["doc_id"] for h in res.hits],
+                             dtype=np.int64), terms)
 
 
 # ---------------------------------------------------------------------------

@@ -473,24 +473,23 @@ def main() -> None:
                            num_term_partitions=8)
     queries["build_global_index"] = round(time.perf_counter() - t0, 3)
     gsearch = GlobalIndexSearcher(skew_cfg.index_dir)
-    gterms = [t for t in skew_terms]
     global_skip = 0.0
     for name, ca in [("q_global_or_exh", True),
                      ("q_global_or_wand", False)]:
-        gsearch.search_terms(gterms, operator="or", k=10, count_all=ca)
+        gsearch.search(q_or_skew, k=10, fetch_fields=False, count_all=ca)
         STATS["blocks_decoded"] = STATS["blocks_total"] = 0
         queries[name] = round(_median3(
-            lambda: gsearch.search_terms(gterms, operator="or", k=10,
-                                         count_all=ca)), 4)
+            lambda: gsearch.search(q_or_skew, k=10, fetch_fields=False,
+                                   count_all=ca)), 4)
         if name == "q_global_or_wand" and STATS["blocks_total"]:
             global_skip = 1 - (STATS["blocks_decoded"]
                                / STATS["blocks_total"])
 
     # single term on the global layout: bound-ordered fast path with the
     # exact metadata count
+    g_term = A.Term("content", skew_terms[0])
     queries["q_global_term"] = round(_median3(
-        lambda: gsearch.search_terms([gterms[0]], operator="or",
-                                     k=10)), 4)
+        lambda: gsearch.search(g_term, k=10, fetch_fields=False)), 4)
 
     # incremental refresh (the 10^12-doc publish path): append a 5%
     # delta's rows to the term-partitioned layout WITHOUT re-shuffling

@@ -106,11 +106,3 @@ class Bm25Weight:
         """Upper bound of score for a block given its max tf and min
         fieldnorm id (block-max WAND metadata)."""
         return self.score(max_tf, min_fieldnorm_id)
-
-
-def avg_fieldnorm_f32(fieldnorm_ids: np.ndarray) -> np.float32:
-    """Average decoded fieldnorm of a segment, f32 division."""
-    if len(fieldnorm_ids) == 0:
-        return np.float32(0.0)
-    total = id_to_fieldnorm(fieldnorm_ids).sum()
-    return np.float32(np.float32(total) / np.float32(len(fieldnorm_ids)))

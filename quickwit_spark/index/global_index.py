@@ -50,6 +50,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from ..functions.bm25 import Bm25Weight
+from ..search.engine import IndexSearcher, _partial, _wand_shape, get_reader
+from ..search.wand import (_combine_in_query_order, _empty3, _TermCursor,
+                           and_topk_groups, or_topk_cursors,
+                           single_cursor_topk)
 from .builder import _large_binary_array, _list_array, _varint_encode_with_sizes
 from .codecs import BLOCK_SIZE, varint_decode, varint_decode_with_sizes
 from .manifest import Manifest
@@ -658,12 +662,18 @@ class _GlobalFieldnormLookup:
             np.asarray(docids, dtype=np.int64))
 
 
-class GlobalIndexSearcher:
-    """Top-k BM25 over the term-partitioned layout with global statistics
-    (rank-identical to querying one fully-merged segment)."""
+class GlobalIndexSearcher(IndexSearcher):
+    """BM25 over the term-partitioned layout with global statistics
+    (rank-identical to querying one fully-merged segment).
+
+    An IndexSearcher whose leaf is the whole layout: search, search_many
+    and the ES facade parse, root-merge and fetch exactly as they do for
+    segments; only _leaf_parts differs. The layout answers term AND/OR
+    over the text field; it holds no positions, so phrases, filters and
+    search_after cursors are refused."""
 
     def __init__(self, index_dir: str):
-        self.index_dir = index_dir
+        super().__init__(index_dir)
         out_dir = os.path.join(index_dir, GLOBAL_DIR)
         with open(os.path.join(out_dir, "global_manifest.json")) as f:
             self.gm = json.load(f)
@@ -682,7 +692,6 @@ class GlobalIndexSearcher:
                               np.float32(self.num_docs))
         self.offsets = np.asarray(self.gm["doc_offsets"], dtype=np.int64)
         self.segment_ids = self.gm["segment_ids"]
-        self._fn_cache: dict[int, np.ndarray] = {}
         # block_max_ratio bounds are sound iff the avg they were computed
         # under is >= the current avg (see refresh_term_partitioned);
         # when stale, pruning falls back to (max_tf, min_fn) bounds
@@ -743,93 +752,10 @@ class GlobalIndexSearcher:
             return pd.DataFrame()
         return pd.concat(frames, ignore_index=True)
 
-    def _fieldnorms_for(self, docids: np.ndarray) -> np.ndarray:
-        """Global fieldnorm ids via per-segment docs.parquet reads
-        (only the segments actually hit)."""
-        out = np.zeros(len(docids), dtype=np.int64)
-        seg_idx = np.searchsorted(self.offsets, docids, side="right") - 1
-        for si in np.unique(seg_idx):
-            fn = self._fn_cache.get(int(si))
-            if fn is None:
-                seg_dir = os.path.join(self.index_dir, "segments",
-                                       self.segment_ids[int(si)])
-                fn = pq.read_table(
-                    os.path.join(seg_dir, "docs.parquet"),
-                    columns=["fieldnorm_id"]).column(0).to_numpy() \
-                    .astype(np.int64)
-                self._fn_cache[int(si)] = fn
-            m = seg_idx == si
-            out[m] = fn[docids[m] - self.offsets[int(si)]]
-        return out
-
-    def term_postings(self, rows: pd.DataFrame, term: str
-                      ) -> tuple[np.ndarray, np.ndarray]:
-        # (salt, seg_lo) order keeps concatenated docids globally
-        # ascending even when an incremental refresh appended rows for
-        # the same (term, salt) covering later segment ranges
-        sub = rows[rows["term"] == term].sort_values(
-            ["salt", "seg_lo"], kind="mergesort")
-        if len(sub) == 0:
-            z = np.zeros(0, dtype=np.int64)
-            return z, z
-        doc_parts, tf_parts = [], []
-        for r in sub.itertuples():
-            d = np.cumsum(varint_decode(r.docid_blob).astype(np.int64))
-            doc_parts.append(d)
-            tf_parts.append(varint_decode(r.tf_blob).astype(np.int64))
-        return np.concatenate(doc_parts), np.concatenate(tf_parts)
-
-    def search_terms(self, terms: list[str], operator: str = "and",
-                     k: int = 10, count_all: bool = True
-                     ) -> tuple[int, pd.DataFrame]:
-        """AND/OR of terms, global f32 BM25 (rank-identical to one
-        fully-merged segment), top-k with (docid desc) tie-break.
-        Returns (num_hits, DataFrame[global_doc, score]).
-
-        count_all=False + operator="or" runs block-max WAND over the
-        term-partitioned rows (identical top-k; num_hits becomes a lower
-        bound — the north rule's pruned query path at the global
-        layout). Salted Zipf-head terms contribute one MaxScore cursor
-        per salt row; the rows cover disjoint docid ranges, so bounds
-        stay conservative."""
-        if len(terms) == 1 or not count_all:
-            # a single term's count is exact from metadata on the pruned
-            # path, so exact-count mode can take it too (top-k is
-            # rank-identical; only the decode is bound-ordered)
-            return self._search_pruned(terms, k, operator)
-        rows = self._term_rows(terms)
-        per_term = []
-        for t in terms:
-            if len(rows) == 0:
-                per_term.append((np.zeros(0, np.int64),
-                                 np.zeros(0, np.float32)))
-                continue
-            docids, tfs = self.term_postings(rows, t)
-            df = len(docids)
-            if df == 0:
-                per_term.append((docids, np.zeros(0, np.float32)))
-                continue
-            fn = self._fieldnorms_for(docids)
-            w = Bm25Weight(df, self.num_docs, float(self.avg_fieldnorm))
-            per_term.append((docids, w.score(tfs, fn)))
-        if operator == "and":
-            docs = per_term[0][0]
-            for d, _s in per_term[1:]:
-                docs = np.intersect1d(docs, d, assume_unique=True)
-        else:
-            docs = np.unique(np.concatenate([d for d, _ in per_term])) \
-                if per_term else np.zeros(0, np.int64)
-        from ..search.wand import _combine_in_query_order
-        scores = _combine_in_query_order(per_term, docs)
-        order = np.lexsort((-docs, -scores.astype(np.float64)))[:k]
-        return len(docs), pd.DataFrame({
-            "global_doc": docs[order], "score": scores[order]})
-
     def _cursor_groups(self, terms: list[str]) -> list:
         """One cursor GROUP per query term (one cursor per salt row,
         disjoint ascending docid ranges); None for absent terms. Weights
         use the term's GLOBAL doc freq (sum over salts)."""
-        from ..search.wand import _TermCursor
         rows = self._term_rows(terms)
         cursor_cols = ["doc_freq", "block_last", "block_max_tf",
                        "block_min_fn", "doc_offsets", "tf_offsets",
@@ -859,83 +785,93 @@ class GlobalIndexSearcher:
             groups.append(g)
         return groups
 
-    def _search_pruned(self, terms: list[str], k: int, operator: str
-                       ) -> tuple[int, pd.DataFrame]:
-        from ..search.wand import and_topk_groups, or_topk_cursors
+    def _fieldnorms_for(self, docids: np.ndarray) -> np.ndarray:
+        """Global fieldnorm ids from the owning segments' readers (only
+        the segments actually hit; pinned under the reader budget)."""
+        out = np.zeros(len(docids), dtype=np.int64)
+        seg_idx = np.searchsorted(self.offsets, docids, side="right") - 1
+        for si in np.unique(seg_idx).tolist():
+            fn = get_reader(os.path.join(self.index_dir, "segments",
+                                         self.segment_ids[si]),
+                            self.tokenizer).fieldnorm_ids()
+            m = seg_idx == si
+            out[m] = fn[docids[m] - self.offsets[si]]
+        return out
+
+    def _leaf_parts(self, node, need: int, use_wand: bool,
+                    search_after: tuple | None) -> list:
+        """Score the whole layout as one leaf, then hand the root merge
+        the top `need` hits split by owning segment. Counts are exact
+        except for OR with use_wand (a lower bound, as for segments)."""
+        shape = None if search_after is not None else _wand_shape(
+            node, self.text_field, self.tokenizer)
+        if shape is None:
+            raise ValueError(
+                "the global term-partitioned layout answers term AND/OR "
+                f"queries over `{self.text_field}` only (no phrases, "
+                "filters or search_after)")
+        op, terms = shape
         groups = self._cursor_groups(terms)
         fn_lookup = _GlobalFieldnormLookup(self)
+        k = max(need, 1)
         if len(terms) == 1:
-            # single term: bound-ordered decode per salt row with a
-            # shared threshold (docid-order WAND cannot skip for one
-            # cursor), and the count is EXACT from term-dict metadata —
-            # the global twin of the segment layout's single-term fast
-            # path (wand.single_term_topk)
-            from ..search.wand import single_cursor_topk
-            g = groups[0]
-            if not g:
-                return 0, pd.DataFrame({"global_doc": [], "score": []})
-            acc_d = np.zeros(0, dtype=np.int64)
-            acc_s = np.zeros(0, dtype=np.float32)
-            theta = float("-inf")
-            for cur in sorted(g, key=lambda c: -c.max_score):
-                if cur.max_score < theta:
-                    continue
-                d, s = single_cursor_topk(cur, fn_lookup, "freq", k,
-                                          theta)
-                acc_d = np.concatenate([acc_d, d])
-                acc_s = np.concatenate([acc_s, s])
-                if len(acc_s) >= k:
-                    kth = float(np.partition(
-                        acc_s.astype(np.float64), -k)[-k])
-                    theta = kth - abs(kth) * 1e-5
-            order = np.lexsort((-acc_d, -acc_s.astype(np.float64)))[:k]
-            count = int(sum(c.doc_freq for c in g))
-            return count, pd.DataFrame({"global_doc": acc_d[order],
-                                        "score": acc_s[order]})
-        if operator == "and":
+            docids, scores, count = _single_term_topk(groups[0], fn_lookup,
+                                                      k)
+        elif op == "and":
             docids, scores, count = and_topk_groups(groups, fn_lookup,
                                                     "freq", k)
+        elif use_wand:
+            docids, scores, count = or_topk_cursors(
+                [c for g in groups if g is not None for c in g],
+                fn_lookup, "freq", k)
         else:
-            flat = [c for g in groups if g is not None for c in g]
-            docids, scores, count = or_topk_cursors(flat, fn_lookup,
-                                                    "freq", k)
-        order = np.lexsort((-docids, -scores.astype(np.float64)))[:k]
-        return count, pd.DataFrame({"global_doc": docids[order],
-                                    "score": scores[order]})
-
-    def fetch(self, result: pd.DataFrame) -> pd.DataFrame:
-        """Resolve global docids to doc keys via the owning segments."""
-        from ..search.engine import get_reader
-        docids = result["global_doc"].to_numpy()
+            docids, scores, count = _or_exhaustive(groups, fn_lookup)
+        top = np.lexsort((-docids, -scores.astype(np.float64)))[:need]
+        docids, scores = docids[top], scores[top]
         seg_idx = np.searchsorted(self.offsets, docids, side="right") - 1
-        frames = []
-        for si in np.unique(seg_idx):
-            local = np.unique(docids[seg_idx == si] - self.offsets[int(si)])
-            r = get_reader(os.path.join(self.index_dir, "segments",
-                                        self.segment_ids[int(si)]))
-            schema = r.docs_schema()
-            seg_doc = schema.field("_seg_doc")
-            t = r.read_docs(local).add_column(
-                schema.get_field_index("_seg_doc"), seg_doc,
-                pa.array(local, type=seg_doc.type)).to_pandas()
-            t["global_doc"] = t["_seg_doc"] + int(self.offsets[int(si)])
-            frames.append(t)
-        if not frames:
-            # zero hits: pd.concat([]) raises — return an empty frame
-            # with the SAME schema the non-empty path produces (result
-            # columns + the doc-store columns), so generic
-            # post-processing doesn't KeyError only on the empty edge
-            out = result.copy()
-            if self.segment_ids:
-                schema = get_reader(os.path.join(
-                    self.index_dir, "segments",
-                    self.segment_ids[0])).docs_schema()
-                # real pandas dtypes, not object: schema-strict
-                # consumers must see identical dtypes on the empty edge
-                empty = schema.empty_table().to_pandas()
-                for name in empty.columns:
-                    if name not in out.columns:
-                        out[name] = empty[name]
-            return out
-        docs = pd.concat(frames, ignore_index=True)
-        return result.merge(docs, on="global_doc", how="left")
+        parts = [(self.segment_ids[si], 0,
+                  _partial(docids[m] - self.offsets[si], scores[m]))
+                 for si in np.unique(seg_idx).tolist()
+                 for m in [seg_idx == si]]
+        # the layout counts matches once for the whole corpus, not per
+        # segment; the root merge only sums the counts
+        parts.append((self.segment_ids[0], int(count), _partial([], [])))
+        return parts
+
+
+def _single_term_topk(group, fn_lookup, k: int):
+    """One term: bound-ordered decode per salt row with a shared
+    threshold (docid-order WAND cannot skip for one cursor). The count
+    is EXACT from term-dict metadata — the global twin of the segment
+    layout's single-term path (wand.single_term_topk)."""
+    if not group:
+        return _empty3()
+    acc_d = np.zeros(0, dtype=np.int64)
+    acc_s = np.zeros(0, dtype=np.float32)
+    theta = float("-inf")
+    for cur in sorted(group, key=lambda c: -c.max_score):
+        if cur.max_score < theta:
+            continue
+        d, s = single_cursor_topk(cur, fn_lookup, "freq", k, theta)
+        acc_d = np.concatenate([acc_d, d])
+        acc_s = np.concatenate([acc_s, s])
+        if len(acc_s) >= k:
+            kth = float(np.partition(acc_s.astype(np.float64), -k)[-k])
+            theta = kth - abs(kth) * 1e-5
+    return acc_d, acc_s, int(sum(c.doc_freq for c in group))
+
+
+def _or_exhaustive(groups: list, fn_lookup):
+    """Exact-count OR: decode every block of every cursor, score the
+    union in query order (bit-identical to the segment path's sums)."""
+    parts = []
+    for g in groups:
+        if g is None:
+            continue
+        # a term's salt cursors cover ascending disjoint docid ranges
+        ds, ss = zip(*(c.decode_blocks(np.arange(len(c.block_last)),
+                                       fn_lookup, "freq") for c in g))
+        parts.append((np.concatenate(ds), np.concatenate(ss)))
+    docs = (np.unique(np.concatenate([d for d, _ in parts])) if parts
+            else np.zeros(0, dtype=np.int64))
+    return docs, _combine_in_query_order(parts, docs), len(docs)

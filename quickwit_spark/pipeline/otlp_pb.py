@@ -114,10 +114,6 @@ def _i64(v: int) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def _fixed64(v: bytes) -> int:
-    return struct.unpack("<Q", v)[0]
-
-
 def _ns64(v: bytes) -> int | None:
     """fixed64 timestamp -> int64-safe nanos. 0 means unset; values
     beyond int64 range (a hostile/corrupt payload — fixed64 is unsigned

@@ -181,14 +181,6 @@ def ast_from_json(d: dict) -> Node:
     return cls(**kw)
 
 
-def bool_and(*nodes: Node) -> Bool:
-    return Bool(must=tuple(nodes))
-
-
-def bool_or(*nodes: Node) -> Bool:
-    return Bool(should=tuple(nodes))
-
-
 def collect_range_filters(node: Node) -> list["Range"]:
     """Extract Range constraints from conjunctive (must/filter) positions —
     used for segment min/max pruning (the reference extracts timestamp

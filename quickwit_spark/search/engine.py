@@ -298,9 +298,12 @@ class SegmentReader:
 
     def fieldnorm_ids(self) -> np.ndarray:
         if self._fn_ids is None:
-            self._fn_ids = self._docs_column("fieldnorm_id").to_numpy(
-                ).astype(np.int64)
-            self._pin(self._fn_ids.nbytes)
+            fn = self._docs_column("fieldnorm_id").to_numpy().astype(
+                np.int64)
+            with _READER_LOCK:  # concurrent cold searches pin it once
+                if self._fn_ids is None:
+                    self._fn_ids = fn
+                    self._pin(fn.nbytes)
         return self._fn_ids
 
     def doc_column(self, col: str) -> np.ndarray:
@@ -460,17 +463,23 @@ class SegmentReader:
             path = os.path.join(self.seg_dir, "termdict.parquet")
             if os.path.getsize(path) > self.CACHE_FILE_BYTES:
                 return None
-            self._termdict = pq.read_table(path).to_pandas()
-            self._term_index = {t: i for i, t in
-                                enumerate(self._termdict["term"])}
-            # views of the frame's own buffers: no extra bytes to pin
-            self._term_ids = self._termdict["term_id"].to_numpy()
-            self._term_dfs = self._termdict["doc_freq"].to_numpy()
-            # dict slots reference the SAME str objects as the frame
-            # (already deep-counted); ~100 B/slot covers the hash table
-            self._pin(int(self._termdict.memory_usage(
-                index=False, deep=True).sum())
-                + 100 * len(self._term_index))
+            td = pq.read_table(path).to_pandas()
+            index = {t: i for i, t in enumerate(td["term"])}
+            with _READER_LOCK:  # concurrent cold searches pin it once
+                if self._termdict is None:
+                    self._term_index = index
+                    # views of the frame's own buffers: no extra bytes
+                    self._term_ids = td["term_id"].to_numpy()
+                    self._term_dfs = td["doc_freq"].to_numpy()
+                    # set last: a lock-free reader that sees the frame
+                    # sees its index too
+                    self._termdict = td
+                    # dict slots reference the SAME str objects as the
+                    # frame (already deep-counted); ~100 B/slot covers
+                    # the hash table
+                    self._pin(int(td.memory_usage(index=False,
+                                                  deep=True).sum())
+                              + 100 * len(index))
         return self._termdict
 
     def lookup_terms(self, terms: list[str]) -> pd.DataFrame:
@@ -697,29 +706,39 @@ class SegmentReader:
 
     def postings_rows(self, term_ids: list[int],
                       columns: list[str] | None = None) -> pd.DataFrame:
-        path = os.path.join(self.seg_dir, "postings.parquet")
-        if self._postings_tbl is None and \
-                os.path.getsize(path) <= self.CACHE_FILE_BYTES:
-            self._postings_tbl = pq.read_table(path)
-            self._pin(self._postings_tbl.nbytes)
         # dedup like the cold path's `in` filter (take() would duplicate
         # rows for duplicate ids — a silent contract mismatch)
         ids = sorted({int(i) for i in term_ids})
-        if self._postings_tbl is not None:
+        tbl = self._postings_table()
+        if tbl is not None:
             # postings rows are ordered by term_id == row index; select
             # BEFORE take so a metadata/docid-only request (wildcard and
             # regex unions ask for docid_blob alone) skips the
             # arrow->pandas conversion of the other per-block list
             # columns — that conversion dominates warm latency
-            tbl = self._postings_tbl
             if columns is not None:
                 tbl = tbl.select(columns)
             return tbl.take(ids).to_pandas()
-        # cold path: prune to the requested columns so metadata-only
-        # lookups (WAND bounds) never pay the posting-blob byte read
-        t = pq.read_table(path, filters=[("term_id", "in", ids)],
-                          columns=columns)
+        # uncached (large file): prune to the requested columns so
+        # metadata-only lookups (WAND bounds) never pay the posting-blob
+        # byte read
+        t = pq.read_table(os.path.join(self.seg_dir, "postings.parquet"),
+                          filters=[("term_id", "in", ids)], columns=columns)
         return t.to_pandas()
+
+    def _postings_table(self) -> pa.Table | None:
+        """The whole postings file, read and pinned once when it is at
+        most CACHE_FILE_BYTES; None above the cap."""
+        if self._postings_tbl is None:
+            path = os.path.join(self.seg_dir, "postings.parquet")
+            if os.path.getsize(path) > self.CACHE_FILE_BYTES:
+                return None
+            tbl = pq.read_table(path)
+            with _READER_LOCK:  # concurrent cold searches pin it once
+                if self._postings_tbl is None:
+                    self._postings_tbl = tbl
+                    self._pin(tbl.nbytes)
+        return self._postings_tbl
 
     # -- leaf evaluation -----------------------------------------------------
 
@@ -740,14 +759,9 @@ class SegmentReader:
         """Fetch posting-row cells straight from the cached arrow table —
         no arrow->pandas conversion (that conversion dominates warm query
         latency because of the per-block list columns)."""
-        if self._postings_tbl is None:
-            path = os.path.join(self.seg_dir, "postings.parquet")
-            if os.path.getsize(path) <= self.CACHE_FILE_BYTES:
-                self._postings_tbl = pq.read_table(path)
-                self._pin(self._postings_tbl.nbytes)
-        if self._postings_tbl is not None:
-            return [self._postings_tbl.column(c)[term_id].as_py()
-                    for c in cols]
+        tbl = self._postings_table()
+        if tbl is not None:
+            return [tbl.column(c)[term_id].as_py() for c in cols]
         row = self.postings_rows([term_id], columns=cols).iloc[0]
         return [row[c] for c in cols]
 
@@ -2091,24 +2105,34 @@ class IndexSearcher:
         pagination without collecting offset+k everywhere
         (search.proto:237-240)."""
         node = self.parse(query)
-        segs = self._prune(node)
-        need = offset + k
-        use_wand = not count_all and search_after is None
-        parts: list[tuple[str, int, np.ndarray]] = []
-        if self._fan_out_wanted([segs]):
-            parts = self._score_fan_out([node], [segs], [need], use_wand,
-                                        search_after)[0]
-        elif use_wand and len(segs) > 1:
-            parts = self._leaf_bound_walk(segs, node, need)
-        else:
-            for seg in segs:
-                seg_dir = os.path.join(self.index_dir, "segments",
-                                       seg["segment_id"])
-                cnt, top = segment_top_k(seg_dir, node, need, self.tokenizer,
-                                         self.text_field, use_wand,
-                                         search_after)
-                parts.append((seg["segment_id"], cnt, top))
+        parts = self._leaf_parts(node, offset + k,
+                                 not count_all and search_after is None,
+                                 search_after)
         return self._merge_and_fetch(parts, k, offset, fetch_fields)
+
+    def _leaf_parts(self, node: A.Node, need: int, use_wand: bool,
+                    search_after: tuple | None
+                    ) -> list[tuple[str, int, np.ndarray]]:
+        """The leaf phase of search: prune, then score the surviving
+        segments by the Spark fan-out, the cross-segment bound walk or an
+        in-process loop. Returns (segment_id, match_count, top) parts,
+        each top the segment's best `need` hits as a PARTIAL_DTYPE
+        array, for the root merge."""
+        segs = self._prune(node)
+        if self._fan_out_wanted([segs]):
+            return self._score_fan_out([node], [segs], [need], use_wand,
+                                       search_after)[0]
+        if use_wand and len(segs) > 1:
+            return self._leaf_bound_walk(segs, node, need)
+        parts = []
+        for seg in segs:
+            seg_dir = os.path.join(self.index_dir, "segments",
+                                   seg["segment_id"])
+            cnt, top = segment_top_k(seg_dir, node, need, self.tokenizer,
+                                     self.text_field, use_wand,
+                                     search_after)
+            parts.append((seg["segment_id"], cnt, top))
+        return parts
 
     def _merge_and_fetch(self, parts: list[tuple[str, int, np.ndarray]],
                          k: int, offset: int,

@@ -296,14 +296,21 @@ class SearchHttpServer:
         t0 = _time.perf_counter()
         status = 500
         try:
-            self._dispatch_inner(h, method)
-            status = getattr(h, "_qw_status", 200)
+            status, ctype, body = self._respond(h, method)
         finally:
+            # counted BEFORE the response is written: a client that has
+            # read it must find it in the next /metrics
             self.metrics.end(group, method, status,
                              _time.perf_counter() - t0)
+        h.send_response(status)
+        h.send_header("Content-Type", ctype)
+        h.send_header("Content-Length", str(len(body)))
+        h.end_headers()
+        h.wfile.write(body)
 
-    def _dispatch_inner(self, h: BaseHTTPRequestHandler,
-                        method: str) -> None:
+    def _respond(self, h: BaseHTTPRequestHandler,
+                 method: str) -> tuple[int, str, bytes]:
+        """Route one request: (status, content type, body)."""
         try:
             parts = urlsplit(h.path)
             params = dict(parse_qsl(parts.query))
@@ -356,15 +363,8 @@ class SearchHttpServer:
                               "reason": msg},
                     "message": msg, "status": 500}
         if isinstance(resp, _RawBody):
-            body, ctype = resp.data, resp.content_type
-        else:
-            body, ctype = json.dumps(resp).encode(), "application/json"
-        h._qw_status = status
-        h.send_response(status)
-        h.send_header("Content-Type", ctype)
-        h.send_header("Content-Length", str(len(body)))
-        h.end_headers()
-        h.wfile.write(body)
+            return status, resp.content_type, resp.data
+        return status, "application/json", json.dumps(resp).encode()
 
     # hard bound on BOTH the raw request read (Content-Length checked
     # before buffering) and decompressed output (enforced during

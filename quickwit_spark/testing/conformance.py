@@ -49,7 +49,6 @@ from __future__ import annotations
 import ast
 import copy
 import glob
-import gzip
 import json
 import os
 import random
@@ -525,8 +524,3 @@ class ScenarioRunner:
                 lines.append(f"       {r.failure.detail[:500]}")
         lines.append(f"{n_ok}/{len(self.results)} scenarios green")
         return "\n".join(lines)
-
-
-def gunzip_body(data: bytes) -> bytes:
-    """Helper for inspecting the corpus' gzipped bulk fixtures."""
-    return gzip.decompress(data)

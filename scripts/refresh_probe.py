@@ -73,34 +73,32 @@ def main() -> None:
 
     import numpy as np
 
-    def _keys(searcher, res):
+    from quickwit_spark.search import ast as A
+
+    def _keys(searcher, terms, op, count_all=True):
         # refresh appends new segments to the END of the docid space
-        # while a rebuild re-sorts all segment ids, so global docids are
-        # NOT comparable across the two layouts — map each hit to its
-        # stable (segment_id, local_doc) address + exact f32 score
-        docs = res["global_doc"].to_numpy()
-        si = np.searchsorted(searcher.offsets, docs, side="right") - 1
-        return [(searcher.segment_ids[int(s)],
-                 int(d - searcher.offsets[int(s)]),
-                 float(np.float32(sc)))
-                for s, d, sc in zip(si, docs, res["score"])]
+        # while a rebuild re-sorts all segment ids, so compare hits by
+        # their stable (segment_id, local_doc) address + exact f32 score
+        clauses = tuple(A.Term(searcher.text_field, t) for t in terms)
+        node = A.Bool(must=clauses) if op == "and" else \
+            A.Bool(should=clauses)
+        res = searcher.search(node, k=10, fetch_fields=False,
+                              count_all=count_all)
+        return [(h.segment_id, h.doc_id, float(np.float32(h.score)))
+                for h in res.hits]
 
     queries = [(["merge", "query"], "or"), (["get", "fetch"], "and"),
                (["codec"], "or")]
     g = GlobalIndexSearcher(args.work_dir)
-    refreshed = [_keys(g, g.search_terms(t, operator=op, k=10)[1])
-                 for t, op in queries]
-    pruned = [_keys(g, g.search_terms(t, operator=op, k=10,
-                                      count_all=False)[1])
-              for t, op in queries]
+    refreshed = [_keys(g, t, op) for t, op in queries]
+    pruned = [_keys(g, t, op, count_all=False) for t, op in queries]
 
     # the cost the refresh avoided: a full rebuild over the same manifest
     t0 = time.perf_counter()
     build_term_partitioned(spark, args.work_dir, force=True)
     rebuild_sec = time.perf_counter() - t0
     g2 = GlobalIndexSearcher(args.work_dir)
-    truth = [_keys(g2, g2.search_terms(t, operator=op, k=10)[1])
-             for t, op in queries]
+    truth = [_keys(g2, t, op) for t, op in queries]
     # docid-order tie-breaks legitimately differ between the two docid
     # spaces: the score lists must be identical, and the hit addresses
     # must match for every score strictly above the k-th (docs TIED at

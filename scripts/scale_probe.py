@@ -217,16 +217,15 @@ def main() -> None:
         from quickwit_spark.index.global_index import GlobalIndexSearcher
         g = GlobalIndexSearcher(index_dir)
         out["g_or_pruned_sec"] = round(_median3(
-            lambda: g.search_terms(terms, operator="or", k=10,
-                                   count_all=False)), 4)
+            lambda: g.search(q_or, k=10, fetch_fields=False,
+                             count_all=False)), 4)
         STATS["blocks_decoded"] = STATS["blocks_total"] = 0
-        g.search_terms(terms, operator="or", k=10, count_all=False)
+        g.search(q_or, k=10, fetch_fields=False, count_all=False)
         if STATS["blocks_total"]:
             out["g_block_skip_ratio"] = round(
                 1 - STATS["blocks_decoded"] / STATS["blocks_total"], 4)
         out["g_and_sec"] = round(_median3(
-            lambda: g.search_terms(["merge", "query"], operator="and",
-                                   k=10)), 4)
+            lambda: g.search(q_and, k=10, fetch_fields=False)), 4)
 
     print(json.dumps(out))
 

@@ -34,7 +34,7 @@ def main() -> None:
                     help="raw ES _search JSON body (overrides --query)")
     ap.add_argument("--global-layout", action="store_true",
                     help="query the term-partitioned global layout "
-                         "(terms from --query, AND)")
+                         "(term AND/OR queries over the text field)")
     ap.add_argument("--wand", action="store_true",
                     help="block-max pruned top-k (count becomes a "
                          "lower bound for OR)")
@@ -53,23 +53,10 @@ def main() -> None:
 
     if args.global_layout:
         from quickwit_spark.index.global_index import GlobalIndexSearcher
-        g = GlobalIndexSearcher(args.index_dir)
-        terms = [t for t in args.query.split()
-                 if ":" not in t and t != "*"]
-        if not terms:
-            raise SystemExit("--global-layout needs bare query terms "
-                             "(the term-partitioned layout answers "
-                             "term AND/OR queries)")
-        cnt, res = g.search_terms(terms, operator="and", k=args.k,
-                                  count_all=not args.wand)
-        fetched = g.fetch(res)
-        print(json.dumps({
-            "num_hits": int(cnt),
-            "hits": json.loads(fetched.to_json(orient="records"))}))
-        return
-
-    from quickwit_spark.search.engine import IndexSearcher
-    s = IndexSearcher(args.index_dir, spark=spark)
+        s = GlobalIndexSearcher(args.index_dir)
+    else:
+        from quickwit_spark.search.engine import IndexSearcher
+        s = IndexSearcher(args.index_dir, spark=spark)
     if args.es_body:
         from quickwit_spark.search.es_dsl import es_search
         print(json.dumps(es_search(s, json.loads(args.es_body))))

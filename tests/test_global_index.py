@@ -42,6 +42,16 @@ def dirs(tmp_path_factory, spark):
     return cfg.index_dir, merged_dir, pdf
 
 
+def _bool(terms, op):
+    clauses = tuple(A.Term("content", t) for t in terms)
+    return A.Bool(must=clauses) if op == "and" else A.Bool(should=clauses)
+
+
+def _ranked(res):
+    """(segment_id, doc_id, score) of each hit, in rank order."""
+    return [(h.segment_id, h.doc_id, h.score) for h in res.hits]
+
+
 QUERIES = [
     (["merge"], "and"),
     (["query", "index"], "and"),
@@ -56,19 +66,87 @@ def test_global_matches_merged_segment(dirs):
     gs = GlobalIndexSearcher(base_dir)
     ms = IndexSearcher(merged_dir)
     for terms, op in QUERIES:
-        node = A.Bool(must=tuple(A.Term("content", t) for t in terms)) \
-            if op == "and" else \
-            A.Bool(should=tuple(A.Term("content", t) for t in terms))
+        node = _bool(terms, op)
         k = 400
         mres = ms.search(node, k=k, fetch_fields=True)
-        cnt, gres = gs.search_terms(terms, operator=op, k=k)
-        assert cnt == mres.num_hits, (terms, op)
-        fetched = gs.fetch(gres)
-        got = sorted((round(float(np.float32(r.score)), 7), r.repo, r.path)
-                     for r in fetched.itertuples())
+        gres = gs.search(node, k=k)
+        assert gres.num_hits == mres.num_hits, (terms, op)
+        got = sorted((round(float(np.float32(h.score)), 7),
+                      h.doc["repo"], h.doc["path"]) for h in gres.hits)
         want = sorted((round(float(np.float32(h.score)), 7),
                        h.doc["repo"], h.doc["path"]) for h in mres.hits)
         assert got == want, (terms, op)
+
+
+ES_BODIES = [
+    {"match": {"content": "fetch codec"}},
+    {"match": {"content": {"query": "query index", "operator": "and"}}},
+    {"term": {"content": "merge"}},
+]
+
+
+def test_es_search_matches_merged_segment(dirs):
+    """The ES facade reaches the global layout through the one search
+    pipeline: hits.total and every (score, repo, path) equal the
+    fully-merged segment's."""
+    from quickwit_spark.search.es_dsl import es_search
+    base_dir, merged_dir, _ = dirs
+    gs = GlobalIndexSearcher(base_dir)
+    ms = IndexSearcher(merged_dir)
+
+    def hits(resp):
+        return sorted((round(float(np.float32(h["_score"])), 7),
+                       h["_source"]["repo"], h["_source"]["path"])
+                      for h in resp["hits"]["hits"])
+    for query in ES_BODIES:
+        body = {"query": query, "size": N_DOCS + 10}
+        want = es_search(ms, body)
+        got = es_search(gs, body)
+        assert want["hits"]["total"]["value"] > 0, query
+        assert got["hits"]["total"] == want["hits"]["total"], query
+        assert hits(got) == hits(want), query
+
+
+def test_global_refuses_what_it_cannot_answer(dirs):
+    """No positions, filters or cursors in the term-partitioned layout:
+    a phrase, a filter and a search_after are refused, not mis-scored."""
+    base_dir, _, _ = dirs
+    gs = GlobalIndexSearcher(base_dir)
+    with pytest.raises(ValueError):
+        gs.search(A.Phrase("content", "merge query"), k=5)
+    with pytest.raises(ValueError):
+        gs.search(A.Bool(must=(A.Term("content", "merge"),),
+                         filter=(A.Term("lang", "python"),)), k=5)
+    first = gs.search(A.Term("content", "merge"), k=5)
+    with pytest.raises(ValueError):
+        gs.search(A.Term("content", "merge"), k=5,
+                  search_after=first.next_cursor)
+
+
+def test_global_matches_merged_segment_under_a_one_byte_budget(
+        dirs, monkeypatch):
+    """Fieldnorms come from the segment readers, pinned under the reader
+    byte budget: with every reader evicted as soon as another opens, the
+    global layout still equals the merged segment."""
+    import quickwit_spark.search.engine as eng
+    monkeypatch.setattr(eng, "_READER_CACHE", type(eng._READER_CACHE)())
+    monkeypatch.setattr(eng, "READER_CACHE_BUDGET_BYTES", 1)
+    base_dir, merged_dir, _ = dirs
+    gs = GlobalIndexSearcher(base_dir)
+    ms = IndexSearcher(merged_dir)
+    for terms, op in QUERIES:
+        for count_all in (True, False):
+            node = _bool(terms, op)
+            mres = ms.search(node, k=N_DOCS, count_all=True)
+            gres = gs.search(node, k=N_DOCS, count_all=count_all)
+            if count_all or op == "and" or len(terms) == 1:
+                assert gres.num_hits == mres.num_hits, (terms, op)
+            got = sorted((np.float32(h.score), h.doc["repo"],
+                          h.doc["path"]) for h in gres.hits)
+            want = sorted((np.float32(h.score), h.doc["repo"],
+                           h.doc["path"]) for h in mres.hits)
+            assert got == want, (terms, op, count_all)
+    assert len(eng._READER_CACHE) == 1
 
 
 def test_salting_does_not_change_results(dirs, spark, tmp_path):
@@ -86,11 +164,10 @@ def test_salting_does_not_change_results(dirs, spark, tmp_path):
     rows = pq.read_table(posting_dir_paths(salted_dir)[0]).to_pandas()
     assert rows.groupby("term")["salt"].nunique().max() > 1
     for terms, op in QUERIES:
-        c1, r1 = gs_plain.search_terms(terms, operator=op, k=50)
-        c2, r2 = gs_salt.search_terms(terms, operator=op, k=50)
-        assert c1 == c2
-        assert r1["global_doc"].tolist() == r2["global_doc"].tolist()
-        assert r1["score"].tolist() == r2["score"].tolist()
+        r1 = gs_plain.search(_bool(terms, op), k=50, fetch_fields=False)
+        r2 = gs_salt.search(_bool(terms, op), k=50, fetch_fields=False)
+        assert r1.num_hits == r2.num_hits
+        assert _ranked(r1) == _ranked(r2)
 
 
 def test_global_touches_only_term_partitions(dirs):
@@ -175,28 +252,32 @@ def test_global_wand_pruned_or(spark, tmp_path):
         .sort_values()
     mid = dfsum[(dfsum >= 30) & (dfsum <= 120)].index[0]
     terms = [mid, *dfsum.index[-2:]]
-    n_ex, ex = g.search_terms(terms, operator="or", k=10)
+    node = _bool(terms, "or")
+    ex = g.search(node, k=10, fetch_fields=False)
     wand.STATS["blocks_decoded"] = wand.STATS["blocks_total"] = 0
-    n_pr, pr = g.search_terms(terms, operator="or", k=10,
-                              count_all=False)
-    assert ex["global_doc"].tolist() == pr["global_doc"].tolist()
-    assert np.array_equal(ex["score"].to_numpy().astype(np.float32),
-                          pr["score"].to_numpy().astype(np.float32))
-    assert n_pr <= n_ex
+    pr = g.search(node, k=10, fetch_fields=False, count_all=False)
+    assert [h[:2] for h in _ranked(ex)] == [h[:2] for h in _ranked(pr)]
+    assert np.array_equal(np.float32([h.score for h in ex.hits]),
+                          np.float32([h.score for h in pr.hits]))
+    assert pr.num_hits <= ex.num_hits
     skip = 1 - wand.STATS["blocks_decoded"] / wand.STATS["blocks_total"]
     assert skip >= 0.5, wand.STATS
 
 
 def test_global_wand_pruned_and(spark, tmp_path):
     """Pruned AND on the global layout (skip-pointer intersection over
-    salt-cursor groups): exact count, identical docids and f32 scores,
-    fewer blocks decoded than total."""
-    import numpy as np
-
+    salt-cursor groups): the fully-merged segment's exact count, hits
+    and f32 scores, with fewer blocks decoded than total."""
     from quickwit_spark.search import wand
     pdf = corpus_pandas(3000, seed=7, skew=True)
     cfg = IndexConfig(index_uid="ga", index_dir=str(tmp_path / "ga"))
     build_index_pandas(pdf, cfg, num_partitions=4)
+    merged_dir = str(tmp_path / "ga_merged")
+    shutil.copytree(cfg.index_dir, merged_dir)
+    run_merges(merged_dir, policy=StableLogMergePolicy(MergePolicyConfig(
+        merge_factor=4, max_merge_factor=12, min_level_num_docs=10,
+        split_num_docs_target=10_000_000)))
+    assert len(IndexSearcher(merged_dir).manifest.segments()) == 1
     build_term_partitioned(spark, cfg.index_dir, num_term_partitions=4,
                            salt_df_threshold=1000, salt_group_segments=2)
     g = GlobalIndexSearcher(cfg.index_dir)
@@ -212,14 +293,15 @@ def test_global_wand_pruned_and(spark, tmp_path):
         .sort_values()
     rare = dfsum[(dfsum >= 5) & (dfsum <= 30)].index[0]
     terms = [rare, dfsum.index[-1]]  # rare + universal (salted) term
-    n_ex, ex = g.search_terms(terms, operator="and", k=10)
+    node = _bool(terms, "and")
+    ex = IndexSearcher(merged_dir).search(node, k=10, count_all=True)
     wand.STATS["blocks_decoded"] = wand.STATS["blocks_total"] = 0
-    n_pr, pr = g.search_terms(terms, operator="and", k=10,
-                              count_all=False)
-    assert n_pr == n_ex  # AND count stays exact
-    assert ex["global_doc"].tolist() == pr["global_doc"].tolist()
-    assert np.array_equal(ex["score"].to_numpy().astype(np.float32),
-                          pr["score"].to_numpy().astype(np.float32))
+    pr = g.search(node, k=10, count_all=False)
+    assert pr.num_hits == ex.num_hits  # AND count stays exact
+    assert [(h.doc["repo"], h.doc["path"]) for h in ex.hits] == \
+        [(h.doc["repo"], h.doc["path"]) for h in pr.hits]
+    assert np.array_equal(np.float32([h.score for h in ex.hits]),
+                          np.float32([h.score for h in pr.hits]))
     assert wand.STATS["blocks_decoded"] < wand.STATS["blocks_total"]
 
 
@@ -323,7 +405,10 @@ def test_global_single_term_fast_path(spark, dirs):
     from quickwit_spark.testing.bm25_f64 import hit_scores_f64
     base_dir, merged_dir, _ = dirs
     g = GlobalIndexSearcher(base_dir)
-    cnt_fast, fast = g.search_terms(["merge"], operator="or", k=10)
+    res = g.search(A.Term("content", "merge"), k=10, fetch_fields=False)
+    cnt_fast = res.num_hits
+    fast = [int(g.offsets[g.segment_ids.index(h.segment_id)]) + h.doc_id
+            for h in res.hits]
 
     def keys(r):
         return zip(r.doc_column("repo"), r.doc_column("path"),
@@ -342,8 +427,8 @@ def test_global_single_term_fast_path(spark, dirs):
     scores = hit_scores_f64(merged, merged_global, ["merge"], hits)
     top = np.lexsort((-hits, -scores))[:10]
     assert cnt_fast == df
-    assert list(fast["global_doc"]) == list(hits[top])
-    for a, b in zip(fast["score"], scores[top]):
+    assert fast == list(hits[top])
+    for a, b in zip([h.score for h in res.hits], scores[top]):
         assert abs(float(a) - float(b)) < 1e-3
 
 
@@ -369,5 +454,5 @@ def test_global_build_with_empty_segment(spark, tmp_path):
     build_term_partitioned(spark, cfg.index_dir, num_term_partitions=4)
     g = GlobalIndexSearcher(cfg.index_dir)
     assert g.num_docs == 3
-    n, res = g.search_terms(["merge"], operator="or", k=5)
-    assert n == 2 and len(res) == 2
+    res = g.search(A.Term("content", "merge"), k=5)
+    assert res.num_hits == 2 and len(res.hits) == 2

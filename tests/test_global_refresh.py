@@ -19,6 +19,7 @@ from quickwit_spark.index.global_index import (
     refresh_term_partitioned,
 )
 from quickwit_spark.index.manifest import Manifest
+from quickwit_spark.search import ast as A
 from quickwit_spark.streaming.incremental import ingest_batch
 
 
@@ -37,9 +38,18 @@ def _ingest_more(spark, cfg, seed, avg_tokens, batch_id=1):
                  partitions_per_batch=4)
 
 
+def _bool(terms, op):
+    clauses = tuple(A.Term("content", t) for t in terms)
+    return A.Bool(must=clauses) if op == "and" else A.Bool(should=clauses)
+
+
+def _scores(res, ndigits):
+    return [round(float(h.score), ndigits) for h in res.hits]
+
+
 def _score_profile(g, terms, op, k=15):
-    cnt, res = g.search_terms(terms, operator=op, k=k)
-    return cnt, [round(float(s), 4) for s in res["score"]]
+    res = g.search(_bool(terms, op), k=k, fetch_fields=False)
+    return res.num_hits, _scores(res, 4)
 
 
 QUERIES = [(["merge", "query"], "and"), (["fetch", "codec"], "or"),
@@ -60,12 +70,11 @@ def test_refresh_appends_and_matches_full_rebuild(spark, tmp_path):
 
     # pruned path on the refreshed layout stays rank-identical
     for terms, op in QUERIES:
-        cnt_e, res_e = g.search_terms(terms, operator=op, k=10)
-        cnt_p, res_p = g.search_terms(terms, operator=op, k=10,
-                                      count_all=False)
-        assert [round(float(s), 5) for s in res_e["score"]] == \
-            [round(float(s), 5) for s in res_p["score"]]
-        assert cnt_p <= cnt_e
+        res_e = g.search(_bool(terms, op), k=10, fetch_fields=False)
+        res_p = g.search(_bool(terms, op), k=10, fetch_fields=False,
+                         count_all=False)
+        assert _scores(res_e, 5) == _scores(res_p, 5)
+        assert res_p.num_hits <= res_e.num_hits
 
     build_term_partitioned(spark, d, num_term_partitions=8, force=True)
     g2 = GlobalIndexSearcher(d)
@@ -86,11 +95,10 @@ def test_refresh_bound_soundness_flag(spark, tmp_path):
     refresh_term_partitioned(spark, d)
     g = GlobalIndexSearcher(d)
     assert not g.ratio_bounds_sound
-    cnt_e, res_e = g.search_terms(["fetch", "codec"], operator="or", k=10)
-    cnt_p, res_p = g.search_terms(["fetch", "codec"], operator="or",
-                                  k=10, count_all=False)
-    assert [round(float(s), 5) for s in res_e["score"]] == \
-        [round(float(s), 5) for s in res_p["score"]]
+    node = _bool(["fetch", "codec"], "or")
+    res_e = g.search(node, k=10, fetch_fields=False)
+    res_p = g.search(node, k=10, fetch_fields=False, count_all=False)
+    assert _scores(res_e, 5) == _scores(res_p, 5)
 
 
 def test_refresh_shrinking_avg_keeps_ratio_bounds(spark, tmp_path):
@@ -116,8 +124,8 @@ def test_refresh_noop_and_removed_segment_fallback(spark, tmp_path):
     assert sorted(gm2["segment_ids"]) == sorted(
         s["segment_id"] for s in Manifest.load(d).segments())
     g = GlobalIndexSearcher(d)
-    cnt, res = g.search_terms(["merge"], operator="or", k=5)
-    assert cnt > 0 and len(res) == 5
+    res = g.search(A.Term("content", "merge"), k=5)
+    assert res.num_hits > 0 and len(res.hits) == 5
 
 
 def test_refresh_crash_rerun_is_idempotent(spark, tmp_path):

@@ -48,9 +48,11 @@ def _match_keys(searcher, query):
 
 
 def _global_profile(g, terms, op):
-    cnt, df = g.search_terms(terms, operator=op, k=1000)
-    return cnt, [round(float(s), 5)
-                 for s in sorted(df["score"], reverse=True)]
+    clauses = tuple(A.Term("content", t) for t in terms)
+    res = g.search(A.Bool(must=clauses) if op == "and"
+                   else A.Bool(should=clauses), k=1000, fetch_fields=False)
+    return res.num_hits, [round(float(s), 5) for s in
+                          sorted((h.score for h in res.hits), reverse=True)]
 
 
 @pytest.mark.parametrize("seed", [5, 19])

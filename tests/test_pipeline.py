@@ -150,11 +150,10 @@ def test_global_fetch_zero_hits(spark, tmp_path):
                       sha_col=None)
     q.build_index_pandas(pdf, cfg, num_partitions=1)
     build_term_partitioned(spark, cfg.index_dir, num_term_partitions=2)
+    from quickwit_spark.search import ast as A
     g = GlobalIndexSearcher(cfg.index_dir)
-    n, res = g.search_terms(["zzznotaterm"], operator="or", k=5)
-    assert n == 0 and len(res) == 0
-    fetched = g.fetch(res)
-    assert len(fetched) == 0
+    res = g.search(A.Term("content", "zzznotaterm"), k=5, fetch_fields=True)
+    assert res.num_hits == 0 and len(res.hits) == 0
 
 
 

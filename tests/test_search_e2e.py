@@ -540,6 +540,50 @@ def test_reader_budget_check_survives_a_concurrent_reader_open(
     assert list(eng._READER_CACHE) == dirs
 
 
+def test_concurrent_cold_searches_pin_each_structure_once(
+        tmp_path, monkeypatch):
+    """Four threads searching one cold segment at once share its term
+    dictionary, postings table and fieldnorms: each is decoded and
+    pinned once, so the reader's footprint equals one cold search's."""
+    import threading
+
+    import quickwit_spark.search.engine as eng
+
+    cfg = IndexConfig(index_uid="cold", index_dir=str(tmp_path / "cold"))
+    build_index_pandas(corpus_pandas(3000, seed=5), cfg, num_partitions=1)
+    # exact-count OR: term dict, postings and fieldnorms, no WAND cursors
+    node = A.Bool(should=(A.Term("content", "merge"),
+                          A.Term("content", "query")))
+
+    def cold_footprint(n_threads) -> tuple[int, list]:
+        monkeypatch.setattr(eng, "_READER_CACHE", type(eng._READER_CACHE)())
+        eng.clear_leaf_cache()
+        s = IndexSearcher(cfg.index_dir)
+        barrier = threading.Barrier(n_threads, timeout=60)
+        out = [None] * n_threads
+
+        def run(i):
+            barrier.wait()
+            res = s.search(node, k=10, fetch_fields=False)
+            out[i] = [(h.segment_id, h.doc_id, h.score) for h in res.hits]
+
+        ts = [threading.Thread(target=run, args=(i,))
+              for i in range(n_threads)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=120)
+            assert not t.is_alive()
+        (reader,) = eng._READER_CACHE.values()
+        return reader.cache_footprint, out
+
+    single, (hits,) = cold_footprint(1)
+    assert hits and single > 0
+    threaded, outs = cold_footprint(4)
+    assert outs == [hits] * 4
+    assert threaded == single
+
+
 def test_claim_router_refuses_mixed_resume(built, tmp_path):
     """Partition checkpoints are only resumable under the SAME routing
     hash + partition count; a mixed resume would silently duplicate and

@@ -135,9 +135,9 @@ def _register_node_types() -> None:
 
 def ast_to_json(node: Node) -> dict:
     """Tagged-dict encoding of the AST ({"t": type, <fields>}), safe to
-    persist in world-readable KV files. The reference's scroll contexts
-    store serialized protos (scroll_context.rs) — never code objects;
-    pickle of attacker-writable files is arbitrary code execution."""
+    persist in world-readable files (the manifest's delete tasks). The
+    reference persists serialized protos — never code objects; pickle
+    of attacker-writable files is arbitrary code execution."""
     import dataclasses
     import datetime
     if not _NODE_TYPES:

@@ -1978,6 +1978,32 @@ def segment_sort_top_k(seg_dir: str, node: A.Node, k: int, tokenizer: str,
     return count, df.reset_index(drop=True)
 
 
+def root_merge(parts: list[tuple], k: int, offset: int
+               ) -> tuple[int, list, list[int], list[float], float | None]:
+    """Root merge of leaf parts (merge_fruits, root.rs:753-771). Each
+    part is (segment key, match_count, PARTIAL_DTYPE top); keys are
+    segment ids, or (index_uid, segment_id) tuples for a union. Global
+    order is (score desc, key desc, doc_id desc), by one lexsort over
+    the concatenated partials. Returns (num_hits, winner keys, doc ids,
+    scores) of the offset/k slice, and the best score over every part
+    (None when no part holds a hit)."""
+    num_hits = sum(c for _, c, _ in parts)
+    tops = [(key, top) for key, _cnt, top in parts if len(top)]
+    if not tops:
+        return num_hits, [], [], [], None
+    # a segment's ordinal is its key's rank, so ordinals order like keys
+    keys = sorted({key for key, _ in tops})
+    rank = {key: i for i, key in enumerate(keys)}
+    allc = np.concatenate([top for _, top in tops])
+    seg_ord = np.repeat([rank[key] for key, _ in tops],
+                        [len(top) for _, top in tops])
+    order = np.lexsort((-allc["doc_id"], -seg_ord, -allc["score"]))
+    win = order[offset:offset + k]
+    return (num_hits, [keys[o] for o in seg_ord[win].tolist()],
+            allc["doc_id"][win].tolist(), allc["score"][win].tolist(),
+            float(allc["score"][order[0]]))
+
+
 @dataclass
 class SearchHit:
     score: float
@@ -2137,30 +2163,14 @@ class IndexSearcher:
     def _merge_and_fetch(self, parts: list[tuple[str, int, np.ndarray]],
                          k: int, offset: int,
                          fetch_fields: bool) -> SearchResult:
-        """Root merge of leaf parts (merge_fruits, root.rs:753-771):
-        global (score desc, segment_id desc, doc_id desc) order by one
-        lexsort over the concatenated partials, offset/k slice, optional
-        doc-store fetch."""
-        num_hits = sum(c for _, c, _ in parts)
-        tops = [(sid, top) for sid, _cnt, top in parts if len(top)]
-        if not tops:
-            return SearchResult(num_hits, [])
-        # a segment's ordinal is its id's rank, so ordinals order like ids
-        sids = sorted({sid for sid, _ in tops})
-        rank = {sid: i for i, sid in enumerate(sids)}
-        allc = np.concatenate([top for _, top in tops])
-        seg_ord = np.repeat([rank[sid] for sid, _ in tops],
-                            [len(top) for _, top in tops])
-        order = np.lexsort((-allc["doc_id"], -seg_ord, -allc["score"]))
-        win = order[offset:offset + k]
-        win_sids = [sids[o] for o in seg_ord[win].tolist()]
-        dids = allc["doc_id"][win].tolist()
-        scores = allc["score"][win].tolist()
-        hits = self._fetch(win_sids, dids, scores) if fetch_fields else [
+        """root_merge of the leaf parts, then the optional doc-store
+        fetch of the winners."""
+        num_hits, sids, dids, scores, max_score = root_merge(parts, k,
+                                                             offset)
+        hits = self._fetch(sids, dids, scores) if fetch_fields else [
             SearchHit(sc, sid, d, {})
-            for sid, d, sc in zip(win_sids, dids, scores)]
-        return SearchResult(num_hits, hits,
-                            max_score=float(allc["score"][order[0]]))
+            for sid, d, sc in zip(sids, dids, scores)]
+        return SearchResult(num_hits, hits, max_score=max_score)
 
     @_request_scope()
     def search_many(self, queries: list, k: int = 10, offset: int = 0,
@@ -2772,92 +2782,6 @@ class IndexSearcher:
                                fields)
         return [(cnt, top.assign(segment_id=sid))
                 for sid, cnt, top in fanned.get(0, [])]
-
-    # -- scroll API (TTL'd contexts over search_after) --------------------
-
-    def scroll(self, query, k: int = 10, ttl_seconds: float = 60.0,
-               fetch_fields: bool = True) -> tuple[SearchResult, str]:
-        """Open a scroll over the result set (reference:
-        quickwit-search/src/scroll_context.rs + root.rs:342-373 — the
-        scroll id addresses a TTL'd context in a KV; each fetch advances
-        the cursor and refreshes the TTL). Returns (first page,
-        scroll_id); page through with scroll_next(scroll_id)."""
-        import time
-        import uuid
-
-        from .ast import ast_to_json
-        node = self.parse(query)
-        res = self.search(node, k=k, fetch_fields=fetch_fields)
-        sid = uuid.uuid4().hex
-        ctx = {
-            # tagged-JSON AST, NOT pickle: scroll_contexts.json sits in a
-            # possibly-shared index dir; unpickling it would hand writers
-            # arbitrary code execution (scroll_context.rs stores
-            # serialized protos for the same reason)
-            "query_ast": ast_to_json(node),
-            "k": int(k),
-            "ttl": float(ttl_seconds),
-            "expires_at": time.time() + ttl_seconds,
-            "cursor": list(res.next_cursor) if res.next_cursor else None,
-            "fetch_fields": bool(fetch_fields),
-        }
-        kv = self._scroll_kv()
-        kv[sid] = ctx
-        self._save_scroll_kv(kv)
-        return res, sid
-
-    def scroll_next(self, scroll_id: str) -> SearchResult:
-        """Next page for an open scroll; refreshes its TTL. An expired or
-        unknown id raises KeyError (the reference returns 404)."""
-        import time
-
-        from .ast import ast_from_json
-        kv = self._scroll_kv()
-        ctx = kv.get(scroll_id)
-        if ctx is None or ctx["expires_at"] < time.time():
-            kv.pop(scroll_id, None)
-            self._save_scroll_kv(kv)
-            raise KeyError(f"scroll context {scroll_id!r} not found or "
-                           "expired")
-        if ctx["cursor"] is None:
-            return SearchResult(0, [])
-        node = ast_from_json(ctx["query_ast"])
-        res = self.search(node, k=ctx["k"],
-                          fetch_fields=ctx["fetch_fields"],
-                          search_after=tuple(ctx["cursor"]))
-        ctx["cursor"] = (list(res.next_cursor)
-                         if res.next_cursor else None)
-        ctx["expires_at"] = time.time() + ctx["ttl"]
-        kv[scroll_id] = ctx
-        self._save_scroll_kv(kv)
-        return res
-
-    def scroll_clear(self, scroll_id: str) -> bool:
-        """Drop a scroll context; returns whether one was actually
-        removed (callers report ES's num_freed truthfully)."""
-        kv = self._scroll_kv()
-        freed = kv.pop(scroll_id, None) is not None
-        self._save_scroll_kv(kv)
-        return freed
-
-    def _scroll_path(self) -> str:
-        return os.path.join(self.index_dir, "scroll_contexts.json")
-
-    def _scroll_kv(self) -> dict:
-        import time
-        try:
-            with open(self._scroll_path()) as f:
-                kv = json.load(f)
-        except (OSError, ValueError):
-            return {}
-        now = time.time()  # vacuum expired contexts on every access
-        return {k: v for k, v in kv.items() if v["expires_at"] >= now}
-
-    def _save_scroll_kv(self, kv: dict) -> None:
-        tmp = self._scroll_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(kv, f)
-        os.replace(tmp, self._scroll_path())
 
     def list_fields(self) -> list[dict]:
         """Schema/capability union across segments (reference:

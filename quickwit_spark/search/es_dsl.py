@@ -633,6 +633,41 @@ def _es_shape_aggs(spec: dict, out) -> dict:
     return {levels[0][0]: shaped}
 
 
+def _es_sort_by(sort_spec) -> tuple[tuple, dict[int, str]]:
+    """An ES `sort` value -> ((field, order), ...) and the
+    {position: format} of the entries that carry a `format`. An empty
+    tuple means score order. Raises ValueError past two fields."""
+    # ES accepts three top-level sort shapes: a list of entries, ONE
+    # dict entry ({"ts": {"order": "desc"}} — iterating it would walk
+    # its KEYS and silently drop the direction), and a bare string
+    # (iterating it would walk CHARACTERS)
+    if isinstance(sort_spec, str):
+        sort_spec = [sort_spec]
+    elif isinstance(sort_spec, dict):
+        sort_spec = [{f: v} for f, v in sort_spec.items()]
+    if not sort_spec:
+        return (), {}
+    if len(sort_spec) > 2:
+        # the reference rejects >2 sort fields (collector.rs:1008-1029)
+        raise ValueError("sort supports at most 2 fields")
+    sort_by = []
+    sort_fmt: dict[int, str] = {}
+    for si, s in enumerate(sort_spec):
+        if isinstance(s, str):
+            sort_by.append((s, "asc" if s != "_score" else "desc"))
+        else:
+            (f, v), = s.items()
+            # ES default direction with order omitted: asc for
+            # fields, desc only for _score
+            dflt = "desc" if f == "_score" else "asc"
+            order = v.get("order", dflt) if isinstance(v, dict) \
+                else str(v)
+            sort_by.append((f, order))
+            if isinstance(v, dict) and v.get("format"):
+                sort_fmt[si] = str(v["format"])
+    return tuple(sort_by), sort_fmt
+
+
 def es_search(searcher, body: dict, default_field: str | None = None,
               _pre=None, extra_filters: list[str] | str | None = None,
               source_includes: list[str] | str | None = None,
@@ -668,35 +703,9 @@ def es_search(searcher, body: dict, default_field: str | None = None,
             node = A.Bool(must=(node,), filter=filters)
     size = int(body.get("size", 10))
     offset = int(body.get("from", 0))
-    sort_spec = body.get("sort")
     sa = body.get("search_after")
-    # ES accepts three top-level sort shapes: a list of entries, ONE
-    # dict entry ({"ts": {"order": "desc"}} — iterating it would walk
-    # its KEYS and silently drop the direction), and a bare string
-    # (iterating it would walk CHARACTERS)
-    if isinstance(sort_spec, str):
-        sort_spec = [sort_spec]
-    elif isinstance(sort_spec, dict):
-        sort_spec = [{f: v} for f, v in sort_spec.items()]
-    if sort_spec:
-        if len(sort_spec) > 2:
-            # the reference rejects >2 sort fields (collector.rs:1008-1029)
-            raise ValueError("sort supports at most 2 fields")
-        sort_by = []
-        sort_fmt: dict[int, str] = {}
-        for si, s in enumerate(sort_spec):
-            if isinstance(s, str):
-                sort_by.append((s, "asc" if s != "_score" else "desc"))
-            else:
-                (f, v), = s.items()
-                # ES default direction with order omitted: asc for
-                # fields, desc only for _score
-                dflt = "desc" if f == "_score" else "asc"
-                order = v.get("order", dflt) if isinstance(v, dict) \
-                    else str(v)
-                sort_by.append((f, order))
-                if isinstance(v, dict) and v.get("format"):
-                    sort_fmt[si] = str(v["format"])
+    sort_by, sort_fmt = _es_sort_by(body.get("sort"))
+    if sort_by:
         if sa and sort_fmt:
             # `format: epoch_nanos_int` (quickwit-specific): sort
             # values travel in NANOS; the engine compares millis
@@ -709,7 +718,7 @@ def es_search(searcher, body: dict, default_field: str | None = None,
                     return x
             sa = [_from_nanos(i, x) for i, x in enumerate(sa)]
         res = searcher.sort_search(node, k=offset + size,
-                                   sort_by=tuple(sort_by),
+                                   sort_by=sort_by,
                                    search_after=(tuple(sa) if sa
                                                  else None))
         hits = res.hits[offset:offset + size]
@@ -761,10 +770,10 @@ def es_search(searcher, body: dict, default_field: str | None = None,
             # union hits namespace their segment id as uid/segment
             "_index": (sid.split("/", 1)[0] if "/" in sid
                        else getattr(searcher, "index_uid", "")),
-            "_score": None if sort_spec else float(h.score),
+            "_score": None if sort_by else float(h.score),
             "_source": emitted,
         }
-        if sort_spec:
+        if sort_by:
             # round-trippable cursor: sort values + the doc address
             # tie-break (ES uses _shard_doc the same way) — feed back
             # verbatim as `search_after` for the next page
@@ -810,7 +819,7 @@ def es_search(searcher, body: dict, default_field: str | None = None,
                            if res.max_score is not None
                            else (float(res.hits[0].score)
                                  if res.hits else None))
-                          if not sort_spec else None),
+                          if not sort_by else None),
             "hits": out_hits,
         },
     }
@@ -864,29 +873,13 @@ def es_scroll_search(searcher, body: dict, scroll: str = "1m",
     """`GET /{index}/_search?scroll=1m`: open a TTL'd scroll context over
     a plain search body and return the first page with a `_scroll_id`
     (reference: rest_handler.rs scroll param -> scroll_context.rs)."""
+    from . import scroll as _scroll
     node = es_to_ast(body.get("query", {"match_all": {}}),
                      default_field or searcher.text_field)
-    size = int(body.get("size", 10))
-    sort_spec = body.get("sort")
-    if sort_spec and hasattr(searcher, "_scroll_store"):
-        # sorted scroll (the union searcher's page-based contexts)
-        sort_by = []
-        for entry in (sort_spec if isinstance(sort_spec, list)
-                      else [sort_spec]):
-            if isinstance(entry, str):
-                sort_by.append((entry, "desc" if entry == "_score"
-                                else "asc"))
-            else:
-                for f, v in entry.items():
-                    d = v.get("order", "asc") if isinstance(v, dict) \
-                        else str(v)
-                    sort_by.append((f, d))
-        res, sid = searcher.scroll(node, k=size,
-                                   ttl_seconds=_parse_es_ttl(scroll),
-                                   sort_by=tuple(sort_by))
-    else:
-        res, sid = searcher.scroll(node, k=size,
-                                   ttl_seconds=_parse_es_ttl(scroll))
+    sort_by, _fmt = _es_sort_by(body.get("sort"))
+    res, sid = _scroll.scroll(searcher, node, k=int(body.get("size", 10)),
+                              ttl_seconds=_parse_es_ttl(scroll),
+                              sort_by=sort_by or None)
     resp = _scroll_hits_resp(res)
     resp["_scroll_id"] = sid
     aggs_spec = body.get("aggs") or body.get("aggregations")
@@ -900,11 +893,12 @@ def es_scroll_search(searcher, body: dict, scroll: str = "1m",
     return resp
 
 
-def es_scroll(searcher, scroll_id: str) -> dict:
+def es_scroll(scroll_id: str) -> dict:
     """`POST /_search/scroll`: next page; 404-shaped error for an
     expired or unknown context (the reference's behavior)."""
+    from . import scroll as _scroll
     try:
-        res = searcher.scroll_next(scroll_id)
+        res = _scroll.scroll_next(scroll_id)
     except KeyError:
         return {"error": {"type": "search_context_missing_exception",
                           "reason": "No search context found for id "
@@ -915,11 +909,11 @@ def es_scroll(searcher, scroll_id: str) -> dict:
     return resp
 
 
-def es_clear_scroll(searcher, scroll_id: str) -> dict:
+def es_clear_scroll(scroll_id: str) -> dict:
     """`DELETE /_search/scroll`. Like ES, clearing an unknown/expired
-    id succeeds with num_freed 0 — the count is truthful, so callers
-    fronting several indexes can sum it."""
-    freed = searcher.scroll_clear(scroll_id)
+    id succeeds with num_freed 0."""
+    from . import scroll as _scroll
+    freed = _scroll.scroll_clear(scroll_id)
     return {"succeeded": True, "num_freed": 1 if freed else 0}
 
 

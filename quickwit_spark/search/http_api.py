@@ -212,7 +212,6 @@ class SearchHttpServer:
         self.writable = writable
         self.configs = dict(configs or {})
         self._searchers: dict[str, IndexSearcher] = {}
-        self._union_scrolls: dict = {}  # multi-index scroll contexts
         self._lock = threading.Lock()
         self.metrics = _Metrics()
         outer = self
@@ -721,8 +720,7 @@ class SearchHttpServer:
                 404, f"no such index [{e.args[0]}]",
                 es_type="index_not_found_exception") from None
         return UnionSearcher(
-            [os.path.join(self.root_dir, n) for n in names],
-            scroll_store=self._union_scrolls)
+            [os.path.join(self.root_dir, n) for n in names])
 
     def _attach_spark(self, searcher) -> None:
         """Aggregations execute as Spark plans (partial/final agg is
@@ -876,34 +874,11 @@ class SearchHttpServer:
         if seg == ["_search", "scroll"]:
             body = self._json_body(raw)
             sid = body.get("scroll_id", params.get("scroll_id", ""))
-            # scroll contexts are per-searcher; es_clear_scroll reports
-            # a truthful num_freed, so clearing sums across indexes and
-            # (like ES) an unknown id succeeds with num_freed 0
+            # one in-memory store holds every scroll context
             if method == "DELETE":
-                freed = sum(
-                    es_dsl.es_clear_scroll(s, sid)["num_freed"]
-                    for s in list(self._searchers.values()))
-                freed += 1 if self._union_scrolls.pop(sid, None) \
-                    is not None else 0
-                return 200, {"succeeded": True, "num_freed": freed}
-            uctx = self._union_scrolls.get(sid)
-            if uctx is not None:
-                from .multi import UnionSearcher
-                u = UnionSearcher(uctx["dirs"],
-                                  scroll_store=self._union_scrolls)
-                return 200, es_dsl.es_scroll(u, sid)
-            resp = None
-            for s in list(self._searchers.values()):
-                resp = es_dsl.es_scroll(s, sid)
-                if resp.get("status") != 404:
-                    return 200, resp
-            if resp is None:
-                resp = {"error":
-                        {"type": "search_context_missing_exception",
-                         "reason": f"No search context found for id "
-                                   f"[{sid}]"},
-                        "status": 404}
-            return 404, resp
+                return 200, es_dsl.es_clear_scroll(sid)
+            resp = es_dsl.es_scroll(sid)
+            return resp.get("status", 200), resp
         if seg == ["_msearch"]:
             # global _msearch: each NDJSON header names its index
             # ({"index": "..."}); bodies dispatch to that index's
@@ -1186,16 +1161,6 @@ class SearchHttpServer:
                             400,
                             "Invalid argument: Quickwit only supports "
                             "scroll TTL period up to 1800 secs")
-                    if isinstance(body, dict) and body.get("sort") \
-                            and not hasattr(s, "_scroll_store"):
-                        # sorted scroll: page-based union contexts
-                        # (a union of one index scrolls identically)
-                        from .multi import UnionSearcher
-                        u = UnionSearcher(
-                            [os.path.join(self.root_dir, index)],
-                            scroll_store=self._union_scrolls)
-                        u.spark = getattr(s, "spark", None)
-                        s = u
                     return 200, es_dsl.es_scroll_search(
                         s, body, scroll=params["scroll"])
                 extra = params.get("extra_filters")

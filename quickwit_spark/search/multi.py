@@ -11,7 +11,8 @@ from __future__ import annotations
 import fnmatch
 import os
 
-from .engine import IndexSearcher, SearchHit, SearchResult
+from .engine import (IndexSearcher, SearchHit, SearchResult, _request_scope,
+                     root_merge)
 
 
 def resolve_index_patterns(root_dir: str, patterns: list[str]
@@ -169,16 +170,9 @@ class UnionSearcher:
     """One ES search over several indexes (the reference root resolves
     index-id patterns and fans out, merging leaf responses globally —
     root.rs plan_splits_for_root_search). Hits carry a namespaced
-    segment id `uid/segment` so `_index` and cursors stay unambiguous.
+    segment id `uid/segment` so `_index` and cursors stay unambiguous."""
 
-    Scrolls are PAGE-based: the context stores the query + page
-    ordinal and refetches (page+1)*k merged rows per step — O(pages)
-    refetch instead of cross-index cursor algebra, exact results
-    (scroll depth is bounded in practice; the reference caches leaf
-    requests for the same reason)."""
-
-    def __init__(self, index_dirs: list[str], spark=None,
-                 scroll_store: dict | None = None):
+    def __init__(self, index_dirs: list[str], spark=None):
         self.index_dirs = list(index_dirs)
         self.searchers = [IndexSearcher(d, spark=spark)
                           for d in index_dirs]
@@ -188,8 +182,6 @@ class UnionSearcher:
                            if self.searchers else "content")
         self.tokenizer = (self.searchers[0].tokenizer
                           if self.searchers else "default")
-        self._scroll_store = scroll_store if scroll_store is not None \
-            else {}
         self._spark = spark
 
     # the serving layer attaches a session lazily for aggregations
@@ -234,31 +226,28 @@ class UnionSearcher:
                 seen.setdefault(f["field"], f)
         return list(seen.values())
 
-    def _tag(self, uid: str, res: SearchResult) -> list[SearchHit]:
-        return [SearchHit(h.score, f"{uid}/{h.segment_id}",
-                          h.doc_id, h.doc) for h in res.hits]
-
+    @_request_scope()
     def search(self, query, k: int = 10, offset: int = 0,
                fetch_fields: bool = True, count_all: bool = True,
                search_after=None) -> SearchResult:
+        """Every member's leaf parts, keyed (uid, segment_id), go
+        through the engine's one root merge; then only the k winners
+        are fetched, through their member's _fetch."""
         need = offset + k
-        rows: list[tuple] = []
-        total = 0
-        max_score = None
         # translate a global cursor into per-index cursors so each
-        # index fetches its top `need` rows AFTER the cursor (fetching
+        # index scores its top `need` rows AFTER the cursor (scoring
         # without one would starve deep pages: the cursor could sit
         # past every returned row). Global order is (score desc, uid
         # desc, segment desc, doc desc): for an index ABOVE the
         # cursor's uid every equal-score row is already consumed
         # (sentinel seg "" excludes them); below it they all qualify
-        # (sentinel seg ￿ includes them).
+        # (sentinel seg ￿ includes them). The leaf filter is exact
+        # for all three, so the merge needs no second filter.
         per_index_sa: dict[str, tuple] = {}
         if search_after is not None:
             sc = float(search_after[0])
-            skey = str(search_after[1])
+            cuid, _, cseg = str(search_after[1]).partition("/")
             sdoc = int(search_after[2])
-            cuid, _, cseg = skey.partition("/")
             for uid in self.uids:
                 if uid == cuid:
                     per_index_sa[uid] = (sc, cseg, sdoc)
@@ -266,37 +255,34 @@ class UnionSearcher:
                     per_index_sa[uid] = (sc, "", -1)
                 else:
                     per_index_sa[uid] = (sc, "￿", 1 << 62)
+        use_wand = not count_all and search_after is None
+        parts = []
         for uid, s in zip(self.uids, self.searchers):
-            res = s.search(s.parse(query), k=need,
-                           fetch_fields=fetch_fields,
-                           count_all=count_all,
-                           search_after=per_index_sa.get(uid))
-            total += res.num_hits
-            if res.max_score is not None:
-                max_score = res.max_score if max_score is None else \
-                    max(max_score, res.max_score)
-            rows.extend((h.score, _desc(uid), _desc(h.segment_id),
-                         h.doc_id, uid, h) for h in res.hits)
-        # global order: score desc, then doc address desc (uid desc,
-        # segment desc, doc desc — collector.rs tie-break extended by
-        # the index dimension)
-        rows.sort(key=lambda r: (-r[0], r[1], r[2], -r[3]))
-        if search_after is not None:
-            # compare the address as a (uid, segment) TUPLE, the merge
-            # order above: the joined "uid/segment" string misorders
-            # uids where one is a prefix of another ('/' > '-')
-            def after(r):
-                if r[0] != sc:
-                    return r[0] < sc
-                if (r[4], r[5].segment_id) != (cuid, cseg):
-                    return (r[4], r[5].segment_id) < (cuid, cseg)
-                return r[5].doc_id < sdoc
-            rows = [r for r in rows if after(r)]
-        hits = [SearchHit(h.score, f"{uid}/{h.segment_id}", h.doc_id,
-                          h.doc)
-                for _sc, _u, _g, _d, uid, h in
-                rows[offset:offset + k]]
-        return SearchResult(total, hits, max_score=max_score)
+            parts.extend(((uid, sid), cnt, top) for sid, cnt, top in
+                         s._leaf_parts(s.parse(query), need, use_wand,
+                                       per_index_sa.get(uid)))
+        # the (uid, segment_id) keys merge in tuple order: the joined
+        # "uid/segment" string misorders uids where one is a prefix of
+        # another ('/' > '-')
+        num_hits, keys, dids, scores, max_score = root_merge(parts, k,
+                                                             offset)
+        if not fetch_fields:
+            hits = [SearchHit(sc, f"{uid}/{sid}", d, {})
+                    for (uid, sid), d, sc in zip(keys, dids, scores)]
+            return SearchResult(num_hits, hits, max_score=max_score)
+        by_uid: dict[str, list[int]] = {}
+        for i, (uid, _sid) in enumerate(keys):
+            by_uid.setdefault(uid, []).append(i)
+        member = dict(zip(self.uids, self.searchers))
+        hits: list = [None] * len(keys)
+        for uid, idx in by_uid.items():
+            fetched = member[uid]._fetch([keys[i][1] for i in idx],
+                                         [dids[i] for i in idx],
+                                         [scores[i] for i in idx])
+            for i, h in zip(idx, fetched):
+                hits[i] = SearchHit(h.score, f"{uid}/{h.segment_id}",
+                                    h.doc_id, h.doc)
+        return SearchResult(num_hits, hits, max_score=max_score)
 
     def sort_search(self, query, k: int = 10,
                     sort_by: tuple = (("_score", "desc"),),
@@ -361,55 +347,3 @@ class UnionSearcher:
         for f in frames[1:]:
             out = out.unionByName(f, allowMissingColumns=True)
         return out
-
-    # -- page-based scroll -------------------------------------------------
-
-    def scroll(self, query, k: int = 10, ttl_seconds: float = 60.0,
-               fetch_fields: bool = True,
-               sort_by: tuple | None = None) -> tuple[SearchResult,
-                                                      str]:
-        import time
-        import uuid
-
-        from .ast import ast_to_json
-        node = self.parse(query)
-        res = self._page(node, 0, k, sort_by)
-        sid = uuid.uuid4().hex
-        self._scroll_store[sid] = {
-            "dirs": list(self.index_dirs),
-            "query_ast": ast_to_json(node),
-            "k": int(k), "page": 1,
-            "sort_by": [list(x) for x in sort_by] if sort_by else None,
-            "ttl": float(ttl_seconds),
-            "expires_at": time.time() + float(ttl_seconds),
-        }
-        return res, sid
-
-    def scroll_next(self, scroll_id: str) -> SearchResult:
-        import time
-
-        from .ast import ast_from_json
-        ctx = self._scroll_store.get(scroll_id)
-        if ctx is None or ctx["expires_at"] < time.time():
-            self._scroll_store.pop(scroll_id, None)
-            raise KeyError(scroll_id)
-        node = ast_from_json(ctx["query_ast"])
-        sort_by = tuple(tuple(x) for x in ctx["sort_by"]) \
-            if ctx["sort_by"] else None
-        res = self._page(node, ctx["page"], ctx["k"], sort_by)
-        ctx["page"] += 1
-        ctx["expires_at"] = time.time() + ctx["ttl"]
-        return res
-
-    def scroll_clear(self, scroll_id: str) -> bool:
-        return self._scroll_store.pop(scroll_id, None) is not None
-
-    def _page(self, node, page: int, k: int,
-              sort_by: tuple | None) -> SearchResult:
-        need = (page + 1) * k
-        if sort_by:
-            res = self.sort_search(node, k=need, sort_by=sort_by)
-        else:
-            res = self.search(node, k=need)
-        return SearchResult(res.num_hits, res.hits[page * k:need],
-                            max_score=res.max_score)

@@ -28,6 +28,7 @@ import numpy as np
 
 from ..functions.bm25 import Bm25Weight
 from ..index.codecs import decode_blocks_batch, decode_postings
+from .engine import _READER_LOCK
 
 __all__ = ["and_topk", "or_topk", "single_term_topk", "STATS"]
 
@@ -76,13 +77,14 @@ class _TermCursor:
     def _set_blobs(self, row) -> None:
         self.doc_offsets = np.asarray(row["doc_offsets"], dtype=np.int64)
         self.tf_offsets = np.asarray(row["tf_offsets"], dtype=np.int64)
-        self.docid_blob = row["docid_blob"]
         self.tf_blob = row["tf_blob"]
+        # set last: a lock-free reader that sees it sees the rest too
+        self.docid_blob = row["docid_blob"]
 
     def ensure_blobs(self) -> None:
-        if self.docid_blob is None and self._fetch_blobs is not None:
-            self._set_blobs(self._fetch_blobs())
-            self._fetch_blobs = None
+        fetch = self._fetch_blobs  # read once: an install clears it
+        if self.docid_blob is None and fetch is not None:
+            fetch(self)
 
     def decode_blocks(self, block_idx: np.ndarray, fn_ids: np.ndarray,
                       record: str):
@@ -111,6 +113,7 @@ class _TermCursor:
 _CURSOR_META_COLS = ["doc_freq", "block_last", "block_max_tf",
                      "block_min_fn"]
 _CURSOR_BLOB_COLS = list(_TermCursor._BLOB_COLS)
+_MISSING = object()
 
 
 def _account_cursor_bytes(reader, nbytes: int) -> None:
@@ -137,60 +140,69 @@ def _make_cursors(reader, terms: list[str]) -> list[_TermCursor]:
     # per-reader cursor cache: the arrow->numpy conversion of the block
     # metadata columns dominates warm pruned-query latency; cursors are
     # immutable per (segment, term), so convert once (bounded FIFO —
-    # readers themselves live in a byte-budgeted LRU)
+    # readers themselves live in a byte-budgeted LRU). Cursors are built
+    # outside _READER_LOCK and inserted under it, so concurrent cold
+    # searches pin each cursor once; the warm path takes no lock.
     cache = getattr(reader, "_wand_cursors", None)
     if cache is None:
-        cache = reader._wand_cursors = {}
+        with _READER_LOCK:
+            cache = getattr(reader, "_wand_cursors", None)
+            if cache is None:
+                cache = reader._wand_cursors = {}
     cursors = []
-    any_found = False
     cols = list(_CURSOR_META_COLS)
     if reader.has_postings_column("block_max_ratio"):
         cols.append("block_max_ratio")
     for t in terms:
-        cur = cache.get(t)
-        if cur is not None or t in cache:
-            if cur is not None:
-                any_found = True
-            cursors.append(cur)
-            continue
-        tr = reader._term_row(t)
-        if tr is None:
-            if len(cache) >= 512:
-                _clear_cursor_cache(reader, cache)
-            cache[t] = None  # negative entries count toward the bound
-            cursors.append(None)
-            continue
-        any_found = True
-        term_id, doc_freq = tr
-        # metadata-only fetch; the posting blobs load lazily on first
-        # decode, so bound-only consumers (segment_wand_bound / the
-        # cross-segment walk / explain) never read them
-        row = dict(zip(cols, reader._postings_cells(term_id, cols)))
-        w = Bm25Weight(doc_freq, reader.num_docs,
-                       float(reader._avg_fieldnorm))
-
-        def _fetch(_tid=term_id, _rdr=reader):
-            blobs = dict(zip(
-                _CURSOR_BLOB_COLS,
-                _rdr._postings_cells(_tid, _CURSOR_BLOB_COLS)))
-            # the cursor lives in the reader's cache, so the fetched
-            # blobs it memoizes are PINNED, not per-query transients —
-            # count them toward the reader byte budget
-            _account_cursor_bytes(_rdr, sum(
-                len(v) for v in blobs.values()
-                if isinstance(v, (bytes, bytearray))))
-            return blobs
-        cur = _TermCursor(t, row, w, fetch_blobs=_fetch)
-        if len(cache) >= 512:
-            _clear_cursor_cache(reader, cache)
-        cache[t] = cur
-        # cached block metadata also counts (python lists of ints:
-        # ~40 B/element incl. the pointer)
-        n_meta = sum(len(v) for v in row.values()
-                     if isinstance(v, (list, tuple)))
-        _account_cursor_bytes(reader, 40 * n_meta + 256)
+        cur = cache.get(t, _MISSING)
+        if cur is _MISSING:
+            cur, nbytes = _new_cursor(reader, t, cols)
+            with _READER_LOCK:
+                if t in cache:  # a concurrent search inserted it first
+                    cur = cache[t]
+                else:
+                    if len(cache) >= 512:
+                        _clear_cursor_cache(reader, cache)
+                    # negative entries count toward the bound
+                    cache[t] = cur
+                    if cur is not None:
+                        _account_cursor_bytes(reader, nbytes)
         cursors.append(cur)
-    return cursors if any_found else []
+    return cursors if any(c is not None for c in cursors) else []
+
+
+def _new_cursor(reader, t: str, cols: list[str]
+                ) -> tuple[_TermCursor | None, int]:
+    """(an uncached cursor for term t, the bytes its metadata pins), or
+    (None, 0) when the segment lacks the term. Metadata only: the
+    posting blobs load on first decode, so bound-only consumers
+    (segment_wand_bound / the cross-segment walk / explain) never read
+    them."""
+    tr = reader._term_row(t)
+    if tr is None:
+        return None, 0
+    term_id, doc_freq = tr
+    row = dict(zip(cols, reader._postings_cells(term_id, cols)))
+    w = Bm25Weight(doc_freq, reader.num_docs, float(reader._avg_fieldnorm))
+
+    def _fetch(cur, _tid=term_id, _rdr=reader):
+        blobs = dict(zip(_CURSOR_BLOB_COLS,
+                         _rdr._postings_cells(_tid, _CURSOR_BLOB_COLS)))
+        # the cursor lives in the reader's cache, so the blobs it
+        # memoizes are PINNED, not per-query transients — count them
+        # toward the reader byte budget, once
+        with _READER_LOCK:
+            if cur.docid_blob is None:
+                cur._set_blobs(blobs)
+                cur._fetch_blobs = None
+                _account_cursor_bytes(_rdr, sum(
+                    len(v) for v in blobs.values()
+                    if isinstance(v, (bytes, bytearray))))
+    # cached block metadata also counts (python lists of ints:
+    # ~40 B/element incl. the pointer)
+    n_meta = sum(len(v) for v in row.values()
+                 if isinstance(v, (list, tuple)))
+    return _TermCursor(t, row, w, fetch_blobs=_fetch), 40 * n_meta + 256
 
 
 def _combine_in_query_order(parts, final_docids):

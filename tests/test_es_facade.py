@@ -200,7 +200,7 @@ def test_es_scroll_endpoints(idx):
     assert sid and first["hits"]["hits"]
     ids = [h["_id"] for h in first["hits"]["hits"]]
     while True:
-        page = es_scroll(s, sid)
+        page = es_scroll(sid)
         assert page.get("status") != 404
         got = [h["_id"] for h in page["hits"]["hits"]]
         if not got:
@@ -209,8 +209,8 @@ def test_es_scroll_endpoints(idx):
     big = es_search(s, {"query": {"match": {"content": "merge"}},
                         "size": 10000})
     assert ids == [h["_id"] for h in big["hits"]["hits"]]
-    assert es_clear_scroll(s, sid)["succeeded"]
-    assert es_scroll(s, sid)["status"] == 404
+    assert es_clear_scroll(sid)["succeeded"]
+    assert es_scroll(sid)["status"] == 404
 
 
 def test_delete_rewrite_preserves_doc_schema(tmp_path):

@@ -265,6 +265,35 @@ def test_scroll_clear_num_freed_truthful(served):
     assert ei.value.code == 404
 
 
+def test_scroll_writes_nothing_into_index_dirs(served):
+    """The server is read-only: opening, paging and clearing a scroll,
+    sorted or not, leaves every index directory's listing unchanged."""
+    import os
+    srv, root = served
+
+    def listing():
+        return {d: sorted(os.listdir(os.path.join(root, d)))
+                for d in sorted(os.listdir(root))}
+
+    before = listing()
+    for body in ({"query": {"match_all": {}}, "size": 5},
+                 {"query": {"match_all": {}}, "size": 5,
+                  "sort": [{"lang": {"order": "asc"}}]}):
+        for index in ("alpha", "alpha,beta"):
+            st, opened = _send(
+                f"{srv.url}/api/v1/_elastic/{index}/_search?scroll=1m",
+                body)
+            sid = opened["_scroll_id"]
+            st, nxt = _send(f"{srv.url}/api/v1/_elastic/_search/scroll",
+                            {"scroll_id": sid})
+            assert st == 200 and nxt["hits"]["hits"]
+            st, cleared = _send(
+                f"{srv.url}/api/v1/_elastic/_search/scroll",
+                {"scroll_id": sid}, method="DELETE")
+            assert cleared["num_freed"] == 1
+    assert listing() == before
+
+
 def test_global_msearch_routes_by_header_index(served):
     srv, _ = served
     nd = (json.dumps({"index": "alpha"}) + "\n"

@@ -6,6 +6,7 @@ import pytest
 from quickwit_spark.search import mgmt_api as M
 from quickwit_spark.search.multi import (
     UnionSearcher, resolve_es_index_patterns)
+from quickwit_spark.search.scroll import scroll, scroll_clear, scroll_next
 
 
 def _mk(root, name, docs):
@@ -73,16 +74,34 @@ def test_union_search_after_deep_page(dirs):
 
 def test_union_scroll_pages(dirs):
     u = UnionSearcher(dirs)
-    res, sid = u.scroll("*", k=3, ttl_seconds=60,
-                        sort_by=(("n", "desc"),))
+    res, sid = scroll(u, "*", k=3, ttl_seconds=60,
+                      sort_by=(("n", "desc"),))
     assert [h.doc["__source"] is not None for h in res.hits]
     first = [h.doc_id for h in res.hits]
-    res2 = u.scroll_next(sid)
+    res2 = scroll_next(sid)
     assert res2.num_hits == 4 and len(res2.hits) == 1
-    assert u.scroll_clear(sid)
+    assert scroll_clear(sid)
     with pytest.raises(KeyError):
-        u.scroll_next(sid)
+        scroll_next(sid)
     assert len(first) == 3
+
+
+def test_union_search_fetches_only_the_winners(dirs, monkeypatch):
+    """A union search merges every index's leaf parts at one root, then
+    fetches the k winners' docs once, not each index's own top k."""
+    from quickwit_spark.search.engine import SegmentReader
+    fetched = []
+    real = SegmentReader.read_docs
+
+    def counting(self, doc_ids):
+        fetched.extend(doc_ids)
+        return real(self, doc_ids)
+
+    monkeypatch.setattr(SegmentReader, "read_docs", counting)
+    res = UnionSearcher(dirs).search("*", k=3)
+    assert len(res.hits) == 3 and res.num_hits == 4
+    assert all(h.doc for h in res.hits)
+    assert len(fetched) == 3
 
 
 def test_union_sorted_values_only_cursor(dirs):

@@ -262,3 +262,45 @@ def test_cursor_cache_bytes_are_pinned_and_refunded(tmp_path):
     _clear_cursor_cache(rd, rd._wand_cursors)
     assert rd._wand_cursor_bytes == 0
     assert rd.cache_footprint == after_blobs - held  # exact refund
+
+
+def test_concurrent_cold_searches_pin_each_cursor_once(tmp_path,
+                                                       monkeypatch):
+    """Four threads running one cold single-term search share the
+    segment's cached WAND cursor: it is built, its blobs fetched and its
+    bytes pinned once, so the reader holds one thread's cursor bytes."""
+    import threading
+
+    import quickwit_spark.search.engine as eng
+
+    cfg = IndexConfig(index_uid="wcold", index_dir=str(tmp_path / "wcold"))
+    build_index_pandas(corpus_pandas(3000, seed=5), cfg, num_partitions=1)
+    node = A.Term("content", "merge")
+
+    def cold_cursor_bytes(n_threads) -> tuple[int, list]:
+        monkeypatch.setattr(eng, "_READER_CACHE", type(eng._READER_CACHE)())
+        eng.clear_leaf_cache()
+        s = IndexSearcher(cfg.index_dir)
+        barrier = threading.Barrier(n_threads, timeout=60)
+        out = [None] * n_threads
+
+        def run(i):
+            barrier.wait()
+            res = s.search(node, k=10, fetch_fields=False)
+            out[i] = [(h.segment_id, h.doc_id, h.score) for h in res.hits]
+
+        ts = [threading.Thread(target=run, args=(i,))
+              for i in range(n_threads)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=120)
+            assert not t.is_alive()
+        (reader,) = eng._READER_CACHE.values()
+        return reader._wand_cursor_bytes, out
+
+    single, (hits,) = cold_cursor_bytes(1)
+    assert hits and single > 0
+    threaded, outs = cold_cursor_bytes(4)
+    assert outs == [hits] * 4
+    assert threaded == single

@@ -8,7 +8,9 @@ against the last docid of block j-1), varint-packed; per block we keep
 block-max WAND pruning at query time.
 
 All encode/decode paths are numpy-vectorized: no per-value Python in the
-hot loop (a bounded loop over *byte positions*, <= 10 iterations, remains).
+hot loop. The decoder makes one pass over the bytes (a per-byte shift and
+one add.reduceat per value); the encoder keeps a bounded loop over *byte
+positions*, <= 10 iterations.
 """
 
 from __future__ import annotations
@@ -41,19 +43,25 @@ def varint_decode_with_sizes(buf: bytes | memoryview
     (the merge splicer reuses parents' unchanged bytes and needs the
     per-value sizes to rebuild block byte offsets without re-encoding)."""
     a = np.frombuffer(buf, dtype=np.uint8)
-    if a.size == 0:
+    ends = np.flatnonzero(a < 0x80)
+    if ends.size == a.size:  # every byte terminates a one-byte value
+        return a.astype(np.uint64), np.ones(a.size, dtype=np.int64)
+    if ends.size == 0:
         return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64)
-    ends = np.nonzero((a & 0x80) == 0)[0]
+    # bytes after the last terminator belong to no value: drop them
+    a = a[:ends[-1] + 1]
     starts = np.empty(ends.shape, dtype=np.int64)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
     lens = ends - starts + 1
-    vals = np.zeros(ends.shape, dtype=np.uint64)
-    for j in range(int(lens.max())):
-        active = lens > j
-        b = a[starts[active] + j].astype(np.uint64)
-        vals[active] |= (b & np.uint64(0x7F)) << np.uint64(7 * j)
-    return vals, lens
+    # byte i of value j carries bits 7*(i - starts[j]) and up; the 7-bit
+    # groups of one value are disjoint, so their sum is their OR
+    shift = np.arange(a.size, dtype=np.uint64)
+    shift -= np.repeat(starts.astype(np.uint64), lens)
+    shift *= np.uint64(7)
+    parts = (a & 0x7F).astype(np.uint64)
+    parts <<= shift
+    return np.add.reduceat(parts, starts), lens
 
 
 def encode_posting_blocks(docids: np.ndarray, tfs: np.ndarray,

@@ -50,7 +50,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from ..functions.bm25 import Bm25Weight
-from ..search.engine import IndexSearcher, _partial, _wand_shape, get_reader
+from ..search.engine import (IndexSearcher, _partial, _top_k_order,
+                             _union_ids, _wand_shape, get_reader)
 from ..search.wand import (_combine_in_query_order, _empty3, _TermCursor,
                            and_topk_groups, or_topk_cursors,
                            single_cursor_topk)
@@ -826,7 +827,7 @@ class GlobalIndexSearcher(IndexSearcher):
                 fn_lookup, "freq", k)
         else:
             docids, scores, count = _or_exhaustive(groups, fn_lookup)
-        top = np.lexsort((-docids, -scores.astype(np.float64)))[:need]
+        top = _top_k_order(docids, scores, need)
         docids, scores = docids[top], scores[top]
         seg_idx = np.searchsorted(self.offsets, docids, side="right") - 1
         parts = [(self.segment_ids[si], 0,
@@ -872,6 +873,5 @@ def _or_exhaustive(groups: list, fn_lookup):
         ds, ss = zip(*(c.decode_blocks(np.arange(len(c.block_last)),
                                        fn_lookup, "freq") for c in g))
         parts.append((np.concatenate(ds), np.concatenate(ss)))
-    docs = (np.unique(np.concatenate([d for d, _ in parts])) if parts
-            else np.zeros(0, dtype=np.int64))
+    docs = _union_ids([d for d, _ in parts])
     return docs, _combine_in_query_order(parts, docs), len(docs)

@@ -169,6 +169,20 @@ def _node_key(node: A.Node) -> str:
     return ent[1]
 
 
+def _blob_index(col: pa.ChunkedArray):
+    """(int64 offsets, memoryview of the data buffer) of a one-chunk
+    binary column, so cell i is mv[off[i]:off[i+1]] with no copy; None
+    when the column has nulls (its cells then come from as_py)."""
+    if col.null_count:
+        return None
+    arr = col.chunk(0)
+    _validity, offsets, data = arr.buffers()
+    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    off = np.frombuffer(offsets, dtype=odt)[
+        arr.offset:arr.offset + len(arr) + 1].astype(np.int64, copy=False)
+    return off, memoryview(data) if data is not None else memoryview(b"")
+
+
 class SegmentReader:
     """Lazy reader over one immutable segment directory."""
 
@@ -196,6 +210,8 @@ class SegmentReader:
         self._termdict: pd.DataFrame | None = None
         self._term_index: dict[str, int] | None = None
         self._postings_tbl = None
+        # *_blob column -> (int64 offsets, memoryview of the data buffer)
+        self._postings_blobs: dict = {}
         self._docs_md: pq.FileMetaData | None = None
         self._docs_schema: pa.Schema | None = None
         self._docs_rg_starts: np.ndarray | None = None
@@ -734,10 +750,20 @@ class SegmentReader:
             if os.path.getsize(path) > self.CACHE_FILE_BYTES:
                 return None
             tbl = pq.read_table(path)
+            if any(c.num_chunks > 1 for c in tbl.columns):
+                tbl = tbl.combine_chunks()
+            blobs = {c: ix for c in tbl.schema.names if c.endswith("_blob")
+                     for ix in [_blob_index(tbl.column(c))] if ix is not None}
+            # int32 offsets are widened into a copy; int64 ones are views
+            owned = sum(off.nbytes for off, _mv in blobs.values()
+                        if off.flags.owndata)
             with _READER_LOCK:  # concurrent cold searches pin it once
                 if self._postings_tbl is None:
+                    # index first: a lock-free reader that sees the
+                    # table sees its blob index too
+                    self._postings_blobs = blobs
                     self._postings_tbl = tbl
-                    self._pin(tbl.nbytes)
+                    self._pin(tbl.nbytes + owned)
         return self._postings_tbl
 
     # -- leaf evaluation -----------------------------------------------------
@@ -758,10 +784,20 @@ class SegmentReader:
     def _postings_cells(self, term_id: int, cols: list[str]) -> list:
         """Fetch posting-row cells straight from the cached arrow table —
         no arrow->pandas conversion (that conversion dominates warm query
-        latency because of the per-block list columns)."""
+        latency because of the per-block list columns). Blob cells are
+        memoryviews into the pinned table, not copies."""
         tbl = self._postings_table()
         if tbl is not None:
-            return [tbl.column(c)[term_id].as_py() for c in cols]
+            blobs = self._postings_blobs
+            out = []
+            for c in cols:
+                ix = blobs.get(c)
+                if ix is None:
+                    out.append(tbl.column(c)[term_id].as_py())
+                else:
+                    off, mv = ix
+                    out.append(mv[off[term_id]:off[term_id + 1]])
+            return out
         row = self.postings_rows([term_id], columns=cols).iloc[0]
         return [row[c] for c in cols]
 
@@ -1138,7 +1174,7 @@ class SegmentReader:
                      for plist in posting_sets]
         cand = slot_docs[0]
         for d in slot_docs[1:]:
-            cand = np.intersect1d(cand, d, assume_unique=True)
+            cand = _isect_idx(cand, d)[0]
         if len(cand) == 0:
             return _Scored.empty()
         # Vectorized across ALL candidate docs at once: every slot's
@@ -1158,7 +1194,7 @@ class SegmentReader:
                 anchors = anchors[:0]
                 break
             if slop == 0:
-                anchors = np.intersect1d(anchors, sk, assume_unique=True)
+                anchors = _isect_idx(anchors, sk)[0]
             else:
                 # anchor survives if this slot has a position within
                 # `slop` of its expected place IN THE SAME DOC (the low
@@ -1173,8 +1209,11 @@ class SegmentReader:
                 anchors = anchors[ok]
         if len(anchors) == 0:
             return _Scored.empty()
+        # anchors are sorted, so each doc's anchors form one run
         doc_ords = anchors >> np.int64(33)
-        uords, freqs = np.unique(doc_ords, return_counts=True)
+        firsts = np.flatnonzero(np.r_[True, doc_ords[1:] != doc_ords[:-1]])
+        uords = doc_ords[firsts]
+        freqs = np.diff(np.r_[firsts, len(doc_ords)])
         docids = cand[uords]
         if not scoring:
             return _Scored(docids, None)
@@ -1356,9 +1395,25 @@ def _coerce(value, dtype):
     return value
 
 
+def _isect_idx(a: np.ndarray, b: np.ndarray
+               ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(common, ia, ib) of two sorted unique docid arrays: the common
+    values in order and their indices in a and in b. One searchsorted of
+    the shorter array into the longer; numpy's set intersection would
+    concatenate and re-sort both."""
+    swap = len(a) > len(b)
+    short, long_ = (b, a) if swap else (a, b)
+    if len(short) == 0:
+        e = np.zeros(0, dtype=np.intp)
+        return short[:0], e, e
+    j = np.searchsorted(long_, short)
+    hit = np.flatnonzero(long_[np.minimum(j, len(long_) - 1)] == short)
+    js = j[hit]
+    return (short[hit], js, hit) if swap else (short[hit], hit, js)
+
+
 def _intersect(a: _Scored, b: _Scored) -> _Scored:
-    common, ia, ib = np.intersect1d(a.docids, b.docids, assume_unique=True,
-                                    return_indices=True)
+    common, ia, ib = _isect_idx(a.docids, b.docids)
     if a.scores is None and b.scores is None:
         return _Scored(common, None)
     sa = a.scores[ia] if a.scores is not None else np.float32(0)
@@ -1370,8 +1425,7 @@ def _add_optional(base: _Scored, opt: _Scored) -> _Scored:
     """Add opt's scores to base docs that also match opt (docs unchanged)."""
     if base.scores is None:
         base = base.with_scores()
-    common, ib, io = np.intersect1d(base.docids, opt.docids,
-                                    assume_unique=True, return_indices=True)
+    _common, ib, io = _isect_idx(base.docids, opt.docids)
     scores = base.scores.copy()
     if opt.scores is not None:
         scores[ib] = (scores[ib] + opt.scores[io]).astype(np.float32)
@@ -1379,9 +1433,19 @@ def _add_optional(base: _Scored, opt: _Scored) -> _Scored:
 
 
 def _union_ids(sets: list[np.ndarray]) -> np.ndarray:
+    """Sorted unique union of docid arrays (np.unique of their
+    concatenation). The stable sort merges already-sorted runs, so the
+    usual input, sorted posting lists, costs a merge, not a sort."""
     if not sets:
         return np.zeros(0, dtype=np.int64)
-    return np.unique(np.concatenate(sets)).astype(np.int64)
+    ids = np.concatenate(sets).astype(np.int64, copy=False)
+    ids.sort(kind="stable")
+    if len(ids) < 2:
+        return ids
+    keep = np.empty(len(ids), dtype=bool)
+    keep[0] = True
+    np.not_equal(ids[1:], ids[:-1], out=keep[1:])
+    return ids[keep]
 
 
 def _union(parts: list[_Scored], minimum_should_match: int = 1) -> _Scored:
@@ -1803,10 +1867,28 @@ def _segment_top_k_uncached(seg_dir: str, node: A.Node, k: int,
         docids, scores = docids[mask], scores[mask]
         if len(docids) == 0:
             return count, _partial([], [])
-    # order: score desc, then doc address desc (default desc tie-break)
-    order = np.lexsort((-docids, -scores.astype(np.float64)))
-    top = order[:k]
+    top = _top_k_order(docids, scores, k)
     return count, _partial(docids[top], scores[top])
+
+
+def _top_k_order(docids: np.ndarray, scores: np.ndarray, k: int
+                 ) -> np.ndarray:
+    """Indices of the first k of (docids, scores) in the leaf order,
+    score desc then doc address desc (the default desc tie-break).
+    A partition finds the k-th score; only the candidates scoring at
+    least that much, every tie at it included, are lexsorted."""
+    n = len(scores)
+    if k <= 0 or n == 0:
+        return np.zeros(0, dtype=np.intp)
+    if k < n:
+        kth = np.partition(scores, n - k)[n - k]
+        keep = np.flatnonzero(scores >= kth)
+        # fewer than k kept only when NaN scores sit at the top of the
+        # partition; the full sort below ranks them last, as before
+        if len(keep) >= k:
+            order = np.lexsort((-docids[keep], -scores[keep]))
+            return keep[order[:k]]
+    return np.lexsort((-docids, -scores))[:k]
 
 
 def segment_wand_bound(seg_dir: str, node: A.Node, tokenizer: str,

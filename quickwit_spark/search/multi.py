@@ -297,12 +297,15 @@ class UnionSearcher:
                 "scroll instead")
         rows: list[tuple] = []
         total = 0
+        # the merge reads field keys from the fetched docs
+        fetch = fetch_fields or any(
+            f not in ("_score", "_doc", "_shard_doc") for f, _d in sort_by)
         for uid, s in zip(self.uids, self.searchers):
             # a values-only cursor filters identically inside every
             # index (strictly-after semantics are index-independent)
             res = s.sort_search(s.parse(query), k=k,
                                 sort_by=sort_by,
-                                fetch_fields=fetch_fields,
+                                fetch_fields=fetch,
                                 search_after=search_after,
                                 count_all=count_all)
             total += res.num_hits
@@ -319,7 +322,8 @@ class UnionSearcher:
             return (*ks, *addr)
         rows.sort(key=keyf)
         hits = [SearchHit(h.score, f"{uid}/{h.segment_id}", h.doc_id,
-                          h.doc) for uid, h in rows[:k]]
+                          h.doc if fetch_fields else {})
+                for uid, h in rows[:k]]
         return SearchResult(total, hits)
 
     def matched_docs(self, query, columns: list[str]):

@@ -28,7 +28,7 @@ import numpy as np
 
 from ..functions.bm25 import Bm25Weight
 from ..index.codecs import decode_blocks_batch, decode_postings
-from .engine import _READER_LOCK
+from .engine import _READER_LOCK, _isect_idx, _top_k_order, _union_ids
 
 __all__ = ["and_topk", "or_topk", "single_term_topk", "STATS"]
 
@@ -308,7 +308,7 @@ def single_cursor_topk(cur, fn_ids, record: str, k: int,
             break
     STATS["blocks_decoded"] += decoded
     STATS["blocks_total"] += nblk
-    top = np.lexsort((-acc_d, -acc_s.astype(np.float64)))[:k]
+    top = _top_k_order(acc_d, acc_s, k)
     return acc_d[top], acc_s[top]
 
 
@@ -365,7 +365,7 @@ def and_topk_groups(groups: list, fn_ids, record: str, k: int):
             return _empty3()
         d2, s2 = decode_group(groups[i], bsel=cand)
         parts[i] = (d2, s2)
-        cand = np.intersect1d(cand, d2, assume_unique=True)
+        cand = _isect_idx(cand, d2)[0]
     if len(cand) == 0:
         return _empty3()
     return cand, _combine_in_query_order(parts, cand), len(cand)
@@ -474,8 +474,7 @@ def or_topk_cursors(all_cursors: list, fn_ids, record: str, k: int,
         cd = acc_docs[csel]
         final_scores = _combine_in_query_order(qparts, cd)
         # top-k slice under the engine's order (score desc, docid desc)
-        order = np.lexsort((-cd, -final_scores.astype(np.float64)))
-        top = order[:k]
+        top = _top_k_order(cd, final_scores, k)
         return cd[top], final_scores[top], count
     return acc_docs, _combine_in_query_order(qparts, acc_docs), count
 
@@ -507,7 +506,7 @@ def _max_in_blocks(acc_docs, acc_scores, cur, bidx):
 
 def _merge_add(docs_a, scores_a, docs_b, scores_b):
     """Union of two sorted unique docid sets, scores added where present."""
-    all_ids = np.union1d(docs_a, docs_b)
+    all_ids = _union_ids([docs_a, docs_b])
     scores = np.zeros(len(all_ids), dtype=np.float32)
     ia = np.searchsorted(all_ids, docs_a)
     scores[ia] = (scores[ia] + scores_a).astype(np.float32)

@@ -304,3 +304,24 @@ def prune_segments(segments: list[dict], node: A.Node,
         if ok:
             out.append(seg)
     return out
+
+
+def varint_decode_with_sizes(buf) -> tuple[np.ndarray, np.ndarray]:
+    """Scalar-loop oracle for codecs.varint_decode_with_sizes: the
+    decoder the engine used before its one-pass kernel, one masked OR
+    per byte position. Needs at least one terminator byte in a
+    non-empty buffer."""
+    a = np.frombuffer(buf, dtype=np.uint8)
+    if a.size == 0:
+        return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64)
+    ends = np.nonzero((a & 0x80) == 0)[0]
+    starts = np.empty(ends.shape, dtype=np.int64)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    lens = ends - starts + 1
+    vals = np.zeros(ends.shape, dtype=np.uint64)
+    for j in range(int(lens.max())):
+        active = lens > j
+        b = a[starts[active] + j].astype(np.uint64)
+        vals[active] |= (b & np.uint64(0x7F)) << np.uint64(7 * j)
+    return vals, lens

@@ -187,3 +187,23 @@ def test_union_sort_literal_dotted_key(tmp_path):
                          "sort": [{"a.b": {"order": "asc"}}],
                          "search_after": [2]})
     assert [h["sort"] for h in resp["hits"]["hits"]] == [[3], [4]]
+
+
+def test_union_sort_without_fetch_merges_by_field(tmp_path):
+    """With fetch_fields=False the cross-index merge still orders by the
+    sort field: the first two hits at k=2 are the first two at k=100,
+    and the order is the fetch_fields=True order, with no docs."""
+    docs = [{"w": "alpha beta", "n": i % 3} for i in range(7)]
+    u = UnionSearcher([_mk(tmp_path, "logs", docs),
+                       _mk(tmp_path, "logs-2", docs)])
+    sort_by = (("n", "desc"),)
+
+    def addrs(k, fetch):
+        res = u.sort_search("w:alpha", k=k, sort_by=sort_by,
+                            fetch_fields=fetch)
+        assert all((h.doc != {}) == fetch for h in res.hits)
+        return [(h.segment_id, h.doc_id) for h in res.hits]
+
+    assert addrs(2, False) == addrs(100, False)[:2]
+    assert addrs(2, False) == addrs(2, True)
+    assert addrs(100, False) == addrs(100, True)

@@ -225,10 +225,7 @@ def test_single_term_exact_count_shortcut(tmp_path):
         assert not ids1 & ids2
 
 
-def test_cursor_cache_bytes_are_pinned_and_refunded(tmp_path):
-    """Cached WAND cursors retain their lazily fetched posting blobs, so
-    those bytes must count toward the reader byte budget — and a cache
-    clear must refund them (no permanent upward drift)."""
+def _small_segment_reader(tmp_path):
     import os
 
     import pandas as pd
@@ -237,8 +234,6 @@ def test_cursor_cache_bytes_are_pinned_and_refunded(tmp_path):
     from quickwit_spark.index.builder import build_index_pandas
     from quickwit_spark.index.manifest import Manifest
     from quickwit_spark.search.engine import SegmentReader
-    from quickwit_spark.search.wand import (_clear_cursor_cache,
-                                            _make_cursors)
 
     docs = [{"repo": "r", "path": f"f{i}.py", "commit": "c", "lang": "py",
              "content": f"alpha beta w{i} " + "gamma " * 20}
@@ -247,9 +242,27 @@ def test_cursor_cache_bytes_are_pinned_and_refunded(tmp_path):
                       sha_col=None)
     build_index_pandas(pd.DataFrame(docs), cfg, num_partitions=1)
     seg = Manifest.load(cfg.index_dir).segments()[0]
-    rd = SegmentReader(
+    return SegmentReader(
         os.path.join(cfg.index_dir, "segments", seg["segment_id"]),
         cfg.tokenizer)
+
+
+def test_cursor_cache_bytes_are_pinned_and_refunded(tmp_path, monkeypatch):
+    """Cached WAND cursors retain their lazily fetched posting blobs, so
+    those bytes must count toward the reader byte budget — and a cache
+    clear must refund them (no permanent upward drift). The postings
+    file is over the cache cap here, so the cursor owns copies of its
+    blobs; below the cap they are views into the pinned table (next
+    test)."""
+    import os
+
+    from quickwit_spark.search.engine import SegmentReader
+    from quickwit_spark.search.wand import (_clear_cursor_cache,
+                                            _make_cursors)
+
+    rd = _small_segment_reader(tmp_path)
+    monkeypatch.setattr(SegmentReader, "CACHE_FILE_BYTES", os.path.getsize(
+        os.path.join(rd.seg_dir, "postings.parquet")) - 1)
     base = rd.cache_footprint
     (cur,) = _make_cursors(rd, ["gamma"])
     after_meta = rd.cache_footprint
@@ -262,6 +275,22 @@ def test_cursor_cache_bytes_are_pinned_and_refunded(tmp_path):
     _clear_cursor_cache(rd, rd._wand_cursors)
     assert rd._wand_cursor_bytes == 0
     assert rd.cache_footprint == after_blobs - held  # exact refund
+
+
+def test_cursor_blob_views_into_pinned_postings_pin_nothing(tmp_path):
+    """Below the cache cap the postings table is pinned whole, and a
+    cursor's blobs are views into it: fetching them pins no bytes."""
+    from quickwit_spark.search.wand import _make_cursors
+
+    rd = _small_segment_reader(tmp_path)
+    (cur,) = _make_cursors(rd, ["gamma"])
+    assert rd._postings_tbl is not None  # the pinned-table path
+    before = rd.cache_footprint
+    cur.ensure_blobs()
+    assert isinstance(cur.docid_blob, memoryview)
+    assert rd.cache_footprint == before
+    docids, _tfs, df = rd.term_postings("gamma")
+    assert len(docids) == df == 50
 
 
 def test_concurrent_cold_searches_pin_each_cursor_once(tmp_path,

@@ -127,6 +127,24 @@ def encode_posting_blocks(docids: np.ndarray, tfs: np.ndarray,
     }
 
 
+def _binary_cells(col) -> tuple[np.ndarray, np.ndarray]:
+    """(data uint8[], offsets int64[n+1]) of an arrow binary column, cell
+    i being data[offs[i]:offs[i+1]] — zero-copy access to every cell's
+    byte range (a one-chunk column is not combined, which would copy)."""
+    import pyarrow as pa
+    arr = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+    _validity, offsets, data = arr.buffers()
+    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(offsets, dtype=odt)[
+        arr.offset:arr.offset + len(arr) + 1].astype(np.int64, copy=False)
+    # data buffer may be shared/offset; slice to this array's view
+    off0 = int(offs[0])
+    if off0:
+        offs = offs - off0
+    data = np.frombuffer(data, dtype=np.uint8)[off0:off0 + int(offs[-1])]
+    return data, offs
+
+
 def decode_postings(docid_blob: bytes, tf_blob: bytes) -> tuple[np.ndarray, np.ndarray]:
     """Decode a full term posting list back to (docids int64, tfs int64)."""
     deltas = varint_decode(docid_blob)

@@ -56,9 +56,10 @@ from ..search.wand import (_combine_in_query_order, _empty3, _TermCursor,
                            and_topk_groups, or_topk_cursors,
                            single_cursor_topk)
 from .builder import _large_binary_array, _list_array, _varint_encode_with_sizes
-from .codecs import BLOCK_SIZE, varint_decode, varint_decode_with_sizes
+from .codecs import (BLOCK_SIZE, _binary_cells, varint_decode,
+                     varint_decode_with_sizes)
 from .manifest import Manifest
-from .merge import _binary_cells, _byte_gather
+from .merge import _byte_gather
 
 GLOBAL_DIR = "global"
 

@@ -79,24 +79,9 @@ def _decode_segment_postings(seg_dir: str, with_positions: bool = False):
 # single shared encoder (codecs.py) — bit-identical across build/merge/
 # delete paths, which content-addressed idempotence depends on
 from .codecs import encode_position_blob as _encode_position_blob  # noqa: E402
+from .codecs import _binary_cells  # noqa: E402
 from .codecs import varint_decode_with_sizes as _varint_decode_with_sizes
 from .codecs import varint_encode_with_sizes as _varint_encode_with_sizes
-
-
-def _binary_cells(col) -> tuple[np.ndarray, np.ndarray]:
-    """(data uint8[], offsets int64[n+1]) of an arrow binary column —
-    zero-copy access to every cell's byte range."""
-    arr = col.combine_chunks()
-    import pyarrow.compute as pc
-    lens = pc.binary_length(arr).to_numpy().astype(np.int64)
-    offs = np.r_[0, np.cumsum(lens)]
-    # data buffer may be shared/offset; slice to this array's view
-    bufs = arr.buffers()
-    data = np.frombuffer(bufs[2], dtype=np.uint8)
-    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    off0 = int(np.frombuffer(bufs[1], dtype=odt)[arr.offset])
-    data = data[off0:off0 + offs[-1]]
-    return data, offs
 
 
 def _byte_gather(source: np.ndarray, starts: np.ndarray,

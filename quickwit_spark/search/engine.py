@@ -37,7 +37,8 @@ from ..functions.bm25 import K1, Bm25Weight, idf_f32
 from ..functions.fieldtypes import (bytes_from_b64, hex_to_ip_display,
                                     ip_norm_one)
 from ..functions.tokenizers import analyzer_generation, tokenize_one
-from ..index.codecs import decode_positions, decode_postings, varint_decode
+from ..index.codecs import (_binary_cells, decode_positions, decode_postings,
+                            varint_decode)
 from ..index.manifest import Manifest
 from . import ast as A
 
@@ -167,20 +168,6 @@ def _node_key(node: A.Node) -> str:
         ent = memo[("node", id(node))] = (
             node, json.dumps(A.ast_to_json(node), sort_keys=True))
     return ent[1]
-
-
-def _blob_index(col: pa.ChunkedArray):
-    """(int64 offsets, memoryview of the data buffer) of a one-chunk
-    binary column, so cell i is mv[off[i]:off[i+1]] with no copy; None
-    when the column has nulls (its cells then come from as_py)."""
-    if col.null_count:
-        return None
-    arr = col.chunk(0)
-    _validity, offsets, data = arr.buffers()
-    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    off = np.frombuffer(offsets, dtype=odt)[
-        arr.offset:arr.offset + len(arr) + 1].astype(np.int64, copy=False)
-    return off, memoryview(data) if data is not None else memoryview(b"")
 
 
 class SegmentReader:
@@ -752,8 +739,11 @@ class SegmentReader:
             tbl = pq.read_table(path)
             if any(c.num_chunks > 1 for c in tbl.columns):
                 tbl = tbl.combine_chunks()
-            blobs = {c: ix for c in tbl.schema.names if c.endswith("_blob")
-                     for ix in [_blob_index(tbl.column(c))] if ix is not None}
+            blobs = {}
+            for c in tbl.schema.names:
+                if c.endswith("_blob"):
+                    data, off = _binary_cells(tbl.column(c))
+                    blobs[c] = (off, memoryview(data))
             # int32 offsets are widened into a copy; int64 ones are views
             owned = sum(off.nbytes for off, _mv in blobs.values()
                         if off.flags.owndata)

@@ -29,6 +29,9 @@ import sys
 import tempfile
 import time
 
+CORPUS_SEED = 1        # the query_unique corpus
+WARMUP_QUERIES = 100   # distinct untimed queries run first
+
 
 def main(argv=None) -> int:
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -37,12 +40,7 @@ def main(argv=None) -> int:
                     help="checkout to import the program from")
     ap.add_argument("--queries", type=int, default=700,
                     help="distinct timed queries")
-    ap.add_argument("--warmup", type=int, default=100,
-                    help="distinct untimed queries run first")
     ap.add_argument("--seed", type=int, default=11, help="QueryGen seed")
-    ap.add_argument("--corpus-seed", type=int, default=1)
-    ap.add_argument("--docs", type=int, default=0,
-                    help="corpus size override (default: query_unique's)")
     args = ap.parse_args(argv)
     sys.path.insert(0, os.path.abspath(args.repo))
     import numpy as np
@@ -53,10 +51,10 @@ def main(argv=None) -> int:
     work = tempfile.mkdtemp(prefix="qprobe-")
     try:
         _pdf, _index_dir, searcher, _build = QU._build(
-            work, args.docs or QU.N_DOCS, args.corpus_seed, "probe")
+            work, QU.N_DOCS, CORPUS_SEED, "probe")
         del _pdf
         qgen = C.QueryGen(args.seed)
-        for _ in range(args.warmup):
+        for _ in range(WARMUP_QUERIES):
             _shape, q, count_all = qgen.distinct()
             searcher.search(q, k=10, count_all=count_all)
         per_shape: dict[str, list[float]] = {}
@@ -80,7 +78,7 @@ def main(argv=None) -> int:
     p50 = {s: C.median(v) for s, v in sorted(per_shape.items())}
     print(f"repo {os.path.abspath(args.repo)}")
     print(f"queries {args.queries} (seed {args.seed}, after "
-          f"{args.warmup} warm-up)  total thread CPU {total:.1f} ms")
+          f"{WARMUP_QUERIES} warm-up)  total thread CPU {total:.1f} ms")
     for s, v in p50.items():
         print(f"  {s:<10} p50 {v:8.3f} ms  n={len(per_shape[s])}")
     print(f"parity sha256 {digest}")

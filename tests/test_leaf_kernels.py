@@ -1,13 +1,16 @@
 """Property tests for the exhaustive leaf's kernels against plain
 references: the one-pass varint decoder against the per-byte-position
-loop (tests/oracle.py), the sorted-set kernels against numpy's set
-routines, and the partial top-k against a full lexsort."""
+loop (tests/oracle.py), the zero-copy binary-cell view against
+`to_pylist`, the sorted-set kernels against numpy's set routines, and
+the partial top-k against a full lexsort."""
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from quickwit_spark.index.codecs import (varint_decode_with_sizes,
+from quickwit_spark.index.codecs import (_binary_cells,
+                                         varint_decode_with_sizes,
                                          varint_encode)
 from quickwit_spark.search.engine import _isect_idx, _top_k_order, _union_ids
 
@@ -32,6 +35,23 @@ def _same_decode(buf):
 def test_varint_decode_matches_loop_oracle(vals):
     """Values up to 2**64-1, so 10-byte varints, and the empty input."""
     _same_decode(varint_encode(np.asarray(vals, dtype=np.uint64)))
+
+
+@given(st.lists(st.lists(st.binary(max_size=12), max_size=20),
+                min_size=1, max_size=4),
+       st.sampled_from([pa.binary(), pa.large_binary()]),
+       st.integers(0, 3))
+@_SETTINGS
+def test_binary_cells_match_pylist(chunks, typ, cut):
+    """One or many chunks, int32 or int64 offsets, and a sliced first
+    chunk (a non-zero array offset into a shared data buffer)."""
+    arrs = [pa.array(c, type=typ) for c in chunks]
+    arrs[0] = arrs[0].slice(min(cut, len(arrs[0])))
+    col = pa.chunked_array(arrs, type=typ)
+    data, offs = _binary_cells(col)
+    assert offs.dtype == np.int64 and len(offs) == len(col) + 1
+    assert [data[offs[i]:offs[i + 1]].tobytes()
+            for i in range(len(col))] == col.to_pylist()
 
 
 @given(st.lists(st.integers(0, 127), max_size=200))

@@ -20,10 +20,13 @@ Scoring semantics (rank-identity contract, SURVEY.md §2.5):
 
 from __future__ import annotations
 
+import bisect
 import contextlib
 import contextvars
 import json
+import math
 import os
+import struct
 import threading
 from dataclasses import dataclass
 
@@ -320,18 +323,6 @@ class SegmentReader:
                       if a.dtype == object else a.nbytes)
         return self._doc_cols[col]
 
-    def doc_column_exact(self, col: str) -> list:
-        """Exact python values of a doc column (ints stay ints, None
-        for null) — the aggregation transport for u64 columns, where
-        doc_column's numpy view degrades nullable uint64 to float64."""
-        key = ("__exact__", col)
-        cached = self._doc_cols.get(key)
-        if cached is None:
-            cached = self._docs_column(col).to_pylist()
-            self._doc_cols[key] = cached
-            self._pin(64 * len(cached))
-        return cached
-
     def source_values(self, path: str,
                       keep_lists: bool = False) -> np.ndarray:
         """Per-doc values of a dotted path, extracted from the stored
@@ -352,20 +343,10 @@ class SegmentReader:
         cached = self._src_vals.get((path, keep_lists))
         if cached is not None:
             return cached
-        if self._src_docs is None:
-            raw = self.doc_column("__source")
-            docs = []
-            for s in raw:
-                try:
-                    docs.append(json.loads(s)
-                                if isinstance(s, str) else None)
-                except json.JSONDecodeError:
-                    docs.append(None)
-            self._src_docs = docs
         vals: list = []
         numeric = True
         any_list = False
-        for d in self._src_docs:
+        for d in self._source_docs():
             cur = source_path_value(d, path)
             if isinstance(cur, dict):
                 cur = None
@@ -407,16 +388,6 @@ class SegmentReader:
         under mapped columns are excluded by the caller."""
         if self._src_kinds is not None:
             return self._src_kinds
-        if self._src_docs is None:
-            raw = self.doc_column("__source")
-            docs = []
-            for sdoc in raw:
-                try:
-                    docs.append(json.loads(sdoc)
-                                if isinstance(sdoc, str) else None)
-                except json.JSONDecodeError:
-                    docs.append(None)
-            self._src_docs = docs
         kinds: dict[str, set] = {}
 
         def walk(prefix, node):
@@ -437,7 +408,7 @@ class SegmentReader:
                 else:
                     s.add("str")
 
-        for d in (self._src_docs or []):
+        for d in self._source_docs():
             if isinstance(d, dict):
                 walk("", d)
         out = {}
@@ -450,6 +421,48 @@ class SegmentReader:
             out[path] = flags
         self._src_kinds = out
         return out
+
+    def _source_docs(self) -> list:
+        """Every doc's parsed `__source` JSON (None if absent or bad)."""
+        if self._src_docs is None:
+            docs = []
+            for s in self.doc_column("__source"):
+                try:
+                    docs.append(json.loads(s)
+                                if isinstance(s, str) else None)
+                except json.JSONDecodeError:
+                    docs.append(None)
+            self._src_docs = docs
+        return self._src_docs
+
+    def sort_keys(self, col: str, kind: str) -> "_SortColumn":
+        """A sort field's _SortColumn (kind from sort_spec), cached."""
+        ck = ("__sort__", col, kind)
+        got = self._doc_cols.get(ck)
+        if got is None:
+            if kind == "val":
+                # a doc column, else (dynamic mode with stored source) a
+                # dotted source path; a non-scalar value is missing
+                got = _SortColumn.of_values(
+                    self._docs_column(col).to_pylist()
+                    if col in self.doc_fields() or not self.dynamic
+                    or "__source" not in self.doc_fields() else
+                    [v if isinstance(v, (str, int, float)) else None
+                     for v in (source_path_value(d, col)
+                               for d in self._source_docs())])
+            else:
+                arr = self._docs_column(col)
+                if kind == "i64" and not pa.types.is_integer(arr.type):
+                    arr = arr.cast(pa.int64())  # timestamps: their ticks
+                miss = np.asarray(arr.is_null().to_numpy(), dtype=bool)
+                vals = arr.fill_null(False if kind == "bool" else 0
+                                     ).to_numpy()
+                got = _SortColumn.typed(vals, kind, miss | (
+                    np.isnan(vals) if kind == "f64" else False))
+            self._doc_cols[ck] = got
+            objs = 0 if got.vals is None else len(got.vals) + len(got.uniq)
+            self._pin(9 * len(got.keys) + 64 * objs)
+        return got
 
     def sortable_column(self, col: str) -> np.ndarray:
         """A doc column, else (dynamic mode with stored source) the
@@ -1846,14 +1859,9 @@ def _segment_top_k_uncached(seg_dir: str, node: A.Node, k: int,
     if search_after is not None:
         sa_score, sa_seg, sa_doc = search_after
         sid = os.path.basename(seg_dir)
-        s64 = scores.astype(np.float64)
-        if sid > sa_seg:
-            mask = s64 < sa_score
-        elif sid < sa_seg:
-            mask = s64 <= sa_score
-        else:
-            mask = (s64 < sa_score) | ((s64 == sa_score)
-                                       & (docids < sa_doc))
+        mask = _after_mask(len(docids), [
+            (-scores.astype(np.float64), -sa_score),
+            ((sid < sa_seg) - (sid > sa_seg), 0), (-docids, -sa_doc)])
         docids, scores = docids[mask], scores[mask]
         if len(docids) == 0:
             return count, _partial([], [])
@@ -1902,178 +1910,367 @@ def segment_wand_bound(seg_dir: str, node: A.Node, tokenizer: str,
     return float(sum(c.max_score for c in cursors if c is not None))
 
 
-def _after_eq_mask(arr: np.ndarray, cursor, asc: bool
-                   ) -> tuple[np.ndarray, np.ndarray]:
-    """(strictly-after, exactly-equal) masks of `arr` vs one ES
-    values-only search_after cursor value.
+# ---------------------------------------------------------------------------
+# Sort keys: every sort value as an order-preserving u64 (collector.rs:158-204)
+# ---------------------------------------------------------------------------
 
-    The float compare decides non-tied rows; rows TYING with the
-    cursor in float space are re-checked exactly with python's
-    arbitrary-precision int/float comparison — float64 alone cannot
-    distinguish i64::MAX from i64::MAX-1 (the reference's u64/i64
-    cursor corner cases, rest-api-tests search_after/0001).  Missing
-    values sort LAST in both directions, i.e. always strictly after
-    any real cursor value. A missing cursor value equals every missing
-    value and nothing sorts after it, so paging past the last missing
-    row ends instead of starting over."""
-    n = len(arr)
-    if cursor is None or (isinstance(cursor, float) and cursor != cursor):
-        return np.zeros(n, dtype=bool), np.asarray(pd.isna(arr), dtype=bool)
-    if arr.dtype == object:
-        after = np.zeros(n, dtype=bool)
-        eq = np.zeros(n, dtype=bool)
-        for j, v in enumerate(arr):
-            if v is None or (isinstance(v, float) and v != v):
-                after[j] = True
-                continue
-            try:
-                if v == cursor:
-                    eq[j] = True
-                elif (v > cursor) == asc and v != cursor:
-                    after[j] = True
-            except TypeError:
-                after[j] = True  # cross-type: treat as after (kept)
-        return after, eq
-    if isinstance(cursor, str):
-        # ES clients echo numeric sort values as strings; coerce so
-        # the exact integer re-check never compares int vs str
-        try:
-            cursor = int(cursor)
-        except ValueError:
-            try:
-                cursor = float(cursor)
-            except ValueError:
-                pass
+U64_MAX = (1 << 64) - 1
+_SIGN = np.uint64(1 << 63)
+_KIND_RANGE = {"i64": (-(1 << 63), (1 << 63) - 1), "u64": (0, U64_MAX),
+               "bool": (0, 1)}
+_MISSING = (2, 0)
+
+
+def _key_kind(t: str) -> str:
+    """A doc column's key kind from its arrow type name: u64, i64 (other
+    ints, timestamp ticks), f64, bool, or val (the values themselves)."""
+    if t.startswith(("int", "uint", "timestamp", "date64", "duration")):
+        return "u64" if t == "uint64" else "i64"
+    return {"bool": "bool", "float": "f64", "double": "f64",
+            "halffloat": "f64"}.get(t, "val")
+
+
+def sort_spec(sort_by, seg_types: list[dict]) -> tuple:
+    """((field, "asc"|"desc"), ...) -> ((field, desc, kind), ...), given
+    one {doc column: arrow type name} per segment. A field is typed only
+    when every segment stores it as one kind, so every leaf encodes it
+    alike; `_score` is an f64 key and `_doc` a u64 one."""
+    if not 1 <= len(sort_by) <= 2:
+        raise ValueError("sort_by supports 1 or 2 sort fields")
+    out = []
+    for f, d in sort_by:
+        kinds = {"f64"} if f == "_score" else {"u64"} if f in (
+            "_doc", "_shard_doc") else {_key_kind(t.get(f, ""))
+                                        for t in seg_types}
+        out.append((f, d == "desc", kinds.pop() if len(kinds) == 1
+                    else "val"))
+    return tuple(out)
+
+
+def _sort_dtype(sort: tuple) -> np.dtype:
+    """A sorted leaf's rows: per field its directed key (a val field's
+    value) and missing flag, then doc_id and score."""
+    fields = []
+    for i, (_f, _d, kind) in enumerate(sort):
+        fields += [(f"key{i}", object if kind == "val" else "<u8"),
+                   (f"miss{i}", "?")]
+    return np.dtype(fields + [("doc_id", "<i8"), ("score", "<f8")])
+
+
+def _encode_keys(vals, kind: str) -> np.ndarray:
+    """Typed values -> u64 keys in value order: i64 flips the sign bit,
+    f64 takes the IEEE total-order transform (-0.0 folded into 0.0), u64
+    and bool keep the value."""
+    if kind == "f64":
+        bits = (np.asarray(vals, dtype=np.float64) + 0.0).view(np.uint64)
+        return np.where(bits >= _SIGN, ~bits, bits | _SIGN)
+    if kind == "i64":
+        return np.ascontiguousarray(vals, dtype=np.int64).view(
+            np.uint64) ^ _SIGN
+    return np.asarray(vals).astype(np.uint64)
+
+
+def _decode_key(key: int, kind: str):
+    """The value of one ascending typed key."""
+    if kind == "i64":
+        return key - (1 << 63)
+    if kind == "f64":
+        bits = key ^ (1 << 63) if key >> 63 else key ^ U64_MAX
+        return struct.unpack("<d", struct.pack("<Q", bits))[0]
+    return bool(key) if kind == "bool" else key
+
+
+def _cursor_key(v, kind: str, desc: bool) -> tuple[int, bool, bool]:
+    """A search_after value as (key, missing, exact) in a typed field's
+    directed key space. A value no key holds (1.5 on an int field, a
+    number past the kind's range) takes the key of the nearest value
+    before it, exact=False; -1 sorts before every key. Clients echo
+    numeric cursors back as text, so strings are parsed."""
     try:
-        cf = float(cursor)
+        if isinstance(v, str):
+            v = json.loads(v)
+        if v is None or v != v:
+            return U64_MAX, True, True
+        if kind == "f64":
+            r = float(v) if abs(v) < 2 ** 1024 else math.copysign(math.inf,
+                                                                   v)
+            if (r < v) if desc else (r > v):
+                r = math.nextafter(r, math.inf if desc else -math.inf)
+            key = int(_encode_keys([r], kind)[0])
+        else:
+            lo, hi = _KIND_RANGE[kind]
+            r = v if abs(v) == math.inf else \
+                math.ceil(v) if desc else math.floor(v)
+            r = max(r, lo) if desc else min(r, hi)
+            if not lo <= r <= hi:
+                return -1, False, False
+            key = r + (1 << 63) if kind == "i64" else int(r)
     except (TypeError, ValueError):
-        return np.ones(n, dtype=bool), np.zeros(n, dtype=bool)
-    vf = arr.astype(np.float64)
-    nan = np.isnan(vf)
-    after = (vf > cf) if asc else (vf < cf)
-    eq = vf == cf
-    # exact re-check of float ties on integer columns
-    if np.issubdtype(arr.dtype, np.integer) and np.any(eq):
-        for j in np.nonzero(eq)[0]:
-            v = int(arr[j])
-            if v == cursor:
-                continue  # truly equal
-            eq[j] = False
-            after[j] = (v > cursor) == asc
-    after |= nan
-    eq &= ~nan
-    return after, eq
+        return -1, False, False
+    return (U64_MAX - key if desc else key), False, r == v
+
+
+def _value_key(v) -> tuple:
+    """The order of val sort values: numbers, then strings, then missing
+    (None, NaN)."""
+    if v is None or (isinstance(v, float) and v != v):
+        return _MISSING
+    return (0, v) if isinstance(v, (int, float)) else (1, str(v))
+
+
+@dataclass
+class _SortColumn:
+    """One sort field's ascending u64 keys over a set of docs, U64_MAX
+    where `miss`. A val column keys each of its `vals` by twice its rank
+    among `uniq`, the sorted distinct _value_keys, so a cursor value
+    between two ranks gets the odd key between them."""
+    keys: np.ndarray
+    miss: np.ndarray
+    vals: np.ndarray | None = None
+    uniq: list | None = None
+    top: int = U64_MAX  # the largest key of a value
+
+    @classmethod
+    def typed(cls, vals, kind: str, miss=None) -> "_SortColumn":
+        keys = _encode_keys(vals, kind)
+        miss = np.zeros(len(keys), dtype=bool) if miss is None else miss
+        keys[miss] = U64_MAX
+        return cls(keys, miss)
+
+    @classmethod
+    def of_values(cls, values) -> "_SortColumn":
+        vk = [_value_key(v) for v in values]
+        uniq = sorted(set(vk) - {_MISSING})
+        rank = {u: 2 * i for i, u in enumerate(uniq)}
+        keys = np.fromiter((rank.get(x, U64_MAX) for x in vk),
+                           dtype=np.uint64, count=len(vk))
+        vals = np.empty(len(vk), dtype=object)
+        vals[:] = list(values)
+        return cls(keys, keys == U64_MAX, vals, uniq,
+                   max(2 * len(uniq) - 2, 0))
+
+    def directed(self, ids, desc: bool) -> tuple[np.ndarray, np.ndarray]:
+        """(keys, miss) of the docs `ids`, a descending key inverted; a
+        missing one stays U64_MAX, so missing sorts last both ways."""
+        keys, miss = self.keys[ids], self.miss[ids]
+        if desc:
+            keys = np.where(miss, keys, np.uint64(self.top) - keys)
+        return keys, miss
+
+    def cursor_key(self, v, kind: str, desc: bool
+                   ) -> tuple[int, bool, bool]:
+        """_cursor_key in this column's key space."""
+        if self.uniq is None:
+            return _cursor_key(v, kind, desc)
+        x = _value_key(v)
+        if x == _MISSING:
+            return U64_MAX, True, True
+        i = bisect.bisect_left(self.uniq, x)
+        key = 2 * i - (i == len(self.uniq) or self.uniq[i] != x)
+        return (self.top - key if desc else key), False, True
+
+
+def _after_mask(n: int, levels: list) -> np.ndarray:
+    """Rows strictly after a cursor, lexicographically over (column,
+    cursor value) levels, most significant first; a cursor key of -1
+    sorts before every u64 key."""
+    after, tied = np.zeros(n, dtype=bool), np.ones(n, dtype=bool)
+    for col, c in levels:
+        if getattr(col, "dtype", None) == np.uint64:
+            c = np.uint64(c) if c >= 0 else None
+        gt, eq = (True, False) if c is None else (col > c, col == c)
+        after |= tied & gt
+        tied &= eq
+    return after
+
+
+def _sorted_top(levels: list, tb: np.ndarray, k: int) -> np.ndarray:
+    """Indices of the first k rows ascending over `levels` (most
+    significant first), then `tb`. As in _top_k_order, a partition finds
+    the k-th first-level key and only the rows at or below it, ties
+    included, are lexsorted."""
+    if k <= 0 or len(tb) == 0:
+        return np.zeros(0, dtype=np.intp)
+    keep = np.arange(len(tb))
+    if k < len(tb):
+        keep = np.flatnonzero(
+            levels[0] <= np.partition(levels[0], k - 1)[k - 1])
+    order = np.lexsort([tb[keep]] + [lv[keep] for lv in levels[::-1]])
+    return keep[order[:k]]
 
 
 def segment_sort_top_k(seg_dir: str, node: A.Node, k: int, tokenizer: str,
-                       text_field: str, sort_by: tuple,
-                       search_after: tuple | None = None
-                       ) -> tuple[int, pd.DataFrame]:
-    """Leaf search sorted by an explicit sort spec (reference:
-    collector.rs:994-1029 — at most 2 sort fields, each `_score` | `_doc` |
-    a fast field; missing values sort last regardless of direction;
-    tie-break is the doc address in the direction of the FIRST sort order,
-    collector.rs:1086-1145).
-
-    search_after=(v0[, v1], segment_id, doc_id) — the previous page's
-    last sort key + doc address. Implemented by sorting a synthetic
-    cursor row into the leaf's total order (same comparator, including
-    null placement and the cross-segment address tie-break) and keeping
-    only rows strictly after it."""
-    if not 1 <= len(sort_by) <= 2:
-        raise ValueError("sort_by supports 1 or 2 sort fields")
+                       text_field: str, sort: tuple,
+                       search_after: tuple | None = None,
+                       seg_key=None) -> tuple[int, np.ndarray]:
+    """Leaf search under a sort_spec (collector.rs:994-1029: <= 2 fields,
+    each `_score` | `_doc` | a fast field): (match_count, the first k
+    rows as a _sort_dtype array), ordered by directed keys, then by doc
+    address in the first field's direction (collector.rs:1086-1145).
+    search_after holds one value per field, optionally followed by a
+    segment key and doc_id; only rows strictly after it are kept.
+    `seg_key` is this segment's root-merge key (default: its id)."""
     reader = get_reader(seg_dir, tokenizer)
-    need_score = any(f == "_score" for f, _ in sort_by)
+    seg_key = os.path.basename(seg_dir) if seg_key is None else seg_key
+    need_score = any(f == "_score" for f, _d, _k in sort)
     scored = reader.eval(node, text_field, scoring=need_score)
-    if need_score:
-        scored = scored.with_scores()
     ids = scored.docids
     count = len(ids)
-    cols: dict[str, np.ndarray] = {"doc_id": ids}
-    ascending: list[bool] = []
-    sort_cols: list[str] = []
-    for i, (f, direction) in enumerate(sort_by):
-        name = f"_sort{i}"
-        if f == "_score":
-            cols[name] = scored.scores.astype(np.float64)
-        elif f in ("_doc", "_shard_doc"):
-            cols[name] = ids
+    scores = (scored.with_scores().scores.astype(np.float64) if need_score
+              else np.zeros(count))
+    levels, after, vals = [], [], {}
+    exact = search_after is not None
+    for i, (f, desc, kind) in enumerate(sort):
+        if f in ("_score", "_doc", "_shard_doc"):
+            col = _SortColumn.typed(scores if f == "_score" else ids, kind)
+            keys, miss = col.directed(slice(None), desc)
         else:
-            cols[name] = reader.sortable_column(f)[ids] if count else \
-                np.zeros(0)
-        sort_cols.append(name)
-        ascending.append(direction == "asc")
-    first_asc = ascending[0]
-    if search_after is not None and len(search_after) == len(sort_by):
-        # ES values-only cursor (no doc-address tie-break): keep rows
-        # whose sort key is STRICTLY after the cursor —
-        # lexicographically across the (<=2) sort fields, with exact
-        # integer boundary semantics (_after_eq_mask)
-        raw_cols = [np.asarray(cols[f"_sort{i}"])
-                    for i in range(len(sort_by))]
-        a0, e0 = _after_eq_mask(raw_cols[0], search_after[0],
-                                ascending[0])
-        if len(sort_by) == 1:
-            keep = a0
-        else:
-            a1, _e1 = _after_eq_mask(raw_cols[1], search_after[1],
-                                     ascending[1])
-            keep = a0 | (e0 & a1)
-        for name in list(cols):
-            cols[name] = np.asarray(cols[name])[keep]
-        df = pd.DataFrame(cols)
-        df = df.sort_values(sort_cols + ["doc_id"],
-                            ascending=ascending + [first_asc],
-                            na_position="last", kind="mergesort").head(k)
-        return count, df.reset_index(drop=True)
-    df = pd.DataFrame(cols)
+            col = reader.sort_keys(f, kind)
+            keys, miss = col.directed(ids, desc)
+            if col.vals is not None:
+                vals[i] = col.vals
+        levels += [keys, miss]
+        if exact:
+            c = search_after[i]
+            if col.vals is not None and c is not None:
+                c = reader._attr_value(f, c, object)  # ip, bytes literals
+            # a value between two keys decides alone: rows tying its key
+            # precede it, whatever the later fields hold
+            key, m, exact = col.cursor_key(c, kind, desc)
+            after += [key, m]
+    sign = -1 if sort[0][1] else 1
+    tb = sign * ids
     if search_after is not None:
-        *sa_vals, sa_seg, sa_doc = search_after
-        sid = os.path.basename(seg_dir)
-        df["_seg"] = sid
-        df["_cursor"] = False
-        cursor = {"doc_id": int(sa_doc), "_seg": str(sa_seg),
-                  "_cursor": True}
-        for name, v in zip(sort_cols, sa_vals):
-            cursor[name] = v
-        df = pd.concat([df, pd.DataFrame([cursor])], ignore_index=True)
-        df = df.sort_values(sort_cols + ["_seg", "doc_id"],
-                            ascending=ascending + [first_asc, first_asc],
-                            na_position="last",
-                            kind="mergesort").reset_index(drop=True)
-        pos = int(df.index[df["_cursor"]][0])
-        df = df.iloc[pos + 1:].drop(columns=["_seg", "_cursor"])
-        return count, df.head(k).reset_index(drop=True)
-    df = df.sort_values(sort_cols + ["doc_id"],
-                        ascending=ascending + [first_asc],
-                        na_position="last", kind="mergesort").head(k)
-    return count, df.reset_index(drop=True)
+        cmp = list(zip(levels, after))
+        if exact and len(search_after) == len(sort) + 2:
+            c_seg = search_after[-2]
+            cmp += [(sign * ((seg_key > c_seg) - (seg_key < c_seg)), 0),
+                    (tb, sign * int(search_after[-1]))]
+        keep = _after_mask(count, cmp)
+        ids, scores, tb = ids[keep], scores[keep], tb[keep]
+        levels = [lv[keep] for lv in levels]
+    top = _sorted_top(levels, tb, k)
+    out = np.empty(len(top), dtype=_sort_dtype(sort))
+    for i in range(len(sort)):
+        out[f"key{i}"] = vals[i][ids[top]] if i in vals \
+            else levels[2 * i][top]
+        out[f"miss{i}"] = levels[2 * i + 1][top]
+    out["doc_id"], out["score"] = ids[top], scores[top]
+    return count, out
 
 
-def root_merge(parts: list[tuple], k: int, offset: int
-               ) -> tuple[int, list, list[int], list[float], float | None]:
-    """Root merge of leaf parts (merge_fruits, root.rs:753-771). Each
-    part is (segment key, match_count, PARTIAL_DTYPE top); keys are
-    segment ids, or (index_uid, segment_id) tuples for a union. Global
-    order is (score desc, key desc, doc_id desc), by one lexsort over
-    the concatenated partials. Returns (num_hits, winner keys, doc ids,
-    scores) of the offset/k slice, and the best score over every part
-    (None when no part holds a hit)."""
+def root_merge(parts: list[tuple], k: int, offset: int,
+               sort_desc: tuple | None = None
+               ) -> tuple[int, list, np.ndarray, float | None]:
+    """Root merge of leaf parts (merge_fruits, root.rs:753-771), each
+    (segment key, match_count, top); a union's keys are (index_uid,
+    segment_id). One lexsort orders by score desc (sort_desc None), or
+    by each sort field's (key, miss) (sort_desc: per field, whether it
+    descends; a val field's values ranked over the at most S·k rows
+    received), then by segment key and doc_id in the first direction.
+    Returns (num_hits, winner keys, winner rows of the offset/k slice,
+    the first row's score or None when no part holds a hit)."""
     num_hits = sum(c for _, c, _ in parts)
     tops = [(key, top) for key, _cnt, top in parts if len(top)]
     if not tops:
-        return num_hits, [], [], [], None
+        return num_hits, [], np.zeros(0, dtype=PARTIAL_DTYPE), None
     # a segment's ordinal is its key's rank, so ordinals order like keys
     keys = sorted({key for key, _ in tops})
     rank = {key: i for i, key in enumerate(keys)}
     allc = np.concatenate([top for _, top in tops])
     seg_ord = np.repeat([rank[key] for key, _ in tops],
                         [len(top) for _, top in tops])
-    order = np.lexsort((-allc["doc_id"], -seg_ord, -allc["score"]))
+    levels, sign = [-allc["score"]], -1
+    if sort_desc is not None:
+        levels, sign = [], -1 if sort_desc[0] else 1
+        for i, desc in enumerate(sort_desc):
+            key = allc[f"key{i}"]
+            if key.dtype == object:
+                key = _SortColumn.of_values(key).directed(slice(None),
+                                                          desc)[0]
+            levels += [key, allc[f"miss{i}"]]
+    order = np.lexsort([sign * allc["doc_id"], sign * seg_ord]
+                       + levels[::-1])
     win = order[offset:offset + k]
-    return (num_hits, [keys[o] for o in seg_ord[win].tolist()],
-            allc["doc_id"][win].tolist(), allc["score"][win].tolist(),
+    return (num_hits, [keys[o] for o in seg_ord[win].tolist()], allc[win],
             float(allc["score"][order[0]]))
+
+
+def _merged_result(parts: list[tuple], k: int, offset: int,
+                   fetch_fields: bool, fetch, sort: tuple | None = None
+                   ) -> SearchResult:
+    """root_merge, then the doc-store fetch of the k winners only
+    (`fetch(keys, doc_ids, scores)`). Sorted hits carry their sort
+    values, decoded from their keys."""
+    num_hits, keys, rows, max_score = root_merge(
+        parts, k, offset, sort and tuple(d for _f, d, _k in sort))
+    dids, scores = rows["doc_id"].tolist(), rows["score"].tolist()
+    hits = fetch(keys, dids, scores) if fetch_fields else [
+        SearchHit(sc, key if isinstance(key, str) else "/".join(key), d, {})
+        for key, d, sc in zip(keys, dids, scores)]
+    if sort is None:
+        return SearchResult(num_hits, hits, max_score=max_score)
+    cols = [[None if m else v if kind == "val"
+             else _decode_key(U64_MAX - v if desc else v, kind)
+             for v, m in zip(rows[f"key{i}"].tolist(),
+                             rows[f"miss{i}"].tolist())]
+            for i, (_f, desc, kind) in enumerate(sort)] if hits else []
+    for h, vals in zip(hits, zip(*cols)):
+        h.sort = vals
+    return SearchResult(num_hits, hits)
+
+
+def sorted_search(searcher, members: list, query, k: int, sort_by,
+                  fetch_fields: bool, search_after, count_all: bool,
+                  offset: int) -> SearchResult:
+    """sort_search over (uid, IndexSearcher) members (uid None for one
+    index): their sorted leaf parts through one root merge, then
+    `searcher._fetch` of the k winners. search_after holds one value per
+    sort field, optionally followed by a hit's segment id (a union's
+    `uid/segment_id`) and doc_id. `_score desc` alone is score order:
+    `searcher.search` (WAND when count_all=False); a values-only cursor
+    (score,) keeps the hits scoring strictly less."""
+    sa = None if search_after is None else tuple(search_after)
+    if [tuple(s) for s in sort_by] == [("_score", "desc")]:
+        if sa is not None:
+            sa = (float(sa[0]), "", -1) if len(sa) == 1 else \
+                (float(sa[0]), str(sa[1]), int(sa[2]))
+        res = searcher.search(query, k=k, offset=offset,
+                              fetch_fields=fetch_fields,
+                              count_all=count_all, search_after=sa)
+        for h in res.hits:
+            h.sort = (h.score,)
+        return res
+    # the manifest's per-segment doc-map types (a segment that predates
+    # them makes its fields val keys: exact, only slower)
+    sort = sort_spec(sort_by, [seg.get("doc_fields", {}) for _u, m in members
+                               for seg in m.manifest.segments()])
+    if sa is not None and len(sa) != len(sort):
+        if len(sa) != len(sort) + 2:
+            raise ValueError("search_after: one value per sort field, "
+                             "then optionally segment_id and doc_id")
+        *vals, seg, doc = sa
+        seg = str(seg)
+        if members and members[0][0] is not None:
+            uid, slash, sid = seg.partition("/")
+            if not slash:
+                raise ValueError("union address cursors need a "
+                                 f"uid/segment_id segment, got {seg!r}")
+            seg = (uid, sid)
+        sa = (*vals, seg, int(doc))
+    parts = [p for uid, m in members for p in m._sorted_parts(
+        m.parse(query), offset + k, sort, sa, count_all, uid)]
+    res = _merged_result(parts, k, offset, fetch_fields, searcher._fetch,
+                         sort)
+    # ip keys are their sortable hex; hits show the text form, as on fetch
+    ips = {f for _u, m in members for seg in m.manifest.segments()
+           for f, t in seg.get("field_types", {}).items() if t == "ip"}
+    if ips & {f for f, _d, _k in sort}:
+        for h in res.hits:
+            h.sort = tuple(v if v is None or f not in ips
+                           else hex_to_ip_display(v)
+                           for (f, _d, _k), v in zip(sort, h.sort))
+    return res
 
 
 @dataclass
@@ -2082,32 +2279,33 @@ class SearchHit:
     segment_id: str
     doc_id: int
     doc: dict
+    # sorted searches: one sort value per sort field (None: no value)
+    sort: tuple | None = None
 
 
 @dataclass
 class SearchResult:
     num_hits: int
     hits: list[SearchHit]
-    # sort_search only: (sort values..., segment_id, doc_id) of the last
-    # hit — pass as search_after to sort_search for the next page
-    last_sort_key: tuple | None = None
     # best score over ALL matched docs considered at the root merge —
     # NOT hits[0] (with a non-zero offset that is the post-slice best,
     # the wrong ES max_score denominator)
     max_score: float | None = None
 
     @property
+    def last_sort_key(self) -> tuple | None:
+        """Sorted searches: the last hit's (sort values..., segment_id,
+        doc_id)."""
+        h = self.hits[-1] if self.hits else None
+        return h and h.sort and (*h.sort, h.segment_id, h.doc_id)
+
+    @property
     def next_cursor(self) -> tuple | None:
-        """Pass as search_after to fetch the next page (scroll analog).
-        Sorted searches carry their own (sort values..., address) cursor
-        — returning the score cursor for them would silently paginate in
-        score order."""
-        if self.last_sort_key is not None:
-            return self.last_sort_key
-        if not self.hits:
-            return None
-        h = self.hits[-1]
-        return (h.score, h.segment_id, h.doc_id)
+        """Pass as search_after to fetch the next page (scroll analog):
+        last_sort_key, else the last hit's (score, segment_id, doc_id)."""
+        h = self.hits[-1] if self.hits else None
+        return h and (self.last_sort_key
+                      or (h.score, h.segment_id, h.doc_id))
 
 
 class IndexSearcher:
@@ -2125,8 +2323,12 @@ class IndexSearcher:
     (_fan_out_wanted) gates every fan-out surface — search,
     sort_search, list_terms, and search_many (which sums docs over its
     per-query pruned pairs); inprocess_doc_budget=0 pins the fan-out
-    path. search, search_many and sort_search share one leaf fan-out
-    (_fan_out).
+    path.
+
+    search, search_many and sort_search share one leaf fan-out
+    (_fan_out) and one root merge (root_merge): a sorted leaf keys each
+    sort value as an order-preserving u64, so field order is the merge's
+    multi-key case and score order its one-key case.
     """
 
     def __init__(self, index_dir: str, spark=None,
@@ -2237,12 +2439,7 @@ class IndexSearcher:
                          fetch_fields: bool) -> SearchResult:
         """root_merge of the leaf parts, then the optional doc-store
         fetch of the winners."""
-        num_hits, sids, dids, scores, max_score = root_merge(parts, k,
-                                                             offset)
-        hits = self._fetch(sids, dids, scores) if fetch_fields else [
-            SearchHit(sc, sid, d, {})
-            for sid, d, sc in zip(sids, dids, scores)]
-        return SearchResult(num_hits, hits, max_score=max_score)
+        return _merged_result(parts, k, offset, fetch_fields, self._fetch)
 
     @_request_scope()
     def search_many(self, queries: list, k: int = 10, offset: int = 0,
@@ -2372,49 +2569,52 @@ class IndexSearcher:
             seeds.append(seed)
             pairs.extend((qi, s["segment_id"]) for s in segs)
 
-        def leaf(qi: int, sid: str) -> tuple[int, pd.DataFrame]:
-            # Spark ships pandas batches; the root gets arrays back below
-            cnt, top = segment_top_k(
+        def leaf(qi: int, sid: str) -> tuple[int, np.ndarray]:
+            return segment_top_k(
                 os.path.join(index_dir, "segments", sid), nodes[qi],
                 needs[qi], tokenizer, text_field, use_wand, search_after,
                 seeds[qi])
-            return cnt, pd.DataFrame(top)
 
-        import pyspark.sql.types as T
-        fanned = self._fan_out(pairs, leaf,
-                               [T.StructField("score", T.DoubleType())])
+        fanned = self._fan_out(pairs, leaf, PARTIAL_DTYPE)
         for qi, parts in enumerate(out):
-            parts.extend((sid, cnt, _partial(grp["doc_id"].to_numpy(),
-                                             grp["score"].to_numpy()))
-                         for sid, cnt, grp in fanned.get(qi, []))
+            parts.extend(fanned.get(qi, []))
         return out
 
-    def _fan_out(self, pairs: list[tuple[int, str]], leaf, fields: list
-                 ) -> dict[int, list[tuple[str, int, pd.DataFrame]]]:
+    def _fan_out(self, pairs: list[tuple[int, str]], leaf, dtype: np.dtype
+                 ) -> dict[int, list[tuple[str, int, np.ndarray]]]:
         """The one Spark leaf fan-out (the reference's
         search_partial_hits_phase, root.rs:725-795): ship
         (query_id, segment_id) pairs through one repartitioned
         mapInPandas, run `leaf(query_id, segment_id) -> (match_count,
         top)` on the executors, collect, and return
-        {query_id: [(segment_id, match_count, top), ...]}. `top` holds
-        doc_id plus the value columns typed by `fields` (StructFields).
-        An empty leaf ships one sentinel row (doc_id -1) so its
-        match_count still reaches the root. `leaf` must not capture the
-        searcher (the SparkSession does not pickle)."""
+        {query_id: [(segment_id, match_count, top), ...]}. `top` is a
+        structured array of `dtype`; on the wire a u64 field travels as
+        `key ^ (1 << 63)` in a long (exact, no unsigned type in Spark)
+        and an object field as JSON text. An empty leaf ships one
+        sentinel row (doc_id -1) so its match_count still reaches the
+        root. `leaf` must not capture the searcher (the SparkSession
+        does not pickle)."""
         if not pairs:
             return {}
         import pyspark.sql.types as T
-        value_cols = [f.name for f in fields]
-        out_cols = ["query_id", "segment_id", "doc_id", "match_count",
-                    *value_cols]
+        wire = {"i": T.LongType(), "u": T.LongType(), "O": T.StringType(),
+                "f": T.DoubleType(), "b": T.BooleanType()}
+        names = list(dtype.names)
         schema = T.StructType([
             T.StructField("query_id", T.IntegerType()),
             T.StructField("segment_id", T.StringType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("match_count", T.LongType()), *fields])
+            T.StructField("match_count", T.LongType()),
+            *(T.StructField(n, wire[dtype[n].kind]) for n in names)])
         sdf = self.spark.createDataFrame(
             pairs, "query_id int, segment_id string"
         ).repartition(min(len(pairs), 2 * _default_parallelism(self.spark)))
+
+        def to_wire(col: np.ndarray):
+            if col.dtype.kind == "u":
+                return (col ^ _SIGN).view(np.int64)
+            if col.dtype == object:
+                return [json.dumps(v, default=str) for v in col]
+            return col
 
         def run(iterator):
             for pdf in iterator:
@@ -2422,19 +2622,27 @@ class IndexSearcher:
                                    pdf["segment_id"].tolist()):
                     cnt, top = leaf(qi, sid)
                     if not len(top):
-                        top = pd.DataFrame({"doc_id": [-1],
-                                            **{c: [None]
-                                               for c in value_cols}})
-                    yield top.assign(query_id=qi, segment_id=sid,
-                                     match_count=cnt)[out_cols]
+                        top = np.zeros(1, dtype=dtype)
+                        top["doc_id"] = -1
+                    yield pd.DataFrame({
+                        "query_id": qi, "segment_id": sid,
+                        "match_count": cnt,
+                        **{n: to_wire(top[n]) for n in names}})
 
         rows = sdf.mapInPandas(run, schema=schema).toPandas()
-        parts: dict[int, list[tuple[str, int, pd.DataFrame]]] = {}
+        parts: dict[int, list[tuple[str, int, np.ndarray]]] = {}
         for (qi, sid), grp in rows.groupby(["query_id", "segment_id"],
                                            sort=False):
-            parts.setdefault(int(qi), []).append((
-                sid, int(grp["match_count"].iloc[0]),
-                grp[grp["doc_id"] >= 0][["doc_id", *value_cols]]))
+            cnt = int(grp["match_count"].iloc[0])
+            grp = grp[grp["doc_id"] >= 0]
+            top = np.empty(len(grp), dtype=dtype)
+            for n in names:
+                top[n] = ([json.loads(v) for v in grp[n]]
+                          if dtype[n] == object else
+                          grp[n].to_numpy(np.int64).view(np.uint64) ^ _SIGN
+                          if dtype[n].kind == "u" else
+                          grp[n].to_numpy(dtype[n]))
+            parts.setdefault(int(qi), []).append((sid, cnt, top))
         return parts
 
     def _fetch(self, sids: list[str], dids: list[int],
@@ -2574,15 +2782,14 @@ class IndexSearcher:
                         v[:] = lowered
                 elif for_arrow and c in u64_cols:
                     # exact u64 transport: decimal(20,0) in the schema,
-                    # python-int read (the numpy view would degrade a
-                    # NULLABLE uint64 column to float64 and round
-                    # values past 2^53)
+                    # read from the exact u64 sort keys (the numpy view
+                    # would degrade a NULLABLE uint64 column to float64
+                    # and round values past 2^53)
                     import decimal as _dec
-                    exact = reader.doc_column_exact(c)
-                    vals_ = [None if exact[i] is None
-                             else _dec.Decimal(exact[i]) for i in ids]
-                    v = np.empty(len(vals_), dtype=object)
-                    v[:] = vals_
+                    col = reader.sort_keys(c, "u64")
+                    v = np.empty(len(ids), dtype=object)
+                    v[:] = [None if m else _dec.Decimal(key) for key, m in
+                            zip(col.keys[ids].tolist(), col.miss[ids])]
                 else:
                     v = reader.sortable_column(c)[ids]
                 if for_arrow and getattr(v, "dtype", None) == np.uint64:
@@ -2686,18 +2893,21 @@ class IndexSearcher:
                     sort_by: tuple = (("_score", "desc"),),
                     fetch_fields: bool = True,
                     search_after: tuple | None = None,
-                    count_all: bool = True) -> SearchResult:
+                    count_all: bool = True, offset: int = 0
+                    ) -> SearchResult:
         """Top-k under an explicit sort spec (<= 2 fields, each `_score` |
-        `_doc` | fast-field column; collector.rs:994-1029). Global merge
-        re-applies the same key with the (segment_id, doc_id) tie-break in
-        the first sort order's direction.
+        `_doc` | fast-field column; collector.rs:994-1029) through
+        search's leaf fan-out and root_merge: each sort value is an
+        order-preserving u64 key (sort_spec), ties break by (segment_id,
+        doc_id) in the first field's direction, and each hit carries its
+        sort values. `_score desc` alone is score order (search).
 
-        search_after=(sort values..., segment_id, doc_id) pages deep
-        without collecting offset+k everywhere (the ES sort+search_after
-        pattern; cursor = the previous page's last hit).
+        search_after is the previous page's next_cursor (sort values...,
+        segment_id, doc_id), or an ES values-only cursor (sort values...)
+        keeping hits strictly after it.
 
         count_all=False enables segment early-exit when the FIRST sort
-        field is a fast-field column with per-segment min/max stats:
+        field is a typed fast field with per-segment min/max stats:
         segments are visited best-bound-first and the walk stops once k
         hits exist and the next segment's bound cannot beat the current
         k-th key (strictly — ties keep walking for tie-break
@@ -2705,155 +2915,56 @@ class IndexSearcher:
         bound (the reference's split time-range ordering + CountHits
         trade-off: "newest 20 logs" stops after the newest splits,
         list_relevant_splits ordering / leaf.rs early-exit)."""
-        node = self.parse(query)
+        return sorted_search(self, [(None, self)], self.parse(query), k,
+                             sort_by, fetch_fields, search_after,
+                             count_all, offset)
+
+    def _sorted_parts(self, node: A.Node, need: int, sort: tuple,
+                      search_after: tuple | None, count_all: bool,
+                      uid: str | None = None) -> list[tuple]:
+        """sort_search's leaf phase: prune, then segment_sort_top_k by
+        the Spark fan-out, the count_all=False early-exit walk or an
+        in-process loop. Parts (and search_after's segment) are keyed
+        by segment id, or (uid, segment_id) for a union member."""
         segs = self._prune(node)
-        use_spark = self._fan_out_wanted([segs])
-        if use_spark:
-            # u64 sort keys don't survive Arrow transport exactly
-            # (no unsigned long in Spark; doubles lose >2^53) — the
-            # pinned u64 ordering semantics run driver-side
-            _types, u64 = self._doc_types(segs)
-            if any(f in u64 for f, _d in sort_by):
-                use_spark = False
-        field0, dir0 = sort_by[0]
-        early_exit = (not count_all and not use_spark
-                      and field0 not in ("_score", "_doc"))
-        if use_spark:
-            parts = self._sort_fan_out(segs, node, k, sort_by,
-                                       search_after)
-        else:
-            if early_exit:
-                def _bound(seg):
-                    st = seg.get("col_stats", {}).get(field0)
-                    if st is None:
-                        return None
-                    return st[1] if dir0 == "desc" else st[0]
-                keyed = [(_bound(s), s) for s in segs]
-                # stat-less segments can't be bounded: always visit, first
-                unknown = [s for b, s in keyed if b is None]
-                known = sorted([bs for bs in keyed if bs[0] is not None],
-                               key=lambda bs: bs[0],
-                               reverse=(dir0 == "desc"))
-                walk = [(None, s) for s in unknown] + known
-            else:
-                walk = [(None, s) for s in segs]
-            parts = []
-            rows_seen = 0
-            kth_key = None
-            # running top-k across visited segments, kept TRIMMED to k
-            # rows: each step merges <= 2k rows instead of re-sorting
-            # every accumulated frame (that was O(S^2 k log(Sk)) on a
-            # slow-converging walk over many segments)
-            cand = None
-            asc = [d == "asc" for _f, d in sort_by]
-            sort_keys = ([f"_sort{i}" for i in range(len(sort_by))]
-                         + ["segment_id", "doc_id"])
-            sort_asc = asc + [asc[0], asc[0]]
-            for bnd, seg in walk:
-                if early_exit and kth_key is not None and bnd is not None:
-                    worse = bnd < kth_key if dir0 == "desc" \
-                        else bnd > kth_key
-                    if worse:
-                        break  # best-first order: the rest are worse too
-                seg_dir = os.path.join(self.index_dir, "segments",
-                                       seg["segment_id"])
-                cnt, top = segment_sort_top_k(seg_dir, node, k,
-                                              self.tokenizer,
-                                              self.text_field, sort_by,
-                                              search_after)
-                top = top.copy()
-                top["segment_id"] = seg["segment_id"]
-                parts.append((cnt, top))
-                if early_exit and k > 0:  # k=0: no k-th key exists
-                    rows_seen += len(top)
-                    if len(top):
-                        cand = top if cand is None else \
-                            pd.concat([cand, top], ignore_index=True)
-                        cand = cand.sort_values(
-                            sort_keys, ascending=sort_asc,
-                            na_position="last",
-                            kind="mergesort").head(k)
-                    if rows_seen >= k and cand is not None \
-                            and len(cand) >= k:
-                        v = cand.iloc[k - 1]["_sort0"]
-                        # a null k-th key can't bound anything
-                        kth_key = None if pd.isna(v) else _py_scalar(v)
-        num_hits = sum(c for c, _ in parts)
-        frames = [t for _c, t in parts if len(t)]
-        if not frames:
-            return SearchResult(num_hits, [])
-        allc = pd.concat(frames, ignore_index=True)
-        sort_cols = [f"_sort{i}" for i in range(len(sort_by))]
-        ascending = [d == "asc" for _f, d in sort_by]
-        first_asc = ascending[0]
-        allc = allc.sort_values(sort_cols + ["segment_id", "doc_id"],
-                                ascending=ascending + [first_asc, first_asc],
-                                na_position="last", kind="mergesort").head(k)
-        score_col = None
-        for i, (f, _d) in enumerate(sort_by):
-            if f == "_score":
-                score_col = f"_sort{i}"
-        winners = allc[["doc_id", "segment_id"]].copy()
-        winners["score"] = (allc[score_col].astype(float) if score_col
-                            else 0.0)
-        hits = self._fetch(winners["segment_id"].tolist(),
-                           [int(d) for d in winners["doc_id"].tolist()],
-                           winners["score"].tolist()) if fetch_fields else [
-            SearchHit(float(r.score), str(r.segment_id), int(r.doc_id), {})
-            for r in winners.itertuples()]
-        last_key = None
-        if len(allc):
-            last = allc.iloc[-1]
-            last_key = tuple(_py_scalar(last[c]) for c in sort_cols) + (
-                str(last["segment_id"]), int(last["doc_id"]))
-        return SearchResult(num_hits, hits, last_sort_key=last_key)
+        index_dir, tok, text_field = (self.index_dir, self.tokenizer,
+                                      self.text_field)
+        key = (lambda sid: sid) if uid is None else (lambda sid: (uid, sid))
 
-    def _sort_fan_out(self, segs: list[dict], node: A.Node, k: int,
-                      sort_by: tuple, search_after: tuple | None = None
-                      ) -> list[tuple[int, pd.DataFrame]]:
-        """sort_search leaves through _fan_out (reference: leaf sort
-        collectors, collector.rs:994-1145). The leaf result schema
-        depends on the sort spec's column dtypes, read from the doc-map
-        parquet footer (metadata-only; a driver-side probe would
-        evaluate a whole leaf). Integer sort keys travel as LONGS via
-        the pandas nullable Int64 extension dtype (a nullable int
-        column materializes as float64-with-NaN in pandas, which plain
-        astype('int64') cannot carry; doubles would lose exactness past
-        2^53 — epoch-nanos territory). The u64 case never reaches this
-        path (driver fallback)."""
-        import pyspark.sql.types as T
-        index_dir = self.index_dir
-        tokenizer = self.tokenizer
-        text_field = self.text_field
-        doc_types, _u64 = self._doc_types(segs)
-        fields = []
-        np_casts: dict[str, str] = {}
-        for i, (f, _d) in enumerate(sort_by):
-            c = f"_sort{i}"
-            if f == "_score":
-                st = T.DoubleType()
-            elif f in ("_doc", "_shard_doc"):
-                st = T.LongType()
-            else:
-                st = doc_types.get(f, T.StringType())
-            if isinstance(st, (T.IntegerType, T.LongType)):
-                st = T.LongType()
-                np_casts[c] = "Int64"  # pandas nullable int (NaN -> null)
-            elif isinstance(st, (T.FloatType, T.DoubleType)):
-                st = T.DoubleType()
-                np_casts[c] = "float64"
-            fields.append(T.StructField(c, st))
+        def leaf(_qi: int, sid: str) -> tuple[int, np.ndarray]:
+            return segment_sort_top_k(
+                os.path.join(index_dir, "segments", sid), node, need, tok,
+                text_field, sort, search_after, key(sid))
 
-        def leaf(_qi: int, sid: str) -> tuple[int, pd.DataFrame]:
-            cnt, top = segment_sort_top_k(
-                os.path.join(index_dir, "segments", sid), node, k,
-                tokenizer, text_field, sort_by, search_after)
-            return cnt, top.astype(np_casts)
+        if self._fan_out_wanted([segs]):
+            fanned = self._fan_out([(0, s["segment_id"]) for s in segs],
+                                   leaf, _sort_dtype(sort))
+            return [(key(sid), cnt, top)
+                    for sid, cnt, top in fanned.get(0, [])]
+        field0, desc0, kind0 = sort[0]
+        early_exit = (not count_all and kind0 != "val"
+                      and field0 not in ("_score", "_doc", "_shard_doc"))
 
-        fanned = self._fan_out([(0, s["segment_id"]) for s in segs], leaf,
-                               fields)
-        return [(cnt, top.assign(segment_id=sid))
-                for sid, cnt, top in fanned.get(0, [])]
+        def bound(seg: dict) -> int:
+            # the directed key of the segment's best value; a stat-less
+            # segment can't be bounded: always visit, first
+            st = seg.get("col_stats", {}).get(field0)
+            return -1 if st is None or not early_exit else \
+                _cursor_key(st[desc0], kind0, desc0)[0]
+
+        parts = []
+        best = np.zeros(0, dtype=np.uint64)  # the need smallest key0s
+        for bnd, seg in sorted(((bound(s), s) for s in segs),
+                               key=lambda bs: bs[0]):
+            if len(best) == need > 0 and bnd > int(best.max()):
+                break  # best-first order: the rest are worse too
+            cnt, top = leaf(0, seg["segment_id"])
+            parts.append((key(seg["segment_id"]), cnt, top))
+            if early_exit and len(top):
+                best = np.concatenate([best, top["key0"]])
+                if len(best) > need:
+                    best = np.partition(best, need - 1)[:need]
+        return parts
 
     def list_fields(self) -> list[dict]:
         """Schema/capability union across segments (reference:
@@ -2979,22 +3090,14 @@ def source_path_value(src, path: str):
     return cur
 
 
-def _py_scalar(v):
-    """numpy scalar -> python native (JSON-serializable cursors); other
-    values (str, Timestamp, None) pass through."""
-    if isinstance(v, np.generic):
-        return v.item()
-    return v
-
-
 def _doc_schema_types(seg_dir: str) -> tuple[dict, set]:
     """(Spark types for a segment's doc-map columns, uint64 column names)
     from the parquet footer only (no data read, no leaf evaluation).
     uint64 maps to DecimalType(20,0) for Arrow transport (Spark has no
     unsigned long; doubles would corrupt values past 2^53 — decimals
     keep groupBy keys and sums EXACT across the full u64 range, at
-    decimal-arithmetic cost; the hot sort paths still stay driver-side,
-    see sort_search's fallback)."""
+    decimal-arithmetic cost). The aggregation transport; sort keys
+    travel as u64 keys instead (_fan_out)."""
     import pyarrow as pa
     import pyspark.sql.types as T
     schema = pq.read_schema(os.path.join(seg_dir, "docs.parquet"))

@@ -717,22 +717,21 @@ def es_search(searcher, body: dict, default_field: str | None = None,
                 except (TypeError, ValueError):
                     return x
             sa = [_from_nanos(i, x) for i, x in enumerate(sa)]
-        res = searcher.sort_search(node, k=offset + size,
+        res = searcher.sort_search(node, k=size, offset=offset,
                                    sort_by=sort_by,
                                    search_after=(tuple(sa) if sa
                                                  else None))
-        hits = res.hits[offset:offset + size]
     else:
         res = _pre if _pre is not None else searcher.search(
             node, k=size, offset=offset,
             search_after=(tuple(sa) if sa else None))
-        hits = res.hits
+    hits = res.hits
     hl_spec = body.get("highlight", {}).get("fields", {})
     hl_terms = None
     if hl_spec:
         from .snippets import extract_query_terms
         hl_terms = extract_query_terms(node)
-    from .engine import INTERNAL_DOC_FIELDS, doc_source, source_path_value
+    from .engine import INTERNAL_DOC_FIELDS, doc_source
     inc = body.get("_source_includes") or source_includes
     exc = body.get("_source_excludes") or source_excludes
     # the standard ES `_source` body field: false (no source), a str or
@@ -774,30 +773,17 @@ def es_search(searcher, body: dict, default_field: str | None = None,
             "_source": emitted,
         }
         if sort_by:
-            # round-trippable cursor: sort values + the doc address
-            # tie-break (ES uses _shard_doc the same way) — feed back
-            # verbatim as `search_after` for the next page
-            vals = []
-            for fi, (f, _d) in enumerate(sort_by):
-                if f == "_score":
-                    vals.append(float(h.score))
-                elif f in ("_doc", "_shard_doc"):
-                    vals.append(int(h.doc_id))
-                elif f in src:
-                    v_ = src.get(f)
-                    if sort_fmt.get(fi) == "epoch_nanos_int" \
-                            and isinstance(v_, (int, float)):
-                        v_ = int(v_) * 1_000_000
-                    vals.append(v_)
-                else:
-                    # dynamic sort path: value from the stored source
-                    # (UNfiltered — cursors must not depend on
-                    # _source include/exclude shaping)
-                    vals.append(source_path_value(doc_source(h.doc), f))
+            # the hit's sort values, decoded from its sort keys (so
+            # _source shaping and fetch_fields never touch them)
+            vals = list(h.sort)
+            for fi, fmt in sort_fmt.items():
+                if fmt == "epoch_nanos_int" \
+                        and isinstance(vals[fi], (int, float)):
+                    vals[fi] = int(vals[fi]) * 1_000_000
             # values only, like the reference's ES hits; fed back as
             # `search_after` it pages with ES strictly-after semantics
             # (equal-valued boundary docs are skipped — add a second
-            # sort field to tie-break, exactly like ES). The legacy
+            # sort field to tie-break, exactly like ES). The
             # values+address cursor shape is still accepted on input.
             hit["sort"] = vals
         if hl_spec:

@@ -4,15 +4,16 @@ every matching index — root.rs plan_splits_for_root_search /
 list_indexes_metadata; quickwit-metastore index patterns).
 
 The cross-index merge key mirrors the reference's global order: score
-desc, then the doc address (index_uid, segment_id, doc_id) desc."""
+desc (or a sort's keys), then the doc address (index_uid, segment_id,
+doc_id) in the first order's direction, through the engine's root merge."""
 
 from __future__ import annotations
 
 import fnmatch
 import os
 
-from .engine import (IndexSearcher, SearchHit, SearchResult, _request_scope,
-                     root_merge)
+from .engine import (IndexSearcher, SearchHit, SearchResult, _merged_result,
+                     _request_scope, sorted_search)
 
 
 def resolve_index_patterns(root_dir: str, patterns: list[str]
@@ -76,15 +77,6 @@ def _json_depth_at(raw: bytes, pos: int) -> int:
     return -1 if in_str else depth
 
 
-class _desc(str):
-    """Reverse-ordering wrapper for descending string sort keys."""
-    def __lt__(self, other):
-        return str.__gt__(self, other)
-
-    def __gt__(self, other):
-        return str.__lt__(self, other)
-
-
 # ---------------------------------------------------------------------------
 # UnionSearcher: the ES facade over index PATTERNS
 # ---------------------------------------------------------------------------
@@ -113,57 +105,6 @@ def resolve_es_index_patterns(root_dir: str, expr: str,
            if any(_fn.fnmatch(n, p) for p in pos)
            and not any(_fn.fnmatch(n, p) for p in neg)]
     return out
-
-
-def _hit_sort_value(hit, field: str):
-    """One hit's sort-merge key value: engine doc columns first (exact
-    datetime millis / numerics), then the stored source for dynamic
-    paths."""
-    if field == "_score":
-        return hit.score
-    if field in ("_doc", "_shard_doc"):
-        return hit.doc_id
-    v = hit.doc.get(field)
-    if v is not None:
-        return v
-    from .engine import doc_source, source_path_value
-    cur = source_path_value(doc_source(hit.doc), str(field))
-    if isinstance(cur, (dict, list)):
-        return None
-    return cur
-
-
-class _KeyWrap:
-    """Comparator wrapper: missing values LAST regardless of
-    direction; descending fields invert; mixed types compare as
-    (typeclass, value) so a stray string can't TypeError the merge."""
-
-    __slots__ = ("key",)
-
-    def __init__(self, value, desc: bool):
-        if value is None or (isinstance(value, float)
-                             and value != value):
-            self.key = (2, 0)  # missing: after everything
-            return
-        if isinstance(value, bool):
-            value = int(value)
-        if isinstance(value, (int, float)):
-            self.key = (0, -value if desc else value)
-        else:
-            s = str(value)
-            self.key = (1, _desc(s) if desc else s)
-
-    def __lt__(self, other):
-        return self.key < other.key
-
-    def __eq__(self, other):
-        # REQUIRED for multi-field tuple sorts: without __eq__, equal
-        # primary keys compare by object identity (False), so the
-        # tuple comparison would never consult the secondary key
-        return isinstance(other, _KeyWrap) and self.key == other.key
-
-    def __hash__(self):
-        return hash(self.key)
 
 
 class UnionSearcher:
@@ -264,12 +205,24 @@ class UnionSearcher:
         # the (uid, segment_id) keys merge in tuple order: the joined
         # "uid/segment" string misorders uids where one is a prefix of
         # another ('/' > '-')
-        num_hits, keys, dids, scores, max_score = root_merge(parts, k,
-                                                             offset)
-        if not fetch_fields:
-            hits = [SearchHit(sc, f"{uid}/{sid}", d, {})
-                    for (uid, sid), d, sc in zip(keys, dids, scores)]
-            return SearchResult(num_hits, hits, max_score=max_score)
+        return _merged_result(parts, k, offset, fetch_fields, self._fetch)
+
+    @_request_scope()
+    def sort_search(self, query, k: int = 10,
+                    sort_by: tuple = (("_score", "desc"),),
+                    fetch_fields: bool = True, search_after=None,
+                    count_all: bool = True, offset: int = 0
+                    ) -> SearchResult:
+        """IndexSearcher.sort_search over every member, through one root
+        merge (engine.sorted_search)."""
+        return sorted_search(self, list(zip(self.uids, self.searchers)),
+                             query, k, sort_by, fetch_fields, search_after,
+                             count_all, offset)
+
+    def _fetch(self, keys: list[tuple[str, str]], dids: list[int],
+               scores: list[float]) -> list[SearchHit]:
+        """The winners' docs through their member's _fetch, in merge
+        order; hits name their segment `uid/segment_id`."""
         by_uid: dict[str, list[int]] = {}
         for i, (uid, _sid) in enumerate(keys):
             by_uid.setdefault(uid, []).append(i)
@@ -282,49 +235,7 @@ class UnionSearcher:
             for i, h in zip(idx, fetched):
                 hits[i] = SearchHit(h.score, f"{uid}/{h.segment_id}",
                                     h.doc_id, h.doc)
-        return SearchResult(num_hits, hits, max_score=max_score)
-
-    def sort_search(self, query, k: int = 10,
-                    sort_by: tuple = (("_score", "desc"),),
-                    fetch_fields: bool = True, search_after=None,
-                    count_all: bool = True) -> SearchResult:
-        if search_after is not None \
-                and len(search_after) != len(sort_by):
-            raise ValueError(
-                "multi-index sort search takes ES VALUES-ONLY "
-                "search_after cursors (one value per sort field); "
-                "address cursors don't span indexes — page with "
-                "scroll instead")
-        rows: list[tuple] = []
-        total = 0
-        # the merge reads field keys from the fetched docs
-        fetch = fetch_fields or any(
-            f not in ("_score", "_doc", "_shard_doc") for f, _d in sort_by)
-        for uid, s in zip(self.uids, self.searchers):
-            # a values-only cursor filters identically inside every
-            # index (strictly-after semantics are index-independent)
-            res = s.sort_search(s.parse(query), k=k,
-                                sort_by=sort_by,
-                                fetch_fields=fetch,
-                                search_after=search_after,
-                                count_all=count_all)
-            total += res.num_hits
-            rows.extend((uid, h) for h in res.hits)
-        first_desc = sort_by[0][1] == "desc"
-
-        def keyf(row):
-            uid, h = row
-            ks = [_KeyWrap(_hit_sort_value(h, f), d == "desc")
-                  for f, d in sort_by]
-            addr = ((_desc(uid), _desc(h.segment_id), -h.doc_id)
-                    if first_desc else (uid, str(h.segment_id),
-                                        h.doc_id))
-            return (*ks, *addr)
-        rows.sort(key=keyf)
-        hits = [SearchHit(h.score, f"{uid}/{h.segment_id}", h.doc_id,
-                          h.doc if fetch_fields else {})
-                for uid, h in rows[:k]]
-        return SearchResult(total, hits)
+        return hits
 
     def matched_docs(self, query, columns: list[str]):
         frames = [s.matched_docs(s.parse(query), columns)

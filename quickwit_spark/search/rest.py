@@ -123,16 +123,14 @@ def native_search(searcher, params: dict[str, Any],
     if sort_spec:
         sort_by = _parse_sort_by(sort_spec)
         res = searcher.sort_search(
-            node, k=start_offset + max_hits, sort_by=sort_by,
+            node, k=max_hits, offset=start_offset, sort_by=sort_by,
             search_after=search_after, count_all=count_all)
-        hits = res.hits[start_offset:start_offset + max_hits]
-        next_cursor = res.last_sort_key
     else:
         res = searcher.search(
             node, k=max_hits, offset=start_offset, count_all=count_all,
             search_after=search_after)
-        hits = res.hits
-        next_cursor = res.next_cursor
+    hits = res.hits
+    next_cursor = res.next_cursor
     terms = extract_query_terms(node) if snippet_fields else []
     out_hits = []
     out_snippets = []

@@ -8,11 +8,9 @@ A context holds its searcher, so the id alone pages. Contexts live in
 process memory, like the reference's KV: they end with the process, and
 a scroll never writes into an index directory.
 
-- Unsorted contexts page by the score cursor: `res.next_cursor` goes
-  back in as `search(search_after=...)`, so a page costs O(k).
-- Sorted contexts refetch `(page + 1) * k` rows through `sort_search`
-  and keep the last `k`: the union's values-only sort cursor would skip
-  hits that tie on every sort value."""
+Every context pages through `sort_search` (score order is its `_score
+desc` case, which runs `search`) by cursor: the last page's
+`res.next_cursor` goes back in as `search_after`, so a page costs O(k)."""
 
 from __future__ import annotations
 
@@ -33,16 +31,11 @@ def _vacuum(now: float) -> None:
         del _CONTEXTS[sid]
 
 
-def _page(ctx: dict, page: int, cursor) -> SearchResult:
-    searcher, k = ctx["searcher"], ctx["k"]
-    if ctx["sort_by"]:
-        res = searcher.sort_search(ctx["node"], k=(page + 1) * k,
-                                   sort_by=ctx["sort_by"],
-                                   fetch_fields=ctx["fetch_fields"])
-        return SearchResult(res.num_hits, res.hits[page * k:])
-    return searcher.search(ctx["node"], k=k,
-                           fetch_fields=ctx["fetch_fields"],
-                           search_after=cursor)
+def _page(ctx: dict, cursor) -> SearchResult:
+    return ctx["searcher"].sort_search(ctx["node"], k=ctx["k"],
+                                       sort_by=ctx["sort_by"],
+                                       fetch_fields=ctx["fetch_fields"],
+                                       search_after=cursor)
 
 
 def scroll(searcher, query, k: int = 10, ttl_seconds: float = 60.0,
@@ -53,10 +46,10 @@ def scroll(searcher, query, k: int = 10, ttl_seconds: float = 60.0,
     order."""
     ctx = {"searcher": searcher, "node": searcher.parse(query),
            "k": int(k), "fetch_fields": bool(fetch_fields),
-           "sort_by": tuple(sort_by) if sort_by else None,
+           "sort_by": tuple(sort_by or (("_score", "desc"),)),
            "ttl": float(ttl_seconds)}
-    res = _page(ctx, 0, None)
-    ctx.update(page=1, cursor=res.next_cursor, num_hits=res.num_hits)
+    res = _page(ctx, None)
+    ctx.update(cursor=res.next_cursor, num_hits=res.num_hits)
     sid = uuid.uuid4().hex
     now = time.time()
     with _LOCK:
@@ -77,13 +70,12 @@ def scroll_next(scroll_id: str) -> SearchResult:
             raise KeyError(f"scroll context {scroll_id!r} not found or "
                            "expired")
         ctx["expires_at"] = now + ctx["ttl"]
-        page, cursor = ctx["page"], ctx["cursor"]
-    if cursor is None and not ctx["sort_by"]:
+        cursor = ctx["cursor"]
+    if cursor is None:
         return SearchResult(ctx["num_hits"], [])  # paged to the end
-    res = _page(ctx, page, cursor)
+    res = _page(ctx, cursor)
     with _LOCK:
-        ctx.update(page=page + 1, cursor=res.next_cursor,
-                   num_hits=res.num_hits)
+        ctx.update(cursor=res.next_cursor, num_hits=res.num_hits)
     return res
 
 

@@ -8,6 +8,10 @@ left unmerged), warms it the way that workload does, then runs N distinct
 - the total thread CPU of the timed searches, and the p50 per shape;
 - a sha256 over the (query, num_hits, hit doc keys, f32 scores) list.
 
+Each timed query also runs as `sort_search(q, k=10, sort_by=(("path",
+"asc"),))`, timed apart, which adds the sorted p50 and a
+`sorted_sha256` over the (query, num_hits, hit doc keys) list.
+
 Run it against two checkouts, alternating, for a paired timing of the
 search path and a parity check of its answers:
 
@@ -31,6 +35,7 @@ import time
 
 CORPUS_SEED = 1        # the query_unique corpus
 WARMUP_QUERIES = 100   # distinct untimed queries run first
+SORT_BY = (("path", "asc"),)  # the sorted twin of each timed query
 
 
 def main(argv=None) -> int:
@@ -57,8 +62,11 @@ def main(argv=None) -> int:
         for _ in range(WARMUP_QUERIES):
             _shape, q, count_all = qgen.distinct()
             searcher.search(q, k=10, count_all=count_all)
+            searcher.sort_search(q, k=10, sort_by=SORT_BY)
         per_shape: dict[str, list[float]] = {}
         answers = []
+        sorted_cpu: list[float] = []
+        sorted_answers = []
         total = 0.0
         for _ in range(args.queries):
             shape, q, count_all = qgen.distinct()
@@ -71,19 +79,32 @@ def main(argv=None) -> int:
                             [list(C.doc_key(h.doc)) for h in res.hits],
                             [float(np.float32(h.score)).hex()
                              for h in res.hits]])
+            c0 = time.thread_time()
+            res = searcher.sort_search(q, k=10, sort_by=SORT_BY)
+            sorted_cpu.append((time.thread_time() - c0) * 1e3)
+            sorted_answers.append([q, res.num_hits,
+                                   [list(C.doc_key(h.doc))
+                                    for h in res.hits]])
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    digest = hashlib.sha256(
-        json.dumps(answers, separators=(",", ":")).encode()).hexdigest()
+    digest, sorted_digest = (hashlib.sha256(
+        json.dumps(a, separators=(",", ":")).encode()).hexdigest()
+        for a in (answers, sorted_answers))
     p50 = {s: C.median(v) for s, v in sorted(per_shape.items())}
+    sorted_p50 = C.median(sorted_cpu)
     print(f"repo {os.path.abspath(args.repo)}")
     print(f"queries {args.queries} (seed {args.seed}, after "
           f"{WARMUP_QUERIES} warm-up)  total thread CPU {total:.1f} ms")
     for s, v in p50.items():
         print(f"  {s:<10} p50 {v:8.3f} ms  n={len(per_shape[s])}")
+    print(f"  {'sorted':<10} p50 {sorted_p50:8.3f} ms  "
+          f"n={len(sorted_cpu)}  (sort_search by path asc)")
     print(f"parity sha256 {digest}")
+    print(f"parity sorted_sha256 {sorted_digest}")
     print(json.dumps({"total_cpu_ms": total, "p50_ms": p50,
-                      "queries": args.queries, "sha256": digest}))
+                      "queries": args.queries, "sha256": digest,
+                      "sorted_p50_ms": sorted_p50,
+                      "sorted_sha256": sorted_digest}))
     return 0
 
 

@@ -351,3 +351,26 @@ def test_source_filtering_keeps_sort_cursor_and_highlight(tmp_path):
     r2 = es_search(s, body2, source_includes="lang")
     assert r2["hits"]["hits"][0]["sort"][0] == 1
     assert "highlight" in h0  # content highlighted though excluded
+
+
+def test_es_sorted_from_fetches_only_size_docs(idx, monkeypatch):
+    """`from` with `sort` is applied at the root merge: only the `size`
+    hits of the page are fetched, and they are the slice of the
+    one-shot order."""
+    from quickwit_spark.search.es_dsl import es_search
+    s = IndexSearcher(idx.index_dir)
+    body = {"query": {"match_all": {}}, "size": 5, "from": 20,
+            "sort": [{"path": {"order": "asc"}}]}
+    whole = es_search(s, {**body, "size": 25, "from": 0})["hits"]["hits"]
+    fetched = []
+    real = IndexSearcher._fetch
+
+    def counting(self, sids, dids, scores):
+        fetched.append(len(dids))
+        return real(self, sids, dids, scores)
+
+    monkeypatch.setattr(IndexSearcher, "_fetch", counting)
+    page = es_search(s, body)["hits"]["hits"]
+    assert fetched == [5]
+    assert [h["_id"] for h in page] == [h["_id"] for h in whole[20:]]
+    assert [h["sort"] for h in page] == [h["sort"] for h in whole[20:]]

@@ -178,6 +178,23 @@ def test_ip_sort_spec(ip_index):
     assert got[0] == "9.0.0.1"  # numerically smallest, not "10.x"
 
 
+def test_ip_sort_values_page_as_cursor(ip_index):
+    """An ip field's sort values show the text form, as on fetch, and
+    page exactly when fed back as a values-only cursor."""
+    root, pdf = ip_index
+    s = IndexSearcher(root)
+    r = s.sort_search(A.MatchAll(), k=3,
+                      sort_by=(("client_ip", "asc"),))
+    got = [h.doc["client_ip"] for h in r.hits]
+    assert [h.sort[0] for h in r.hits] == got
+    page2 = s.sort_search(A.MatchAll(), k=3, search_after=[got[-1]],
+                          sort_by=(("client_ip", "asc"),))
+    whole = s.sort_search(A.MatchAll(), k=6,
+                          sort_by=(("client_ip", "asc"),))
+    assert [h.doc["doc_id"] for h in page2.hits] == \
+        [h.doc["doc_id"] for h in whole.hits[3:]]
+
+
 # ---------------------------------------------------------------------------
 # multilang tokenizer
 # ---------------------------------------------------------------------------

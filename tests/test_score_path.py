@@ -1,5 +1,6 @@
-"""The in-process score path: leaf partials are PARTIAL_DTYPE arrays, the
-root merge is one lexsort, and a warm search builds no pandas DataFrame.
+"""The in-process search path: leaf partials are structured arrays, the
+root merge is one lexsort, and a warm search or sort_search builds no
+pandas DataFrame.
 
 Also pins the root merge order (score desc, then segment_id desc, then
 doc_id desc; max_score taken before the offset slice) and that query
@@ -38,7 +39,8 @@ def _dump(res):
 def _run_all(s: IndexSearcher) -> list:
     """Every score-path shape once: term, AND, OR exact and pruned
     (the cross-segment bound walk), NOT, phrase, tag filter, offset, a
-    search_after page and search_many."""
+    search_after page, sort_search by a fast field, by two keys with a
+    search_after page and by a string key, and search_many."""
     out = []
     for q, kw in [("session", {}),
                   ("session AND time", {}),
@@ -54,6 +56,15 @@ def _run_all(s: IndexSearcher) -> list:
     out.append(_dump(first))
     out.append(_dump(s.search("fetch", k=4,
                               search_after=first.next_cursor)))
+    out.append(_dump(s.sort_search("session", k=6,
+                                   sort_by=(("fieldnorm", "desc"),))))
+    two = (("lang", "asc"), ("fieldnorm", "desc"))
+    first = s.sort_search("session OR fetch", k=5, sort_by=two)
+    out.append(_dump(first))
+    out.append(_dump(s.sort_search("session OR fetch", k=5, sort_by=two,
+                                   search_after=first.next_cursor)))
+    out.append(_dump(s.sort_search("fetch", k=5,
+                                   sort_by=(("path", "desc"),))))
     out.append([_dump(r) for r in s.search_many(
         ["session", "fetch AND sort", "time -session"], k=6)])
     return out
@@ -70,7 +81,7 @@ def test_warm_search_builds_no_dataframe(idx, monkeypatch):
     assert all(r[0] > 0 for r in expected[-1])
 
     def no_frames(self, *a, **kw):
-        raise AssertionError("pandas DataFrame built on the score path")
+        raise AssertionError("pandas DataFrame built on the search path")
 
     monkeypatch.setattr(pd.DataFrame, "__init__", no_frames)
     clear_leaf_cache()

@@ -207,3 +207,32 @@ def test_es_scroll_sort_matches_search(idx, union):
     with pytest.raises(ValueError, match="at most 2"):
         es_scroll_search(s, {**body, "sort": ["_score", "lang",
                                               "_doc"]})
+
+
+@pytest.mark.parametrize("union", [False, True])
+def test_sorted_scroll_page_fetches_k_docs(idx, union, monkeypatch):
+    """A sorted scroll pages by its cursor: page n fetches exactly the k
+    docs it returns, not the (n + 1) * k rows before it."""
+    s = (UnionSearcher([idx.index_dir]) if union
+         else IndexSearcher(idx.index_dir))
+    fetched = []
+    real = IndexSearcher._fetch
+
+    def counting(self, sids, dids, scores):
+        fetched.append(len(dids))
+        return real(self, sids, dids, scores)
+
+    monkeypatch.setattr(IndexSearcher, "_fetch", counting)
+    sort_by = (("lang", "asc"), ("_doc", "desc"))
+    full = s.sort_search("content:merge", k=10_000, sort_by=sort_by)
+    want = [(h.segment_id, h.doc_id) for h in full.hits]
+    assert len(want) > 20
+    res, sid = scroll(s, "content:merge", k=5, sort_by=sort_by)
+    got = [(h.segment_id, h.doc_id) for h in res.hits]
+    for _ in range(3):
+        fetched.clear()
+        res = scroll_next(sid)
+        assert sum(fetched) == len(res.hits) == 5
+        got.extend((h.segment_id, h.doc_id) for h in res.hits)
+    assert got == want[:20]
+    scroll_clear(sid)

@@ -63,15 +63,50 @@ def test_prune_index_strict_bounds_past_2_53():
     assert kept2 == ["s0", "s1"]  # both have min 0 < 1
 
 
-def test_u64_sort_distributed_matches_driver(tmp_path, spark):
-    """u64 sort keys can't ride Arrow exactly (no unsigned long), so the
-    spark fan-out must fall back to the driver path and stay exact."""
+def test_u64_sort_distributed_matches_driver(tmp_path, spark,
+                                            monkeypatch):
+    """u64 sort keys ride the Spark fan-out as `key ^ (1 << 63)` in a
+    long column (Spark has no unsigned long), which is exact: the
+    distributed sort runs its leaves through _fan_out and matches the
+    in-process order."""
     cfg, vals = _mk(tmp_path)
     local = IndexSearcher(cfg.index_dir)
-    dist = IndexSearcher(cfg.index_dir, spark=spark)
+    dist = IndexSearcher(cfg.index_dir, spark=spark, inprocess_doc_budget=0)
+    fanned = []
+    real = IndexSearcher._fan_out
+
+    def spy(self, *a, **kw):
+        fanned.append(1)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(IndexSearcher, "_fan_out", spy)
     a = local.sort_search(A.MatchAll(), k=6, sort_by=(("u64col", "desc"),),
                           fetch_fields=False)
     b = dist.sort_search(A.MatchAll(), k=6, sort_by=(("u64col", "desc"),),
                          fetch_fields=False)
     assert [(h.segment_id, h.doc_id) for h in a.hits] == \
         [(h.segment_id, h.doc_id) for h in b.hits]
+    assert fanned  # the leaves ran on the fan-out, not the driver
+
+
+def test_u64_matched_docs_exact_through_spark(tmp_path, spark):
+    """The aggregation relation carries a nullable u64 column exactly
+    (decimal(20,0) over Spark): values past 2^53 keep every digit, and a
+    null stays null."""
+    vals = pd.array([BIG + 5, None, 2 ** 64 - 1, 3, 2 ** 53 + 1, 0],
+                    dtype="UInt64")
+    pdf = pd.DataFrame({
+        "repo": [f"r{i}" for i in range(6)],
+        "path": [f"p{i}" for i in range(6)],
+        "commit": ["c"] * 6, "lang": ["python"] * 6,
+        "content": ["alpha beta"] * 6, "u64col": vals,
+    })
+    cfg = IndexConfig(index_uid="u", index_dir=str(tmp_path / "i"),
+                      sha_col=None, store_cols=("u64col",))
+    build_index_pandas(pdf, cfg, num_partitions=2)
+    rel = IndexSearcher(cfg.index_dir, spark=spark).matched_docs(
+        A.MatchAll(), ["path", "u64col"])
+    got = {r["path"]: (None if r["u64col"] is None else int(r["u64col"]))
+           for r in rel.collect()}
+    assert got == {f"p{i}": (None if v is pd.NA else int(v))
+                   for i, v in enumerate(vals)}

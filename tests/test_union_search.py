@@ -207,3 +207,30 @@ def test_union_sort_without_fetch_merges_by_field(tmp_path):
     assert addrs(2, False) == addrs(100, False)[:2]
     assert addrs(2, False) == addrs(2, True)
     assert addrs(100, False) == addrs(100, True)
+
+
+@pytest.mark.parametrize("sort_by", [(("n", "desc"),),
+                                     (("m", "asc"), ("n", "desc")),
+                                     (("_score", "desc"),)])
+def test_union_sort_search_pages_by_next_cursor(tmp_path, sort_by):
+    """A sorted union pages to exhaustion by its address cursor
+    (`next_cursor`, whose segment is `uid/segment_id`): each hit comes
+    back once, in the one-shot order, even where every sort value ties
+    across indexes whose uids prefix each other."""
+    docs = [{"w": "alpha beta", "n": i % 3, "m": i % 2} for i in range(7)] \
+        + [{"w": "alpha"}]
+    u = UnionSearcher([_mk(tmp_path, "logs", docs),
+                       _mk(tmp_path, "logs-2", docs)])
+    full = u.sort_search("w:alpha", k=100, sort_by=sort_by,
+                         fetch_fields=False)
+    want = [(h.segment_id, h.doc_id) for h in full.hits]
+    assert len(want) == full.num_hits == 16
+    got, cursor = [], None
+    for _ in range(20):
+        res = u.sort_search("w:alpha", k=3, sort_by=sort_by,
+                            fetch_fields=False, search_after=cursor)
+        if not res.hits:
+            break
+        got.extend((h.segment_id, h.doc_id) for h in res.hits)
+        cursor = res.next_cursor
+    assert got == want

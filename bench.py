@@ -160,24 +160,6 @@ def main() -> None:
     queries["otlp_pb_decode_mb_s"] = round(
         pb_bytes / 1e6 / (time.perf_counter() - t0), 2)
 
-    # real media decode (PNG zlib+unfilter): driver-local single-core
-    # MB/s over the encoded blob bytes
-    from quickwit_spark.pipeline import media_codecs as _mc
-    _mrng = _np.random.default_rng(5)
-    yy, xx = _np.meshgrid(_np.arange(128), _np.arange(128), indexing="ij")
-    imgs = [_np.stack([(yy * a + xx * b) % 256 for a, b in
-                       ((3, 2), (1, 5), (4, 1))], axis=2).astype(_np.uint8)
-            + _mrng.integers(0, 8, (128, 128, 3), dtype=_np.uint8)
-            for _ in range(40)]
-    pngs = [_mc.encode_png(im) for im in imgs]
-    _mc.decode_png(pngs[0])  # warm
-    nbytes = sum(len(b) for b in pngs)
-    t0 = time.perf_counter()
-    for b in pngs:
-        _mc.decode_png(b)
-    queries["png_decode_mb_s"] = round(
-        nbytes / 1e6 / (time.perf_counter() - t0), 2)
-
     # Iceberg scan planning (sources/avro_ocf + iceberg): driver-local
     # metadata-only rate — manifest-list + manifest Avro decode through
     # 3-tier pruning, in thousand file-entries per second (scale trend
@@ -551,7 +533,7 @@ def main() -> None:
                           # vs r1's
                           "refresh_global_index",
                           # MB/s / rate metrics, not seconds
-                          "tok_", "otlp_pb_", "png_decode",
+                          "tok_", "otlp_pb_",
                           "iceberg_plan",
                           # rate metric + post-r1 rows (r5 session 7)
                           "cdc_",

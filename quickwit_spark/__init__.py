@@ -12,7 +12,7 @@ Layout:
     functions/  tokenizers (code-aware), BM25 math, hashing
     index/      corpus generator, segment builder, manifest, merge
     search/     query AST, parser, execution engine, WAND
-    pipeline/   doc mapper, transform, OTLP decoding, media codecs
+    pipeline/   doc mapper, OTLP decoding
     sources/    Iceberg tables: read, plan, incremental ingest and sync
     streaming/  Structured Streaming micro-batch ingest (incremental.py)
 """

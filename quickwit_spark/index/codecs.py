@@ -64,85 +64,29 @@ def varint_decode_with_sizes(buf: bytes | memoryview
     return np.add.reduceat(parts, starts), lens
 
 
-def encode_posting_blocks(docids: np.ndarray, tfs: np.ndarray,
-                          fieldnorm_ids: np.ndarray):
-    """Encode one term's postings (docids strictly increasing) into blocks.
-
-    REFERENCE TWIN, not a production encoder: the build path encodes all
-    terms at once inside builder.write_segment (vectorized across the
-    whole partition). This single-term readable form exists for tests —
-    test_codecs_property pins it byte-identical to write_segment's
-    output, so the two cannot silently drift.
-
-    Returns dict with:
-      block_last:  int64[]  last docid per block
-      block_max_tf: int32[] max tf per block
-      block_min_fn: int32[] min fieldnorm id per block
-      doc_offsets: int32[]  start byte offset of each block in docid_blob
-      tf_offsets:  int32[]  start byte offset of each block in tf_blob
-      docid_blob:  bytes
-      tf_blob:     bytes
-    """
-    n = len(docids)
-    docids = np.asarray(docids, dtype=np.int64)
-    tfs = np.asarray(tfs, dtype=np.int64)
-    fieldnorm_ids = np.asarray(fieldnorm_ids, dtype=np.int64)
-
-    deltas = np.empty(n, dtype=np.uint64)
-    deltas[0] = docids[0]
-    deltas[1:] = np.diff(docids).astype(np.uint64)
-    # block-aligned: delta of each block's first entry is vs prev block's last
-    # (true by construction since deltas are consecutive diffs)
-
-    nblocks = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
-    block_last = np.empty(nblocks, dtype=np.int64)
-    block_max_tf = np.empty(nblocks, dtype=np.int32)
-    block_min_fn = np.empty(nblocks, dtype=np.int32)
-    doc_offsets = np.empty(nblocks, dtype=np.int32)
-    tf_offsets = np.empty(nblocks, dtype=np.int32)
-    doc_parts: list[bytes] = []
-    tf_parts: list[bytes] = []
-    dpos = tpos = 0
-    for bi in range(nblocks):
-        lo, hi = bi * BLOCK_SIZE, min((bi + 1) * BLOCK_SIZE, n)
-        block_last[bi] = docids[hi - 1]
-        block_max_tf[bi] = tfs[lo:hi].max()
-        block_min_fn[bi] = fieldnorm_ids[lo:hi].min()
-        d = varint_encode(deltas[lo:hi])
-        t = varint_encode(tfs[lo:hi].astype(np.uint64))
-        doc_offsets[bi] = dpos
-        tf_offsets[bi] = tpos
-        dpos += len(d)
-        tpos += len(t)
-        doc_parts.append(d)
-        tf_parts.append(t)
-    return {
-        "block_last": block_last,
-        "block_max_tf": block_max_tf,
-        "block_min_fn": block_min_fn,
-        "doc_offsets": doc_offsets,
-        "tf_offsets": tf_offsets,
-        "docid_blob": b"".join(doc_parts),
-        "tf_blob": b"".join(tf_parts),
-    }
-
-
 def _binary_cells(col) -> tuple[np.ndarray, np.ndarray]:
-    """(data uint8[], offsets int64[n+1]) of an arrow binary column, cell
-    i being data[offs[i]:offs[i+1]] — zero-copy access to every cell's
-    byte range (a one-chunk column is not combined, which would copy)."""
+    """(values, offsets int64[n+1]) of an arrow binary or list column, cell
+    i being values[offs[i]:offs[i+1]] — zero-copy access to every cell (a
+    one-chunk column is not combined, which would copy). Binary values
+    are the uint8 bytes; list values are the child as a typed array."""
     import pyarrow as pa
     arr = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
-    _validity, offsets, data = arr.buffers()
-    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
+        offsets = arr.buffers()[1]
+        values = arr.values.to_numpy(zero_copy_only=False)
+        large = pa.types.is_large_list(arr.type)
+    else:
+        _validity, offsets, data = arr.buffers()
+        values = np.frombuffer(data, dtype=np.uint8)
+        large = pa.types.is_large_binary(arr.type)
+    odt = np.int64 if large else np.int32
     offs = np.frombuffer(offsets, dtype=odt)[
         arr.offset:arr.offset + len(arr) + 1].astype(np.int64, copy=False)
-    # data buffer may be shared/offset; slice to this array's view
+    # values may be shared/offset; slice to this array's view
     off0 = int(offs[0])
     if off0:
         offs = offs - off0
-    data = np.frombuffer(data, dtype=np.uint8)[off0:off0 + int(offs[-1])]
-    return data, offs
+    return values[off0:off0 + int(offs[-1])], offs
 
 
 def decode_postings(docid_blob: bytes, tf_blob: bytes) -> tuple[np.ndarray, np.ndarray]:
@@ -282,20 +226,3 @@ def decode_blocks_batch(docid_blob: bytes, tf_blob: bytes,
     adjust = bases + deltas[starts] - cs[starts]
     run_of = np.repeat(np.arange(len(starts)), counts)
     return cs + adjust[run_of], tfs
-
-
-def decode_block(docid_blob: bytes, tf_blob: bytes, doc_offsets: np.ndarray,
-                 tf_offsets: np.ndarray, block_last: np.ndarray,
-                 block_idx: int) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a single block independently (for WAND block skipping)."""
-    dstart = int(doc_offsets[block_idx])
-    dend = int(doc_offsets[block_idx + 1]) if block_idx + 1 < len(doc_offsets) \
-        else len(docid_blob)
-    tstart = int(tf_offsets[block_idx])
-    tend = int(tf_offsets[block_idx + 1]) if block_idx + 1 < len(tf_offsets) \
-        else len(tf_blob)
-    deltas = varint_decode(docid_blob[dstart:dend]).astype(np.int64)
-    base = int(block_last[block_idx - 1]) if block_idx > 0 else 0
-    docids = base + np.cumsum(deltas)
-    tfs = varint_decode(tf_blob[tstart:tend]).astype(np.int64)
-    return docids, tfs

@@ -173,6 +173,49 @@ def _node_key(node: A.Node) -> str:
     return ent[1]
 
 
+def _postings_index(tbl: pa.Table) -> dict:
+    """Column name -> numpy view of a postings table: (offsets, values)
+    for list and binary columns (binary values as a memoryview), the
+    values array for scalar columns."""
+    out = {}
+    list_off = None
+    for name, col in zip(tbl.column_names, tbl.columns):
+        t = col.type
+        if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+            data, off = _binary_cells(col)
+            out[name] = (off, memoryview(data))
+        elif pa.types.is_list(t) or pa.types.is_large_list(t):
+            values, off = _binary_cells(col)
+            # the per-block lists share one per-term block count: keep
+            # one copy of their (widened) offsets, not one per column
+            if list_off is not None and np.array_equal(off, list_off):
+                off = list_off
+            out[name] = (off, values)
+            list_off = off
+        else:
+            out[name] = col.to_numpy()
+    return out
+
+
+def _row_cells(index: dict, i: int, cols: list[str]) -> list:
+    out = []
+    for c in cols:
+        ix = index[c]
+        if isinstance(ix, tuple):
+            off, values = ix
+            out.append(values[off[i]:off[i + 1]])
+        else:
+            out.append(ix[i])
+    return out
+
+
+def _owned_nbytes(values) -> int:
+    """Bytes `values` keep alive on their own: arrays that own their data
+    and `bytes` blobs. Views (into a pinned table) count 0."""
+    return sum(v.nbytes if isinstance(v, np.ndarray) and v.flags.owndata
+               else len(v) if isinstance(v, bytes) else 0 for v in values)
+
+
 class SegmentReader:
     """Lazy reader over one immutable segment directory."""
 
@@ -200,8 +243,8 @@ class SegmentReader:
         self._termdict: pd.DataFrame | None = None
         self._term_index: dict[str, int] | None = None
         self._postings_tbl = None
-        # *_blob column -> (int64 offsets, memoryview of the data buffer)
-        self._postings_blobs: dict = {}
+        # column -> numpy view of the pinned table (_postings_index)
+        self._postings_cols: dict = {}
         self._docs_md: pq.FileMetaData | None = None
         self._docs_schema: pa.Schema | None = None
         self._docs_rg_starts: np.ndarray | None = None
@@ -752,19 +795,17 @@ class SegmentReader:
             tbl = pq.read_table(path)
             if any(c.num_chunks > 1 for c in tbl.columns):
                 tbl = tbl.combine_chunks()
-            blobs = {}
-            for c in tbl.schema.names:
-                if c.endswith("_blob"):
-                    data, off = _binary_cells(tbl.column(c))
-                    blobs[c] = (off, memoryview(data))
-            # int32 offsets are widened into a copy; int64 ones are views
-            owned = sum(off.nbytes for off, _mv in blobs.values()
-                        if off.flags.owndata)
+            cols = _postings_index(tbl)
+            # int32 offsets are widened into a copy (shared arrays count
+            # once); int64 ones are views
+            arrays = {id(a): a for v in cols.values()
+                      for a in (v if isinstance(v, tuple) else (v,))}
+            owned = _owned_nbytes(arrays.values())
             with _READER_LOCK:  # concurrent cold searches pin it once
                 if self._postings_tbl is None:
                     # index first: a lock-free reader that sees the
-                    # table sees its blob index too
-                    self._postings_blobs = blobs
+                    # table sees its column index too
+                    self._postings_cols = cols
                     self._postings_tbl = tbl
                     self._pin(tbl.nbytes + owned)
         return self._postings_tbl
@@ -785,24 +826,19 @@ class SegmentReader:
         return int(rows.iloc[0]["term_id"]), int(rows.iloc[0]["doc_freq"])
 
     def _postings_cells(self, term_id: int, cols: list[str]) -> list:
-        """Fetch posting-row cells straight from the cached arrow table —
-        no arrow->pandas conversion (that conversion dominates warm query
-        latency because of the per-block list columns). Blob cells are
-        memoryviews into the pinned table, not copies."""
-        tbl = self._postings_table()
-        if tbl is not None:
-            blobs = self._postings_blobs
-            out = []
-            for c in cols:
-                ix = blobs.get(c)
-                if ix is None:
-                    out.append(tbl.column(c)[term_id].as_py())
-                else:
-                    off, mv = ix
-                    out.append(mv[off[term_id]:off[term_id + 1]])
-            return out
-        row = self.postings_rows([term_id], columns=cols).iloc[0]
-        return [row[c] for c in cols]
+        """One posting row's cells, sliced from numpy views of the cached
+        arrow table: no arrow->pandas or `as_py` conversion per cell.
+        Blob cells are memoryviews and list cells numpy arrays, both
+        views into the pinned table. Above the cache cap the row is read
+        alone and its cells are copies (bytes and owned arrays)."""
+        if self._postings_table() is not None:
+            return _row_cells(self._postings_cols, term_id, cols)
+        row = pq.read_table(os.path.join(self.seg_dir, "postings.parquet"),
+                            filters=[("term_id", "=", term_id)],
+                            columns=cols)
+        return [bytes(v) if isinstance(v, memoryview) else
+                v.copy() if isinstance(v, np.ndarray) else v
+                for v in _row_cells(_postings_index(row), 0, cols)]
 
     def term_postings(self, term: str) -> tuple[np.ndarray, np.ndarray, int]:
         """(docids, tfs, doc_freq) for one text term; empty if absent."""

@@ -28,7 +28,8 @@ import numpy as np
 
 from ..functions.bm25 import Bm25Weight
 from ..index.codecs import decode_blocks_batch, decode_postings
-from .engine import _READER_LOCK, _isect_idx, _top_k_order, _union_ids
+from .engine import (_READER_LOCK, _isect_idx, _owned_nbytes, _top_k_order,
+                     _union_ids)
 
 __all__ = ["and_topk", "or_topk", "single_term_topk", "STATS"]
 
@@ -45,9 +46,9 @@ class _TermCursor:
     `block_scores`, so a segment skipped by its bound never pays the
     posting-blob byte read — the bound really is metadata-only."""
 
-    __slots__ = ("term", "doc_freq", "weight", "block_last", "block_max_tf",
-                 "block_min_fn", "doc_offsets", "tf_offsets", "docid_blob",
-                 "tf_blob", "max_score", "block_scores", "_fetch_blobs")
+    __slots__ = ("term", "doc_freq", "weight", "block_last", "doc_offsets",
+                 "tf_offsets", "docid_blob", "tf_blob", "max_score",
+                 "block_scores", "_fetch_blobs")
 
     _BLOB_COLS = ("doc_offsets", "tf_offsets", "docid_blob", "tf_blob")
 
@@ -57,8 +58,6 @@ class _TermCursor:
         self.doc_freq = int(row["doc_freq"])
         self.weight = weight
         self.block_last = np.asarray(row["block_last"], dtype=np.int64)
-        self.block_max_tf = np.asarray(row["block_max_tf"], dtype=np.int64)
-        self.block_min_fn = np.asarray(row["block_min_fn"], dtype=np.int64)
         self._fetch_blobs = fetch_blobs
         if fetch_blobs is None:
             self._set_blobs(row)
@@ -70,13 +69,15 @@ class _TermCursor:
             self.block_scores = (weight.weight * np.asarray(
                 row["block_max_ratio"], dtype=np.float32)).astype(np.float32)
         else:  # pre-ratio segments: decoupled (max_tf, min_fn) bound
-            self.block_scores = weight.max_score(self.block_max_tf,
-                                                 self.block_min_fn)
+            self.block_scores = weight.max_score(
+                np.asarray(row["block_max_tf"], dtype=np.int64),
+                np.asarray(row["block_min_fn"], dtype=np.int64))
         self.max_score = float(self.block_scores.max())
 
     def _set_blobs(self, row) -> None:
-        self.doc_offsets = np.asarray(row["doc_offsets"], dtype=np.int64)
-        self.tf_offsets = np.asarray(row["tf_offsets"], dtype=np.int64)
+        # int32 or int64 as stored: a view into a pinned table stays one
+        self.doc_offsets = np.asarray(row["doc_offsets"])
+        self.tf_offsets = np.asarray(row["tf_offsets"])
         self.tf_blob = row["tf_blob"]
         # set last: a lock-free reader that sees it sees the rest too
         self.docid_blob = row["docid_blob"]
@@ -110,8 +111,7 @@ class _TermCursor:
         return docids, self.weight.score(tfs, fn_ids[docids])
 
 
-_CURSOR_META_COLS = ["doc_freq", "block_last", "block_max_tf",
-                     "block_min_fn"]
+_CURSOR_META_COLS = ["doc_freq", "block_last"]
 _CURSOR_BLOB_COLS = list(_TermCursor._BLOB_COLS)
 _MISSING = object()
 
@@ -150,9 +150,10 @@ def _make_cursors(reader, terms: list[str]) -> list[_TermCursor]:
             if cache is None:
                 cache = reader._wand_cursors = {}
     cursors = []
-    cols = list(_CURSOR_META_COLS)
-    if reader.has_postings_column("block_max_ratio"):
-        cols.append("block_max_ratio")
+    # the build-time bound, else (older segments) the decoupled one's inputs
+    cols = _CURSOR_META_COLS + (
+        ["block_max_ratio"] if reader.has_postings_column("block_max_ratio")
+        else ["block_max_tf", "block_min_fn"])
     for t in terms:
         cur = cache.get(t, _MISSING)
         if cur is _MISSING:
@@ -188,21 +189,18 @@ def _new_cursor(reader, t: str, cols: list[str]
     def _fetch(cur, _tid=term_id, _rdr=reader):
         blobs = dict(zip(_CURSOR_BLOB_COLS,
                          _rdr._postings_cells(_tid, _CURSOR_BLOB_COLS)))
-        # the cursor lives in the reader's cache, so the blobs it
-        # memoizes are PINNED, not per-query transients — count them
-        # toward the reader byte budget, once
+        # the cursor lives in the reader's cache, so what it memoizes is
+        # PINNED, not a per-query transient — count it toward the reader
+        # byte budget, once
         with _READER_LOCK:
             if cur.docid_blob is None:
                 cur._set_blobs(blobs)
                 cur._fetch_blobs = None
-                _account_cursor_bytes(_rdr, sum(
-                    len(v) for v in blobs.values()
-                    if isinstance(v, (bytes, bytearray))))
-    # cached block metadata also counts (python lists of ints:
-    # ~40 B/element incl. the pointer)
-    n_meta = sum(len(v) for v in row.values()
-                 if isinstance(v, (list, tuple)))
-    return _TermCursor(t, row, w, fetch_blobs=_fetch), 40 * n_meta + 256
+                _account_cursor_bytes(_rdr, _owned_nbytes(
+                    (cur.doc_offsets, cur.tf_offsets, cur.docid_blob,
+                     cur.tf_blob)))
+    cur = _TermCursor(t, row, w, fetch_blobs=_fetch)
+    return cur, _owned_nbytes((cur.block_last, cur.block_scores))
 
 
 def _combine_in_query_order(parts, final_docids):

@@ -51,8 +51,7 @@ Implemented (spec v2):
   can only be resolved by name);
 - maintenance: ``expire_snapshots`` (time-travel retention + deletion
   of files only reachable from expired snapshots) and
-  ``remove_orphan_files`` (disk scan vs the reachable set), plus
-  metadata tables (``snapshots_df`` / ``files_df`` / ``manifests_df``).
+  ``remove_orphan_files`` (disk scan vs the reachable set).
 
 Scale: the driver never reads data files during planning. At 10^12
 files the manifest tier is the bottleneck, so ``plan_files`` also has a
@@ -1192,65 +1191,6 @@ class IcebergTable:
 
         return mdf.repartition(min(len(keep), 32)).mapInPandas(
             _decode, "file_path string, record_count bigint")
-
-    # ----------------------------------------- metadata tables
-    # (Iceberg's `table$snapshots` / `$manifests` / `$files` surface)
-
-    def snapshots_df(self, spark):
-        """One row per snapshot in the current metadata."""
-        snaps = self.meta["snapshots"]
-        pdf = pd.DataFrame({
-            "snapshot_id": [s["snapshot-id"] for s in snaps],
-            "parent_id": [s.get("parent-snapshot-id") for s in snaps],
-            "sequence_number": [s["sequence-number"] for s in snaps],
-            "timestamp_ms": [s["timestamp-ms"] for s in snaps],
-            "operation": [s["summary"]["operation"] for s in snaps],
-            "schema_id": [s.get("schema-id") for s in snaps],
-            "manifest_list": [s["manifest-list"] for s in snaps],
-        })
-        sch = ("snapshot_id bigint, parent_id bigint, "
-               "sequence_number bigint, timestamp_ms bigint, "
-               "operation string, schema_id int, manifest_list string")
-        return spark.createDataFrame(pdf, sch) if len(pdf) else \
-            spark.createDataFrame([], sch)
-
-    def manifests_df(self, spark, snapshot_id: int | None = None):
-        """One row per manifest in a snapshot's manifest list."""
-        sch = ("manifest_path string, manifest_length bigint, "
-               "content int, sequence_number bigint, "
-               "min_sequence_number bigint, added_snapshot_id bigint, "
-               "added_files_count int, existing_files_count int, "
-               "deleted_files_count int, added_rows_count bigint")
-        snap = self.snapshot(snapshot_id)
-        if snap is None:
-            return spark.createDataFrame([], sch)
-        _, manifests = avro_ocf.read_ocf(snap["manifest-list"])
-        pdf = pd.DataFrame(
-            [{k: m.get(k) for k in
-              ("manifest_path", "manifest_length", "content",
-               "sequence_number", "min_sequence_number",
-               "added_snapshot_id", "added_files_count",
-               "existing_files_count", "deleted_files_count",
-               "added_rows_count")} for m in manifests])
-        pdf["content"] = pdf["content"].fillna(0).astype("int32")
-        return spark.createDataFrame(pdf, sch)
-
-    def files_df(self, spark, snapshot_id: int | None = None):
-        """One row per live data/delete file in a snapshot (driver-side
-        planning — at very large manifest counts prefer
-        ``plan_files_spark`` for the distributed data-file listing)."""
-        sch = ("file_path string, content int, record_count bigint, "
-               "file_size_in_bytes bigint, sequence_number bigint, "
-               "partition string")
-        plan = self.plan_files(snapshot_id=snapshot_id)
-        rows = [(f["file_path"], f.get("content", 0),
-                 f["record_count"], f["file_size_in_bytes"], f["_seq"],
-                 json.dumps(f.get("partition") or {}, sort_keys=True,
-                            default=str))
-                for f in plan.files + plan.delete_files]
-        rows.sort()
-        return spark.createDataFrame(rows, sch) if rows else \
-            spark.createDataFrame([], sch)
 
 
 def _kv_to_dict(kvs) -> dict:

@@ -24,6 +24,11 @@ from quickwit_spark.functions.tokenizers import (
     code_tokenize,
     tokenize_one,
 )
+from quickwit_spark.index.codecs import (
+    BLOCK_SIZE,
+    varint_decode,
+    varint_encode,
+)
 from quickwit_spark.pipeline.doc_mapper import parse_datetime_bound
 from quickwit_spark.search import ast as A
 from quickwit_spark.search.engine import _prune_bound
@@ -325,3 +330,84 @@ def varint_decode_with_sizes(buf) -> tuple[np.ndarray, np.ndarray]:
         b = a[starts[active] + j].astype(np.uint64)
         vals[active] |= (b & np.uint64(0x7F)) << np.uint64(7 * j)
     return vals, lens
+
+
+def encode_posting_blocks(docids: np.ndarray, tfs: np.ndarray,
+                          fieldnorm_ids: np.ndarray):
+    """Encode one term's postings (docids strictly increasing) into blocks.
+
+    Reference twin of the production encoder: the build path encodes all
+    terms at once inside builder.write_segment (vectorized across the
+    whole partition). test_codecs_property pins this single-term readable
+    form byte-identical to write_segment's output, so the two cannot
+    silently drift.
+
+    Returns dict with:
+      block_last:  int64[]  last docid per block
+      block_max_tf: int32[] max tf per block
+      block_min_fn: int32[] min fieldnorm id per block
+      doc_offsets: int32[]  start byte offset of each block in docid_blob
+      tf_offsets:  int32[]  start byte offset of each block in tf_blob
+      docid_blob:  bytes
+      tf_blob:     bytes
+    """
+    n = len(docids)
+    docids = np.asarray(docids, dtype=np.int64)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    fieldnorm_ids = np.asarray(fieldnorm_ids, dtype=np.int64)
+
+    deltas = np.empty(n, dtype=np.uint64)
+    deltas[0] = docids[0]
+    deltas[1:] = np.diff(docids).astype(np.uint64)
+    # block-aligned: delta of each block's first entry is vs prev block's last
+    # (true by construction since deltas are consecutive diffs)
+
+    nblocks = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
+    block_last = np.empty(nblocks, dtype=np.int64)
+    block_max_tf = np.empty(nblocks, dtype=np.int32)
+    block_min_fn = np.empty(nblocks, dtype=np.int32)
+    doc_offsets = np.empty(nblocks, dtype=np.int32)
+    tf_offsets = np.empty(nblocks, dtype=np.int32)
+    doc_parts: list[bytes] = []
+    tf_parts: list[bytes] = []
+    dpos = tpos = 0
+    for bi in range(nblocks):
+        lo, hi = bi * BLOCK_SIZE, min((bi + 1) * BLOCK_SIZE, n)
+        block_last[bi] = docids[hi - 1]
+        block_max_tf[bi] = tfs[lo:hi].max()
+        block_min_fn[bi] = fieldnorm_ids[lo:hi].min()
+        d = varint_encode(deltas[lo:hi])
+        t = varint_encode(tfs[lo:hi].astype(np.uint64))
+        doc_offsets[bi] = dpos
+        tf_offsets[bi] = tpos
+        dpos += len(d)
+        tpos += len(t)
+        doc_parts.append(d)
+        tf_parts.append(t)
+    return {
+        "block_last": block_last,
+        "block_max_tf": block_max_tf,
+        "block_min_fn": block_min_fn,
+        "doc_offsets": doc_offsets,
+        "tf_offsets": tf_offsets,
+        "docid_blob": b"".join(doc_parts),
+        "tf_blob": b"".join(tf_parts),
+    }
+
+
+def decode_block(docid_blob: bytes, tf_blob: bytes, doc_offsets: np.ndarray,
+                 tf_offsets: np.ndarray, block_last: np.ndarray,
+                 block_idx: int) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a single block independently: the per-block twin of
+    codecs.decode_blocks_batch."""
+    dstart = int(doc_offsets[block_idx])
+    dend = int(doc_offsets[block_idx + 1]) if block_idx + 1 < len(doc_offsets) \
+        else len(docid_blob)
+    tstart = int(tf_offsets[block_idx])
+    tend = int(tf_offsets[block_idx + 1]) if block_idx + 1 < len(tf_offsets) \
+        else len(tf_blob)
+    deltas = varint_decode(docid_blob[dstart:dend]).astype(np.int64)
+    base = int(block_last[block_idx - 1]) if block_idx > 0 else 0
+    docids = base + np.cumsum(deltas)
+    tfs = varint_decode(tf_blob[tstart:tend]).astype(np.int64)
+    return docids, tfs

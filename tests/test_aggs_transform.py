@@ -73,36 +73,6 @@ def test_range_buckets(spark, idx):
     assert got["big"] == (pdf["size"] >= 400).sum()
 
 
-def test_doc_processor_counters(spark):
-    from quickwit_spark.pipeline.transform import (
-        DocProcessorCounters, process_docs)
-    pdf = pd.DataFrame({
-        "repo": ["a", "b", None, "d", "e"],
-        "n": ["1", "2", "3", "oops", "5"],
-    })
-    df = spark.createDataFrame(pdf)
-    counters = DocProcessorCounters(spark.sparkContext)
-    out = process_docs(df, {"repo": "str", "n": "int64"},
-                       counters=counters).toPandas()
-    snap = counters.snapshot()
-    assert len(out) == 3  # row with None repo and row with bad n dropped
-    assert snap["valid"] == 3
-    assert snap["coercion_errors"] == 1
-    assert snap["missing_field"] == 1
-
-
-def test_doc_processor_transform_hook(spark):
-    from quickwit_spark.pipeline.transform import process_docs
-    df = spark.createDataFrame(pd.DataFrame({
-        "repo": ["x", "y"], "n": ["1", "2"]}))
-    out = process_docs(
-        df, {"repo": "str", "n": "int64"},
-        transform=lambda p: p.assign(repo=p["repo"].str.upper())
-    ).toPandas()
-    assert sorted(out["repo"]) == ["X", "Y"]
-    assert out["n"].dtype == "int64"
-
-
 def test_extended_stats_and_nested_and_fixed_interval(spark, tmp_path):
     """Round-2 aggregation depth: extended_stats, 2-level nesting,
     terms size + sum_other_doc_count, histogram gap filling, and

@@ -6,14 +6,14 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from quickwit_spark.index.codecs import (decode_block, decode_blocks_batch,
+from quickwit_spark.index.codecs import (decode_blocks_batch,
                                          decode_positions, decode_postings,
                                          encode_position_blob,
-                                         encode_posting_blocks,
                                          varint_decode,
                                          varint_decode_with_sizes,
                                          varint_encode,
                                          varint_encode_with_sizes)
+from tests.oracle import decode_block, encode_posting_blocks
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2 ** 64 - 1),

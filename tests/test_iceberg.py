@@ -974,6 +974,9 @@ def test_remove_orphan_files(tmp_path, docs_pdf):
 
 
 def test_metadata_tables(spark, tmp_path, docs_pdf):
+    """The commit metadata behind Iceberg's `$snapshots` / `$manifests`
+    / `$files` views, read straight from the table: snapshot lineage,
+    the manifest list's content types and the live files' records."""
     root = str(tmp_path / "metatbl")
     iceberg.create_table(root, pa.Schema.from_pandas(docs_pdf),
                          partition_by=[("lang", "identity")])
@@ -982,20 +985,21 @@ def test_metadata_tables(spark, tmp_path, docs_pdf):
     iceberg.delete_where(root, [("doc_id", "<",
                                  int(docs_pdf.doc_id.iloc[5]))])
     t = iceberg.load_table(root)
-    snaps = t.snapshots_df(spark).toPandas()
-    assert list(snaps.operation) == ["append", "append", "delete"]
-    assert snaps.snapshot_id.iloc[-1] == t.meta["current-snapshot-id"]
-    assert snaps.parent_id.iloc[0] is None or pd.isna(
-        snaps.parent_id.iloc[0])
-    mfs = t.manifests_df(spark).toPandas()
-    assert (mfs.content == 1).sum() == 1    # one delete manifest
-    fls = t.files_df(spark).toPandas()
-    assert (fls.content == 0).sum() == len(t.plan_files().files)
-    assert (fls.content == 1).sum() == 1
-    assert int(fls[fls.content == 0].record_count.sum()) == 70
-    # partition column round-trips as json
-    assert all(json.loads(p).get("lang") for p in
-               fls[fls.content == 0].partition)
+    snaps = t.meta["snapshots"]
+    assert [s["summary"]["operation"] for s in snaps] == \
+        ["append", "append", "delete"]
+    assert snaps[-1]["snapshot-id"] == t.meta["current-snapshot-id"]
+    assert snaps[0].get("parent-snapshot-id") is None
+    assert [s.get("parent-snapshot-id") for s in snaps[1:]] == \
+        [s["snapshot-id"] for s in snaps[:-1]]
+    _, mfs = avro_ocf.read_ocf(t.snapshot()["manifest-list"])
+    assert sum(m.get("content") == 1 for m in mfs) == 1  # one delete
+    plan = t.plan_files()
+    assert len(plan.delete_files) == 1
+    assert sum(f["record_count"] for f in plan.files) == 70
+    # every data file carries its identity partition value
+    assert all((f.get("partition") or {}).get("lang")
+               for f in plan.files)
 
 
 # --------------------------------------- maintenance: rewrite (compact)

@@ -37,21 +37,33 @@ def test_varint_decode_matches_loop_oracle(vals):
     _same_decode(varint_encode(np.asarray(vals, dtype=np.uint64)))
 
 
-@given(st.lists(st.lists(st.binary(max_size=12), max_size=20),
-                min_size=1, max_size=4),
-       st.sampled_from([pa.binary(), pa.large_binary()]),
-       st.integers(0, 3))
+_CELL_TYPES = [pa.binary(), pa.large_binary(), pa.list_(pa.int64()),
+               pa.list_(pa.int32()), pa.large_list(pa.float32())]
+
+
+@given(st.data(), st.sampled_from(_CELL_TYPES), st.integers(0, 3))
 @_SETTINGS
-def test_binary_cells_match_pylist(chunks, typ, cut):
+def test_binary_cells_match_pylist(data, typ, cut):
     """One or many chunks, int32 or int64 offsets, and a sliced first
-    chunk (a non-zero array offset into a shared data buffer)."""
+    chunk (a non-zero array offset into a shared data buffer); binary
+    cells as bytes, list cells as typed child values."""
+    # list values stay within 2**24, so float32 holds them exactly
+    cell = (st.binary(max_size=12) if pa.types.is_binary(typ)
+            or pa.types.is_large_binary(typ)
+            else st.lists(st.integers(-2 ** 24, 2 ** 24), max_size=12))
+    chunks = data.draw(st.lists(st.lists(cell, max_size=20),
+                                min_size=1, max_size=4))
     arrs = [pa.array(c, type=typ) for c in chunks]
     arrs[0] = arrs[0].slice(min(cut, len(arrs[0])))
     col = pa.chunked_array(arrs, type=typ)
-    data, offs = _binary_cells(col)
+    values, offs = _binary_cells(col)
     assert offs.dtype == np.int64 and len(offs) == len(col) + 1
-    assert [data[offs[i]:offs[i + 1]].tobytes()
-            for i in range(len(col))] == col.to_pylist()
+    cells = [values[offs[i]:offs[i + 1]] for i in range(len(col))]
+    if values.dtype == np.uint8:
+        assert [c.tobytes() for c in cells] == col.to_pylist()
+    else:
+        assert values.dtype == typ.value_type.to_pandas_dtype()
+        assert [c.tolist() for c in cells] == col.to_pylist()
 
 
 @given(st.lists(st.integers(0, 127), max_size=200))

@@ -118,25 +118,6 @@ def test_ingest_batch_legacy_integer_keys_replay(spark, tmp_path):
 
 
 
-def test_transform_dropping_column_counts_as_error(spark):
-    """A transform that drops a passthrough column must be counted as a
-    transform error for the batch, not crash the job with KeyError."""
-    from quickwit_spark.pipeline.transform import (
-        DocProcessorCounters, process_docs)
-    df = spark.createDataFrame(
-        [("r", "p", "c", "py", "hello world", 1)],
-        "repo string, path string, commit string, lang string, "
-        "content string, extra int")
-    counters = DocProcessorCounters(spark.sparkContext)
-    out = process_docs(
-        df, required={"content": "str"},
-        transform=lambda pdf: pdf.drop(columns=["extra"]),
-        counters=counters)
-    assert out.count() == 0
-    assert counters.transform_errors.value == 1
-
-
-
 def test_global_fetch_zero_hits(spark, tmp_path):
     import pandas as pd
     import quickwit_spark as q
@@ -260,27 +241,6 @@ def test_legacy_position_format_replay_accepted(spark, tmp_path):
         "content": [f"other {i}" for i in range(4)]}))
     with pytest.raises(Exception):
         ingest_batch(df2, cfg, batch_id=0, partitions_per_batch=2)
-
-
-
-def test_transform_int64_rejects_lossy_values(spark):
-    """int64 coercion quarantines non-integral ('1.7' silently became
-    1), non-finite ('inf' crashed the task), and float-rounded
-    magnitudes — they count as coercion_errors, not corrupt or crash."""
-    import pandas as pd
-
-    from quickwit_spark.pipeline.transform import process_docs
-
-    df = spark.createDataFrame(pd.DataFrame({
-        "doc_id": ["a", "b", "c", "d", "e"],
-        "n": ["3", "1.7", "inf", "9007199254740993999", "12"]}))
-    out = process_docs(df, required={"doc_id": "str", "n": "int64"}
-                       ).toPandas().set_index("doc_id")
-    # 'd' IS representable in int64: kept with the EXACT value (no
-    # float64 round-trip), independent of which rows share its batch
-    assert sorted(out.index) == ["a", "d", "e"]
-    assert out.loc["a", "n"] == 3 and out.loc["e", "n"] == 12
-    assert int(out.loc["d", "n"]) == 9007199254740993999
 
 
 

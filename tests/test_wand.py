@@ -161,7 +161,7 @@ def test_cursor_decoupled_bound_fallback():
     the pruned path with round-1 layouts."""
     import numpy as np
     from quickwit_spark.functions.bm25 import Bm25Weight
-    from quickwit_spark.index.codecs import encode_posting_blocks
+    from tests.oracle import encode_posting_blocks
     from quickwit_spark.search.wand import _TermCursor
     docids = np.arange(0, 600, 2, dtype=np.int64)
     tfs = np.ones(len(docids), dtype=np.int64) * 3
@@ -225,7 +225,7 @@ def test_single_term_exact_count_shortcut(tmp_path):
         assert not ids1 & ids2
 
 
-def _small_segment_reader(tmp_path):
+def _small_segment_reader(tmp_path, n_docs=50):
     import os
 
     import pandas as pd
@@ -237,7 +237,7 @@ def _small_segment_reader(tmp_path):
 
     docs = [{"repo": "r", "path": f"f{i}.py", "commit": "c", "lang": "py",
              "content": f"alpha beta w{i} " + "gamma " * 20}
-            for i in range(50)]
+            for i in range(n_docs)]
     cfg = IndexConfig(index_uid="wc", index_dir=str(tmp_path / "wc"),
                       sha_col=None)
     build_index_pandas(pd.DataFrame(docs), cfg, num_partitions=1)
@@ -291,6 +291,35 @@ def test_cursor_blob_views_into_pinned_postings_pin_nothing(tmp_path):
     assert rd.cache_footprint == before
     docids, _tfs, df = rd.term_postings("gamma")
     assert len(docids) == df == 50
+
+
+@pytest.mark.parametrize("pinned", [True, False])
+def test_cursor_bytes_are_the_owned_nbytes(tmp_path, monkeypatch, pinned):
+    """The reader counts what its cached cursors keep alive on their own:
+    arrays that own their data and `bytes` blobs. Below the cache cap the
+    block metadata and blobs are views into the pinned postings table and
+    count 0; above it the cursor's copies count in full."""
+    from quickwit_spark.search.engine import SegmentReader
+    from quickwit_spark.search.wand import _make_cursors, _TermCursor
+
+    if not pinned:
+        monkeypatch.setattr(SegmentReader, "CACHE_FILE_BYTES", 0)
+    rd = _small_segment_reader(tmp_path, n_docs=400)
+    curs = _make_cursors(rd, ["gamma", "beta"])
+    for cur in curs:
+        cur.ensure_blobs()
+    assert (rd._postings_tbl is not None) == pinned
+    assert len(curs[0].block_last) > 1
+    held = [getattr(c, a) for c in curs for a in _TermCursor.__slots__]
+    owned = sum(v.nbytes for v in held
+                if isinstance(v, np.ndarray) and v.flags.owndata)
+    owned += sum(len(v) for v in held if isinstance(v, bytes))
+    assert rd._wand_cursor_bytes == owned
+    if pinned:
+        assert not curs[0].block_last.flags.owndata
+        assert not curs[0].doc_offsets.flags.owndata
+    else:
+        assert isinstance(curs[0].docid_blob, bytes)
 
 
 def test_concurrent_cold_searches_pin_each_cursor_once(tmp_path,
